@@ -1,15 +1,37 @@
-"""Tiered (LSM-style) per-bucket compaction for the partials-append
-streaming stores (index tf partials, span window-hashes, vector
-cells).
+"""The ingest path shared by the four tiered streaming stores (index
+tf partials, span window-hashes, vector cells, and the dedup store's
+key and hash subtrees), and their tiered (LSM-style) per-bucket
+compaction.
 
-Why: the original ``compact()`` of these stores folded the WHOLE store
-into one ``batch=-1`` base per bucket — an O(store) rewrite whose wall
-grows with corpus size (measured on the index store at the fourth
-decade: 13.5 → 91.4 s across one sf100 replay; one more decade puts a
-~900 s pause every compaction).  The CDC MERGE store
-(:mod:`.incremental_merge`) already pays only O(touched buckets) per
-rewrite; this module brings the same bound to the fold-style stores by
-splitting compaction into two tiers, the standard LSM shape:
+One ingest path.  Every trigger of a tiered store runs the same
+sequence, owned by :class:`TieredStore`: take the store lock, recover
+an interrupted swap, refuse a batch id behind the fold watermark
+(:meth:`TieredStore.guard`), write the trigger's rows as
+``<bucket_col>=V/batch=N`` leaves (:meth:`TieredStore.append` — one
+sorted file per leaf, dynamic partition overwrite, so replaying a
+crashed trigger overwrites exactly its own leaves: the idempotent-sink
+form of exactly-once), then compact on the ``compact_every`` cadence.
+Reads (:meth:`TieredStore.read`) apply the fold watermark filter
+described below.  A store supplies only its per-batch transform and
+its merge rule (the ``fold``).
+
+Two stores stay outside it on purpose.  The quantile store
+(:mod:`.incremental_quantiles`) compacts by evicting against ONE
+retention horizon computed over the whole store, so its fold is not
+per-bucket and it has no bucket column.  The MERGE store
+(:mod:`.incremental_merge`) rewrites touched buckets in place per
+trigger and has no ``batch`` leaves at all.  Sharing this helper with
+them would make it branch on its caller.
+
+Why tiered compaction: the original ``compact()`` of these stores
+folded the WHOLE store into one ``batch=-1`` base per bucket — an
+O(store) rewrite whose wall grows with corpus size (measured on the
+index store at the fourth decade: 13.5 → 91.4 s across one sf100
+replay; one more decade puts a ~900 s pause every compaction).  The
+CDC MERGE store (:mod:`.incremental_merge`) already pays only
+O(touched buckets) per rewrite; this module brings the same bound to
+the fold-style stores by splitting compaction into two tiers, the
+standard LSM shape:
 
 * **minor fold** — a bucket whose count of live ``batch=N`` (N ≥ 0)
   trigger leaves reaches ``leaf_bound`` gets ONLY those leaves merged
@@ -177,84 +199,6 @@ def _apply_fold_filter(
     return fold_filter(df, bucket_col, bounds)
 
 
-def read_store(
-    spark: SparkSession,
-    store_path: str,
-    bucket_col: str,
-    live: bool = False,
-) -> DataFrame | None:
-    """The tiered stores' shared read: ``live=True`` is the
-    writer-internal read (recover, read the store tree under the
-    caller-held lock), the default is the SERVING read (snapshot-
-    isolated hardlink pin via :func:`..swap.pin_store`).  Both apply
-    the fold watermark filter; the serving path collects the markers
-    DURING the pin's own hardlink walk instead of re-walking the pin
-    tree — at the vector store's cell counts the second listdir
-    cascade per read is real metadata cost.  Returns None when the
-    store does not exist."""
-    if live:
-        recover_swap(store_path)
-        if not os.path.exists(store_path):
-            return None
-        return fold_filter_path(
-            spark.read.parquet(store_path), store_path, bucket_col
-        )
-    bounds: dict[int, int] = {}
-    buckets: set[int] = set()
-    prefix = bucket_col + "="
-
-    def visit(rel: str, fname: str) -> None:
-        head = rel.split(os.sep, 1)[0]
-        if not head.startswith(prefix):
-            return
-        val = int(head[len(prefix):])
-        # only files imply rows/markers: an empty bucket dir cannot
-        # hold young leaves, so it cannot invalidate the uniform
-        # collapse in _apply_fold_filter
-        buckets.add(val)
-        if fname.startswith(FOLD_MARKER_PREFIX):
-            b = int(fname[len(FOLD_MARKER_PREFIX):])
-            if b > bounds.get(val, -1):
-                bounds[val] = b
-
-    pin = pin_store(store_path, file_visitor=visit)
-    if pin is None:
-        return None
-    return _apply_fold_filter(
-        spark.read.parquet(pin), bucket_col, bounds, buckets
-    )
-
-
-def guard_batch_id(path: str, bucket_col: str, batch_id: int) -> None:
-    """Refuse a trigger write whose batch id fell BEHIND the store's
-    fold watermark — the loud form of a silent-data-loss hazard.
-
-    The watermark contract assumes one stream with one checkpoint:
-    batch ids only grow, and the only id that can legitimately
-    reappear is the LAST one (foreachBatch replays exactly the
-    uncommitted tail batch, which a compact inside the same call may
-    already have folded — so equality with the bound is allowed).  An
-    id STRICTLY below the store's highest folded bound means the
-    stream was re-keyed — a fresh checkpoint directory over an
-    existing store restarts numbering at 0 — and every such write
-    would be treated as an already-folded replay: filtered from every
-    read and physically swept by the next compact.  Raise instead;
-    the operator either restores the checkpoint or rebuilds/exports
-    the store under the new stream."""
-    bounds = folded_bounds(path, bucket_col)
-    top = max(bounds.values(), default=-1)
-    if batch_id < top:
-        raise ValueError(
-            f"batch id {batch_id} is behind the fold watermark {top} "
-            f"of store {path!r}: this stream's checkpoint does not "
-            "match the store (a fresh checkpoint restarts batch "
-            "numbering, and these writes would be silently dropped "
-            "as already-folded replays). Restore the original "
-            "checkpoint, or rebuild the store / start a fresh "
-            "store_path for the new stream."
-        )
-
-
 def _write_marker(leaf_dir: str, bound: int) -> None:
     os.makedirs(leaf_dir, exist_ok=True)
     open(os.path.join(leaf_dir, f"{FOLD_MARKER_PREFIX}{bound}"), "w").close()
@@ -404,3 +348,146 @@ def compact_tiered(
                     )
         shutil.rmtree(tmp, ignore_errors=True)
     return stats
+
+
+class TieredStore:
+    """One tiered store at ``path`` (layout ``<bucket_col>=V/batch=N``):
+    the guard → leaf write → compact ingest path and the watermark-
+    filtered read.  ``fold`` is the store's merge rule (see
+    :func:`compact_tiered`); ``sort_col`` orders rows inside every
+    leaf and run, so parquet min/max stats prune on it."""
+
+    def __init__(
+        self,
+        path: str,
+        bucket_col: str,
+        sort_col: str,
+        fold: Callable[[DataFrame], DataFrame],
+        compact_every: int = 0,
+    ):
+        self.path = path
+        self.bucket_col = bucket_col
+        self.sort_col = sort_col
+        self.fold = fold
+        self.compact_every = compact_every
+
+    def read(
+        self, spark: SparkSession, live: bool = False
+    ) -> DataFrame | None:
+        """The store's rows with the fold watermark applied, or None
+        when the store does not exist.  ``live=True`` is the
+        writer-internal read (recover, then read the store tree under
+        the caller-held lock); the default is the SERVING read
+        (snapshot-isolated hardlink pin via :func:`..swap.pin_store`),
+        which collects the markers DURING the pin's own hardlink walk
+        instead of re-walking the pin tree — at the vector store's
+        cell counts the second listdir cascade per read is real
+        metadata cost."""
+        if live:
+            recover_swap(self.path)
+            if not os.path.exists(self.path):
+                return None
+            return fold_filter_path(
+                spark.read.parquet(self.path), self.path, self.bucket_col
+            )
+        bounds: dict[int, int] = {}
+        buckets: set[int] = set()
+        prefix = self.bucket_col + "="
+
+        def visit(rel: str, fname: str) -> None:
+            head = rel.split(os.sep, 1)[0]
+            if not head.startswith(prefix):
+                return
+            val = int(head[len(prefix):])
+            # only files imply rows/markers: an empty bucket dir cannot
+            # hold young leaves, so it cannot invalidate the uniform
+            # collapse in _apply_fold_filter
+            buckets.add(val)
+            if fname.startswith(FOLD_MARKER_PREFIX):
+                b = int(fname[len(FOLD_MARKER_PREFIX):])
+                if b > bounds.get(val, -1):
+                    bounds[val] = b
+
+        pin = pin_store(self.path, file_visitor=visit)
+        if pin is None:
+            return None
+        return _apply_fold_filter(
+            spark.read.parquet(pin), self.bucket_col, bounds, buckets
+        )
+
+    def guard(self, batch_id: int) -> None:
+        """Refuse a trigger write whose batch id fell BEHIND the
+        store's fold watermark — the loud form of a silent-data-loss
+        hazard.
+
+        The watermark contract assumes one stream with one checkpoint:
+        batch ids only grow, and the only id that can legitimately
+        reappear is the LAST one (foreachBatch replays exactly the
+        uncommitted tail batch, which a compact inside the same call
+        may already have folded — so equality with the bound is
+        allowed).  An id STRICTLY below the store's highest folded
+        bound means the stream was re-keyed — a fresh checkpoint
+        directory over an existing store restarts numbering at 0 — and
+        every such write would be treated as an already-folded replay:
+        filtered from every read and physically swept by the next
+        compact.  Raise instead; the operator either restores the
+        checkpoint or rebuilds/exports the store under the new
+        stream."""
+        recover_swap(self.path)
+        bounds = folded_bounds(self.path, self.bucket_col)
+        top = max(bounds.values(), default=-1)
+        if batch_id < top:
+            raise ValueError(
+                f"batch id {batch_id} is behind the fold watermark {top} "
+                f"of store {self.path!r}: this stream's checkpoint does "
+                "not match the store (a fresh checkpoint restarts batch "
+                "numbering, and these writes would be silently dropped "
+                "as already-folded replays). Restore the original "
+                "checkpoint, or rebuild the store / start a fresh "
+                "store_path for the new stream."
+            )
+
+    def append(self, df: DataFrame, batch_id: int) -> None:
+        """Write ``df`` (which carries ``bucket_col``) as this trigger's
+        ``batch=<batch_id>`` leaves, then compact on the
+        ``compact_every`` cadence.  The store lock spans the leaf write
+        and any compact, so a concurrent serving read pins the pre- or
+        post-batch tree, never a torn leaf."""
+        spark = df.sparkSession
+        with swap_lock(self.path):
+            self.guard(batch_id)
+            (
+                df.withColumn("batch", F.lit(batch_id))
+                # Co-locate each bucket's rows in one task: otherwise
+                # every task writes a file per bucket it touches —
+                # O(tasks × buckets) leaves per trigger, and the
+                # dynamic-partition commit move is driver-side O(files)
+                # (measured on the vector store at the fourth decade:
+                # 16,734 files / 731 s per 20k-vector trigger at 1,414
+                # cells).  The shuffle is the micro-batch only.  The
+                # explicit partition count stops AQE coalescing that
+                # tiny shuffle to ONE task creating every leaf serially
+                # (measured: 1.48 s of a 1.64 s trigger write —
+                # plans/r12/jobs_stream_vector_store_drain_before.txt).
+                .repartition(
+                    spark.sparkContext.defaultParallelism,
+                    F.col(self.bucket_col),
+                )
+                .sortWithinPartitions(self.sort_col)
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(self.bucket_col, "batch")
+                .parquet(self.path)
+            )
+            if (
+                self.compact_every
+                and batch_id > 0
+                and batch_id % self.compact_every == 0
+            ):
+                self.compact(spark)
+
+    def compact(self, spark: SparkSession) -> dict[str, int]:
+        """One :func:`compact_tiered` pass with this store's fold."""
+        return compact_tiered(
+            spark, self.path, self.bucket_col, self.fold, self.sort_col
+        )

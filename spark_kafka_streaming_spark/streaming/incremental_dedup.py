@@ -45,18 +45,11 @@ normalized subtrees under ``store_path``:
   store grew to 8 GB, exactly the probe's full-store scan.  The
   normalized layout scans the narrow key index (a few % of the bytes)
   plus only the candidate-touched hash buckets.
-* Each trigger writes its survivors under ``…/batch=N`` with dynamic
-  partition overwrite — replaying batch N after a crash overwrites
-  exactly its own leaves (exactly-once, same pattern as
-  tests/test_streaming_extra.py).
-* ``compact()`` (optionally every ``compact_every`` batches) runs the
-  TIERED per-bucket fold shared with the index/spans/vectors stores
-  (:mod:`.fold`): trigger leaves merge into sorted runs (work ∝ data
-  since the last compact), runs collapse into the bucket's base at a
-  staggered bound, and a watermark marker makes a trigger replayed
-  after its fold exactly-once.  A production deployment would put the
-  store in a transactional table format (Delta/Iceberg) and get the
-  same moves as atomic metadata commits.
+* Both subtrees are tiered stores (:class:`..fold.TieredStore`), so
+  trigger writes, replays and compaction follow the ingest path shared
+  with the index/spans/vectors stores.  A production deployment would
+  put the store in a transactional table format (Delta/Iceberg) and
+  get the same moves as atomic metadata commits.
 """
 
 from __future__ import annotations
@@ -67,14 +60,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fold import compact_tiered, fold_filter_path, guard_batch_id
-from .swap import recover_swap, swap_lock
+from .fold import TieredStore
+from .swap import swap_lock
 from ..functions import texthash as TH
 
 #: Directory-level hash buckets on the LSH key. At cluster scale this
 #: would be sized so one bucket ≈ a few hundred MB of index.
 N_KEY_BUCKETS = 64
-
+#: Up to this many dup ids per trigger are folded to the driver and
+#: filtered as an IN list; past it the accepted-set filters anti-join
+#: the persisted dup frame instead.
+DUP_IN_LIST_BOUND = 10_000
 
 
 def signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -153,14 +149,28 @@ class IncrementalDeduper:
         broadcast_candidates: bool = True,
     ):
         self.store_path = store_path
-        self.keys_path = os.path.join(store_path, "keys")
-        self.hashes_path = os.path.join(store_path, "hashes")
+        # band-key index (doc_id, band, key, kb) and per-doc verify
+        # payload (doc_id, hs, hb); both append-only, so the fold is a
+        # plain rewrite
+        self.key_store = TieredStore(
+            os.path.join(store_path, "keys"),
+            "kb",
+            "key",
+            lambda df: df.select(id_col, "band", "key", "kb"),
+            compact_every,
+        )
+        self.hash_store = TieredStore(
+            os.path.join(store_path, "hashes"),
+            "hb",
+            id_col,
+            lambda df: df.select(id_col, "hs", "hb"),
+            compact_every,
+        )
         self.accepted_path = accepted_path
         self.threshold = jaccard_threshold
         self.id_col = id_col
         self.text_col = text_col
         self.n_key_buckets = n_key_buckets
-        self.compact_every = compact_every
         self.broadcast_candidates = broadcast_candidates
         self._guard_layout()
 
@@ -183,30 +193,6 @@ class IncrementalDeduper:
                 "this deduper into a fresh store_path (the normalized "
                 "layout keeps keys/ and hashes/ subtrees)"
             )
-
-    def _recover(self) -> None:
-        recover_swap(self.keys_path)
-        recover_swap(self.hashes_path)
-
-    def _store_keys(self, spark: SparkSession) -> DataFrame | None:
-        """The narrow band-key index (doc_id, band, key, kb, batch).
-        The tiered-fold watermark filter drops trigger leaves already
-        folded into a run (exactly-once across compaction; both filter
-        columns are partition columns, so it prunes directories)."""
-        if not os.path.exists(self.keys_path):
-            return None
-        return fold_filter_path(
-            spark.read.parquet(self.keys_path), self.keys_path, "kb"
-        )
-
-    def _store_hashes(self, spark: SparkSession) -> DataFrame | None:
-        """The per-doc exact-verify payload (doc_id, hs, hb, batch);
-        watermark-filtered like the key index."""
-        if not os.path.exists(self.hashes_path):
-            return None
-        return fold_filter_path(
-            spark.read.parquet(self.hashes_path), self.hashes_path, "hb"
-        )
 
     def _verify(self, cand: DataFrame) -> DataFrame:
         """Exact-Jaccard filter on candidate pairs → distinct dup ids."""
@@ -308,43 +294,21 @@ class IncrementalDeduper:
         return self._verify(cand)
 
     def compact(self, spark: SparkSession) -> dict[str, dict[str, int]]:
-        """Tiered per-bucket fold of both subtrees
-        (:func:`..fold.compact_tiered` — the same LSM shape as the
-        index/spans/vectors stores): buckets that accumulated trigger
-        leaves get ONLY those leaves rewritten into one sorted run;
-        runs fold into the bucket's base at the staggered run bound.
-        Per-compact work is bounded by data since the last compact
-        plus amortized majors, never store size.  Both subtrees are
-        append-only (one row per (doc, band) key / per doc), so the
-        fold is a plain rewrite.  The store lock spans both subtree
-        folds so a reader never pins one folded and one unfolded
+        """One tiered compaction pass over both subtrees, under the
+        store lock so a reader never pins one folded and one unfolded
         subtree mid-swap."""
-        id_c = self.id_col
         with swap_lock(self.store_path):
-            self._recover()
-            stats_k = compact_tiered(
-                spark,
-                self.keys_path,
-                "kb",
-                lambda df: df.select(id_c, "band", "key", "kb"),
-                sort_col="key",
-            )
-            stats_h = compact_tiered(
-                spark,
-                self.hashes_path,
-                "hb",
-                lambda df: df.select(id_c, "hs", "hb"),
-                sort_col=id_c,
-            )
-        return {"keys": stats_k, "hashes": stats_h}
+            return {
+                "keys": self.key_store.compact(spark),
+                "hashes": self.hash_store.compact(spark),
+            }
 
     # -- the foreachBatch hook -----------------------------------------
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        self._recover()
         # refuse re-keyed streams up front, before ANY write (the
         # accepted-docs write precedes the signature writes)
-        guard_batch_id(self.keys_path, "kb", batch_id)
-        guard_batch_id(self.hashes_path, "hb", batch_id)
+        self.key_store.guard(batch_id)
+        self.hash_store.guard(batch_id)
         spark = batch.sparkSession
         id_c = self.id_col
         # A micro-batch arrives as O(1) source splits (one file/offset
@@ -369,8 +333,8 @@ class IncrementalDeduper:
         keys.count()
 
         dup_vs_store = None
-        store_keys = self._store_keys(spark)
-        store_hashes = self._store_hashes(spark)
+        store_keys = self.key_store.read(spark, live=True)
+        store_hashes = self.hash_store.read(spark, live=True)
         if store_keys is not None and store_hashes is not None:
             dup_vs_store = self._dup_ids(
                 keys,
@@ -403,73 +367,52 @@ class IncrementalDeduper:
         ).distinct()
         # Fold the dup-id set to the driver: it is bounded by the
         # micro-batch (every dup id IS a batch doc id), so below the
-        # literal bound the three downstream writes filter on an IN
-        # list instead of each carrying a join against the whole
+        # bound the three downstream writes filter on an IN list
+        # instead of each carrying a join against the whole
         # probe/verify subtree — one dup computation, three small
         # write plans (driver analysis per trigger was the wall after
-        # the cache fixes).  A skew-hot batch past the bound keeps the
-        # join form; accept decisions are identical either way.
-        dup_rows = dups.collect()
-        if len(dup_rows) <= 10_000:
+        # the cache fixes).  The probe pulls at most bound + 1 rows.  A
+        # skew-hot batch past the bound persists the frame and
+        # anti-joins it; persisting on every trigger would cost one
+        # more job and 4-5 more stages.  A NULL id is never a dup
+        # (every dup join compares ids), and both branches keep it.
+        dup_rows = dups.limit(DUP_IN_LIST_BOUND + 1).collect()
+        if len(dup_rows) <= DUP_IN_LIST_BOUND:
             dup_ids = [r[0] for r in dup_rows]
-            keep = ~F.col(id_c).isin(dup_ids) if dup_ids else F.lit(True)
+            keep = (
+                F.col(id_c).isNull() | ~F.col(id_c).isin(dup_ids)
+                if dup_ids
+                else F.lit(True)
+            )
             accepted = batch.filter(keep)
             accepted_sigs = sigs.filter(keep)
             accepted_keys = keys.filter(keep)
         else:
-            dup_df = F.broadcast(
-                spark.createDataFrame(dup_rows, dups.schema)
-            )
-            accepted = batch.join(dup_df, id_c, "left_anti")
-            accepted_sigs = sigs.join(dup_df, id_c, "left_anti")
-            accepted_keys = keys.join(dup_df, id_c, "left_anti")
+            dups = dups.persist()
+            accepted = batch.join(dups, id_c, "left_anti")
+            accepted_sigs = sigs.join(dups, id_c, "left_anti")
+            accepted_keys = keys.join(dups, id_c, "left_anti")
 
         # idempotent per-epoch writes: replaying batch_id overwrites
         accepted.write.mode("overwrite").parquet(
             f"{self.accepted_path}/batch={batch_id}"
         )
-        # Lock spans both signature leaf writes so an external reader of
-        # the store tree never pins a half-committed leaf.  Hashes land
-        # FIRST: an orphan hash row (crash before the key write) is
-        # unreachable and harmless, while a key row without its hash
-        # row would silently miss a dup until the trigger replays.
+        # The parent lock spans both subtree appends (and their
+        # compactions) so an external reader of the store tree never
+        # pins a half-committed pair.  Hashes land FIRST: an orphan
+        # hash row (crash before the key write) is unreachable and
+        # harmless, while a key row without its hash row would
+        # silently miss a dup until the trigger replays.
         with swap_lock(self.store_path):
-            # Both writes co-locate each bucket's rows in one task
-            # first (the vector-store lesson, same round): without the
-            # repartition every task writes a file per bucket it
-            # touches — O(tasks × buckets) leaves per trigger — and
-            # the dynamic-partition commit move is driver-side
-            # O(files).  The shuffle is the micro-batch only.  The
-            # explicit partition count stops AQE coalescing the tiny
-            # shuffle to one task that would create every bucket leaf
-            # serially (the vector store's measured write-stage wall).
-            npart = spark.sparkContext.defaultParallelism
-            (
-                accepted_sigs
-                .select(id_c, "hs")
-                .withColumn(
-                    "hb",
-                    F.pmod(F.xxhash64(id_c), F.lit(self.n_key_buckets)),
-                )
-                .withColumn("batch", F.lit(batch_id))
-                .repartition(npart, F.col("hb"))
-                .sortWithinPartitions(id_c)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("hb", "batch")
-                .parquet(self.hashes_path)
+            self.hash_store.append(
+                accepted_sigs.select(id_c, "hs").withColumn(
+                    "hb", F.pmod(F.xxhash64(id_c), F.lit(self.n_key_buckets))
+                ),
+                batch_id,
             )
-            (
-                accepted_keys.select(id_c, "band", "key", "kb")
-                .withColumn("batch", F.lit(batch_id))
-                .repartition(npart, F.col("kb"))
-                .sortWithinPartitions("key")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("kb", "batch")
-                .parquet(self.keys_path)
+            self.key_store.append(
+                accepted_keys.select(id_c, "band", "key", "kb"), batch_id
             )
+        dups.unpersist()
         sigs.unpersist()
         keys.unpersist()
-        if self.compact_every and batch_id > 0 and batch_id % self.compact_every == 0:
-            self.compact(spark)

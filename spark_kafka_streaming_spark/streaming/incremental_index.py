@@ -10,17 +10,15 @@ is the same shape as the streaming Count-Min sketch
 per-batch partials appended via ``foreachBatch``, merged by sum, the
 rank-capped index derived from the merged table on demand.
 
-Store layout (the 100 TB shape, mirroring
-:mod:`.incremental_dedup`'s signature store):
+Store layout (the 100 TB shape): the partials are a
+:class:`..fold.TieredStore` bucketed by
+``tb=pmod(xxhash64(term), N)`` — hash-bucketed by term so
+snapshot/compaction shuffles align with the bucket layout; leaves are
+sorted by term.
 
-* partials live under ``tb=pmod(xxhash64(term), N)/batch=B`` —
-  hash-bucketed by term so snapshot/compaction shuffles align with the
-  bucket layout, ``batch=B`` leaves written with dynamic partition
-  overwrite so replaying a crashed trigger overwrites exactly its own
-  output (exactly-once);
-* :meth:`IncrementalIndexer.compact` folds per-batch partials into one
-  summed ``batch=-1`` base per bucket, bounding both file counts and
-  snapshot-time merge work;
+* :meth:`IncrementalIndexer.compact` folds trigger leaves into summed
+  runs per bucket (tf partials sum across any split, so merging any
+  subset of leaves is exact);
 * :meth:`IncrementalIndexer.snapshot` merges partials (groupBy
   (term, doc_id) sum — map-side combinable, one shuffle) and applies
   the SAME :func:`..operators.index.inverted_index` derivation as the
@@ -30,13 +28,10 @@ Store layout (the 100 TB shape, mirroring
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fold import compact_tiered, guard_batch_id, read_store
-from .swap import recover_swap, swap_lock
+from .fold import TieredStore
 from ..operators import index as IX
 
 #: Directory-level hash buckets on term. Sized at cluster scale so one
@@ -63,24 +58,20 @@ class IncrementalIndexer:
         self.text_col = text_col
         self.cap = cap
         self.n_term_buckets = n_term_buckets
-        self.compact_every = compact_every
-
-    def _store(
-        self, spark: SparkSession, live: bool = False
-    ) -> DataFrame | None:
-        """Default reads are snapshot-isolated (hardlink pin via
-        :func:`..swap.pin_store`) so serving survives concurrent
-        triggers/compactions; ``live=True`` is the writer-internal
-        read (under the store lock).  Both apply the tiered-fold
-        watermark filter (:func:`..fold.fold_filter`) so a trigger
-        leaf replayed after its fold is ignored — exactly-once across
-        the compaction boundary."""
-        return read_store(spark, self.store_path, "tb", live=live)
+        self.store = TieredStore(
+            store_path,
+            "tb",
+            "term",
+            lambda df: df.groupBy("tb", "term", "doc_id").agg(
+                F.sum("tf").alias("tf")
+            ),
+            compact_every,
+        )
 
     def _merged_tf(
         self, spark: SparkSession, live: bool = False
     ) -> DataFrame | None:
-        store = self._store(spark, live=live)
+        store = self.store.read(spark, live=live)
         if store is None:
             return None
         return store.groupBy("term", "doc_id").agg(
@@ -161,64 +152,14 @@ class IncrementalIndexer:
         )
 
     def compact(self, spark: SparkSession) -> dict[str, int]:
-        """Tiered per-bucket fold (:func:`..fold.compact_tiered`):
-        buckets that accumulated ``leaf_bound`` trigger leaves get ONLY
-        those leaves merged into a new run; a bucket's runs fold into
-        its ``batch=-1`` base when they hit the staggered run bound.
-        Per-compact work is bounded by data since the last compact
-        (plus the amortized, staggered majors) — never store size,
-        which the old whole-store fold paid every time (13.5 → 91.4 s
-        growth within one sf100 replay).  tf partials sum across any
-        split, so merging any subset of leaves is exact."""
-        return compact_tiered(
-            spark,
-            self.store_path,
-            "tb",
-            lambda df: df.groupBy("tb", "term", "doc_id").agg(
-                F.sum("tf").alias("tf")
-            ),
-            sort_col="term",
-        )
+        """One tiered compaction pass (:meth:`..fold.TieredStore.compact`)."""
+        return self.store.compact(spark)
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         tf = IX.term_doc_tf(batch, self.id_col, self.text_col)
-        # Lock spans the leaf write + any compact: a concurrent
-        # serve_read pins pre- or post-batch state, never a torn leaf.
-        with swap_lock(self.store_path):
-            recover_swap(self.store_path)
-            guard_batch_id(self.store_path, "tb", batch_id)
-            (
-                tf.withColumn(
-                    "tb",
-                    F.pmod(F.xxhash64("term"), F.lit(self.n_term_buckets)),
-                )
-                .withColumn("batch", F.lit(batch_id))
-                # Co-locate each bucket's rows in one task before the
-                # partitioned write (the vector-store lesson): without
-                # this every task writes a file per bucket it touches —
-                # O(tasks x buckets) leaves per trigger (measured: the
-                # 200-trigger sf100 replay carried ~7,000 live files
-                # between compacts, ~20 per leaf).  One file per
-                # (tb, batch) leaf; the shuffle is the micro-batch
-                # only.  Sorted leaves give parquet min/max pruning on
-                # term, matching the folded runs.  Explicit partition
-                # count so AQE cannot coalesce the tiny micro-batch
-                # shuffle to one task that creates every bucket leaf
-                # serially (the measured write-stage wall —
-                # plans/r12/jobs_stream_index_store_drain_before.txt).
-                .repartition(
-                    batch.sparkSession.sparkContext.defaultParallelism,
-                    F.col("tb"),
-                )
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("tb", "batch")
-                .parquet(self.store_path)
-            )
-            if (
-                self.compact_every
-                and batch_id > 0
-                and batch_id % self.compact_every == 0
-            ):
-                self.compact(batch.sparkSession)
+        self.store.append(
+            tf.withColumn(
+                "tb", F.pmod(F.xxhash64("term"), F.lit(self.n_term_buckets))
+            ),
+            batch_id,
+        )

@@ -80,22 +80,12 @@ class IncrementalMerger:
             F.lit(self.n_key_buckets),
         ).cast("int")
 
-    def _recover_buckets(self) -> None:
-        """Finish an interrupted per-bucket swap: any bucket renamed
-        aside whose store slot is empty is restored (a crash between
-        the aside rename and the new leaf's rename-in would otherwise
-        drop the bucket's untouched keys — the replayed trigger only
-        reconstructs keys present in its own change set).  Shared with
-        the tiered-compaction stores (:func:`..swap
-        .recover_bucket_swap`)."""
-        recover_bucket_swap(self.store_path)
-
     def snapshot(self, spark: SparkSession) -> DataFrame | None:
         # Snapshot-isolated read (round-10): the hardlink pin survives
         # concurrent triggers' per-bucket swaps, so a served snapshot
         # can be collected at any later time (see ..swap docstring).
         with swap_lock(self.store_path):
-            self._recover_buckets()
+            recover_bucket_swap(self.store_path)
             if not os.path.exists(self.store_path):
                 return None
             # All-empty leaves (every key deleted) carry no files to
@@ -119,7 +109,11 @@ class IncrementalMerger:
             self._apply(changes, batch_id)
 
     def _apply(self, changes: DataFrame, batch_id: int) -> None:
-        self._recover_buckets()
+        # Finish an interrupted per-bucket swap first: a crash between
+        # the aside rename and the new leaf's rename-in would otherwise
+        # drop the bucket's untouched keys — the replayed trigger only
+        # reconstructs keys present in its own change set.
+        recover_bucket_swap(self.store_path)
         spark = changes.sparkSession
         k = self.key_col
         # Last change per key wins within the batch: by the feed's
@@ -193,6 +187,6 @@ class IncrementalMerger:
         # old bucket renames ASIDE (outside the store path, so
         # partition discovery never sees it) before the new leaf
         # renames in — at every instant the bucket's content exists at
-        # exactly one known location, and _recover_buckets() restores
+        # exactly one known location, and recover_bucket_swap restores
         # an interrupted swap on the next read/write.
         swap_buckets(self.store_path, tmp, [f"kb={b}" for b in touched])

@@ -10,15 +10,13 @@ key MINs — so the maintenance loop is the partials-append shape of
 :mod:`.incremental_index` (term tf partials), the fourth member of
 the streaming-maintenance family after signatures, index, and MERGE.
 
-Store layout (the 100 TB shape):
+Store layout (the 100 TB shape): the partials are a
+:class:`..fold.TieredStore` bucketed by ``hb=pmod(xxhash64(h), N)`` —
+hash-bucketed by window hash so snapshot/compaction shuffles align
+with the layout; leaves are sorted by h.
 
-* per-batch partials live under ``hb=pmod(xxhash64(h), N)/batch=B`` —
-  hash-bucketed by window hash so snapshot/compaction shuffles align
-  with the layout; ``batch=B`` leaves are written with dynamic
-  partition overwrite so replaying a crashed trigger overwrites
-  exactly its own output (exactly-once);
-* :meth:`IncrementalSpanDeduper.compact` folds per-batch partials
-  into one merged ``batch=-1`` base per bucket, bounding file counts;
+* :meth:`IncrementalSpanDeduper.compact` folds trigger leaves into
+  merged runs per bucket, bounding file counts;
 * :meth:`IncrementalSpanDeduper.span_stats` hashes ANY document set
   (typically the newest batch — "which spans of this doc already
   exist in the corpus?") and joins it against the merged store,
@@ -30,13 +28,10 @@ Store layout (the 100 TB shape):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fold import compact_tiered, guard_batch_id, read_store
-from .swap import recover_swap, swap_lock
+from .fold import TieredStore
 from ..operators.dedup import span_occurrences, span_stats_from
 
 #: Directory-level hash buckets on the window hash. Sized at cluster
@@ -63,25 +58,22 @@ class IncrementalSpanDeduper:
         self.id_col = id_col
         self.text_col = text_col
         self.n_hash_buckets = n_hash_buckets
-        self.compact_every = compact_every
-
-    def _store(
-        self, spark: SparkSession, live: bool = False
-    ) -> DataFrame | None:
-        """Default reads are snapshot-isolated (hardlink pin via
-        :func:`..swap.pin_store`); ``live=True`` is the
-        writer-internal read (under the store lock).  Both apply the
-        tiered-fold watermark filter so a trigger leaf replayed after
-        its fold is ignored — exactly-once across the compaction
-        boundary."""
-        return read_store(spark, self.store_path, "hb", live=live)
+        self.store = TieredStore(
+            store_path,
+            "hb",
+            "h",
+            lambda df: df.groupBy("hb", "h").agg(
+                F.sum("cnt").alias("cnt"), F.min("canon").alias("canon")
+            ),
+            compact_every,
+        )
 
     def merged(
         self, spark: SparkSession, live: bool = False
     ) -> DataFrame | None:
         """The corpus-wide (h, cnt, canon) table: partials merged by
         (sum, min) — exact because both aggregates are mergeable."""
-        store = self._store(spark, live=live)
+        store = self.store.read(spark, live=live)
         if store is None:
             return None
         return store.groupBy("h").agg(
@@ -109,54 +101,17 @@ class IncrementalSpanDeduper:
         return span_stats_from(base, removable, self.w, self.id_col)
 
     def compact(self, spark: SparkSession) -> dict[str, int]:
-        """Tiered per-bucket fold (:func:`..fold.compact_tiered`):
-        per-compact work bounded by data since the last compact plus
-        amortized staggered majors, never store size.  (cnt sum,
-        canon min) merge exactly over any subset of leaves."""
-        return compact_tiered(
-            spark,
-            self.store_path,
-            "hb",
-            lambda df: df.groupBy("hb", "h").agg(
-                F.sum("cnt").alias("cnt"), F.min("canon").alias("canon")
-            ),
-            sort_col="h",
-        )
+        """One tiered compaction pass (:meth:`..fold.TieredStore.compact`)."""
+        return self.store.compact(spark)
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         _, occ = span_occurrences(batch, self.w, self.id_col, self.text_col)
         partial = occ.groupBy("h").agg(
             F.count("*").alias("cnt"), F.min("okey").alias("canon")
         )
-        # Lock spans the leaf write + any compact: a concurrent
-        # serve_read pins pre- or post-batch state, never a torn leaf.
-        with swap_lock(self.store_path):
-            recover_swap(self.store_path)
-            guard_batch_id(self.store_path, "hb", batch_id)
-            (
-                partial.withColumn(
-                    "hb", F.pmod(F.xxhash64("h"), F.lit(self.n_hash_buckets))
-                )
-                .withColumn("batch", F.lit(batch_id))
-                # Co-locate by bucket before the partitioned write
-                # (the vector-store lesson): one file per (hb, batch)
-                # leaf instead of O(tasks x buckets); micro-batch-only
-                # shuffle, sorted leaves for row-group pruning on h.
-                # Explicit count: AQE would coalesce the tiny shuffle
-                # to one task creating every bucket leaf serially.
-                .repartition(
-                    batch.sparkSession.sparkContext.defaultParallelism,
-                    F.col("hb"),
-                )
-                .sortWithinPartitions("h")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("hb", "batch")
-                .parquet(self.store_path)
-            )
-        if (
-            self.compact_every
-            and batch_id > 0
-            and batch_id % self.compact_every == 0
-        ):
-            self.compact(batch.sparkSession)
+        self.store.append(
+            partial.withColumn(
+                "hb", F.pmod(F.xxhash64("h"), F.lit(self.n_hash_buckets))
+            ),
+            batch_id,
+        )

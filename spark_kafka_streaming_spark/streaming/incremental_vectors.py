@@ -24,10 +24,9 @@ Design (the 100 TB shape):
   path does implicitly;
 * each micro-batch, via ``foreachBatch``: integer-scale the incoming
   vectors, assign each to its ``n_assign`` nearest cells (broadcast
-  centroid join — the batch side is never shuffled), and append under
-  ``cell=C/batch=B`` with dynamic partition overwrite (replaying a
-  crashed trigger overwrites exactly its own leaves — the
-  exactly-once posture of the other stores);
+  centroid join — the batch side is never shuffled), and append to a
+  :class:`..fold.TieredStore` bucketed by ``cell`` (leaves sorted by
+  ``c_id``);
 * :meth:`IncrementalVectorIndexer.topk` serves queries from the
   store: probe each query's ``n_probe`` nearest cells, read ONLY the
   matching ``cell=…`` directories (the probed cell list is bounded by
@@ -36,10 +35,9 @@ Design (the 100 TB shape):
   candidates, window top-k.  Served rows are bit-identical to
   ``ivf_topk(queries, everything_ingested, centroids=snapshot)`` —
   pinned in tests/test_streaming_extra.py;
-* :meth:`IncrementalVectorIndexer.compact` folds per-batch leaves
-  into one ``batch=-1`` base per cell, bounding file counts (temp
-  dir + rename; a transactional table format would make the same
-  move atomic).
+* :meth:`IncrementalVectorIndexer.compact` folds trigger leaves into
+  runs per cell, bounding file counts — a plain rewrite, since cell
+  membership is pinned by the centroid snapshot.
 """
 
 from __future__ import annotations
@@ -50,8 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .fold import compact_tiered, guard_batch_id, read_store
-from .swap import recover_swap, swap_lock
+from .fold import TieredStore
 from ..functions import vectors as V
 from ..operators.similarity import _cells_arrow, _scaled, nearest_cells_sql
 
@@ -72,13 +69,18 @@ class IncrementalVectorIndexer:
         compact_every: int = 0,
     ):
         self.root = root
-        self.cells_path = os.path.join(root, "cells")
         self.centroids_path = os.path.join(root, "centroids")
         self.n_cells = n_cells
         self.n_assign = n_assign
         self.id_col = id_col
         self.vec_col = vec_col
-        self.compact_every = compact_every
+        self.cells = TieredStore(
+            os.path.join(root, "cells"),
+            "cell",
+            "c_id",
+            lambda df: df.select("c_id", "c_v", "c_n", "cell"),
+            compact_every,
+        )
         # The centroid snapshot is immutable once trained (a snapshot
         # swap is an explicit re-assignment operator, never an implicit
         # ingest-path event), so the bounded k×(d+1)-int model pull
@@ -135,44 +137,9 @@ class IncrementalVectorIndexer:
         assigned = _cells_arrow(
             scaled, "c", self.n_assign, cent_ids, cent_m, cent_n
         )
-        # Lock spans the leaf write + any compact: a concurrent topk
-        # pins pre- or post-batch state, never a torn leaf.
-        with swap_lock(self.cells_path):
-            recover_swap(self.cells_path)
-            guard_batch_id(self.cells_path, "cell", batch_id)
-            (
-                assigned
-                .select("c_id", "c_v", "c_n", "cell")
-                .withColumn("batch", F.lit(batch_id))
-                # Co-locate each cell's rows in one task before the
-                # partitioned write: without this every input task
-                # writes a file per cell it touches — O(tasks × cells)
-                # leaves per trigger (measured live at the fourth
-                # decade: 16,734 files / 731 s per 20k-vector trigger
-                # at 1,414 cells; the commit move is driver-side
-                # O(files)).  Hashing by cell makes it exactly one
-                # file per touched (cell, batch) leaf; the shuffle is
-                # the micro-batch only, never the store.  The explicit
-                # partition count stops AQE coalescing the tiny
-                # micro-batch shuffle to ONE task that would create
-                # every cell leaf serially (measured: 1.48 s of a
-                # 1.64 s trigger write was that single write task —
-                # plans/r12/jobs_stream_vector_store_drain_before.txt).
-                .repartition(
-                    batch.sparkSession.sparkContext.defaultParallelism,
-                    F.col("cell"),
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("cell", "batch")
-                .parquet(self.cells_path)
-            )
-            if (
-                self.compact_every
-                and batch_id > 0
-                and batch_id % self.compact_every == 0
-            ):
-                self.compact(batch.sparkSession)
+        self.cells.append(
+            assigned.select("c_id", "c_v", "c_n", "cell"), batch_id
+        )
 
     # -- serve ---------------------------------------------------------
 
@@ -193,7 +160,7 @@ class IncrementalVectorIndexer:
         # tiered-fold watermark filter applied from the pin walk
         # itself — a trigger leaf replayed after its fold is ignored
         # (exactly-once across compaction).
-        pinned = read_store(spark, self.cells_path, "cell")
+        pinned = self.cells.read(spark)
         if cents is None or pinned is None:
             return None
         q_scaled = _scaled(queries, self.id_col, self.vec_col, "q")
@@ -227,18 +194,5 @@ class IncrementalVectorIndexer:
     # -- maintenance ---------------------------------------------------
 
     def compact(self, spark: SparkSession) -> dict[str, int]:
-        """Tiered per-cell fold (:func:`..fold.compact_tiered`): cells
-        that accumulated trigger leaves get those leaves rewritten into
-        one run; runs fold into the cell's base at the staggered run
-        bound.  Per-compact work is bounded by data since the last
-        compact plus amortized majors, never store size.  State is
-        append-only (cell membership is pinned by the centroid
-        snapshot), so the fold is a plain rewrite — no merge
-        arithmetic."""
-        return compact_tiered(
-            spark,
-            self.cells_path,
-            "cell",
-            lambda df: df.select("c_id", "c_v", "c_n", "cell"),
-            sort_col="c_id",
-        )
+        """One tiered compaction pass (:meth:`..fold.TieredStore.compact`)."""
+        return self.cells.compact(spark)

@@ -435,9 +435,9 @@ def recover_tree(store_path: str) -> None:
     stores — the dedup store's ``keys/`` and ``hashes/`` subtrees.
     The root-level recover only looks for sidecars beside the root,
     so an export (or any whole-tree consumer) taken after a crash and
-    before the store's own write path runs ``_recover`` would ship a
-    subtree with a bucket still renamed aside — silently invisible to
-    the reader.  This walks the tree and finishes every interrupted
+    before the store's own write path recovers its subtrees would ship
+    a subtree with a bucket still renamed aside — silently invisible
+    to the reader.  This walks the tree and finishes every interrupted
     swap whose sidecar directory is present, at any depth."""
     recover_swap(store_path)
     if not os.path.isdir(store_path):

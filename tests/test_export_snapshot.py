@@ -205,11 +205,11 @@ def test_export_recovers_nested_subtree_swaps_and_ships_no_sidecars(
     # the export serves the complete signature store: same key-index
     # rows as the live store
     live = sorted(
-        map(tuple, dd._store_keys(spark).drop("batch").collect())
+        map(tuple, dd.key_store.read(spark, live=True).drop("batch").collect())
     )
     exported = IncrementalDeduper(dest, str(tmp_path / "acc2"))
     got = sorted(
-        map(tuple, exported._store_keys(spark).drop("batch").collect())
+        map(tuple, exported.key_store.read(spark, live=True).drop("batch").collect())
     )
     assert got == live
     shutil.rmtree(dest)

@@ -102,7 +102,8 @@ def test_store_probe_broadcasts_batch_and_prunes_store(spark, tmp_path):
     b2 = spark.createDataFrame([(10, BASE + " extra")], DOC_SCHEMA)
     keys = band_keys(signatures(b2))
     probe = dedup._dup_ids(
-        keys, dedup._store_keys(spark), dedup._store_hashes(spark)
+        keys, dedup.key_store.read(spark, live=True),
+        dedup.hash_store.read(spark, live=True),
     )
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, "store probe must broadcast the batch"

@@ -49,7 +49,8 @@ def _probe_plan(spark, dedup):
         spark.createDataFrame([(10, BASE + " extra")], DOC_SCHEMA)
     ))
     probe = dedup._dup_ids(
-        keys, dedup._store_keys(spark), dedup._store_hashes(spark)
+        keys, dedup.key_store.read(spark, live=True),
+        dedup.hash_store.read(spark, live=True),
     )
     return probe, probe._jdf.queryExecution().executedPlan().toString()
 

@@ -246,21 +246,21 @@ def test_dedup_store_replay_after_fold_exactly_once(spark, tmp_path):
     dd(b0, 0)
     dd(b1, 1)
     keys_before = sorted(
-        map(tuple, dd._store_keys(spark).drop("batch").collect())
+        map(tuple, dd.key_store.read(spark, live=True).drop("batch").collect())
     )
     hashes_before = sorted(
-        map(tuple, dd._store_hashes(spark).drop("batch").collect())
+        map(tuple, dd.hash_store.read(spark, live=True).drop("batch").collect())
     )
     dd.compact(spark)
     assert sorted(
-        map(tuple, dd._store_keys(spark).drop("batch").collect())
+        map(tuple, dd.key_store.read(spark, live=True).drop("batch").collect())
     ) == keys_before
     dd(b1, 1)  # replay after the fold
     assert sorted(
-        map(tuple, dd._store_keys(spark).drop("batch").collect())
+        map(tuple, dd.key_store.read(spark, live=True).drop("batch").collect())
     ) == keys_before, "replayed folded leaves duplicated the key index"
     assert sorted(
-        map(tuple, dd._store_hashes(spark).drop("batch").collect())
+        map(tuple, dd.hash_store.read(spark, live=True).drop("batch").collect())
     ) == hashes_before, "replayed folded leaves duplicated the hash table"
     # and a near-dup of an accepted doc is still rejected post-replay
     dd(spark.createDataFrame(
