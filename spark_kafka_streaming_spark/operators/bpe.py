@@ -71,16 +71,13 @@ BPE_LOCAL_VOCAB_MAX = int(
 
 def _local_vocab(syms) -> list[tuple[int, str]] | None:
     """The (freq, symbols) vocab as driver rows when it fits under
-    :data:`BPE_LOCAL_VOCAB_MAX`, else ``None`` — decided by ONE bounded
-    ``limit(bound + 1).collect()`` instead of a ``count()`` job plus a
-    second full collect (the count was the one Spark job the local
-    path still paid — round-11 verdict minor #5).  ``CollectLimit``
-    scans partitions incrementally, so the over-bound case reads only
-    enough partitions to produce bound + 1 rows."""
-    rows = syms.limit(BPE_LOCAL_VOCAB_MAX + 1).collect()
-    if len(rows) > BPE_LOCAL_VOCAB_MAX:
+    :data:`BPE_LOCAL_VOCAB_MAX`, else ``None`` — decided by a bounded
+    ``limit(bound + 1).count()`` probe, so the over-bound case ships no
+    rows to the driver (the under-bound case pays the small count job
+    plus the collect)."""
+    if syms.limit(BPE_LOCAL_VOCAB_MAX + 1).count() > BPE_LOCAL_VOCAB_MAX:
         return None
-    return [(int(r["freq"]), r["s"]) for r in rows]
+    return [(int(r["freq"]), r["s"]) for r in syms.collect()]
 
 
 def _pair_counts_local(vocab: list[tuple[int, str]]) -> dict:

@@ -214,18 +214,16 @@ def pq_codebooks(
     cn); ``cell`` is the seed vector's id (stable label, like IVF).
 
     Below :data:`PQ_LOCAL_TRAIN_MAX` training rows the Lloyd schedule
-    replays driver-side from ONE bounded collect (see the knob's
-    docstring) — identical codebooks, none of the per-iteration
+    replays driver-side from ONE collect (see the knob's docstring) —
+    identical codebooks, none of the per-iteration
     assignment-join/update-aggregation plan; above it the distributed
-    loop below runs unchanged."""
-    probe = (
-        sub.select("id", "sub_id", "sv", "sn")
-        .limit(PQ_LOCAL_TRAIN_MAX + 1)
-        .collect()
-    )
-    if len(probe) <= PQ_LOCAL_TRAIN_MAX:
+    loop below runs unchanged.  The path is decided by a bounded
+    ``limit(bound + 1).count()``, so the over-bound case ships no rows
+    to the driver."""
+    train = sub.select("id", "sub_id", "sv", "sn")
+    if train.limit(PQ_LOCAL_TRAIN_MAX + 1).count() <= PQ_LOCAL_TRAIN_MAX:
         return sub.sparkSession.createDataFrame(
-            _codebooks_local(probe, iters),
+            _codebooks_local(train.collect(), iters),
             "sub_id INT, cell BIGINT, cv ARRAY<BIGINT>, cn BIGINT",
         )
     seed_ids = sub.select("id").distinct().orderBy("id").limit(K_CODES)

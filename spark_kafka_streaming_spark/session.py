@@ -8,7 +8,12 @@ the same code drops onto a 1000-executor cluster unchanged:
   overridden by AQE's coalescing from a high initial count;
 * Arrow enabled for the few Pandas-UDF code paths;
 * UTC session timezone so event-time semantics are engine-independent
-  (and comparable against the DuckDB oracle).
+  (and comparable against the DuckDB oracle);
+* cheap checkpoint commits for stateful streams: RocksDB changelog
+  checkpointing uploads one changelog file per state partition per
+  epoch (snapshots move to the maintenance thread), and local sessions
+  commit checkpoint files through the FileSystem API, whose rename on
+  ``file:`` is one fork-free ``rename(2)``.
 """
 
 from __future__ import annotations
@@ -93,8 +98,25 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
+        .config(
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+            "true",
+        )
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        # Spark's default FileContext manager renames through
+        # AbstractFileSystem.renameInternal, which on ``file:`` resolves
+        # links by forking ``readlink`` for the source, the destination
+        # and their .crc twins, and replaces by delete-then-rename (not
+        # atomic). The FileSystem manager's rename there is one
+        # rename(2). Clusters keep the default: on HDFS the FileContext
+        # rename-with-overwrite is atomic and FileSystem.rename is not.
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -167,10 +167,13 @@ class IncrementalQuantileStore:
             if samp is None:
                 return
             tmp = self.store_path + ".compact.tmp"
+            # Explicit count, as in fold.TieredStore.append: without one
+            # AQE may coalesce the keyed exchange into a single task
+            # that writes the whole base serially.
             (
                 self._retained(samp)
                 .withColumn("batch", F.lit(-1))
-                .repartition("g")
+                .repartition(spark.sparkContext.defaultParallelism, "g")
                 .write.mode("overwrite")
                 .partitionBy("batch")
                 .parquet(tmp)

@@ -5,7 +5,8 @@ DuckDB end-to-end).
 
 * BPE local-replay trainer ≡ the distributed per-step loop — same
   merge schedule (ranks, symbols, counts) on real corpus data, both
-  for the sequential and the batched trainer.
+  for the sequential and the batched trainer.  Past the bound, the
+  BPE and PQ local-path probes ship no rows to the driver.
 * The vectorized grouped bottom-k task cut emits exactly the per-group
   k smallest (h, ky) rows of its input — the contract the window
   re-cut and every downstream quantile estimate rest on.
@@ -54,6 +55,32 @@ def test_bpe_batched_local_replay_matches_distributed(
     release_operator_caches()
     assert local == dist
     assert len(local) > 0
+
+
+def test_over_bound_local_path_probes_pull_no_rows(
+    spark, docs, sf_dir, monkeypatch
+):
+    """Past their bounds the BPE vocab probe and the PQ training probe
+    count instead of collecting, so no rows reach the driver."""
+    from pyspark.sql import functions as F
+
+    from spark_kafka_streaming_spark.operators import pq as PQ
+
+    pulls = []
+    frame = type(docs)  # the concrete (classic) DataFrame class
+    collect = frame.collect
+    monkeypatch.setattr(
+        frame, "collect", lambda df: pulls.append(df) or collect(df)
+    )
+    monkeypatch.setattr(BPE, "BPE_LOCAL_VOCAB_MAX", 2)
+    monkeypatch.setattr(PQ, "PQ_LOCAL_TRAIN_MAX", 2)
+    syms = BPE.word_freq(docs).select(
+        "freq", F.expr(BPE._CHARS_SPARK).alias("s")
+    )
+    assert BPE._local_vocab(syms) is None
+    emb = load_table(spark, sf_dir, "embeddings")
+    PQ.pq_codebooks(PQ._subspace_rows(emb, "vec_id", "embedding"))
+    assert pulls == []
 
 
 def test_grouped_bottomk_cut_is_exact_per_group(spark):

@@ -244,7 +244,7 @@ def test_merge_store_bucket_swap_crash_recovery(spark, tmp_path):
     """Interrupted per-bucket swap in IncrementalMerger: a bucket
     renamed aside with no replacement renamed in (the crash window
     that used to DELETE the bucket's untouched keys) is restored by
-    _recover_buckets on the next read — the snapshot equals the
+    swap.recover_bucket_swap on the next read — the snapshot equals the
     pre-crash state."""
     from spark_kafka_streaming_spark.streaming.incremental_merge import (
         IncrementalMerger,

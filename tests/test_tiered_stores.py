@@ -11,7 +11,9 @@ each must show the same properties:
 
 The dedup store's NULL-id case rides along: both branches of the
 dup-id fold (IN list and anti-join) accept the same docs, NULL id
-included.
+included.  So does the quantile store's compacted base, which stays
+outside the shared path but uses the same explicit-count keyed write:
+each group in one file, spread over more than one task.
 """
 
 from __future__ import annotations
@@ -31,6 +33,9 @@ from spark_kafka_streaming_spark.streaming.incremental_index import (
 )
 from spark_kafka_streaming_spark.streaming.incremental_spans import (
     IncrementalSpanDeduper,
+)
+from spark_kafka_streaming_spark.streaming.incremental_quantiles import (
+    IncrementalQuantileStore,
 )
 from spark_kafka_streaming_spark.streaming.incremental_vectors import (
     IncrementalVectorIndexer,
@@ -208,3 +213,22 @@ def test_dedup_null_id_accepted_by_both_branches(
     ), 0)
     got = {r.doc_id for r in spark.read.parquet(acc).collect()}
     assert got == {1, None}
+
+
+def test_quantile_compact_writes_one_file_per_group(spark, tmp_path):
+    """The compacted ``batch=-1`` base holds each group in exactly one
+    file, and the write is not collapsed into one task: without an
+    explicit partition count AQE coalesces this toy-sized exchange to
+    a single file."""
+    import pyarrow.parquet as pq
+
+    n_groups = 12
+    store = IncrementalQuantileStore(str(tmp_path / "q"), "g", "v", "id", k=4)
+    for b in range(N_BATCHES):
+        rows = [(i, f"g{i % n_groups}", i) for i in range(b * 24, (b + 1) * 24)]
+        store(spark.createDataFrame(rows, "id bigint, g string, v bigint"), b)
+    store.compact(spark)
+    files = glob.glob(os.path.join(store.store_path, "batch=-1", "part-*"))
+    groups = [set(pq.read_table(f, columns=["g"])["g"].to_pylist()) for f in files]
+    assert 1 < len(files) <= spark.sparkContext.defaultParallelism
+    assert sum(map(len, groups)) == len(set().union(*groups)) == n_groups
