@@ -11,6 +11,38 @@
   hyperplanes are deterministic (hash-derived), so results are stable.
 * :func:`lsh_topk` — ANN top-k through the same hyperplane buckets:
   probes only the query's buckets, trading recall for a bounded join.
+
+Top-k stage map.  The exact tiers (:func:`brute_force_topk`,
+:func:`mips_topk`, :func:`hard_negatives`), the IVF tiers
+(:func:`ivf_topk`, :func:`ivf_topk_imi`, :func:`mips_topk_ivf`),
+:func:`lsh_topk` and the streaming vector store
+(:mod:`..streaming.incremental_vectors`) are configurations of one
+chain, each step written once:
+
+* **scale** — :func:`_scaled`: id, pass-through columns, integer-scaled
+  vector and its exact squared norm under a side prefix (``q``/``c``);
+* **centroids** — :func:`_seed_centroids` (the ``n_cells``
+  smallest-id vectors) and :func:`_centroid_model` (the bounded numpy
+  pull of the arrow assigners; an empty model yields no cells);
+* **assign** — single-level :func:`_cells_arrow` /
+  :func:`nearest_cells_sql` or two-level :func:`_imi_cells_arrow` /
+  :func:`_imi_cells_sql`, the only step in which the IVF variants
+  differ (:func:`_ivf` is their shared body);
+* **score** — :func:`_local_topk`, the numpy exact local top-k kernel
+  behind :func:`_bounded_q_topk_arrow` and :func:`_cell_topk_arrow`,
+  and :func:`_candidate_pairs`, the SQL candidate join of the
+  ``impl="sql"`` forms and the store;
+* **rank** — :func:`_rank`, the global ``(score desc, neighbor_id)``
+  ``row_number`` top-k.
+
+Every ``impl="arrow"`` form returns the same rows as its
+``impl="sql"`` twin, bit for bit: int64 matmul is the exact HOF dot,
+the cosine is the same single-divide IEEE expression, and stable
+argsorts over id-ascending columns replay the ``row_number``
+tie-breaks (pinned in tests/test_ann_pipeline.py).  Arrow kernels are
+self-contained closures: they are pickled by value to executor workers
+that may not be able to import this package, so they capture arrays
+and scalars, never module-level names (also pinned there).
 """
 
 from __future__ import annotations
@@ -84,15 +116,162 @@ def spread_degenerate_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-def _scaled(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
-    scaled = F.expr(V.spark_scaled(vec_col))
+def _scaled(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    prefix: str,
+    prescaled: bool = False,
+    keep: dict[str, str] | None = None,
+) -> DataFrame:
+    """The scale step: (``prefix``_id, ``keep`` columns renamed
+    {source: alias}, ``prefix``_v, ``prefix``_n) — the id, pass-through
+    columns, the round(x·SCALE) integer vector (``vec_col`` as is when
+    ``prescaled``) and its exact squared norm."""
+    v = vec_col if prescaled else V.spark_scaled(vec_col)
     return df.select(
         F.col(id_col).alias(f"{prefix}_id"),
-        scaled.alias(f"{prefix}_v"),
-        F.expr(V.spark_dot(V.spark_scaled(vec_col), V.spark_scaled(vec_col))).alias(
-            f"{prefix}_n"
-        ),
+        *[F.col(src).alias(alias) for src, alias in (keep or {}).items()],
+        F.expr(v).alias(f"{prefix}_v"),
+        F.expr(V.spark_dot(v, v)).alias(f"{prefix}_n"),
     )
+
+
+def _seed_centroids(scaled: DataFrame, n_cells: int) -> DataFrame:
+    """Deterministic seed model (cell, cent_v, cent_n): the ``n_cells``
+    vectors of a ``c``-scaled corpus with the smallest ids."""
+    return (
+        scaled.orderBy("c_id")
+        .limit(n_cells)
+        .select(
+            F.col("c_id").alias("cell"),
+            F.col("c_v").alias("cent_v"),
+            F.col("c_n").alias("cent_n"),
+        )
+    )
+
+
+def _np_rows(rows, id_c: str, v_c: str, n_c: str):
+    """(ids, vectors, norms) int64 numpy triple of collected rows."""
+    import numpy as np
+
+    return (
+        np.array([r[id_c] for r in rows], dtype="int64"),
+        np.array([r[v_c] for r in rows], dtype="int64"),
+        np.array([r[n_c] for r in rows], dtype="int64"),
+    )
+
+
+def _centroid_model(cents: DataFrame):
+    """The centroid table as a cell-ascending (ids, vectors, norms)
+    numpy triple — the arrow assigners' model, a bounded pull of
+    n_cells×(d+1) ints.  An empty table gives an empty model, which
+    :func:`_ivf` serves through the SQL assigners (no centroids, no
+    cells, no rows)."""
+    return _np_rows(cents.orderBy("cell").collect(), "cell", "cent_v", "cent_n")
+
+
+def _rank(pairs: DataFrame, score: str, k: int, cast_int: bool = False) -> DataFrame:
+    """The rank step: ``row_number`` per query over (``score`` desc,
+    neighbor_id), kept ≤ k.  ``cast_int`` keeps the explicit int cast
+    of the MIPS and hard-negative operators (same type, one more
+    Project in their plans)."""
+    w = W.partitionBy("query_id").orderBy(F.desc(score), "neighbor_id")
+    rn = F.row_number().over(w)
+    return pairs.withColumn("rn", rn.cast("int") if cast_int else rn).filter(
+        F.col("rn") <= k
+    )
+
+
+def _candidate_pairs(
+    q: DataFrame,
+    c: DataFrame,
+    on: str | list[str] | None = "cell",
+    metric: str = "cosine",
+) -> DataFrame:
+    """The SQL candidate join of the ``impl="sql"`` forms, the LSH
+    tier and the vector store: ``q_*`` rows against ``c_*`` rows
+    sharing the ``on`` bucket columns (a cell, or an LSH band key),
+    self excluded, named (query_id, neighbor_id, cos_sim | ip) and
+    scored exactly — the SQL twin of :func:`_local_topk`.  ``on=None``
+    pairs every corpus row with the broadcast query set (the exact
+    tiers)."""
+    if on is None:
+        joined = c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
+    else:
+        joined = q.join(c, on).filter(F.col("q_id") != F.col("c_id"))
+    return joined.select(
+        F.col("q_id").alias("query_id"),
+        F.col("c_id").alias("neighbor_id"),
+        _pair_score(metric),
+    )
+
+
+def _pair_score(metric: str) -> F.Column:
+    """The exact score of a ``q_*``/``c_*`` row: ``cos_sim`` (integer
+    dot over the product of square-rooted norms) or ``ip``
+    (dot/SCALE²)."""
+    if metric == "cosine":
+        cos = V.spark_cosine(V.spark_dot("q_v", "c_v"), "q_n", "c_n")
+        return F.expr(cos).alias("cos_sim")
+    scale2 = float(V.SCALE) * float(V.SCALE)
+    dot = F.expr(V.spark_dot("q_v", "c_v")).cast("double")
+    return (dot / F.lit(scale2)).alias("ip")
+
+
+def _local_topk(k: int, metric: str):
+    """The score step's numpy kernel: ``topk(q_ids, q_m, q_n, pdf)``
+    scores the query triple against a corpus pandas batch (``c_id``,
+    ``c_v``, ``c_n``) as one int64 matmul and returns each query's
+    exact local top-k under the (score desc, neighbor_id) order, self
+    excluded, as (query_id, neighbor_id, cos_sim | ip).  ``metric``:
+    'cosine' (dot/(√n·√n)) or 'ip' (dot/SCALE²).
+
+    A global winner ranks ≤ k in any subset of the candidates that
+    holds it, so the union of local lists always contains the global
+    top-k and the downstream :func:`_rank` reproduces the SQL form.
+    The returned closure captures only scalars (see the module
+    docstring on pickling)."""
+    col = "cos_sim" if metric == "cosine" else "ip"
+    scale2 = float(V.SCALE) * float(V.SCALE)
+
+    def topk(q_ids, q_m, q_n, pdf):
+        import numpy as np
+        import pandas as pd
+
+        if not len(q_ids) or not len(pdf):
+            return pd.DataFrame({"query_id": [], "neighbor_id": [], col: []}).astype(
+                {"query_id": "int64", "neighbor_id": "int64", col: "float64"}
+            )
+        pdf = pdf.sort_values("c_id", kind="stable")
+        cid = pdf["c_id"].to_numpy(dtype="int64")
+        cm = np.array(pdf["c_v"].tolist(), dtype="int64")
+        dots = (q_m @ cm.T).astype("float64")
+        if metric == "cosine":
+            cn = pdf["c_n"].to_numpy(dtype="int64")
+            score = dots / (
+                np.sqrt(q_n.astype("float64"))[:, None]
+                * np.sqrt(cn.astype("float64"))[None, :]
+            )
+        else:
+            score = dots / scale2
+        kk = min(k + 1, len(cid))  # +1 absorbs at most one self pair
+        # columns are c_id-ascending; stable argsort on -score replays
+        # row_number() OVER (ORDER BY score DESC, neighbor_id)
+        idx = np.argsort(-score, axis=1, kind="stable")[:, :kk]
+        sel_cid = cid[idx]
+        valid = sel_cid != q_ids[:, None]
+        keep = valid & (np.cumsum(valid, axis=1) <= k)
+        rix = np.repeat(np.arange(len(q_ids)), kk).reshape(len(q_ids), kk)
+        return pd.DataFrame(
+            {
+                "query_id": q_ids[rix[keep]],
+                "neighbor_id": sel_cid[keep],
+                col: score[rix[keep], idx[keep]],
+            }
+        )
+
+    return topk
 
 
 def brute_force_topk(
@@ -117,7 +296,7 @@ def brute_force_topk(
     ((cos desc, neighbor_id) order, self excluded), so the window
     stage ranks ≤ |Q|·k rows per batch instead of the full |Q|·|C|
     fan-out.  ``impl="sql"`` is the pure built-in broadcast-join
-    form; bit-identical (pinned in tests).
+    form (arrow≡sql: see the module docstring).
     """
     if impl not in ("arrow", "sql"):
         raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
@@ -129,90 +308,28 @@ def brute_force_topk(
     # interpreted per-row chain.
     q = _scaled(queries, id_col, vec_col, "q")
     c = _scaled(corpus, id_col, vec_col, "c")
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
     if impl == "arrow":
         pairs = _bounded_q_topk_arrow(q, c, k, metric="cosine")
     else:
-        cos = F.expr(V.spark_cosine(V.spark_dot("q_v", "c_v"), "q_n", "c_n"))
-        pairs = (
-            c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
-            .select(
-                F.col("q_id").alias("query_id"),
-                F.col("c_id").alias("neighbor_id"),
-                cos.alias("cos_sim"),
-            )
-        )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
-    )
+        pairs = _candidate_pairs(q, c, on=None)
+    return _rank(pairs, "cos_sim", k)
 
 
 def _bounded_q_topk_arrow(
     q: DataFrame, c: DataFrame, k: int, metric: str
 ) -> DataFrame:
     """(query_id, neighbor_id, score) candidate rows for the exact
-    bounded-|Q| tiers: queries collected (|Q|×(d+1) ints), corpus
-    scored batch-wise by one int64 matmul, batch-local top-k per
-    query under the exact (score desc, neighbor_id) order with self
-    excluded — the union of batch-local top-k lists always contains
-    the global top-k (a global winner ranks ≤ k within its own
-    batch), so the downstream window reproduces the SQL form
-    bit-for-bit.  ``metric``: 'cosine' (dot/(√n·√n)) or 'ip'
-    (dot/SCALE²)."""
-    rows = q.collect()
-    import numpy as np
-
-    q_ids = np.array([r["q_id"] for r in rows], dtype="int64")
-    q_m = (
-        np.array([r["q_v"] for r in rows], dtype="int64")
-        if rows
-        else np.zeros((0, 1), dtype="int64")
-    )
-    q_n = np.array([r["q_n"] for r in rows], dtype="int64")
-    scale2 = float(V.SCALE) * float(V.SCALE)
-    col = "cos_sim" if metric == "cosine" else "ip"
+    bounded-|Q| tiers: queries collected (|Q|×(d+1) ints), each corpus
+    Arrow batch scored by :func:`_local_topk` — the batch-local top-k
+    lists hold the global top-k."""
+    q_ids, q_m, q_n = _np_rows(q.collect(), "q_id", "q_v", "q_n")
+    topk = _local_topk(k, metric)
 
     def _batches(it):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], col: []}
-        ).astype({"query_id": "int64", "neighbor_id": "int64", col: "float64"})
-        if not len(q_ids):
-            yield empty
-            return
         for pdf in it:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("c_id", kind="stable")
-            cm = np.stack(pdf["c_v"].map(lambda a: np.asarray(a, dtype="int64")))
-            cid = pdf["c_id"].to_numpy(dtype="int64")
-            dots = (q_m @ cm.T).astype("float64")
-            if metric == "cosine":
-                cn = pdf["c_n"].to_numpy(dtype="int64")
-                score = dots / (
-                    np.sqrt(q_n.astype("float64"))[:, None]
-                    * np.sqrt(cn.astype("float64"))[None, :]
-                )
-            else:
-                score = dots / scale2
-            kk = min(k + 1, len(cid))  # +1 absorbs at most one self pair
-            idx = np.argsort(-score, axis=1, kind="stable")[:, :kk]
-            sel_cid = cid[idx]
-            valid = sel_cid != q_ids[:, None]
-            keep = valid & (np.cumsum(valid, axis=1) <= k)
-            rix = np.repeat(np.arange(len(q_ids)), kk).reshape(len(q_ids), kk)
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[rix[keep]],
-                    "neighbor_id": sel_cid[keep],
-                    col: score[rix[keep], idx[keep]],
-                }
-            )
+            yield topk(q_ids, q_m, q_n, pdf)
 
+    col = "cos_sim" if metric == "cosine" else "ip"
     return c.mapInPandas(
         _batches, f"query_id long, neighbor_id long, {col} double"
     )
@@ -1008,22 +1125,11 @@ def lsh_topk(
         "band",
         "key",
     )
-    cos = F.expr(V.spark_cosine(V.spark_dot("q_v", "c_v"), "q_n", "c_n"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
     # Persisted (small: ≤ |Q|·k rows) so a downstream orderBy's range-
     # sampling pass reuses it instead of re-running the bucket join.
+    pairs = _candidate_pairs(q, c, on=["band", "key"])
     return track_persist(
-        q.join(c, ["band", "key"])
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            cos.alias("cos_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
+        _rank(pairs.dropDuplicates(["query_id", "neighbor_id"]), "cos_sim", k)
     )
 
 
@@ -1103,10 +1209,11 @@ def nearest_cells_sql(
 ) -> DataFrame:
     """Assign each vector to its ``n`` nearest centroids (broadcast
     centroid join + exact integer cosine, ``(cos desc, cell)``
-    tie-break) — the shared cell-assignment leg of :func:`ivf_topk`'s
-    SQL impl and the streaming vector-index store
+    tie-break) — the single-level SQL assigner of :func:`ivf_topk` and
+    the streaming vector-index store
     (:mod:`..streaming.incremental_vectors`).  ``side``'s first
-    column must be its id."""
+    column must be its id; the result is ``side``'s columns plus
+    ``cell``."""
     cos = F.expr(V.spark_cosine(V.spark_dot(vcol, "cent_v"), ncol, "cent_n"))
     w = W.partitionBy(side.columns[0]).orderBy(F.desc("cell_cos"), "cell")
     return (
@@ -1114,6 +1221,7 @@ def nearest_cells_sql(
         .withColumn("cell_cos", cos)
         .withColumn("cell_rank", F.row_number().over(w))
         .filter(F.col("cell_rank") <= n)
+        .select(*side.columns, "cell")
     )
 
 
@@ -1147,11 +1255,8 @@ def ivf_topk(
     q_knn_label_propagation_ann's 41 s at sf1.  The centroid table is
     pulled to the driver for the kernel (k×(d+1) ints — the bounded
     model-pull posture of kmeans/Bloom/z-order).  ``impl="sql"`` is
-    the pure built-in-expression form; both produce bit-identical
-    rows (int64 matmul ≡ exact HOF dot, same IEEE cosine expression,
-    ties broken by ascending cell via stable argsort over
-    cell-ordered columns ≡ ``row_number`` (cos desc, cell)) — pinned
-    in tests.
+    the pure built-in-expression form (arrow≡sql: see the module
+    docstring).
 
     Seed centroids are deterministic (the ``n_cells`` corpus vectors
     with the smallest ids), optionally refined with ``kmeans_iters``
@@ -1163,6 +1268,10 @@ def ivf_topk(
     query cost — measured +0.06 recall at sf0.01 for 2× index.
     Everything runs on exact integer-scaled dot products → reproducible;
     recall is measured against :func:`brute_force_topk` in tests.
+    ``centroids`` pins a centroid snapshot (the serving posture: an
+    index maintained across corpus snapshots — see
+    streaming/incremental_vectors.py); ``n_cells``/``kmeans_iters``
+    are then ignored, the snapshot IS the model.
 
     Scale: the corpus shuffles once per k-means iteration plus once for
     the index; each query probes n_probe cells → query cost ≈
@@ -1176,90 +1285,70 @@ def ivf_topk(
     centroids/index would instead be written per corpus snapshot, like
     the dedup signature table (:mod:`.signatures`).
     """
-    def _prep(side: DataFrame, prefix: str) -> DataFrame:
-        v = vec_col if prescaled else V.spark_scaled(vec_col)
-        return side.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.expr(v).alias(f"{prefix}_v"),
-            F.expr(V.spark_dot(v, v)).alias(f"{prefix}_n"),
-        )
+    scaled = _scaled(corpus, id_col, vec_col, "c", prescaled)
+    if centroids is None:
+        centroids = _seed_centroids(scaled, n_cells)
+        if kmeans_iters:
+            centroids = kmeans_refine(scaled, centroids, iters=kmeans_iters)
+    q_scaled = _scaled(queries, id_col, vec_col, "q", prescaled)
+    return _ivf(q_scaled, scaled, centroids, k, n_probe, n_assign, impl)
 
+
+def _ivf(
+    q_scaled: DataFrame,
+    scaled: DataFrame,
+    cents: DataFrame,
+    k: int,
+    n_probe: int,
+    n_assign: int,
+    impl: str,
+    n_sprobe: int | None = None,
+) -> DataFrame:
+    """The IVF body :func:`ivf_topk` and :func:`ivf_topk_imi` share:
+    assign the corpus to its ``n_assign`` and each query to its
+    ``n_probe`` nearest cells — single-level, or two-level through
+    ``n_sprobe`` super-centroids — then score the candidates sharing
+    a cell and rank.  Only the assigner differs between the two."""
     if impl not in ("arrow", "sql"):
         raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
-    scaled = _prep(corpus, "c")
-    if centroids is not None:
-        # pinned centroid snapshot (the serving posture: an index
-        # maintained across corpus snapshots — see
-        # streaming/incremental_vectors.py); n_cells/kmeans_iters
-        # are ignored, the snapshot IS the model.
-        cents = centroids
-    else:
-        cents = (
-            scaled.orderBy("c_id")
-            .limit(n_cells)
-            .select(
-                F.col("c_id").alias("cell"),
-                F.col("c_v").alias("cent_v"),
-                F.col("c_n").alias("cent_n"),
-            )
-        )
-        if kmeans_iters:
-            cents = kmeans_refine(scaled, cents, iters=kmeans_iters)
-    q_scaled = _prep(queries, "q")
+    model = _centroid_model(cents) if impl == "arrow" else None
+    if model is not None and len(model[0]):
 
-    if impl == "arrow":
-        rows = cents.orderBy("cell").collect()  # bounded: k×(d+1) ints
-        import numpy as np
+        def assign(side: DataFrame, prefix: str, n: int) -> DataFrame:
+            if n_sprobe is None:
+                return _cells_arrow(side, prefix, n, model)
+            return _imi_cells_arrow(side, prefix, n, n_sprobe, model)
 
-        cent_ids = np.array([r["cell"] for r in rows], dtype="int64")
-        cent_m = np.array([r["cent_v"] for r in rows], dtype="int64")
-        cent_n = np.array([r["cent_n"] for r in rows], dtype="int64")
-        corpus_cells = _cells_arrow(
-            scaled, "c", n_assign, cent_ids, cent_m, cent_n
-        )
-        query_cells = _cells_arrow(
-            q_scaled, "q", n_probe, cent_ids, cent_m, cent_n
-        )
-        pair_cos = _cell_topk_arrow(query_cells, corpus_cells, k)
-    else:
+        corpus_cells = assign(scaled, "c", n_assign)
+        pairs = _cell_topk_arrow(assign(q_scaled, "q", n_probe), corpus_cells, k)
+    else:  # impl="sql", or an empty model: no centroids, so no cells
         cents = track_persist(cents)
-        corpus_cells = nearest_cells_sql(
-            scaled, cents, "c_v", "c_n", n_assign
-        ).select("c_id", "c_v", "c_n", "cell")
-        query_cells = nearest_cells_sql(
-            q_scaled, cents, "q_v", "q_n", n_probe
-        ).select("q_id", "q_v", "q_n", "cell")
-        cos = F.expr(V.spark_cosine(V.spark_dot("q_v", "c_v"), "q_n", "c_n"))
-        pair_cos = (
-            query_cells.join(corpus_cells, "cell")
-            .filter(F.col("q_id") != F.col("c_id"))
-            .select(
-                F.col("q_id").alias("query_id"),
-                F.col("c_id").alias("neighbor_id"),
-                cos.alias("cos_sim"),
-            )
-        )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        pair_cos.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
-    )
+        split = None if n_sprobe is None else _imi_split_sql(cents)
+
+        def assign(side: DataFrame, prefix: str, n: int) -> DataFrame:
+            v, nn = f"{prefix}_v", f"{prefix}_n"
+            if split is None:
+                return nearest_cells_sql(side, cents, v, nn, n)
+            return _imi_cells_sql(side, *split, v, nn, n, n_sprobe)
+
+        corpus_cells = assign(scaled, "c", n_assign)
+        pairs = _candidate_pairs(assign(q_scaled, "q", n_probe), corpus_cells)
+    return _rank(pairs.dropDuplicates(["query_id", "neighbor_id"]), "cos_sim", k)
 
 
 def _cells_arrow(
-    side: DataFrame, prefix: str, n: int, cent_ids, cent_m, cent_n
+    side: DataFrame, prefix: str, n: int, model
 ) -> DataFrame:
-    """(id, v, n, cell) rows for each vector's ``n`` nearest centroids,
-    computed as one int64 matmul per Arrow batch.
+    """(id, v, n, cell) rows for each vector's ``n`` nearest centroids
+    of ``model`` (:func:`_centroid_model`), computed as one int64
+    matmul per Arrow batch.
 
     Ties replay the SQL form's ``row_number() OVER (ORDER BY cos DESC,
     cell)``: the centroid matrix arrives cell-ascending and the argsort
     on -cos is STABLE, so equal cosines resolve to the lower cell.
     int64 matmul is exact (|component| ≤ ~1e8 ⇒ per-pair sums ≪ 2⁶³),
     and the cosine is the same single-divide IEEE expression as
-    ``spark_cosine`` — bit-identical across impls (pinned in tests).
+    ``spark_cosine``.
 
     Memory is bounded by processing each Arrow batch in ROW BLOCKS:
     the score matrix (and its full stable argsort, which materializes
@@ -1271,6 +1360,7 @@ def _cells_arrow(
     bit-identical at any block size.
     """
     id_c, v_c, n_c = f"{prefix}_id", f"{prefix}_v", f"{prefix}_n"
+    cent_ids, cent_m, cent_n = model
 
     # NOTE: self-contained closure — pickled to executor workers that
     # may not have this package importable; captured arrays pickle by
@@ -1326,55 +1416,23 @@ def _cell_topk_arrow(
     cell, never per candidate pair — a pair-wise kernel over the
     joined candidates measured SLOWER than the HOF form at sf1
     because it shipped both 64-int vectors per candidate row through
-    Arrow), then a per-(query, cell) top-k with the exact (cos desc,
-    neighbor_id) order, self excluded.
+    Arrow), then a per-(query, cell) exact top-k.
 
-    The local top-k is EXACT for the downstream global top-k: a
-    neighbor in the global top-k ranks ≤ k among its own cell's
-    candidates under the same total order, so the union of per-cell
-    top-k lists (|Q|·n_probe·k rows instead of the full candidate
-    fan-out) always contains it; the shared dropDuplicates + window
-    then reproduces the SQL impl's result bit-for-bit (pinned in
-    tests).  Per-cell matmul size is occupancy-bounded — auto-scaled
-    cell counts keep expected occupancy ≈ per·n_assign; a pathological
-    mega-cell degrades to one big (still vectorized) block.
+    The per-(query, cell) lists come from :func:`_local_topk`, so they
+    hold the global top-k in |Q|·n_probe·k rows instead of the full
+    candidate fan-out.  Per-cell matmul size is occupancy-bounded —
+    auto-scaled cell counts keep expected occupancy ≈ per·n_assign; a
+    pathological mega-cell degrades to one big (still vectorized)
+    block.
     """
+    topk = _local_topk(k, "cosine")
 
     def _score(left, right):
         import numpy as np
-        import pandas as pd
 
-        if not len(left) or not len(right):
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cos_sim": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64",
-                      "cos_sim": "float64"})
-        right = right.sort_values("c_id", kind="stable")
-        qm = np.stack(left["q_v"].map(lambda a: np.asarray(a, dtype="int64")))
-        cm = np.stack(right["c_v"].map(lambda a: np.asarray(a, dtype="int64")))
-        qn = left["q_n"].to_numpy(dtype="int64")
-        cn = right["c_n"].to_numpy(dtype="int64")
-        qid = left["q_id"].to_numpy(dtype="int64")
-        cid = right["c_id"].to_numpy(dtype="int64")
-        cos = (qm @ cm.T).astype("float64") / (
-            np.sqrt(qn.astype("float64"))[:, None]
-            * np.sqrt(cn.astype("float64"))[None, :]
-        )
-        kk = min(k + 1, len(cid))  # +1 absorbs at most one self pair
-        # columns are c_id-ascending; stable argsort on -cos replays
-        # row_number() OVER (ORDER BY cos DESC, neighbor_id)
-        idx = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-        sel_cid = cid[idx]
-        valid = sel_cid != qid[:, None]
-        keep = valid & (np.cumsum(valid, axis=1) <= k)
-        rows = np.repeat(np.arange(len(qid)), kk).reshape(len(qid), kk)
-        return pd.DataFrame(
-            {
-                "query_id": qid[rows[keep]],
-                "neighbor_id": sel_cid[keep],
-                "cos_sim": cos[rows[keep], idx[keep]],
-            }
-        )
+        q_ids = left["q_id"].to_numpy(dtype="int64")
+        q_m = np.array(left["q_v"].tolist(), dtype="int64")
+        return topk(q_ids, q_m, left["q_n"].to_numpy(dtype="int64"), right)
 
     return (
         query_cells.groupBy("cell")
@@ -1410,7 +1468,7 @@ def _imi_split(cent_m, cent_n):
 
 
 def _imi_cells_arrow(
-    side, prefix: str, n: int, n_sprobe: int, cent_ids, cent_m, cent_n
+    side: DataFrame, prefix: str, n: int, n_sprobe: int, model
 ) -> DataFrame:
     """(id, v, n, cell) rows via TWO-LEVEL assignment: each vector
     scores the ⌊√n_cells⌋ super-centroids, descends into its
@@ -1428,9 +1486,8 @@ def _imi_cells_arrow(
     with duplicate centroid vectors) emit nothing, matching the SQL
     join.
     """
-    import numpy as np
-
     id_c, v_c, n_c = f"{prefix}_id", f"{prefix}_v", f"{prefix}_n"
+    cent_ids, cent_m, cent_n = model
     n_super, cells_by_super = _imi_split(cent_m, cent_n)
     sup_m, sup_n = cent_m[:n_super], cent_n[:n_super]
     sp_eff = min(n_sprobe, n_super)
@@ -1527,6 +1584,37 @@ def _imi_cells_arrow(
     )
 
 
+def _imi_split_sql(cents: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """SQL twin of :func:`_imi_split`: (supers, c2s) — the first
+    ⌊√n_cells⌋ centroids (cell-ascending) as super-centroids
+    (sid, s_v, s_n), and every centroid with the id of its nearest
+    super under (cos desc, sid)."""
+    import math
+
+    n_super = max(1, int(math.floor(math.sqrt(float(cents.count())))))
+    supers = (
+        cents.withColumn("sr", F.row_number().over(W.orderBy("cell")))
+        .filter(F.col("sr") <= n_super)
+        .select(
+            F.col("cell").alias("sid"),
+            F.col("cent_v").alias("s_v"),
+            F.col("cent_n").alias("s_n"),
+        )
+    )
+    cs_cos = F.expr(
+        V.spark_cosine(V.spark_dot("cent_v", "s_v"), "cent_n", "s_n")
+    )
+    wcs = W.partitionBy("cell").orderBy(F.desc("cs_cos"), "sid")
+    c2s = (
+        cents.join(F.broadcast(supers), F.lit(True))
+        .withColumn("cs_cos", cs_cos)
+        .withColumn("rk", F.row_number().over(wcs))
+        .filter(F.col("rk") == 1)
+        .select("cell", "cent_v", "cent_n", "sid")
+    )
+    return supers, c2s
+
+
 def _imi_cells_sql(
     side: DataFrame,
     supers: DataFrame,
@@ -1538,7 +1626,8 @@ def _imi_cells_sql(
 ) -> DataFrame:
     """SQL twin of :func:`_imi_cells_arrow`: broadcast super join →
     per-vector top-``n_sprobe`` supers → broadcast member-cell join →
-    per-vector top-``n``.  ``side``'s first column is its id."""
+    per-vector top-``n``.  ``side``'s first column is its id; the
+    result is ``side``'s columns plus ``cell``."""
     id_col = side.columns[0]
     s_cos = F.expr(V.spark_cosine(V.spark_dot(vcol, "s_v"), ncol, "s_n"))
     ws = W.partitionBy(id_col).orderBy(F.desc("s_cos"), "sid")
@@ -1556,6 +1645,7 @@ def _imi_cells_sql(
         .withColumn("cell_cos", c_cos)
         .withColumn("cell_rank", F.row_number().over(wc))
         .filter(F.col("cell_rank") <= n)
+        .select(*side.columns, "cell")
     )
 
 
@@ -1588,99 +1678,16 @@ def ivf_topk_imi(
     cell geometry is unchanged — only the ASSIGNMENT search is
     approximated).
 
-    Everything downstream of assignment — per-cell cogrouped int64
-    block matmul, dedup, global (cos desc, neighbor_id) window — is
-    shared with :func:`ivf_topk`, and both impls ('arrow' kernel /
-    'sql' composition) are bit-identical (pinned in tests).  Oracle:
-    :func:`duck_ivf2_topk_sql` replays seed centroids, the super
-    split, both assignment levels, probe sets, cosines, and
+    Everything but the assigner — seed centroids, per-cell scoring,
+    dedup, global rank — is :func:`ivf_topk`'s (:func:`_ivf`).
+    Oracle: :func:`duck_ivf2_topk_sql` replays seed centroids, the
+    super split, both assignment levels, probe sets, cosines, and
     tie-breaks in generated CTEs.
     """
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
-
-    def _prep(side: DataFrame, prefix: str) -> DataFrame:
-        v = V.spark_scaled(vec_col)
-        return side.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.expr(v).alias(f"{prefix}_v"),
-            F.expr(V.spark_dot(v, v)).alias(f"{prefix}_n"),
-        )
-
-    scaled = _prep(corpus, "c")
-    q_scaled = _prep(queries, "q")
-    cents = (
-        scaled.orderBy("c_id")
-        .limit(n_cells)
-        .select(
-            F.col("c_id").alias("cell"),
-            F.col("c_v").alias("cent_v"),
-            F.col("c_n").alias("cent_n"),
-        )
-    )
-    if impl == "arrow":
-        import numpy as np
-
-        rows = cents.orderBy("cell").collect()  # bounded: k×(d+1) ints
-        cent_ids = np.array([r["cell"] for r in rows], dtype="int64")
-        cent_m = np.array([r["cent_v"] for r in rows], dtype="int64")
-        cent_n = np.array([r["cent_n"] for r in rows], dtype="int64")
-        corpus_cells = _imi_cells_arrow(
-            scaled, "c", n_assign, n_sprobe, cent_ids, cent_m, cent_n
-        )
-        query_cells = _imi_cells_arrow(
-            q_scaled, "q", n_probe, n_sprobe, cent_ids, cent_m, cent_n
-        )
-        pair_cos = _cell_topk_arrow(query_cells, corpus_cells, k)
-    else:
-        import math
-
-        cents = track_persist(cents)
-        n_super = max(1, int(math.floor(math.sqrt(float(cents.count())))))
-        wsr = W.orderBy("cell")
-        supers = (
-            cents.withColumn("sr", F.row_number().over(wsr))
-            .filter(F.col("sr") <= n_super)
-            .select(
-                F.col("cell").alias("sid"),
-                F.col("cent_v").alias("s_v"),
-                F.col("cent_n").alias("s_n"),
-            )
-        )
-        cs_cos = F.expr(
-            V.spark_cosine(V.spark_dot("cent_v", "s_v"), "cent_n", "s_n")
-        )
-        wcs = W.partitionBy("cell").orderBy(F.desc("cs_cos"), "sid")
-        c2s = (
-            cents.join(F.broadcast(supers), F.lit(True))
-            .withColumn("cs_cos", cs_cos)
-            .withColumn("rk", F.row_number().over(wcs))
-            .filter(F.col("rk") == 1)
-            .select("cell", "cent_v", "cent_n", "sid")
-        )
-        corpus_cells = _imi_cells_sql(
-            scaled, supers, c2s, "c_v", "c_n", n_assign, n_sprobe
-        ).select("c_id", "c_v", "c_n", "cell")
-        query_cells = _imi_cells_sql(
-            q_scaled, supers, c2s, "q_v", "q_n", n_probe, n_sprobe
-        ).select("q_id", "q_v", "q_n", "cell")
-        cos = F.expr(V.spark_cosine(V.spark_dot("q_v", "c_v"), "q_n", "c_n"))
-        pair_cos = (
-            query_cells.join(corpus_cells, "cell")
-            .filter(F.col("q_id") != F.col("c_id"))
-            .select(
-                F.col("q_id").alias("query_id"),
-                F.col("c_id").alias("neighbor_id"),
-                cos.alias("cos_sim"),
-            )
-        )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        pair_cos.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
-    )
+    scaled = _scaled(corpus, id_col, vec_col, "c")
+    q_scaled = _scaled(queries, id_col, vec_col, "q")
+    cents = _seed_centroids(scaled, n_cells)
+    return _ivf(q_scaled, scaled, cents, k, n_probe, n_assign, impl, n_sprobe)
 
 
 def duck_ivf2_topk_sql(
@@ -1798,9 +1805,9 @@ def mips_topk(
     cosine ANN tier cannot serve them unmodified.  This is the exact
     MIPS baseline: one corpus pass, int64 dot products
     (engine-exact), window top-k with (ip desc, neighbor) tiebreak.
-    Cost |Q|·|C| dots, zero corpus shuffle.  ``impl``: the
-    :func:`brute_force_topk` dual-impl contract ('arrow' batch
-    matmul + local top-k, 'sql' broadcast join; bit-identical).
+    Cost |Q|·|C| dots, zero corpus shuffle.  ``impl``: 'arrow' batch
+    matmul + local top-k, 'sql' broadcast join, as in
+    :func:`brute_force_topk` (arrow≡sql: see the module docstring).
 
     Scale path (Bachrach et al., RecSys 2014): append
     ``sqrt(M² − ‖x‖²)`` to each corpus vector and 0 to each query —
@@ -1815,26 +1822,11 @@ def mips_topk(
         raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
     q = _scaled(queries, id_col, vec_col, "q")
     c = _scaled(corpus, id_col, vec_col, "c")
-    w = W.partitionBy("query_id").orderBy(F.desc("ip"), "neighbor_id")
     if impl == "arrow":
         pairs = _bounded_q_topk_arrow(q, c, k, metric="ip")
     else:
-        ip = F.expr(V.spark_dot("q_v", "c_v")).cast("double") / F.lit(
-            float(V.SCALE) * float(V.SCALE)
-        )
-        pairs = (
-            c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
-            .select(
-                F.col("q_id").alias("query_id"),
-                F.col("c_id").alias("neighbor_id"),
-                ip.alias("ip"),
-            )
-        )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "ip", "rn")
-    )
+        pairs = _candidate_pairs(q, c, on=None, metric="ip")
+    return _rank(pairs, "ip", k, cast_int=True)
 
 
 def hard_negatives(
@@ -1861,40 +1853,20 @@ def hard_negatives(
     Returns (query_id, query_label, neighbor_id, neighbor_label,
     cos_sim, rn).
     """
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(label_col).alias("q_label"),
-        F.expr(V.spark_scaled(vec_col)).alias("q_v"),
-        F.expr(V.spark_dot(V.spark_scaled(vec_col), V.spark_scaled(vec_col))).alias(
-            "q_n"
-        ),
+    q = _scaled(queries, id_col, vec_col, "q", keep={label_col: "q_label"})
+    c = _scaled(corpus, id_col, vec_col, "c", keep={label_col: "c_label"})
+    pairs = c.join(
+        F.broadcast(q),
+        (F.col("q_id") != F.col("c_id"))
+        & (F.col("q_label") != F.col("c_label")),
+    ).select(
+        F.col("q_id").alias("query_id"),
+        F.col("q_label").alias("query_label"),
+        F.col("c_id").alias("neighbor_id"),
+        F.col("c_label").alias("neighbor_label"),
+        _pair_score("cosine"),
     )
-    c = corpus.select(
-        F.col(id_col).alias("c_id"),
-        F.col(label_col).alias("c_label"),
-        F.expr(V.spark_scaled(vec_col)).alias("c_v"),
-        F.expr(V.spark_dot(V.spark_scaled(vec_col), V.spark_scaled(vec_col))).alias(
-            "c_n"
-        ),
-    )
-    cos = F.expr(V.spark_cosine(V.spark_dot("q_v", "c_v"), "q_n", "c_n"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        c.join(
-            F.broadcast(q),
-            (F.col("q_id") != F.col("c_id"))
-            & (F.col("q_label") != F.col("c_label")),
-        )
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("q_label").alias("query_label"),
-            F.col("c_id").alias("neighbor_id"),
-            F.col("c_label").alias("neighbor_label"),
-            cos.alias("cos_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= k)
-    )
+    return _rank(pairs, "cos_sim", k, cast_int=True)
 
 
 def mips_topk_ivf(
@@ -1953,18 +1925,12 @@ def mips_topk_ivf(
         vec_col="av",
         prescaled=True,
     ).select("query_id", "neighbor_id")
-    ip = F.expr(V.spark_dot("q_v", "c_v")).cast("double") / F.lit(
-        float(V.SCALE) * float(V.SCALE)
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("ip"), "neighbor_id")
-    return (
+    pairs = (
         cand.join(q, cand["query_id"] == q["q_id"])
         .join(c, cand["neighbor_id"] == c["c_id"])
-        .select("query_id", "neighbor_id", ip.alias("ip"))
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "ip", "rn")
+        .select("query_id", "neighbor_id", _pair_score("ip"))
     )
+    return _rank(pairs, "ip", k, cast_int=True)
 
 
 def duck_mips_ivf_sql(

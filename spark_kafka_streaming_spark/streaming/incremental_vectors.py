@@ -15,9 +15,10 @@ maintenance, no merge arithmetic at all.
 
 Design (the 100 TB shape):
 
-* the **centroid snapshot** is trained once from the first micro-batch
-  (deterministic: the ``n_cells`` smallest-id vectors, the exact seed
-  rule of :func:`..operators.similarity.ivf_topk`) and persisted
+* the **centroid snapshot** is trained once from the first non-empty
+  micro-batch (deterministic: the ``n_cells`` smallest-id vectors, the
+  exact seed rule of :func:`..operators.similarity.ivf_topk`; an
+  empty batch before it ingests nothing) and persisted
   beside the store — production would retrain periodically and
   version snapshots; a snapshot swap is a full re-assignment, which
   is why it is an explicit operator here, not something the ingest
@@ -46,11 +47,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from .fold import TieredStore
-from ..functions import vectors as V
-from ..operators.similarity import _cells_arrow, _scaled, nearest_cells_sql
+from ..operators.similarity import (
+    _candidate_pairs,
+    _cells_arrow,
+    _centroid_model,
+    _rank,
+    _scaled,
+    _seed_centroids,
+    nearest_cells_sql,
+)
 
 
 class IncrementalVectorIndexer:
@@ -95,26 +102,19 @@ class IncrementalVectorIndexer:
             return None
         return spark.read.parquet(self.centroids_path)
 
-    def _train_centroids(self, scaled: DataFrame) -> None:
-        (
-            scaled.orderBy("c_id")
-            .limit(self.n_cells)
-            .select(
-                F.col("c_id").alias("cell"),
-                F.col("c_v").alias("cent_v"),
-                F.col("c_n").alias("cent_n"),
-            )
-            .write.mode("overwrite")
-            .parquet(self.centroids_path)
-        )
-
     # -- ingest --------------------------------------------------------
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         scaled = _scaled(batch, self.id_col, self.vec_col, "c")
         if not os.path.exists(self.centroids_path):
-            self._train_centroids(scaled)
-        cents = self.centroids(batch.sparkSession)
+            # Train from the first NON-EMPTY batch only: a snapshot
+            # seeded from an empty batch would hold no cells, and every
+            # later trigger (and any indexer reopened on this root)
+            # would have nowhere to assign its vectors.
+            if batch.isEmpty():
+                return
+            seed = _seed_centroids(scaled, self.n_cells)
+            seed.write.mode("overwrite").parquet(self.centroids_path)
         # Ingest assignment runs the Arrow int64-matmul kernel, not the
         # interpreted HOF chain: the SQL form is a |batch| × n_cells
         # broadcast cartesian scored row-at-a-time by aggregate/zip_with
@@ -125,21 +125,10 @@ class IncrementalVectorIndexer:
         # dual-impl pin), and the centroid pull is the bounded
         # k×(d+1)-int model-pull posture ivf_topk already uses.
         if self._cent_model is None:
-            rows = cents.orderBy("cell").collect()
-            import numpy as np
-
-            self._cent_model = (
-                np.array([r["cell"] for r in rows], dtype="int64"),
-                np.array([r["cent_v"] for r in rows], dtype="int64"),
-                np.array([r["cent_n"] for r in rows], dtype="int64"),
-            )
-        cent_ids, cent_m, cent_n = self._cent_model
-        assigned = _cells_arrow(
-            scaled, "c", self.n_assign, cent_ids, cent_m, cent_n
-        )
-        self.cells.append(
-            assigned.select("c_id", "c_v", "c_n", "cell"), batch_id
-        )
+            cents = self.centroids(batch.sparkSession)
+            self._cent_model = _centroid_model(cents)
+        assigned = _cells_arrow(scaled, "c", self.n_assign, self._cent_model)
+        self.cells.append(assigned, batch_id)
 
     # -- serve ---------------------------------------------------------
 
@@ -164,32 +153,15 @@ class IncrementalVectorIndexer:
         if cents is None or pinned is None:
             return None
         q_scaled = _scaled(queries, self.id_col, self.vec_col, "q")
-        q_cells = nearest_cells_sql(
-            q_scaled, cents, "q_v", "q_n", n_probe
-        ).select("q_id", "q_v", "q_n", "cell")
+        q_cells = nearest_cells_sql(q_scaled, cents, "q_v", "q_n", n_probe)
         # bounded |Q|·n_probe probed-cell list → static isin filter so
         # partition pruning never opens unprobed cell directories
         probed = sorted(
             {r["cell"] for r in q_cells.select("cell").distinct().collect()}
         )
         store = pinned.filter(F.col("cell").isin(probed))
-        cos = F.expr(V.spark_cosine(V.spark_dot("q_v", "c_v"), "q_n", "c_n"))
-        pair_cos = (
-            q_cells.join(store, "cell")
-            .filter(F.col("q_id") != F.col("c_id"))
-            .select(
-                F.col("q_id").alias("query_id"),
-                F.col("c_id").alias("neighbor_id"),
-                cos.alias("cos_sim"),
-            )
-        )
-        w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-        return (
-            pair_cos.dropDuplicates(["query_id", "neighbor_id"])
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("query_id", "neighbor_id", "cos_sim", "rn")
-        )
+        pairs = _candidate_pairs(q_cells, store)
+        return _rank(pairs.dropDuplicates(["query_id", "neighbor_id"]), "cos_sim", k)
 
     # -- maintenance ---------------------------------------------------
 

@@ -138,38 +138,6 @@ def test_knn_ann_covers_every_query(emb):
     assert got == q.count()
 
 
-def test_ivf_arrow_equals_sql(emb):
-    """The Arrow matmul impl (cell assignment + pair scoring kernels)
-    must reproduce the SQL HOF impl bit-for-bit — the _banded
-    dual-impl contract, incl. the disjoint-corpus shape."""
-    q10 = emb.filter(F.col("vec_id") < 10)
-    a = sorted(map(tuple, ivf_topk(q10, emb, k=5, impl="arrow").collect()))
-    b = sorted(map(tuple, ivf_topk(q10, emb, k=5, impl="sql").collect()))
-    assert a == b
-    qs = emb.filter(F.col("vec_id") % 5 == 0)
-    cp = emb.filter(F.col("vec_id") % 5 != 0)
-    a = sorted(map(tuple, ivf_topk(qs, cp, k=5, impl="arrow").collect()))
-    b = sorted(map(tuple, ivf_topk(qs, cp, k=5, impl="sql").collect()))
-    assert a == b
-
-
-def test_ivf_arrow_equals_sql_refined(emb):
-    q10 = emb.filter(F.col("vec_id") < 10)
-    a = sorted(
-        map(
-            tuple,
-            ivf_topk(q10, emb, k=5, kmeans_iters=1, impl="arrow").collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            ivf_topk(q10, emb, k=5, kmeans_iters=1, impl="sql").collect(),
-        )
-    )
-    assert a == b
-
-
 def test_bpe_replace_semantics_match_duckdb(spark):
     """The merge application is DEFINED as one leftmost non-overlapping
     replace-all pass; Spark's replace and DuckDB's replace must agree
@@ -222,18 +190,6 @@ def test_hard_negatives_labels_differ(emb):
     for r in rows:
         assert r["query_label"] != r["neighbor_label"]
         assert r["query_id"] != r["neighbor_id"]
-
-
-def test_brute_and_mips_arrow_equal_sql(emb):
-    """The bounded-|Q| batch-matmul impls must reproduce the SQL
-    broadcast-join forms bit-for-bit."""
-    q10 = emb.filter(F.col("vec_id") < 10)
-    a = sorted(map(tuple, brute_force_topk(q10, emb, k=5, impl="arrow").collect()))
-    b = sorted(map(tuple, brute_force_topk(q10, emb, k=5, impl="sql").collect()))
-    assert a == b
-    a = sorted(map(tuple, mips_topk(q10, emb, k=5, impl="arrow").collect()))
-    b = sorted(map(tuple, mips_topk(q10, emb, k=5, impl="sql").collect()))
-    assert a == b
 
 
 @pytest.fixture(scope="module")

@@ -82,22 +82,6 @@ def test_imi_split_partitions_all_cells():
     assert sorted(owned) == list(range(37))  # every cell owned once
 
 
-def test_imi_impl_parity_bit_identical(spark, emb):
-    from pyspark.sql import functions as F
-
-    from spark_kafka_streaming_spark.operators.similarity import ivf_topk_imi
-
-    q = emb.filter(F.col("vec_id") < 8)
-    a = sorted(
-        map(tuple, ivf_topk_imi(q, emb, k=4, n_cells=25, impl="arrow").collect())
-    )
-    b = sorted(
-        map(tuple, ivf_topk_imi(q, emb, k=4, n_cells=25, impl="sql").collect())
-    )
-    assert a == b
-    assert len(a) > 0
-
-
 def test_imi_recall_vs_brute_force(spark, emb):
     from pyspark.sql import functions as F
 

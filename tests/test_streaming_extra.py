@@ -802,6 +802,80 @@ def test_incremental_vector_index_equals_batch(spark, sf_dir, tmp_path):
     emb.unpersist()
 
 
+def test_incremental_vector_index_empty_first_batch(spark, sf_dir, tmp_path):
+    """An empty micro-batch 0 must not become the centroid snapshot:
+    the store trains from the first non-empty batch, keeps ingesting
+    after a restart with a fresh indexer on the same root, and serves
+    the batch ivf_topk over everything ingested."""
+    import glob
+    import shutil as _sh
+
+    from spark_kafka_streaming_spark.operators.similarity import ivf_topk
+    from spark_kafka_streaming_spark.streaming.incremental_vectors import (
+        IncrementalVectorIndexer,
+    )
+
+    emb = (
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(90)
+    )
+    emb.persist().count()
+    src = tmp_path / "vecs"
+    src.mkdir()
+
+    def stage(i, df):
+        part_dir = tmp_path / f"part{i}"
+        df.coalesce(1).write.parquet(str(part_dir))
+        (part,) = glob.glob(str(part_dir / "part-*.parquet"))
+        dst = str(src / f"b{i}.parquet")
+        _sh.copy(part, dst)
+        # the file source orders by mtime: keep the staging order
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    def drain(indexer):
+        q = (
+            spark.readStream.schema(emb.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+            .writeStream.foreachBatch(indexer)
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    root = str(tmp_path / "vstore")
+    stage(0, emb.filter(F.lit(False)))
+    stage(1, emb.filter(F.col("vec_id") < 60))
+    drain(IncrementalVectorIndexer(root, n_cells=8, n_assign=2))
+    restarted = IncrementalVectorIndexer(root, n_cells=8, n_assign=2)
+    assert restarted.centroids(spark).count() == 8
+    stage(2, emb.filter(F.col("vec_id") >= 60))
+    drain(restarted)
+
+    queries = emb.filter(F.col("vec_id") < 10)
+    got = sorted(map(tuple, restarted.topk(queries, k=5, n_probe=3).collect()))
+    want = sorted(
+        map(
+            tuple,
+            ivf_topk(
+                queries,
+                emb,
+                k=5,
+                n_probe=3,
+                n_assign=2,
+                centroids=restarted.centroids(spark),
+            ).collect(),
+        )
+    )
+    assert len(got) == 50
+    assert got == want
+    emb.unpersist()
+
+
 def test_hybrid_rrf_served_from_stores_equals_batch(spark, sf_dir, tmp_path):
     """The hybrid-retrieval serving loop: RRF fusion of the maintained
     lexical store (bm25_snapshot) and vector store (topk) must equal
