@@ -32,23 +32,34 @@ def spark_cosine(dot: str, n1: str, n2: str) -> str:
     )
 
 
+def np_rounder():
+    """The engines' ``round()`` for numpy: ``np_round(v)`` maps a float
+    array to int64, half away from zero on the EXACT double — floor/ceil
+    and the ``v − floor(v)`` subtraction are exact for |v| < 2⁵², so the
+    ≥ 0.5 comparison sees the true fraction.  (``np.rint`` is half-even
+    and ``trunc(v ± 0.5)`` can round v just below k+.5 up to k+1 — both
+    silently diverge from the engines.)  Returned as a closure so Arrow
+    kernels can capture it: cloudpickle ships a nested function by
+    value, a module-level one by name, and executors need not be able
+    to import this package."""
+
+    def np_round(v):
+        import numpy as np
+
+        fv, cv = np.floor(v), np.ceil(v)
+        return np.where(v >= 0, fv + (v - fv >= 0.5), cv - (cv - v >= 0.5)).astype(
+            "int64"
+        )
+
+    return np_round
+
+
 def np_scaled(m):
     """numpy twin of :func:`spark_scaled`: float matrix → int64 scaled
-    components, bit-identical to Spark/DuckDB ``round()``.
-
-    Half-away-from-zero on the EXACT double value: floor/ceil and the
-    ``v − floor(v)`` subtraction are exact for |v| < 2⁵², so the ≥ 0.5
-    comparison sees the true fraction.  (``np.rint`` is half-even and
-    ``trunc(v ± 0.5)`` can round v just below k+.5 up to k+1 — both
-    silently diverge from the engines.)
-    """
+    components, bit-identical to Spark/DuckDB ``round()``."""
     import numpy as np
 
-    v = np.asarray(m, dtype="float64") * SCALE
-    fv, cv = np.floor(v), np.ceil(v)
-    return np.where(v >= 0, fv + (v - fv >= 0.5), cv - (cv - v >= 0.5)).astype(
-        "int64"
-    )
+    return np_rounder()(np.asarray(m, dtype="float64") * SCALE)
 
 
 def duck_scaled(col: str) -> str:

@@ -35,8 +35,6 @@ cnt) — the artifact a tokenizer ships.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -58,15 +56,12 @@ N_MERGES = 12
 #: tests/test_opt_round11.py::test_bpe_local_replay_matches_distributed
 #: and tests/test_round8_bpe.py's deep-schedule oracle diff).
 #: Above the bound the distributed loop runs unchanged — the 100 TB
-#: posture (a 10M-word crawl vocab stays distributed unless the
-#: operator raises the knob).  Sizing note: the rows cross the
-#: non-Arrow collect path as Python objects (~150–300 B per (freq,
-#: short-string) row, several × the on-wire bytes), so 1M rows is
-#: roughly a few hundred MB of driver heap — the knob's ceiling is a
-#: driver-memory budget, not a wire-format estimate.
-BPE_LOCAL_VOCAB_MAX = int(
-    os.environ.get("SPARK_GRAFT_BPE_LOCAL_VOCAB_MAX", "1000000")
-)
+#: posture (a 10M-word crawl vocab stays distributed).  Sizing note:
+#: the rows cross the non-Arrow collect path as Python objects
+#: (~150–300 B per (freq, short-string) row, several × the on-wire
+#: bytes), so 1M rows is roughly a few hundred MB of driver heap — the
+#: bound is a driver-memory budget, not a wire-format estimate.
+BPE_LOCAL_VOCAB_MAX = 1_000_000
 
 
 def _local_vocab(syms) -> list[tuple[int, str]] | None:

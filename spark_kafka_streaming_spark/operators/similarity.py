@@ -22,8 +22,11 @@ chain, each step written once:
 * **scale** — :func:`_scaled`: id, pass-through columns, integer-scaled
   vector and its exact squared norm under a side prefix (``q``/``c``);
 * **centroids** — :func:`_seed_centroids` (the ``n_cells``
-  smallest-id vectors) and :func:`_centroid_model` (the bounded numpy
-  pull of the arrow assigners; an empty model yields no cells);
+  smallest-id vectors, through the L2 chain's seed stage
+  :func:`.kmeans._seed`), optionally refined by :func:`kmeans_refine`
+  (cosine assignment, the L2 chain's update stage
+  :func:`.kmeans._update`), and :func:`_centroid_model` (the bounded
+  numpy pull of the arrow assigners; an empty model yields no cells);
 * **assign** — single-level :func:`_cells_arrow` /
   :func:`nearest_cells_sql` or two-level :func:`_imi_cells_arrow` /
   :func:`_imi_cells_sql`, the only step in which the IVF variants
@@ -52,6 +55,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vectors as V
 from ..functions.caching import track_persist
+from .kmeans import _seed, _update, centroid_partial_sums
 from .skew import bounded_self_pairs
 
 #: number of hyperplanes per band / number of bands for sign-LSH.
@@ -140,14 +144,12 @@ def _scaled(
 def _seed_centroids(scaled: DataFrame, n_cells: int) -> DataFrame:
     """Deterministic seed model (cell, cent_v, cent_n): the ``n_cells``
     vectors of a ``c``-scaled corpus with the smallest ids."""
-    return (
-        scaled.orderBy("c_id")
-        .limit(n_cells)
-        .select(
-            F.col("c_id").alias("cell"),
-            F.col("c_v").alias("cent_v"),
-            F.col("c_n").alias("cent_n"),
-        )
+    return _seed(
+        scaled,
+        n_cells,
+        ["c_id"],
+        [F.col("c_id").alias("cell"), F.col("c_v").alias("cent_v"),
+         F.col("c_n").alias("cent_n")],
     )
 
 
@@ -387,7 +389,7 @@ def derived_lsh_planes(
 def _warn_candidate_mass(n_rows: int, n_planes: int, n_bands: int) -> None:
     """Loud warning when an EXPLICIT geometry implies an unbounded
     candidate explosion at this corpus size — the same treatment the
-    kmeans default-flip got (operators/kmeans.py:647): production calls
+    kmeans default-flip got (operators/kmeans.py::_form): production calls
     should derive (n_planes=None) or deepen the key; oracle-replay runs
     that MUST pin a small geometry at least fail loudly-and-visibly
     instead of silently spilling the disk (SCALE.md round 9,
@@ -757,6 +759,7 @@ def _banded(
     if impl == "arrow":
         planes = _plane_matrix(n_planes * n_bands)
         scale = V.SCALE
+        rnd = V.np_rounder()
 
         # NOTE: self-contained closure — pickled to executor workers
         # that may not have this package importable (the verification
@@ -780,12 +783,7 @@ def _banded(
                         f"_banded corpus contract violated: vector width "
                         f"{m.shape[1]} != DIM {planes.shape[0]}"
                     )
-                # engine-exact round(x·SCALE) — see vectors.py::np_scaled
-                v = m * scale
-                fv, cv = np.floor(v), np.ceil(v)
-                q = np.where(
-                    v >= 0, fv + (v - fv >= 0.5), cv - (cv - v >= 0.5)
-                ).astype("int64")
+                q = rnd(m * scale)  # engine-exact round(x·SCALE)
                 n = (q * q).sum(axis=1)
                 bits = (q @ planes) > 0
                 keys = np.zeros((len(q), n_bands), dtype="int64")
@@ -793,11 +791,12 @@ def _banded(
                     for pl in range(n_planes):
                         keys[:, b] = keys[:, b] * 2 + bits[:, b * n_planes + pl]
                 n_rows = len(q) * n_bands
+                rep = np.repeat(np.arange(len(q)), n_bands)
                 yield pd.DataFrame(
                     {
-                        "id": np.repeat(pdf[id_col].to_numpy(), n_bands),
-                        "v": [row.tolist() for row in q for _ in range(n_bands)],
-                        "n": np.repeat(n, n_bands),
+                        "id": pdf[id_col].to_numpy()[rep],
+                        "v": pd.Series(list(q)).to_numpy()[rep],
+                        "n": n[rep],
                         "band": np.tile(np.arange(n_bands, dtype="int32"), len(q)),
                         "key": keys.reshape(n_rows),
                     }
@@ -1138,20 +1137,18 @@ def kmeans_refine(
 ) -> DataFrame:
     """Lloyd iterations over integer-scaled vectors, all DataFrame ops.
 
-    Assignment: nearest centroid by cosine (broadcast join + window
-    min). Update: element-wise mean via per-task numpy partial sums
-    (:func:`..operators.kmeans.centroid_partial_sums` — the shuffle
-    carries O(tasks·cells·d) rows, never the n·d posexplode the
-    original shape materialized) → exact BIGINT sums per (cell,
-    position) → one deterministic division, rounded back to the
-    scaled-integer space — so refined centroids are bit-identical
-    across runs/partitionings (FP mean of doubles would not be;
-    integer partial sums commute) and keep the exact-int dot-product
-    path. One shuffle per iteration; centroids stay driver-free
-    (never collected).
+    Assignment: nearest centroid by cosine (broadcast join + ``min_by``
+    argmax).  Update: the L2 chain's update stage
+    (:func:`.kmeans._update`) over per-task numpy partial sums
+    (:func:`.kmeans.centroid_partial_sums` — the shuffle carries
+    O(tasks·cells·d) rows, never the n·d posexplode): exact BIGINT
+    sums per (cell, position), one deterministic division, rounded back
+    to the scaled-integer space — so refined centroids are
+    bit-identical across runs/partitionings (FP mean of doubles would
+    not be; integer partial sums commute) and keep the exact-int
+    dot-product path.  One shuffle per iteration; centroids stay
+    driver-free (never collected).
     """
-    from .kmeans import centroid_partial_sums
-
     for _ in range(iters):
         cos = F.expr(V.spark_cosine(V.spark_dot("c_v", "cent_v"), "c_n", "cent_n"))
         # Rank-1 of the (cos desc, cell) window is an argmax with a
@@ -1159,9 +1156,8 @@ def kmeans_refine(
         # (-cos, cell) selects the identical row (double negation is
         # exact; -0.0 and 0.0 compare equal in both forms) — a hash
         # aggregation whose map-side partial collapses the k× centroid
-        # fan-out in the join stage, no per-id sort (the round-11
-        # _nearest_code move; equivalence pinned in
-        # tests/test_opt_round12.py).
+        # fan-out in the join stage, no per-id sort (equivalence
+        # pinned in tests/test_opt_round12.py).
         assigned = (
             scaled.join(F.broadcast(cents), F.lit(True))
             .withColumn("cell_cos", cos)
@@ -1178,29 +1174,10 @@ def kmeans_refine(
                 F.col("_best.cell").alias("cell"),
             )
         )
-        cents = (
-            centroid_partial_sums(
-                assigned, cluster_col="cell", vec_col="c_v",
-                cluster_type="bigint",
-            )
-            .groupBy("cell", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("cnt").alias("m"))
-            .withColumn(
-                "mean",
-                F.expr("CAST(round(CAST(s AS DOUBLE) / m) AS BIGINT)"),
-            )
-            .groupBy("cell")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "mean"))
-                ).alias("pm")
-            )
-            .select(
-                "cell",
-                F.expr("transform(pm, e -> e.mean)").alias("cent_v"),
-            )
-            .withColumn("cent_n", F.expr(V.spark_dot("cent_v", "cent_v")))
+        sums = centroid_partial_sums(
+            assigned, cluster_col="cell", vec_col="c_v", cluster_type="bigint"
         )
+        cents = _update(sums, ["cell"], "cent_v", "cent_n")
     return cents
 
 
@@ -1386,19 +1363,13 @@ def _cells_arrow(
                     np.sqrt(xn[s:e].astype("float64"))[:, None] * den_c
                 )
                 order = np.argsort(-cos, axis=1, kind="stable")[:, :n_eff]
-                rows = e - s
+                rep = np.repeat(np.arange(s, e), n_eff)
                 yield pd.DataFrame(
                     {
-                        id_c: np.repeat(
-                            pdf[id_c].to_numpy()[s:e], n_eff
-                        ),
-                        v_c: [
-                            row
-                            for row in pdf[v_c].iloc[s:e].map(list)
-                            for _ in range(n_eff)
-                        ],
-                        n_c: np.repeat(xn[s:e], n_eff),
-                        "cell": cent_ids[order].reshape(rows * n_eff),
+                        id_c: pdf[id_c].to_numpy()[rep],
+                        v_c: pdf[v_c].to_numpy()[rep],
+                        n_c: xn[rep],
+                        "cell": cent_ids[order].reshape(-1),
                     }
                 )
 

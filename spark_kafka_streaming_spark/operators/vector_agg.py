@@ -58,13 +58,14 @@ def gram_matrix(
     """
     if impl == "arrow":
         scale = V.SCALE
+        rnd = V.np_rounder()
 
         # NOTE: the kernel closure must be SELF-CONTAINED — it is
         # pickled to executor python workers that may not have this
         # package on sys.path (the verification driver launches from an
         # arbitrary cwd).  Module references (V.np_scaled, …) would be
         # pickled by name and fail to import there; captured scalars
-        # and locally-defined code pickle by value.
+        # and closures (``rnd``) pickle by value.
         def _batches(it):
             import numpy as np
             import pandas as pd
@@ -74,13 +75,7 @@ def gram_matrix(
                 if not len(col):
                     continue
                 m = np.stack(col.map(lambda a: np.asarray(a, dtype="float64")))
-                # engine-exact round(x·SCALE): half-away-from-zero on
-                # the exact double (see functions/vectors.py::np_scaled)
-                v = m * scale
-                fv, cv = np.floor(v), np.ceil(v)
-                q = np.where(
-                    v >= 0, fv + (v - fv >= 0.5), cv - (cv - v >= 0.5)
-                ).astype("int64")
+                q = rnd(m * scale)  # engine-exact round(x·SCALE)
                 g = q.T @ q  # exact: |p| ≤ (0.5·SCALE)² ≪ 2⁶³/batch_rows
                 iu = np.triu_indices(g.shape[0])
                 yield pd.DataFrame(

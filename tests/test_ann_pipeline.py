@@ -5,9 +5,10 @@
   edge corpora (duplicate seed vectors, k larger than the corpus, an
   empty corpus);
 * the output schema of every public ANN operator is pinned;
-* the arrow kernels run after a by-value pickle in a process that
-  cannot import this package — the posture of executor workers
-  started from an arbitrary working directory.
+* the arrow kernels (these and the L2 chain's of operators/kmeans.py)
+  run after a by-value pickle in a process that cannot import this
+  package — the posture of executor workers started from an
+  arbitrary working directory.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
+from spark_kafka_streaming_spark.operators import kmeans as K
 from spark_kafka_streaming_spark.operators import similarity as S
 from spark_kafka_streaming_spark.streaming.incremental_vectors import (
     IncrementalVectorIndexer,
@@ -162,25 +164,37 @@ def test_output_schemas_pinned(emb, tmp_path):
 
 
 class _Frame:
-    """Stands in for a DataFrame: returns the function handed to
-    ``mapInPandas`` / ``applyInPandas`` so the test can pickle it."""
+    """Stands in for a DataFrame and its session: records every
+    function handed to ``mapInPandas`` / ``applyInPandas`` (in call
+    order, in ``kernels``) so the test can pickle it, and answers every
+    other DataFrame call with itself."""
 
     def __init__(self, rows=()):
         self._rows = list(rows)
+        self.kernels = []
 
     def collect(self):
         return self._rows
 
     def mapInPandas(self, fn, schema):
-        return fn
+        self.kernels.append(fn)
+        return self
 
     applyInPandas = mapInPandas
 
-    def groupBy(self, *cols):
+    @property
+    def sparkSession(self):
         return self
 
-    def cogroup(self, other):
-        return self
+    def __getattr__(self, name):
+        return lambda *args, **kwargs: self
+
+
+def _kernel(build, *args):
+    """The kernel ``build(frame, *args)`` hands to Spark."""
+    frame = _Frame()
+    build(frame, *args)
+    return frame.kernels[0]
 
 
 _RUNNER = r"""
@@ -223,6 +237,21 @@ def _kernels():
     model = (ids[:9], m[:9], norms[:9])
     cells = corpus.assign(cell=ids[[0, 1, 2] * 4])
     q_triple = (ids[qi], m[qi], norms[qi])
+    # the L2 chain's kernels (operators/kmeans.py)
+    cents = [(int(i), [int(x) for x in m[i]], int(norms[i])) for i in range(9)]
+    sv = pd.DataFrame({"vec_id": ids, "v": list(m), "n": norms})
+    assigned = sv.assign(cluster=np.array([0, 1, 2] * 4, dtype=np.int32))
+    members = pd.DataFrame(
+        {"sid": 0, "cid": ids[:4], "cv": list(m[:4]), "cn": norms[:4]}
+    )
+    drops = pd.DataFrame(
+        {"id": ids, "cluster": 0, "v": list(np.vstack([m[:6], m[:6]])),
+         "n": np.concatenate([norms[:6], norms[:6]])}
+    )
+    scored = _Frame()
+    S._bounded_q_topk_arrow(_Frame(q_rows), scored, 3, "ip")
+    cogroup = _Frame()
+    K.assign_clusters_imi(cogroup, cents, n_sprobe=2, closure_max_bytes=0)
     return {
         "local_topk_cosine": (
             S._local_topk(3, "cosine"),
@@ -231,25 +260,48 @@ def _kernels():
         ),
         "local_topk_ip": (S._local_topk(3, "ip"), False, (*q_triple, corpus)),
         "bounded_q_topk_arrow": (
-            S._bounded_q_topk_arrow(_Frame(q_rows), _Frame(), 3, "ip"),
+            scored.kernels[0],
             True,
             [corpus.iloc[:5], corpus.iloc[5:]],
         ),
         "cell_topk_arrow": (
-            S._cell_topk_arrow(_Frame(), _Frame(), 3),
+            _kernel(S._cell_topk_arrow, _Frame(), 3),
             False,
             (queries, cells),
         ),
-        "cells_arrow": (S._cells_arrow(_Frame(), "c", 2, model), True, [corpus]),
+        "cells_arrow": (_kernel(S._cells_arrow, "c", 2, model), True, [corpus]),
         "imi_cells_arrow": (
-            S._imi_cells_arrow(_Frame(), "c", 2, 2, model),
+            _kernel(S._imi_cells_arrow, "c", 2, 2, model),
             True,
             [corpus],
+        ),
+        "banded": (
+            _kernel(S._banded, "c_id", "c_v", "arrow", 2, 2),
+            True,
+            [pd.DataFrame({"c_id": ids, "c_v": list(rng.normal(0, 0.1, (12, S.DIM)))})],
+        ),
+        "assign_clusters_arrow": (
+            _kernel(K.assign_clusters_arrow, cents),
+            True,
+            [sv],
+        ),
+        "centroid_partial_sums": (
+            _kernel(K.centroid_partial_sums),
+            True,
+            [assigned.iloc[:5], assigned.iloc[5:]],
+        ),
+        "imi_closure": (_kernel(K.assign_clusters_imi, cents, "vec_id", 2), True, [sv]),
+        "imi_cogroup_probes": (cogroup.kernels[0], True, [sv]),
+        "imi_cogroup_members": (cogroup.kernels[1], False, (sv, members)),
+        "semantic_drops_arrow": (
+            _kernel(K._semantic_drops_arrow, 0.9),
+            False,
+            (drops,),
         ),
     }
 
 
-def test_arrow_kernels_run_without_the_package(tmp_path):
+def test_arrow_kernels_run_without_the_package(spark, tmp_path):
     import pandas as pd
 
     try:

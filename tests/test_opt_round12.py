@@ -30,36 +30,6 @@ def events(spark, sf_dir):
     return load_table(spark, sf_dir, "events")
 
 
-@pytest.mark.parametrize("iters", [1, 2])
-def test_pq_codebooks_local_replay_matches_distributed(
-    spark, sf_dir, iters, monkeypatch
-):
-    """Driver-side Lloyd replay ≡ the distributed per-iteration loop:
-    same seeds, same exact int64 distances and (dist2, cell) argmin
-    tiebreak, same half-away-from-zero centroid update."""
-    from spark_kafka_streaming_spark.functions.caching import (
-        release_operator_caches,
-    )
-    from spark_kafka_streaming_spark.operators import pq as PQ
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    sub = PQ._subspace_rows(emb, "vec_id", "embedding")
-
-    def rows(df):
-        return sorted(
-            (r["sub_id"], r["cell"], tuple(r["cv"]), r["cn"])
-            for r in df.collect()
-        )
-
-    local = rows(PQ.pq_codebooks(sub, iters))
-    release_operator_caches()
-    monkeypatch.setattr(PQ, "PQ_LOCAL_TRAIN_MAX", -1)
-    dist = rows(PQ.pq_codebooks(sub, iters))
-    release_operator_caches()
-    assert local == dist
-    assert len(local) == PQ.M_SUBS * PQ.K_CODES
-
-
 def test_kmeans_refine_argmax_matches_window(spark, sf_dir):
     """kmeans_refine's min_by(-cos, cell) assignment ≡ the rank-1
     (cos desc, cell) window it replaced: identical refined centroids."""
@@ -126,57 +96,6 @@ def test_kmeans_refine_argmax_matches_window(spark, sf_dir):
     ref = sorted(
         (r["cell"], tuple(r["cent_v"]), r["cent_n"])
         for r in ref_cents.collect()
-    )
-    assert got == ref and len(got) > 0
-
-
-def test_ivf_assign_argmin_matches_window(spark, sf_dir):
-    """The coarse-IVF rank-1 assignment via min_by ≡ the row_number
-    window form it replaced (ivfpq_topk end-to-end is additionally
-    pinned by its DuckDB oracle, whose twin still ranks via
-    row_number)."""
-    from pyspark.sql import Window as W
-
-    from spark_kafka_streaming_spark.functions import vectors as V
-    from spark_kafka_streaming_spark.operators.pq import ivfpq_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    scaled = emb.select(
-        F.col("vec_id").alias("id"),
-        F.expr(V.spark_scaled("embedding")).alias("v"),
-    ).withColumn("n", F.expr(V.spark_dot("v", "v")))
-    cents = (
-        scaled.orderBy("id")
-        .limit(16)
-        .select(
-            F.col("id").alias("ivf_cell"),
-            F.col("v").alias("cent_v"),
-            F.col("n").alias("cent_n"),
-        )
-    )
-    joined = scaled.join(F.broadcast(cents), F.lit(True)).withColumn(
-        "celldist",
-        F.col("n") + F.col("cent_n") - 2 * F.expr(V.spark_dot("v", "cent_v")),
-    )
-    w = W.partitionBy("id").orderBy("celldist", "ivf_cell")
-    ref = sorted(
-        (r["id"], r["ivf_cell"])
-        for r in joined.withColumn("crk", F.row_number().over(w))
-        .filter("crk = 1")
-        .select("id", "ivf_cell")
-        .collect()
-    )
-    got = sorted(
-        (r["id"], r["ivf_cell"])
-        for r in joined.groupBy("id")
-        .agg(
-            F.min_by(
-                F.struct("ivf_cell"),
-                F.struct(F.col("celldist"), F.col("ivf_cell")),
-            ).alias("b")
-        )
-        .select("id", F.col("b.ivf_cell").alias("ivf_cell"))
-        .collect()
     )
     assert got == ref and len(got) > 0
 

@@ -1,15 +1,14 @@
 """Round-8 kmeans scale fixes (VERDICT r7 #1-2), each pinned:
 
-* partial-sums Lloyd update ≡ the posexplode form (bit-identical by
-  order-free integer addition) — kmeans.py and the driver-free
-  kmeans_refine twin;
-* two-level (IMI) assignment with n_sprobe ≥ #supers ≡ the full arrow
-  search (exactness by construction — every centroid is a candidate);
-* the cogroup route (supers-only closure) ≡ the closure route,
-  bit-identical assignments;
+* the driver-free kmeans_refine update (partial sums) ≡ an independent
+  posexplode replay;
 * planted-cluster quality at k ≥ IMI_ASSIGN_MIN_K: the approximate
   assignment still recovers the planted structure (SemDeDup-grade
   agreement with the exact assignment).
+
+The exactness pins of the same fixes (partial sums ≡ posexplode, IMI
+with every super probed ≡ full search, cogroup route ≡ closure route)
+live in tests/test_l2_chain.py.
 """
 
 from __future__ import annotations
@@ -20,13 +19,7 @@ from pyspark.sql import functions as F
 
 from spark_kafka_streaming_spark.operators.kmeans import (
     IMI_ASSIGN_MIN_K,
-    _update_centroids,
-    _update_centroids_partials,
-    assign_clusters_arrow,
-    assign_clusters_imi,
-    initial_centroids,
     kmeans_assignments,
-    scaled_vectors,
     semantic_dedup,
 )
 
@@ -48,19 +41,6 @@ def planted(spark):
     emb.persist().count()
     yield emb
     emb.unpersist()
-
-
-def _collect_assign(df):
-    return sorted(
-        (r["vec_id"], r["cluster"], r["dist2"]) for r in df.collect()
-    )
-
-
-def test_partial_sums_update_equals_posexplode(spark, planted):
-    sv = scaled_vectors(planted)
-    cents = initial_centroids(sv, 80)
-    assigned = assign_clusters_arrow(sv, cents)
-    assert _update_centroids_partials(assigned) == _update_centroids(assigned)
 
 
 def test_kmeans_refine_partials_match_reference(spark, planted):
@@ -119,31 +99,6 @@ def test_kmeans_refine_partials_match_reference(spark, planted):
         ).collect()
     )
     assert got == want
-
-
-def test_imi_probe_all_equals_full_search(spark, planted):
-    """n_sprobe ≥ #supers → the candidate set is every centroid and the
-    two-level result is bit-identical to the full arrow search."""
-    sv = scaled_vectors(planted)
-    cents = initial_centroids(sv, K_BIG)
-    full = _collect_assign(assign_clusters_arrow(sv, cents))
-    probe_all = _collect_assign(
-        assign_clusters_imi(sv, cents, n_sprobe=K_BIG)
-    )
-    assert probe_all == full
-
-
-def test_imi_cogroup_route_equals_closure_route(spark, planted):
-    """Forcing the supers-only closure (cogroup member argmin) must be
-    bit-identical to the members-in-closure route at the same
-    n_sprobe."""
-    sv = scaled_vectors(planted)
-    cents = initial_centroids(sv, K_BIG)
-    closure = _collect_assign(assign_clusters_imi(sv, cents, n_sprobe=2))
-    cogroup = _collect_assign(
-        assign_clusters_imi(sv, cents, n_sprobe=2, closure_max_bytes=0)
-    )
-    assert cogroup == closure
 
 
 def test_two_level_assignment_quality_on_planted(spark, planted):
