@@ -34,6 +34,37 @@ def test_kmeans_partition_invariant(spark, emb):
     assert len(a1) == emb.count()
 
 
+def test_kmeans_join_assignment_matches_literal(spark, emb):
+    """The broadcast-join assignment (large-k path) is bit-identical
+    to the literal-centroid expression — same exact int64 distances,
+    same (dist, cid) tie-break — and kmeans_assignments routes through
+    it automatically past LITERAL_ASSIGN_MAX_K."""
+    from spark_kafka_streaming_spark.operators.kmeans import (
+        LITERAL_ASSIGN_MAX_K,
+        assign_clusters,
+        assign_clusters_join,
+        initial_centroids,
+        scaled_vectors,
+    )
+
+    sv = scaled_vectors(emb)
+    cents = initial_centroids(sv, 6)
+    lit = {
+        (r["vec_id"], r["cluster"], r["dist2"])
+        for r in assign_clusters(sv, cents).collect()
+    }
+    jn = {
+        (r["vec_id"], r["cluster"], r["dist2"])
+        for r in assign_clusters_join(sv, cents).collect()
+    }
+    assert lit == jn
+    # end-to-end: a k above the literal cap produces a full assignment
+    k = LITERAL_ASSIGN_MAX_K + 1
+    rows = kmeans_assignments(emb, k=k, iters=1).collect()
+    assert len(rows) == emb.count()
+    assert {r["cluster"] for r in rows} <= set(range(k))
+
+
 def test_auto_k_contract():
     """auto_k stays at the oracle-replayable floor for every test
     corpus and reproduces the measured sf1 sweet spot."""

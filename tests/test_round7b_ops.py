@@ -371,6 +371,33 @@ def test_windowed_quantile_store_equals_batch_query(spark, sf_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
+def test_kmeans_arrow_assignment_parity(spark, sf_dir):
+    """The Arrow int64-matmul assignment is bit-identical to the
+    broadcast-join form (and transitively the literal form): same
+    exact distances, same (dist, cid) tie-break — on a real corpus at
+    a k in the arrow regime."""
+    from spark_kafka_streaming_spark.operators.kmeans import (
+        assign_clusters_arrow,
+        assign_clusters_join,
+        initial_centroids,
+        scaled_vectors,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    sv = scaled_vectors(emb)
+    k = min(80, emb.count())
+    cents = initial_centroids(sv, k)
+    want = sorted(
+        (r["vec_id"], r["cluster"], r["dist2"])
+        for r in assign_clusters_join(sv, cents).collect()
+    )
+    got = sorted(
+        (r["vec_id"], r["cluster"], r["dist2"])
+        for r in assign_clusters_arrow(sv, cents).collect()
+    )
+    assert got == want and len(want) > 0
+
+
 def test_semantic_drops_arrow_equals_sql(spark, sf_dir):
     """The per-cluster matmul drop stage equals the SQL
     bounded_self_pairs drop stage (same exact cosines, same greedy

@@ -2,13 +2,14 @@
 
 * the driver-free kmeans_refine update (partial sums) ≡ an independent
   posexplode replay;
+* two-level (IMI) assignment with n_sprobe ≥ #supers ≡ the full arrow
+  search (exactness by construction — every centroid is a candidate);
 * planted-cluster quality at k ≥ IMI_ASSIGN_MIN_K: the approximate
   assignment still recovers the planted structure (SemDeDup-grade
   agreement with the exact assignment).
 
-The exactness pins of the same fixes (partial sums ≡ posexplode, IMI
-with every super probed ≡ full search, cogroup route ≡ closure route)
-live in tests/test_l2_chain.py.
+The other exactness pins of the same fixes (partial sums ≡ posexplode,
+cogroup route ≡ closure route) live in tests/test_l2_chain.py.
 """
 
 from __future__ import annotations
@@ -19,7 +20,11 @@ from pyspark.sql import functions as F
 
 from spark_kafka_streaming_spark.operators.kmeans import (
     IMI_ASSIGN_MIN_K,
+    assign_clusters_arrow,
+    assign_clusters_imi,
+    initial_centroids,
     kmeans_assignments,
+    scaled_vectors,
     semantic_dedup,
 )
 
@@ -41,6 +46,12 @@ def planted(spark):
     emb.persist().count()
     yield emb
     emb.unpersist()
+
+
+def _collect_assign(df):
+    return sorted(
+        (r["vec_id"], r["cluster"], r["dist2"]) for r in df.collect()
+    )
 
 
 def test_kmeans_refine_partials_match_reference(spark, planted):
@@ -99,6 +110,18 @@ def test_kmeans_refine_partials_match_reference(spark, planted):
         ).collect()
     )
     assert got == want
+
+
+def test_imi_probe_all_equals_full_search(spark, planted):
+    """n_sprobe ≥ #supers → the candidate set is every centroid and the
+    two-level result is bit-identical to the full arrow search."""
+    sv = scaled_vectors(planted)
+    cents = initial_centroids(sv, K_BIG)
+    full = _collect_assign(assign_clusters_arrow(sv, cents))
+    probe_all = _collect_assign(
+        assign_clusters_imi(sv, cents, n_sprobe=K_BIG)
+    )
+    assert probe_all == full
 
 
 def test_two_level_assignment_quality_on_planted(spark, planted):
