@@ -80,12 +80,15 @@ def spark_str_hash_raw(s: str) -> str:
 
 
 def spark_shingles_from_tokens(tok_col: str, w: int = SHINGLE_W) -> str:
-    """Shingles over a *materialized* token-array column.
+    """Shingles over a *materialized* ``spark_tokens`` column.
 
-    Use this (after ``withColumn(tok_col, expr(spark_tokens(...)))``)
-    in hot paths: the inline form below re-tokenizes the text for every
-    ``element_at`` because common-subexpression elimination does not
-    reach inside lambda bodies — ~3·shingles extra splits per row.
+    Never pass the tokenizer expression itself: common-subexpression
+    elimination does not reach inside lambda bodies, so an inline
+    tokenizer re-splits the text for every ``element_at`` —
+    ~3·shingles extra splits per row.  Spark's ``sequence(1, 0)`` yields a DESCENDING ``[1, 0]``
+    rather than an empty array (DuckDB's ``generate_series(1, 0)`` is
+    empty), so short documents are guarded explicitly or ``element_at``
+    goes out of bounds.
     """
     parts = ", ".join(f"element_at({tok_col}, i + {j})" for j in range(w))
     return (
@@ -93,24 +96,6 @@ def spark_shingles_from_tokens(tok_col: str, w: int = SHINGLE_W) -> str:
         f"ELSE array_distinct(transform(sequence(1, size({tok_col}) - {w - 1}), "
         f"i -> concat_ws(' ', {parts}))) END"
     )
-
-
-def spark_shingles(col: str, w: int = SHINGLE_W) -> str:
-    # NOTE: Spark's sequence(1, 0) yields a DESCENDING [1, 0] rather than
-    # an empty array (DuckDB's generate_series(1, 0) is empty), so short
-    # documents must be guarded explicitly or element_at goes out of
-    # bounds.
-    toks = spark_tokens(col)
-    parts = ", ".join(f"element_at({toks}, i + {j})" for j in range(w))
-    return (
-        f"CASE WHEN size({toks}) < {w} THEN array() "
-        f"ELSE array_distinct(transform(sequence(1, size({toks}) - {w - 1}), "
-        f"i -> concat_ws(' ', {parts}))) END"
-    )
-
-
-def spark_shingle_hashes(col: str, w: int = SHINGLE_W) -> str:
-    return f"transform({spark_shingles(col, w)}, s -> {spark_str_hash('s')})"
 
 
 def spark_minhash_sig(hashes_col: str) -> str:
@@ -129,36 +114,21 @@ def spark_band_key(sig_col: str, band: int) -> str:
     return expr
 
 
-def _spark_simhash_of_token_hashes(th: str) -> str:
+def spark_simhash_from_tokens(tok_col: str) -> str:
+    """SIMHASH_BITS-wide SimHash of the distinct tokens of a
+    *materialized* token-array column.
+
+    Token bits come from the raw 60-bit md5 value
+    (:func:`spark_str_hash_raw`) so all ``SIMHASH_BITS`` advertised
+    bits actually vary.
+    """
+    th = f"transform(array_distinct({tok_col}), t -> {spark_str_hash_raw('t')})"
     bits = (
         f"transform(sequence(0, {SIMHASH_BITS - 1}), j -> CASE WHEN "
         f"aggregate({th}, 0L, (acc, h) -> acc + CASE WHEN (shiftright(h, j) & 1) = 1 "
         f"THEN 1 ELSE -1 END) > 0 THEN 1L ELSE 0L END)"
     )
     return f"aggregate({bits}, 0L, (acc, b) -> acc * 2 + b)"
-
-
-def spark_simhash(col: str) -> str:
-    """SIMHASH_BITS-wide SimHash of the distinct-token set of a text column.
-
-    Token bits come from the raw 60-bit md5 value
-    (:func:`spark_str_hash_raw`) so all ``SIMHASH_BITS`` advertised
-    bits actually vary.
-    """
-    th = (
-        f"transform(array_distinct({spark_tokens(col)}), "
-        f"t -> {spark_str_hash_raw('t')})"
-    )
-    return _spark_simhash_of_token_hashes(th)
-
-
-def spark_simhash_from_tokens(tok_col: str) -> str:
-    """SimHash over a *materialized* token-array column (hot-path form:
-    avoids re-tokenizing inside the lambda)."""
-    th = (
-        f"transform(array_distinct({tok_col}), t -> {spark_str_hash_raw('t')})"
-    )
-    return _spark_simhash_of_token_hashes(th)
 
 
 # ----------------------------------------------------------- DuckDB side
@@ -212,6 +182,16 @@ def duck_band_key(sig_col: str, band: int) -> str:
     for r in range(ROWS):
         expr = f"({expr} * 31 + {sig_col}[{band * ROWS + r + 1}])"
     return expr
+
+
+def duck_band_rows(sig_cte: str = "sig") -> str:
+    """One ``(doc_id, band, key)`` row per LSH band of every signature
+    in ``sig_cte`` (the oracle twin of the band step)."""
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, {duck_band_key('sig', b)} AS key "
+        f"FROM {sig_cte}"
+        for b in range(BANDS)
+    )
 
 
 def duck_simhash(col: str) -> str:

@@ -8,9 +8,10 @@ shingle-hash set is **broadcast** — the corpus never shuffles; the scan
 is one map-side pass per document (tokenize → shingle → hash → probe),
 followed by a per-document partial-aggregated count.
 
-Shingle hashing reuses the engine-portable family in
-:mod:`..functions.texthash`, so the DuckDB oracle reproduces the exact
-hit sets.
+Shingle hashing is the shingle + hash step of the text-signature chain
+(:func:`.signatures._shingle_hashes`) over the engine-portable family
+in :mod:`..functions.texthash`, so the DuckDB oracle reproduces the
+exact hit sets.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import texthash as TH
+from .signatures import _shingle_hashes
 
 
 def contamination_hits(
@@ -55,11 +57,6 @@ def contamination_hits(
 def _exploded_hashes(
     df: DataFrame, id_col: str, text_col: str, w: int
 ) -> DataFrame:
-    hs = (
-        f"array_distinct(transform({TH.spark_shingles_from_tokens('_toks', w)}, "
-        f"s -> {TH.spark_str_hash('s')}))"
-    )
-    return (
-        df.withColumn("_toks", F.expr(TH.spark_tokens(text_col)))
-        .select(id_col, F.explode(F.expr(hs)).alias("h"))
+    return _shingle_hashes(df, id_col, text_col, w).select(
+        id_col, F.explode("hs").alias("h")
     )

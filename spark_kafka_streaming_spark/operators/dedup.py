@@ -20,16 +20,30 @@ Five tiers, all shuffle-bounded (no O(n²) cross join anywhere):
 All signatures are computed with the engine-portable hash family in
 :mod:`..functions.texthash`, entirely in built-in higher-order
 functions — zero Python in the hot path, and the DuckDB oracle can
-reproduce every value bit-for-bit.
+reproduce every value bit-for-bit.  The text tiers (MinHash, SimHash,
+n-gram Jaccard, overlap) are configurations of the one text-signature
+chain in :mod:`.signatures` (guard → shingle + hash → signature →
+band → verify; stage map in its docstring).
 """
 
 from __future__ import annotations
+
+from fractions import Fraction
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import texthash as TH
 from ..functions.caching import track_persist
+from .signatures import (
+    _band_rows,
+    _has_shingles,
+    _jaccard,
+    _shingle_hashes,
+    _verify_join,
+    _with_sig,
+    _with_sim,
+)
 from .skew import bounded_self_pairs
 
 
@@ -78,61 +92,15 @@ def exact_dedup(
     )
 
 
-def with_shingle_hashes(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add distinct word-``SHINGLE_W``-gram polynomial hashes."""
-    return df.withColumn("hs", F.expr(TH.spark_shingle_hashes(text_col)))
-
-
-def _has_shingles(text_col: str) -> F.Column:
-    """Cheap pre-filter equivalent to ``size(shingles) > 0``: a document
-    has shingles iff it has ≥ SHINGLE_W (non-empty) tokens.
-
-    Why not filter on the computed shingle column: Catalyst pushes
-    deterministic filters below a repartition, so ``size(sh) > 0``
-    drags the whole tokenize+shingle+hash chain into the scan stage —
-    which for a compact parquet corpus is a single task. Measured on
-    the sf0.1 corpus: 6.3 s → 1.6 s cold just from making the pushed
-    predicate a single split() pass instead.
-    """
-    return F.expr(f"size({TH.spark_tokens(text_col)}) >= {TH.SHINGLE_W}")
-
-
-def with_minhash_signature(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add the K-element MinHash signature column ``sig``."""
-    return with_shingle_hashes(
-        df.filter(_has_shingles(text_col)), text_col
-    ).withColumn("sig", F.expr(TH.spark_minhash_sig("hs")))
-
-
-#: Above this corpus size the verify-side signature broadcast no longer
-#: fits the driver: at 5M zipf docs the collected (id, hs) table blew
-#: ``spark.driver.maxResultSize`` (>1 GiB at 21/32 tasks — found live
-#: at the fourth scale decade, SCALE.md round 7).  Below it the
-#: broadcast form wins by ~10× (measured sf1: a shuffle-join verify
-#: moves the candidate rows CARRYING the joined shingle arrays — 47.5 s
-#: vs 5.0 s).  At 1M docs the broadcast is ~300 MB: comfortably inside
-#: both the driver cap and executor memory.
-BROADCAST_VERIFY_MAX_DOCS = 1_000_000
-
-
-def _resolve_broadcast_verify(flag: bool | None, sigs: DataFrame) -> bool:
-    """``None`` = adaptive: broadcast the verify legs only while the
-    signature table is small enough to collect (one cheap column-pruned
-    count against a table the plan consumes anyway); above the cap the
-    verify joins run as ordinary shuffle joins — slower per candidate
-    but unbounded in corpus size.  Explicit True/False pins the choice
-    (the cluster form stores signatures bucketed by id so both legs
-    co-locate without re-shuffling candidates).
-
-    NOTE the adaptive path is an EAGER action at plan-construction
-    time: ``sigs.count()`` runs (and with inline signatures,
-    materializes the signature computation) even if the returned plan
-    is never executed.  Library callers who need lazy construction
-    should pass an explicit ``broadcast_verify`` — the model-sizing
-    count is then skipped entirely."""
-    if flag is not None:
-        return flag
-    return sigs.count() <= BROADCAST_VERIFY_MAX_DOCS
+def _fraction(
+    threshold: float, threshold_frac: tuple[int, int] | None
+) -> tuple[int, int]:
+    """(p, q) with p/q = the threshold: ``threshold_frac`` when given,
+    else ``threshold`` as a fraction with denominator ≤ 1000."""
+    if threshold_frac is not None:
+        return threshold_frac
+    fr = Fraction(threshold).limit_denominator(1000)
+    return fr.numerator, fr.denominator
 
 
 def minhash_lsh_pairs(
@@ -174,40 +142,19 @@ def minhash_lsh_pairs(
         # Persist signatures: the band self-join and the verification
         # join each consume this frame twice — without a persist the
         # whole shingle+signature computation re-runs per join leg.
-        par = df.sparkSession.sparkContext.defaultParallelism
         # Small corpora land in one parquet partition; spread the
         # (CPU-heavy) signature computation across cores. At scale the
         # scan is already many-partitioned and this repartition keeps
         # ids co-located for the later joins.
-        sigs = (
-            df.filter(_has_shingles(text_col))
-            .repartition(par, F.col(id_col))
-            .select(F.col(id_col), F.expr(TH.spark_tokens(text_col)).alias("toks"))
-            .select(id_col, F.expr(TH.spark_shingles_from_tokens("toks")).alias("sh"))
-            .select(
-                id_col,
-                F.expr(
-                    f"array_distinct(transform(sh, s -> {TH.spark_str_hash('s')}))"
-                ).alias("hs"),
-            )
-            .withColumn("sig", F.expr(TH.spark_minhash_sig("hs")))
-            .select(id_col, "sig", "hs")
+        spread = df.filter(_has_shingles(text_col)).repartition(
+            df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
         )
-        sigs = track_persist(sigs)
-    bands = sigs.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.expr(TH.spark_band_key("sig", b)).alias("key"),
-                    )
-                    for b in range(TH.BANDS)
-                ]
+        sigs = track_persist(
+            _with_sig(_shingle_hashes(spread, id_col, text_col)).select(
+                id_col, "sig", "hs"
             )
-        ).alias("bk"),
-    ).select(id_col, "bk.band", "bk.key")
+        )
+    bands = _band_rows(sigs, id_col)
     if not precomputed:
         bands = track_persist(bands)
     cand = bounded_self_pairs(
@@ -220,16 +167,9 @@ def minhash_lsh_pairs(
         ],
         cap=max_bucket,
     ).distinct()
-    s1 = sigs.select(F.col(id_col).alias("id1"), F.col("hs").alias("hs1"))
-    s2 = sigs.select(F.col(id_col).alias("id2"), F.col("hs").alias("hs2"))
-    if _resolve_broadcast_verify(broadcast_verify, sigs):
-        s1, s2 = F.broadcast(s1), F.broadcast(s2)
-    inter = F.size(F.array_intersect("hs1", "hs2"))
-    union = F.size("hs1") + F.size("hs2") - inter
     return (
-        cand.join(s1, "id1")
-        .join(s2, "id2")
-        .withColumn("jaccard", inter.cast("double") / union.cast("double"))
+        _verify_join(cand, sigs, id_col, broadcast_verify)
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id1", "id2", "jaccard")
     )
@@ -268,15 +208,15 @@ def simhash_pairs(
     if sigs is not None:
         sigs = sigs.select(id_col, "sim")
     else:
-        sigs = (
-            df.repartition(
-                df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-            )
-            .withColumn("sim", F.expr(TH.spark_simhash(text_col)))
-            .select(id_col, "sim")
+        spread = df.repartition(
+            df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
         )
         # both band-join legs read the signatures
-        sigs = track_persist(sigs)
+        sigs = track_persist(
+            _with_sim(_shingle_hashes(spread, id_col, text_col)).select(
+                id_col, "sim"
+            )
+        )
     # Banding theory: max_hamming+1 bands suffice (pigeonhole — at most
     # max_hamming bands can contain a differing bit). Fewer, wider bands
     # mean exponentially more selective buckets: radius 1 → 2 bands of
@@ -285,24 +225,15 @@ def simhash_pairs(
     while TH.SIMHASH_BITS % nbands:
         nbands += 1
     width = TH.SIMHASH_BITS // nbands
-    bands = sigs.select(
+    bands = _band_rows(
+        sigs,
         id_col,
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.expr(
-                            f"(shiftright(sim, {b * width}) & "
-                            f"{(1 << width) - 1})"
-                        ).alias("key"),
-                    )
-                    for b in range(nbands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, "sim", "bk.band", "bk.key")
+        keep=("sim",),
+        keys=[
+            f"(shiftright(sim, {b * width}) & {(1 << width) - 1})"
+            for b in range(nbands)
+        ],
+    )
     if max_bucket is not None:
         # Broadcast the OVER-cap bucket list, not the under-cap census:
         # there can be at most (total band rows / max_bucket) saturated
@@ -316,24 +247,20 @@ def simhash_pairs(
             .select("band", "key")
         )
         bands = bands.join(F.broadcast(hot), ["band", "key"], "left_anti")
-    left, right = bands.alias("l"), bands.alias("r")
     return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id1"),
-            F.col(f"r.{id_col}").alias("id2"),
-            F.col("l.sim").alias("sim1"),
-            F.col("r.sim").alias("sim2"),
+        bounded_self_pairs(
+            bands,
+            key_cols=("band", "key"),
+            id_col=id_col,
+            select_cols=lambda: [
+                F.col(f"l.{id_col}").alias("id1"),
+                F.col(f"r.{id_col}").alias("id2"),
+                F.col("l.sim").alias("sim1"),
+                F.col("r.sim").alias("sim2"),
+            ],
         )
         .distinct()
-        .withColumn(
-            "hamming", F.expr("bit_count(sim1 ^ sim2)")
-        )
+        .withColumn("hamming", F.expr("bit_count(sim1 ^ sim2)"))
         .filter(F.col("hamming") <= max_hamming)
         .select("id1", "id2", "hamming", "sim1", "sim2")
     )
@@ -370,32 +297,17 @@ def ngram_jaccard_pairs(
     arithmetic — float ceil(t·n) can round the wrong way at exact
     multiples, silently shortening a prefix and dropping true pairs.
     """
-    if threshold_frac is None:
-        from fractions import Fraction
-
-        fr = Fraction(threshold).limit_denominator(1000)
-        p, q = fr.numerator, fr.denominator
-    else:
-        p, q = threshold_frac
+    p, q = _fraction(threshold, threshold_frac)
     if sigs is not None:
         hs = sigs.filter(F.size("hs") > 0).select(id_col, "hs")
     else:
-        hs = (
-            df.filter(_has_shingles(text_col))
-            .repartition(
-                df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-            )
-            .select(F.col(id_col), F.expr(TH.spark_tokens(text_col)).alias("toks"))
-            .select(id_col, F.expr(TH.spark_shingles_from_tokens("toks")).alias("sh"))
-            .select(
-                id_col,
-                F.expr(
-                    f"array_distinct(transform(sh, s -> {TH.spark_str_hash('s')}))"
-                ).alias("hs"),
-            )
+        spread = df.filter(_has_shingles(text_col)).repartition(
+            df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
         )
         # consumed by the prefix index + verification joins
-        hs = track_persist(hs)
+        hs = track_persist(
+            _shingle_hashes(spread, id_col, text_col).select(id_col, "hs")
+        )
     ex = hs.select(id_col, F.size("hs").alias("n"), F.explode("hs").alias("h"))
     freq = ex.groupBy("h").agg(F.count("*").alias("df_h"))
     w = W.partitionBy(id_col).orderBy("df_h", "h")
@@ -448,25 +360,9 @@ def ngram_jaccard_pairs(
         )
         .distinct()
     )
-    s1 = hs.select(F.col(id_col).alias("id1"), F.col("hs").alias("hs1"))
-    s2 = hs.select(F.col(id_col).alias("id2"), F.col("hs").alias("hs2"))
-    if _resolve_broadcast_verify(broadcast_verify, hs):
-        # The candidate list outnumbers the signature table by orders
-        # of magnitude (measured sf1: 10.7M candidates vs 50k docs), so
-        # a shuffle-join verification moves candidate rows CARRYING the
-        # joined shingle arrays — a ~10 GB shuffle that took 47.5 s
-        # where the broadcast form takes 5.0 s.  Broadcast the
-        # signature table while it fits; at corpus sizes where it
-        # cannot (billions of docs), set False and store signatures as
-        # a table bucketed by id so both verification legs co-locate
-        # without re-shuffling the candidates (SCALE.md).
-        s1, s2 = F.broadcast(s1), F.broadcast(s2)
-    inter = F.size(F.array_intersect("hs1", "hs2"))
-    union = F.size("hs1") + F.size("hs2") - inter
     return (
-        cand.join(s1, "id1")
-        .join(s2, "id2")
-        .withColumn("jaccard", inter.cast("double") / union.cast("double"))
+        _verify_join(cand, hs, id_col, broadcast_verify)
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
     )
@@ -533,25 +429,14 @@ def overlap_pairs(
     overlap ≥ ``threshold``; exact integer sizes ⇒ the division is
     bit-identical cross-engine.
     """
-    if threshold_frac is None:
-        from fractions import Fraction
-
-        fr = Fraction(threshold).limit_denominator(1000)
-        p, q = fr.numerator, fr.denominator
-    else:
-        p, q = threshold_frac
+    p, q = _fraction(threshold, threshold_frac)
     if sigs is not None:
         base = sigs.filter(F.size("hs") > 0).select(id_col, "hs")
     else:
         base = track_persist(
-            df.filter(_has_shingles(text_col)).select(
-                F.col(id_col),
-                F.expr(
-                    f"array_distinct(transform("
-                    f"{TH.spark_shingles(text_col)}, "
-                    f"s -> {TH.spark_str_hash('s')}))"
-                ).alias("hs"),
-            )
+            _shingle_hashes(
+                df.filter(_has_shingles(text_col)), id_col, text_col
+            ).select(id_col, "hs")
         )
     sh = base.select(
         id_col, F.size("hs").alias("n"), F.explode("hs").alias("h")
@@ -589,19 +474,8 @@ def overlap_pairs(
         )
         .distinct()
     )
-    s1 = base.select(F.col(id_col).alias("id1"), F.col("hs").alias("hs1"))
-    s2 = base.select(F.col(id_col).alias("id2"), F.col("hs").alias("hs2"))
-    if _resolve_broadcast_verify(broadcast_verify, base):
-        # the hash-array table is |docs|-sized (tiny next to the pair
-        # stream); broadcasting it keeps the candidate pairs from ever
-        # shuffling with array payloads attached.  Above
-        # BROADCAST_VERIFY_MAX_DOCS the adaptive default falls back to
-        # the shuffle-join form (bucketed-by-id storage co-locates the
-        # legs on a cluster).
-        s1, s2 = F.broadcast(s1), F.broadcast(s2)
     return (
-        cand.join(s1, "id1")
-        .join(s2, "id2")
+        _verify_join(cand, base, id_col, broadcast_verify)
         .select(
             "id1",
             "id2",

@@ -1,9 +1,56 @@
-"""Shared per-corpus signature table for the text-dedup tier.
+"""The text-signature chain of the text-dedup tier, and its shared
+per-corpus signature table.
 
-Every text-dedup operator (MinHash-LSH, SimHash, exact n-gram Jaccard)
-starts from the same per-document derivation: tokenize → shingle →
-hash → signature.  Computing it per operator triples the dominant cost
-of the tier; at cluster scale you compute it **once per corpus
+Every text-dedup operator (MinHash-LSH, SimHash, exact n-gram Jaccard,
+overlap) and the streaming deduper start from the same per-document
+derivation: tokenize → shingle → hash → signature, then band the
+signatures and verify the candidates.  Each stage is written once
+here, and every caller is a configuration of those steps.  The
+per-document stages are projections only, so they add no job, stage
+or shuffle of their own.
+
+Stage map:
+
+* **guard** — :func:`_has_shingles`: a document has shingles iff it
+  has ≥ ``SHINGLE_W`` tokens, tested on one ``split`` of the text;
+* **shingle + hash** — :func:`_shingle_hashes`: ``(id, toks, hs)``,
+  the token array and the distinct md5-prefix hashes of the distinct
+  word-``SHINGLE_W`` shingles, in first-occurrence order (``[]`` below
+  ``SHINGLE_W`` tokens);
+* **signature** — :func:`_with_sig` adds ``sig``, the K-entry MinHash
+  signature of a non-empty ``hs``; :func:`_with_sim`
+  adds ``sim``, the SimHash of the distinct tokens of the kept
+  ``toks``;
+* **band** — :func:`_band_rows`: ``(id, *keep, band, key)``, one row
+  per LSH band (the MinHash bands of ``sig`` by default; SimHash
+  passes its bit-chunk keys);
+* **verify** — :func:`_verify_join` attaches both candidates'
+  ``hs`` as ``hs1``/``hs2`` (two joins, broadcast while the table
+  fits) and :func:`_jaccard` is the exact Jaccard column over them.
+
+The configurations:
+
+* :func:`signature_frame` (``impl="sql"``): hash → MinHash + SimHash;
+* :func:`.dedup.minhash_lsh_pairs` (``sigs=None``): guard → hash →
+  MinHash → band → verify + Jaccard;
+* :func:`.dedup.ngram_jaccard_pairs` (``sigs=None``): guard → hash,
+  then its prefix-filter join → verify + Jaccard;
+* :func:`.dedup.overlap_pairs` (``sigs=None``): guard → hash, then its
+  rare-shingle join → verify (overlap coefficient);
+* :func:`.dedup.simhash_pairs` (``sigs=None``): hash → SimHash → band
+  (bit-chunk keys);
+* :class:`..streaming.incremental_dedup.IncrementalDeduper`: guard →
+  hash → MinHash → band per micro-batch, Jaccard against its store;
+* :func:`.decontaminate.contamination_hits`: hash (word-``w``).
+
+With ``sigs`` given, the batch operators skip to band/verify over the
+precomputed table.  Each caller keeps its own guard and repartition
+placement, and Catalyst prunes the columns a caller drops (``toks``
+once the signatures exist), so the physical plans are those of the
+hand-written forms.
+
+Computing the derivation per operator triples the dominant cost of
+the tier; at cluster scale you compute it **once per corpus
 snapshot**, write it next to the corpus, and every dedup/similarity job
 reads the materialized table (this is the standard shape for
 web-corpus dedup — the signature table is the index, the jobs are
@@ -28,13 +75,148 @@ import hashlib
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import texthash as TH
 
 #: Override the cache root (default: <tmp>/spark_graft_sig_cache).
 SIG_CACHE_ENV = "SPARK_GRAFT_SIG_CACHE"
+
+
+def _has_shingles(text_col: str) -> Column:
+    """Cheap pre-filter equivalent to ``size(shingles) > 0``: a document
+    has shingles iff it has ≥ SHINGLE_W (non-empty) tokens.
+
+    Why not filter on the computed shingle column: Catalyst pushes
+    deterministic filters below a repartition, so ``size(sh) > 0``
+    drags the whole tokenize+shingle+hash chain into the scan stage —
+    which for a compact parquet corpus (or a one-split micro-batch) is
+    a single task. Measured on the sf0.1 corpus: 6.3 s → 1.6 s cold
+    just from making the pushed predicate a single split() pass
+    instead; the streaming deduper measured the same as a ~1 s
+    one-task stage per trigger
+    (plans/r12/jobs_stream_dedup_store_drain_before.txt).
+    """
+    return F.expr(f"size({TH.spark_tokens(text_col)}) >= {TH.SHINGLE_W}")
+
+
+def _shingle_hashes(
+    df: DataFrame, id_col: str, text_col: str, w: int = TH.SHINGLE_W
+) -> DataFrame:
+    """(id, toks, hs): tokens, word-``w`` shingles of the materialized
+    token array (no re-tokenizing inside the lambda), each distinct
+    shingle hashed once, distinct hashes in first-occurrence order."""
+    return (
+        df.select(F.col(id_col), F.expr(TH.spark_tokens(text_col)).alias("toks"))
+        .select(
+            id_col,
+            "toks",
+            F.expr(TH.spark_shingles_from_tokens("toks", w)).alias("sh"),
+        )
+        .select(
+            id_col,
+            "toks",
+            F.expr(
+                f"array_distinct(transform(sh, s -> {TH.spark_str_hash('s')}))"
+            ).alias("hs"),
+        )
+    )
+
+
+def _with_sig(hs: DataFrame) -> DataFrame:
+    """+ ``sig``: the MinHash signature of ``hs`` (``hs`` non-empty, as
+    behind :func:`_has_shingles`)."""
+    return hs.withColumn("sig", F.expr(TH.spark_minhash_sig("hs")))
+
+
+def _with_sim(toks: DataFrame) -> DataFrame:
+    """+ ``sim``: the SimHash of the distinct tokens of ``toks``."""
+    return toks.withColumn("sim", F.expr(TH.spark_simhash_from_tokens("toks")))
+
+
+def _band_rows(
+    sigs: DataFrame,
+    id_col: str,
+    keep: tuple[str, ...] = (),
+    keys: list[str] | None = None,
+) -> DataFrame:
+    """(id, *keep, band, key): one row per band, band ``b`` keyed by the
+    SQL expression ``keys[b]`` — by default the MinHash LSH band keys
+    of ``sig`` (``BANDS`` bands of ``ROWS`` rows)."""
+    if keys is None:
+        keys = [TH.spark_band_key("sig", b) for b in range(TH.BANDS)]
+    return sigs.select(
+        id_col,
+        *keep,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), F.expr(k).alias("key"))
+                    for b, k in enumerate(keys)
+                ]
+            )
+        ).alias("bk"),
+    ).select(id_col, *keep, "bk.band", "bk.key")
+
+
+#: Above this corpus size the verify-side signature broadcast no longer
+#: fits the driver: at 5M zipf docs the collected (id, hs) table blew
+#: ``spark.driver.maxResultSize`` (>1 GiB at 21/32 tasks — found live
+#: at the fourth scale decade, SCALE.md round 7).  Below it the
+#: broadcast form wins by ~10× (measured sf1: a shuffle-join verify
+#: moves the candidate rows CARRYING the joined shingle arrays — 47.5 s
+#: vs 5.0 s).  At 1M docs the broadcast is ~300 MB: comfortably inside
+#: both the driver cap and executor memory.
+BROADCAST_VERIFY_MAX_DOCS = 1_000_000
+
+
+def _resolve_broadcast_verify(flag: bool | None, sigs: DataFrame) -> bool:
+    """``None`` = adaptive: broadcast the verify legs only while the
+    signature table is small enough to collect (one cheap column-pruned
+    count against a table the plan consumes anyway); above the cap the
+    verify joins run as ordinary shuffle joins — slower per candidate
+    but unbounded in corpus size.  Explicit True/False pins the choice
+    (the cluster form stores signatures bucketed by id so both legs
+    co-locate without re-shuffling candidates).
+
+    NOTE the adaptive path is an EAGER action at plan-construction
+    time: ``sigs.count()`` runs (and with inline signatures,
+    materializes the signature computation) even if the returned plan
+    is never executed.  Library callers who need lazy construction
+    should pass an explicit ``broadcast_verify`` — the model-sizing
+    count is then skipped entirely."""
+    if flag is not None:
+        return flag
+    return sigs.count() <= BROADCAST_VERIFY_MAX_DOCS
+
+
+def _verify_join(
+    cand: DataFrame, hs: DataFrame, id_col: str, broadcast_verify: bool | None
+) -> DataFrame:
+    """Attach ``hs1``/``hs2`` to (id1, id2) candidate pairs by two slim
+    joins against the per-doc ``(id, hs)`` table, broadcast while it
+    fits (:func:`_resolve_broadcast_verify`).
+
+    The candidate list outnumbers the table by orders of magnitude
+    (measured sf1: 10.7M candidates vs 50k docs), so a shuffle join
+    moves candidate rows CARRYING the joined shingle arrays.  Where the
+    table cannot be broadcast (billions of docs), store the signatures
+    bucketed by id so both legs co-locate without re-shuffling the
+    candidates (SCALE.md).
+    """
+    s1 = hs.select(F.col(id_col).alias("id1"), F.col("hs").alias("hs1"))
+    s2 = hs.select(F.col(id_col).alias("id2"), F.col("hs").alias("hs2"))
+    if _resolve_broadcast_verify(broadcast_verify, hs):
+        s1, s2 = F.broadcast(s1), F.broadcast(s2)
+    return cand.join(s1, "id1").join(s2, "id2")
+
+
+def _jaccard() -> Column:
+    """Exact Jaccard of the ``hs1``/``hs2`` sets (both distinct)."""
+    inter = F.size(F.array_intersect("hs1", "hs2"))
+    union = F.size("hs1") + F.size("hs2") - inter
+    return inter.cast("double") / union.cast("double")
 
 
 def signature_frame(
@@ -57,7 +239,8 @@ def signature_frame(
     of the signature build (sf1: 16.9 s → ~4 s).  ``impl="sql"`` is
     the pure built-in-expression form; both produce bit-identical
     rows (pinned in tests — same tokenization, same md5-prefix hash,
-    same first-occurrence dedup order, same null conventions).
+    same first-occurrence dedup order, same null conventions).  The SQL
+    form is the chain's hash → signature configuration.
     """
     par = docs.sparkSession.sparkContext.defaultParallelism
     base = docs.select(F.col(id_col), F.col(text_col)).repartition(
@@ -142,20 +325,10 @@ def signature_frame(
         )
     if impl != "sql":
         raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
+    # unguarded: a doc without shingles gets a NULL sig
     return (
-        base.withColumn("toks", F.expr(TH.spark_tokens(text_col)))
-        .withColumn("sh", F.expr(TH.spark_shingles_from_tokens("toks")))
-        .withColumn(
-            "hs",
-            F.expr(
-                f"array_distinct(transform(sh, s -> {TH.spark_str_hash('s')}))"
-            ),
-        )
-        .withColumn(
-            "sig",
-            F.when(F.size("hs") > 0, F.expr(TH.spark_minhash_sig("hs"))),
-        )
-        .withColumn("sim", F.expr(TH.spark_simhash_from_tokens("toks")))
+        _with_sim(_with_sig(_shingle_hashes(base, id_col, text_col)))
+        .withColumn("sig", F.when(F.size("hs") > 0, F.col("sig")))
         .select(id_col, "hs", "sig", "sim")
     )
 

@@ -96,7 +96,7 @@ LSH_CANDIDATE_WARN = 1_000_000_000
 
 #: Above this vector count the cosine-verify broadcast (id, v: d int64,
 #: n) no longer builds on the driver — found live at 2M vectors / d=64
-#: (the fourth-decade sibling of operators/dedup.py's
+#: (the fourth-decade sibling of operators/signatures.py's
 #: BROADCAST_VERIFY_MAX_DOCS).  64-dim int64 rows are ~4× heavier than
 #: shingle-hash rows, hence the lower cap (~200 MB broadcast at the
 #: cap).
@@ -977,8 +977,8 @@ def cosine_dup_pairs(
     ``broadcast_verify=None`` (adaptive) runs an EAGER ``count()`` at
     plan-construction time to size the verify join (materializing the
     banded index before the caller executes anything); pass an explicit
-    True/False to keep construction lazy — the dedup-tier
-    ``_resolve_broadcast_verify`` contract.  A single count serves
+    True/False to keep construction lazy — the text-dedup tier's
+    ``signatures._resolve_broadcast_verify`` contract.  A single count serves
     both adaptive decisions.
 
     Caching contract: the banded index and the (small) pair result are
@@ -1030,7 +1030,7 @@ def cosine_dup_pairs(
     # per unique pair.  Broadcast both verify legs while the vector
     # table fits: the candidate list outnumbers it by orders of
     # magnitude (same measured trade as the Jaccard verify,
-    # operators/dedup.py).  ADAPTIVE above BROADCAST_VERIFY_MAX_VECS —
+    # operators/signatures.py).  ADAPTIVE above BROADCAST_VERIFY_MAX_VECS —
     # at 2M vectors the forced broadcast failed to build on the driver
     # (found live at the fourth scale decade, the dedup verify-cap
     # sibling); beyond the cap the verify runs as ordinary shuffle

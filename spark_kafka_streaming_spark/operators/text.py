@@ -75,9 +75,10 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     shingle-set MinHash first component as a fuzzy fingerprint.
 
     The token array is materialized once per row before shingling —
-    the inline shingle form re-tokenizes the text for every
-    ``element_at`` (see :func:`..functions.texthash.spark_shingles`),
-    which was measured 10× slower at sf0.1."""
+    shingling the tokenizer expression inline re-tokenizes the text for
+    every ``element_at`` (see
+    :func:`..functions.texthash.spark_shingles_from_tokens`), which was
+    measured 10× slower at sf0.1."""
     shingles = TH.spark_shingles_from_tokens("_fp_toks")
     return (
         df.withColumn("_fp_toks", F.expr(TH.spark_tokens(text_col)))

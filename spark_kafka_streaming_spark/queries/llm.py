@@ -97,17 +97,9 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------- minhash-LSH
 
 
-def _duck_minhash_bands() -> str:
-    selects = [
-        f"SELECT doc_id, {b} AS band, {TH.duck_band_key('sig', b)} AS key FROM sig"
-        for b in range(TH.BANDS)
-    ]
-    return " UNION ALL ".join(selects)
-
-
 _MINHASH_PAIRS_ORACLE = f"""
     WITH {_DUCK_SHINGLE_CTE},
-    bands AS ({_duck_minhash_bands()}),
+    bands AS ({TH.duck_band_rows()}),
     cand AS (
       SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
       FROM bands l JOIN bands r

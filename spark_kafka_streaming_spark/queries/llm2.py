@@ -35,10 +35,7 @@ _PAIR_CTES = f"""
       SELECT doc_id, hs, {TH.duck_minhash_sig('hs')} AS sig
       FROM hs0 WHERE len(hs) > 0
     ),
-    bands AS ({" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, {TH.duck_band_key('sig', b)} AS key FROM sig"
-        for b in range(TH.BANDS)
-    )}),
+    bands AS ({TH.duck_band_rows()}),
     cand AS (
       SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
       FROM bands l JOIN bands r

@@ -42,14 +42,6 @@ _EVAL_MOD = 97
 _SHARD_BUDGET = 2000
 
 
-def _duck_minhash_bands(sig_cte: str = "sig") -> str:
-    return " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, {TH.duck_band_key('sig', b)} AS key "
-        f"FROM {sig_cte}"
-        for b in range(TH.BANDS)
-    )
-
-
 _ORACLE = f"""
     WITH surv AS (
       SELECT MIN(doc_id) AS doc_id
@@ -70,7 +62,7 @@ _ORACLE = f"""
       SELECT doc_id, hs, {TH.duck_minhash_sig('hs')} AS sig
       FROM hs0 WHERE len(hs) > 0
     ),
-    bands AS ({_duck_minhash_bands()}),
+    bands AS ({TH.duck_band_rows()}),
     cand AS (
       SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
       FROM bands l JOIN bands r

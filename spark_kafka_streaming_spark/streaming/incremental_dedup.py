@@ -18,6 +18,12 @@ Design (the 100 TB shape):
 * the store grows by accepted docs only and doubles as the corpus's
   dedup index for batch jobs.
 
+The per-batch signatures, band keys and exact-Jaccard verify are the
+batch operators' own steps: :func:`_signatures` configures the
+text-signature chain of :mod:`..operators.signatures` (guard → shingle
++ hash → signature → band; stage map in its docstring) and
+:meth:`IncrementalDeduper._verify` filters on its :func:`_jaccard`.
+
 Store layout — the part that has to survive 100 TB.  The store is TWO
 normalized subtrees under ``store_path``:
 
@@ -62,7 +68,13 @@ from pyspark.sql import functions as F
 
 from .fold import TieredStore
 from .swap import swap_lock
-from ..functions import texthash as TH
+from ..operators.signatures import (
+    _band_rows,
+    _has_shingles,
+    _jaccard,
+    _shingle_hashes,
+    _with_sig,
+)
 
 #: Directory-level hash buckets on the LSH key. At cluster scale this
 #: would be sized so one bucket ≈ a few hundred MB of index.
@@ -73,61 +85,28 @@ N_KEY_BUCKETS = 64
 DUP_IN_LIST_BOUND = 10_000
 
 
-def signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, hs, sig) for a batch of documents (no shuffle; map-only).
+def _signatures(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_key_buckets: int = N_KEY_BUCKETS,
+) -> tuple[DataFrame, DataFrame]:
+    """(sigs, keys) of a batch of documents (no shuffle; map-only).
 
-    The no-shingles guard filters on the TOKEN count, not on the
-    shingle array: ``size(sh) > 0`` holds exactly when the doc has ≥ 3
-    tokens (``spark_shingles_from_tokens`` emits ``[]`` below that),
-    but a ``size(sh)`` predicate is pushed below any upstream exchange
-    by Catalyst and re-evaluates the whole shingling expression in the
-    (single-split) scan task — measured as a ~1 s one-task stage per
-    trigger (plans/r12/jobs_stream_dedup_store_drain_before.txt).  The
-    token-count form keeps the pushed copy to one split+filter pass.
+    ``sigs`` is (id, hs, sig), one row per doc with shingles.  ``keys``
+    is (id, hs, band, key, kb), the LSH index rows: ``kb`` is the
+    store's partition bucket, computed here so the batch side and the
+    store side of the probe join are bit-identical, and ``hs`` rides
+    along in memory for the batch's own verify legs (the persisted key
+    index is the narrow projection without it).
     """
-    return (
-        docs.select(F.col(id_col), F.expr(TH.spark_tokens(text_col)).alias("toks"))
-        .filter(F.size("toks") >= 3)
-        .select(id_col, F.expr(TH.spark_shingles_from_tokens("toks")).alias("sh"))
-        .select(
-            id_col,
-            F.expr(
-                f"array_distinct(transform(sh, s -> {TH.spark_str_hash('s')}))"
-            ).alias("hs"),
-        )
-        .withColumn("sig", F.expr(TH.spark_minhash_sig("hs")))
+    sigs = _with_sig(
+        _shingle_hashes(docs.filter(_has_shingles(text_col)), id_col, text_col)
+    ).select(id_col, "hs", "sig")
+    keys = _band_rows(sigs, id_col, keep=("hs",)).withColumn(
+        "kb", F.pmod(F.xxhash64("key"), F.lit(n_key_buckets))
     )
-
-
-def band_keys(
-    sigs: DataFrame, id_col: str = "doc_id", n_key_buckets: int = N_KEY_BUCKETS
-) -> DataFrame:
-    """(id, band, key, kb, hs) — the LSH index rows for a batch.
-
-    ``kb`` is the store's partition bucket; computing it here keeps the
-    batch side and the store side of the probe join bit-identical.
-    ``hs`` rides along in memory for the batch's own verify legs; the
-    persisted key index is the narrow projection without it.
-    """
-    return (
-        sigs.select(
-            id_col,
-            "hs",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.expr(TH.spark_band_key("sig", b)).alias("key"),
-                        )
-                        for b in range(TH.BANDS)
-                    ]
-                )
-            ).alias("bk"),
-        )
-        .select(id_col, "bk.band", "bk.key", "hs")
-        .withColumn("kb", F.pmod(F.xxhash64("key"), F.lit(n_key_buckets)))
-    )
+    return sigs, keys
 
 
 class IncrementalDeduper:
@@ -196,12 +175,8 @@ class IncrementalDeduper:
 
     def _verify(self, cand: DataFrame) -> DataFrame:
         """Exact-Jaccard filter on candidate pairs → distinct dup ids."""
-        inter = F.size(F.array_intersect("hs1", "hs2"))
-        union = F.size("hs1") + F.size("hs2") - inter
         return (
-            cand.withColumn(
-                "jaccard", inter.cast("double") / union.cast("double")
-            )
+            cand.withColumn("jaccard", _jaccard())
             .filter(F.col("jaccard") >= self.threshold)
             .select(F.col("new_id").alias(self.id_col))
             .distinct()
@@ -212,9 +187,10 @@ class IncrementalDeduper:
         batch_keys: DataFrame,
         store_keys: DataFrame,
         store_hashes: DataFrame,
-        batch_hs: DataFrame | None = None,
+        batch_hs: DataFrame,
     ) -> DataFrame:
-        """ids in ``batch_keys`` that near-dup anything in the store.
+        """ids in ``batch_keys`` that near-dup anything in the store;
+        ``batch_hs`` is the batch's per-doc (id, hs) table.
 
         Two broadcast probes, the store never shuffled: (1) the batch's
         band keys against the NARROW key index — dynamic partition
@@ -261,11 +237,6 @@ class IncrementalDeduper:
         cand_side = (
             F.broadcast(cand_ids) if self.broadcast_candidates else cand_ids
         )
-        if batch_hs is None:
-            # derive the per-doc hash table from the exploded band rows
-            # (callers holding the pre-explosion signature table pass
-            # it directly and skip this dedup shuffle)
-            batch_hs = batch_keys.select(id_c, "hs").dropDuplicates([id_c])
         cand = (
             store_hashes.alias("h")
             .join(
@@ -320,8 +291,8 @@ class IncrementalDeduper:
         # band keys: the per-doc hash table the probe's verify leg and
         # the hashes/ subtree write both need falls straight out of it
         # — no dedup shuffle over the 8x-exploded band rows.
-        sigs = signatures(batch, id_c, self.text_col).persist()
-        keys = band_keys(sigs, id_c, self.n_key_buckets).persist()
+        sigs, keys = _signatures(batch, id_c, self.text_col, self.n_key_buckets)
+        sigs, keys = sigs.persist(), keys.persist()
         # Materialize BOTH caches with one action before anything
         # branches: the probe/intra/write legs reference these frames
         # from up to four concurrent AQE query stages (broadcast
@@ -337,10 +308,7 @@ class IncrementalDeduper:
         store_hashes = self.hash_store.read(spark, live=True)
         if store_keys is not None and store_hashes is not None:
             dup_vs_store = self._dup_ids(
-                keys,
-                store_keys,
-                store_hashes,
-                batch_hs=sigs.select(id_c, "hs"),
+                keys, store_keys, store_hashes, sigs.select(id_c, "hs")
             )
 
         # intra-batch: keep the lowest id of each duplicate cluster

@@ -89,8 +89,7 @@ def test_store_probe_broadcasts_batch_and_prunes_store(spark, tmp_path):
     per-doc hash table), with the fat ``hs`` column absent from the
     key-index scan entirely."""
     from spark_kafka_streaming_spark.streaming.incremental_dedup import (
-        band_keys,
-        signatures,
+        _signatures,
     )
 
     store = str(tmp_path / "sigstore")
@@ -100,10 +99,10 @@ def test_store_probe_broadcasts_batch_and_prunes_store(spark, tmp_path):
     dedup(b1, 0)
 
     b2 = spark.createDataFrame([(10, BASE + " extra")], DOC_SCHEMA)
-    keys = band_keys(signatures(b2))
+    sigs, keys = _signatures(b2)
     probe = dedup._dup_ids(
         keys, dedup.key_store.read(spark, live=True),
-        dedup.hash_store.read(spark, live=True),
+        dedup.hash_store.read(spark, live=True), sigs.select("doc_id", "hs"),
     )
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, "store probe must broadcast the batch"

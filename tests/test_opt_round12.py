@@ -6,10 +6,8 @@ queries against DuckDB end-to-end).
 * The fused one-pass sketch kernel (``sketch_cells``) ≡ the separate
   ``cms_build`` + ``hll_registers`` jobs it replaces in the streaming
   absorb loop.
-* The streaming dedup ``signatures()`` no-shingles guard on token
-  count ≡ the old ``size(sh) > 0`` guard (the shingle array is empty
-  exactly below 3 tokens), including on documents short enough to be
-  dropped.
+
+The streaming dedup signature pins live in ``test_text_dedup_chain.py``.
 """
 
 from __future__ import annotations
@@ -20,9 +18,6 @@ from pyspark.sql import functions as F
 
 from spark_kafka_streaming_spark.operators import sketches as SK
 from spark_kafka_streaming_spark.sources.batch import load_table
-from spark_kafka_streaming_spark.streaming.incremental_dedup import (
-    signatures,
-)
 
 
 @pytest.fixture()
@@ -147,57 +142,3 @@ def test_sketch_cells_absorb_replay_matches_batch(spark, events):
     }
     assert cms == cms_ref
     assert hll == hll_ref
-
-
-def test_signatures_token_guard_matches_shingle_guard(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, ""),                      # empty → dropped
-            (2, "one"),                   # 1 token → dropped
-            (3, "one two"),               # 2 tokens → dropped
-            (4, "one two three"),         # 3 tokens → exactly one shingle
-            (5, "  padded   tokens   here   now "),  # whitespace runs
-            (6, "a b c d e f g h i j"),
-        ],
-        "doc_id LONG, text STRING",
-    )
-    got = signatures(docs).select("doc_id").collect()
-    assert sorted(r["doc_id"] for r in got) == [4, 5, 6]
-    # the kept rows carry non-empty shingle-hash sets and full sigs
-    full = signatures(docs).collect()
-    assert all(len(r["hs"]) > 0 for r in full)
-    assert all(len(r["sig"]) > 0 for r in full)
-
-
-def test_signatures_rows_match_pre_rewrite_form(spark, sf_dir):
-    """Same (doc_id, hs, sig) rows as the old size(sh) > 0 form on real
-    corpus data."""
-    from spark_kafka_streaming_spark.functions import texthash as TH
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    old = (
-        docs.select(
-            F.col("doc_id"), F.expr(TH.spark_tokens("text")).alias("toks")
-        )
-        .select(
-            "doc_id",
-            F.expr(TH.spark_shingles_from_tokens("toks")).alias("sh"),
-        )
-        .filter(F.size("sh") > 0)
-        .select(
-            "doc_id",
-            F.expr(
-                f"array_distinct(transform(sh, s -> {TH.spark_str_hash('s')}))"
-            ).alias("hs"),
-        )
-        .withColumn("sig", F.expr(TH.spark_minhash_sig("hs")))
-    )
-    new_rows = sorted(
-        (r["doc_id"], tuple(r["hs"]), tuple(r["sig"]))
-        for r in signatures(docs).collect()
-    )
-    old_rows = sorted(
-        (r["doc_id"], tuple(r["hs"]), tuple(r["sig"]))
-        for r in old.collect()
-    )
-    assert new_rows == old_rows

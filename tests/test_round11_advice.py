@@ -21,8 +21,7 @@ from pyspark.sql import types as T
 
 from spark_kafka_streaming_spark.streaming.incremental_dedup import (
     IncrementalDeduper,
-    band_keys,
-    signatures,
+    _signatures,
 )
 
 DOC_SCHEMA = T.StructType(
@@ -45,12 +44,12 @@ def _seed_store(spark, tmp_path, **kw):
 
 
 def _probe_plan(spark, dedup):
-    keys = band_keys(signatures(
+    sigs, keys = _signatures(
         spark.createDataFrame([(10, BASE + " extra")], DOC_SCHEMA)
-    ))
+    )
     probe = dedup._dup_ids(
         keys, dedup.key_store.read(spark, live=True),
-        dedup.hash_store.read(spark, live=True),
+        dedup.hash_store.read(spark, live=True), sigs.select("doc_id", "hs"),
     )
     return probe, probe._jdf.queryExecution().executedPlan().toString()
 

@@ -10,6 +10,12 @@ Same methodology as bench.py (noop sink, warm pass, min of N timed
 passes, operator caches released between runs) so numbers are
 comparable with BENCH_FULL.json, but scoped to the named entries so an
 optimize-measure loop takes seconds, not the full catalog.
+
+Each entry's line also carries perfbench's host probe
+(``harness.calib_ms``, a fixed pure-Python loop) taken just before and
+just after its timed passes: ``calib=<before>/<after>ms``.  The probe
+moves only with the host, so a slow pass with a slow probe is weather,
+not the change under test.
 """
 
 from __future__ import annotations
@@ -28,6 +34,7 @@ from spark_kafka_streaming_spark.functions.caching import (  # noqa: E402
     release_operator_caches,
 )
 from spark_kafka_streaming_spark.queries import REGISTRY  # noqa: E402
+from perfbench.harness import calib_ms  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -71,12 +78,15 @@ def main() -> None:
             print(f"PLAN {name} -> {out}", file=sys.stderr)
         spark.sparkContext.setJobDescription(name)
         warm = run_once(spark, name)
+        calib_before = calib_ms()
         times = [run_once(spark, name) for _ in range(args.reps)]
+        calib_after = calib_ms()
         spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: warm={warm:.3f} "
             + " ".join(f"{t:.3f}" for t in times)
             + f"  min={min(times):.4f}"
+            + f"  calib={calib_before:.1f}/{calib_after:.1f}ms"
         )
 
 
