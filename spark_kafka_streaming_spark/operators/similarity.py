@@ -27,20 +27,22 @@ chain, each step written once:
   (cosine assignment, the L2 chain's update stage
   :func:`.kmeans._update`), and :func:`_centroid_model` (the bounded
   numpy pull of the arrow assigners; an empty model yields no cells);
-* **assign** — single-level :func:`_cells_arrow` /
-  :func:`nearest_cells_sql` or two-level :func:`_imi_cells_arrow` /
-  :func:`_imi_cells_sql`, the only step in which the IVF variants
-  differ (:func:`_ivf` is their shared body);
+* **assign** — single-level :func:`_cells_arrow` or two-level
+  :func:`_imi_cells_arrow`, the only step in which the IVF variants
+  differ (:func:`_ivf` is their shared body), and
+  :func:`nearest_cells_sql`, the SQL assigner of the store and of an
+  empty model;
 * **score** — :func:`_local_topk`, the numpy exact local top-k kernel
   behind :func:`_bounded_q_topk_arrow` and :func:`_cell_topk_arrow`,
-  and :func:`_candidate_pairs`, the SQL candidate join of the
-  ``impl="sql"`` forms and the store;
+  and :func:`_candidate_pairs`, the SQL bucket join of the LSH tier
+  and the store;
 * **rank** — :func:`_rank`, the global ``(score desc, neighbor_id)``
   ``row_number`` top-k.
 
-Every ``impl="arrow"`` form returns the same rows as its
-``impl="sql"`` twin, bit for bit: int64 matmul is the exact HOF dot,
-the cosine is the same single-divide IEEE expression, and stable
+Each operator has one Spark form, and its DuckDB oracle
+(``duck_*_sql``, or the :mod:`..functions.vectors` ``duck_*`` blocks
+for the exact tiers) is its twin: int64 matmul is the exact integer
+dot, the cosine is the same single-divide IEEE expression, and stable
 argsorts over id-ascending columns replay the ``row_number``
 tie-breaks (pinned in tests/test_ann_pipeline.py).  Arrow kernels are
 self-contained closures: they are pickled by value to executor workers
@@ -168,7 +170,7 @@ def _centroid_model(cents: DataFrame):
     """The centroid table as a cell-ascending (ids, vectors, norms)
     numpy triple — the arrow assigners' model, a bounded pull of
     n_cells×(d+1) ints.  An empty table gives an empty model, which
-    :func:`_ivf` serves through the SQL assigners (no centroids, no
+    :func:`_ivf` serves through the SQL assigner (no centroids, no
     cells, no rows)."""
     return _np_rows(cents.orderBy("cell").collect(), "cell", "cent_v", "cent_n")
 
@@ -186,26 +188,21 @@ def _rank(pairs: DataFrame, score: str, k: int, cast_int: bool = False) -> DataF
 
 
 def _candidate_pairs(
-    q: DataFrame,
-    c: DataFrame,
-    on: str | list[str] | None = "cell",
-    metric: str = "cosine",
+    q: DataFrame, c: DataFrame, on: str | list[str] = "cell"
 ) -> DataFrame:
-    """The SQL candidate join of the ``impl="sql"`` forms, the LSH
-    tier and the vector store: ``q_*`` rows against ``c_*`` rows
-    sharing the ``on`` bucket columns (a cell, or an LSH band key),
-    self excluded, named (query_id, neighbor_id, cos_sim | ip) and
-    scored exactly — the SQL twin of :func:`_local_topk`.  ``on=None``
-    pairs every corpus row with the broadcast query set (the exact
-    tiers)."""
-    if on is None:
-        joined = c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
-    else:
-        joined = q.join(c, on).filter(F.col("q_id") != F.col("c_id"))
-    return joined.select(
-        F.col("q_id").alias("query_id"),
-        F.col("c_id").alias("neighbor_id"),
-        _pair_score(metric),
+    """The SQL candidate join of the LSH tier, the vector store and an
+    empty IVF model: ``q_*`` rows against ``c_*`` rows sharing the
+    ``on`` bucket columns (a cell, or an LSH band key), self excluded,
+    named (query_id, neighbor_id, cos_sim) and scored exactly — the
+    SQL twin of :func:`_local_topk`."""
+    return (
+        q.join(c, on)
+        .filter(F.col("q_id") != F.col("c_id"))
+        .select(
+            F.col("q_id").alias("query_id"),
+            F.col("c_id").alias("neighbor_id"),
+            _pair_score("cosine"),
+        )
     )
 
 
@@ -231,7 +228,8 @@ def _local_topk(k: int, metric: str):
 
     A global winner ranks ≤ k in any subset of the candidates that
     holds it, so the union of local lists always contains the global
-    top-k and the downstream :func:`_rank` reproduces the SQL form.
+    top-k and the downstream :func:`_rank` ranks it exactly as a
+    window over every candidate would.
     The returned closure captures only scalars (see the module
     docstring on pickling)."""
     col = "cos_sim" if metric == "cosine" else "ip"
@@ -282,7 +280,6 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector (self excluded).
 
@@ -291,17 +288,15 @@ def brute_force_topk(
     products with zero shuffle of the corpus.  Bounded |Q| is the
     contract (this is the truth leg of the ANN tiers).
 
-    ``impl="arrow"`` (default): the (small, per the contract) scaled
-    query set is pulled to the driver — |Q|×(d+1) ints, the bounded
-    model-pull posture — and each corpus Arrow batch is scored as one
-    int64 matmul with a batch-local exact top-k per query
-    ((cos desc, neighbor_id) order, self excluded), so the window
-    stage ranks ≤ |Q|·k rows per batch instead of the full |Q|·|C|
-    fan-out.  ``impl="sql"`` is the pure built-in broadcast-join
-    form (arrow≡sql: see the module docstring).
+    The (small, per the contract) scaled query set is pulled to the
+    driver — |Q|×(d+1) ints, the bounded model-pull posture — and each
+    corpus Arrow batch is scored as one int64 matmul with a
+    batch-local exact top-k per query ((cos desc, neighbor_id) order,
+    self excluded), so the window stage ranks ≤ |Q|·k rows per batch
+    instead of the full |Q|·|C| fan-out.  Its DuckDB twin is the
+    all-pairs cosine over the ``V.duck_*`` blocks (see the module
+    docstring).
     """
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
     # NOTE: no degenerate-scan spread here — "zero shuffle of the
     # corpus" is this operator's pinned scale contract
     # (tests/test_plans.py::test_similarity_corpus_not_shuffled), and
@@ -310,10 +305,7 @@ def brute_force_topk(
     # interpreted per-row chain.
     q = _scaled(queries, id_col, vec_col, "q")
     c = _scaled(corpus, id_col, vec_col, "c")
-    if impl == "arrow":
-        pairs = _bounded_q_topk_arrow(q, c, k, metric="cosine")
-    else:
-        pairs = _candidate_pairs(q, c, on=None)
+    pairs = _bounded_q_topk_arrow(q, c, k, metric="cosine")
     return _rank(pairs, "cos_sim", k)
 
 
@@ -411,36 +403,10 @@ def _warn_candidate_mass(n_rows: int, n_planes: int, n_bands: int) -> None:
         )
 
 
-def _sign_key(band: int, n_planes: int = LSH_PLANES) -> F.Column:
-    """Sign pattern of the band's ``n_planes`` hyperplanes, packed into a
-    bigint. Plane coefficients come from :func:`_plane_coef` — a fixed
-    quadratically-mixed integer vector, identical in every engine/run.
-    Operates on the scaled-vector column ``v``."""
-    bits = []
-    for pl in range(n_planes):
-        p_idx = band * n_planes + pl
-        # The plane coefficients are compile-time constants — emit them
-        # as an array literal. The earlier transform(sequence(...))
-        # form rebuilt the plane and ran an extra interpreted lambda
-        # per plane per row (HOFs don't codegen); fully unrolling the
-        # dot into element_at chains went the other way (an expression
-        # tree too large to codegen: 8.6 MiB task binaries, 8× slower).
-        # The literal array + one zip_with/aggregate pair is the
-        # balance point.
-        coeffs = ", ".join(
-            f"{_plane_coef(p_idx, j)}L" for j in range(DIM)
-        )
-        dot = V.spark_dot("v", f"array({coeffs})")
-        bits.append(f"(CASE WHEN {dot} > 0 THEN 1L ELSE 0L END)")
-    key = "0L"
-    for b_expr in bits:
-        key = f"({key} * 2 + {b_expr})"
-    return F.expr(key)
-
-
 def _plane_matrix(n_total: int = LSH_PLANES * LSH_BANDS):
-    """The (DIM × ``n_total``) hyperplane coefficient matrix — the same
-    fixed pseudo-random integers :func:`_sign_key` inlines."""
+    """The (DIM × ``n_total``) hyperplane coefficient matrix: the fixed
+    pseudo-random integers of :func:`_plane_coef`, plane ``p_idx`` in
+    column ``p_idx``."""
     import numpy as np
 
     return np.array(
@@ -452,26 +418,15 @@ def _plane_matrix(n_total: int = LSH_PLANES * LSH_BANDS):
     )
 
 
-def duck_cosine_dup_pairs_sql(
-    threshold: float,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes_per_band: int = LSH_PLANES,
-    bands: int = LSH_BANDS,
+def _duck_lsh_keys(
+    table: str, id_col: str, vec_col: str, planes_per_band: int, bands: int
 ) -> str:
-    """DuckDB oracle twin of :func:`cosine_dup_pairs` — reproduces the
-    LSH *candidate set* bit-for-bit (same integer-scaled vectors, same
-    hash-derived hyperplanes, same band keys) and the exact cosine
-    verify, so even the approximate tier is fully cross-engine-checked.
-    Every arithmetic step is exact: int64-scaled components, plane
-    dots < 2⁵³ (double-exact in list_inner_product), integer bit
-    packing, and the cosine's int-dot/sqrt form.  ``planes_per_band`` /
-    ``bands`` must match the builder's LSH geometry."""
-    LSH_PLANES, LSH_BANDS = planes_per_band, bands  # mirror builder names
-    n_planes = LSH_PLANES * LSH_BANDS
-    return f"""
-    WITH planes AS (
+    """The WITH entries ``planes``, ``scaled`` (id, v, n) and ``keys``
+    (id, band, key) the LSH oracles share: the DuckDB twin of
+    :func:`_banded`, splicing :data:`_PLANE_COEF_SQL` so both engines
+    use one plane formula."""
+    n_planes = planes_per_band * bands
+    return f"""planes AS (
       SELECT p_idx,
              list_transform(generate_series(0, {DIM - 1}),
                  j -> CAST({_PLANE_COEF_SQL}
@@ -491,11 +446,31 @@ def duck_cosine_dup_pairs_sql(
       FROM scaled s CROSS JOIN planes p
     ),
     keys AS (
-      SELECT id, p_idx // {LSH_PLANES} AS band,
-             CAST(SUM(bit * (1 << ({LSH_PLANES - 1} - p_idx % {LSH_PLANES})))
+      SELECT id, p_idx // {planes_per_band} AS band,
+             CAST(SUM(bit * (1 << ({planes_per_band - 1} - p_idx % {planes_per_band})))
                   AS BIGINT) AS key
-      FROM bits GROUP BY id, p_idx // {LSH_PLANES}
-    ),
+      FROM bits GROUP BY id, p_idx // {planes_per_band}
+    )"""
+
+
+def duck_cosine_dup_pairs_sql(
+    threshold: float,
+    table: str = "embeddings",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    planes_per_band: int = LSH_PLANES,
+    bands: int = LSH_BANDS,
+) -> str:
+    """DuckDB oracle twin of :func:`cosine_dup_pairs` — reproduces the
+    LSH *candidate set* bit-for-bit (same integer-scaled vectors, same
+    hash-derived hyperplanes, same band keys) and the exact cosine
+    verify, so even the approximate tier is fully cross-engine-checked.
+    Every arithmetic step is exact: int64-scaled components, plane
+    dots < 2⁵³ (double-exact in list_inner_product), integer bit
+    packing, and the cosine's int-dot/sqrt form.  ``planes_per_band`` /
+    ``bands`` must match the builder's LSH geometry."""
+    return f"""
+    WITH {_duck_lsh_keys(table, id_col, vec_col, planes_per_band, bands)},
     cand AS (
       SELECT DISTINCT a.id AS id1, b.id AS id2
       FROM keys a JOIN keys b
@@ -528,38 +503,12 @@ def duck_lsh_topk_sql(
     ``query_pred`` selects the query rows (e.g. ``id < 10``);
     ``planes_per_band`` / ``bands`` must match the builder's
     geometry (pin them when the builder derives adaptively)."""
-    LSH_PLANES, LSH_BANDS = planes_per_band, bands  # mirror builder names
-    n_planes = LSH_PLANES * LSH_BANDS
     return f"""
-    WITH planes AS (
-      SELECT p_idx,
-             list_transform(generate_series(0, {DIM - 1}),
-                 j -> CAST({_PLANE_COEF_SQL}
-                      AS DOUBLE)) AS coef
-      FROM (SELECT unnest(generate_series(0, {n_planes - 1})) AS p_idx)
-    ),
-    scaled AS (
-      SELECT {id_col} AS id, {V.duck_scaled(vec_col)} AS v,
-             {V.duck_dot(V.duck_scaled(vec_col), V.duck_scaled(vec_col))} AS n
-      FROM {table}
-    ),
-    bits AS (
-      SELECT s.id, p.p_idx,
-             CASE WHEN list_inner_product(
-                 list_transform(s.v, x -> CAST(x AS DOUBLE)), p.coef) > 0
-                  THEN 1 ELSE 0 END AS bit
-      FROM scaled s CROSS JOIN planes p
-    ),
-    keys AS (
-      SELECT id, p_idx // {LSH_PLANES} AS band,
-             CAST(SUM(bit * (1 << ({LSH_PLANES - 1} - p_idx % {LSH_PLANES})))
-                  AS BIGINT) AS key
-      FROM bits GROUP BY id, p_idx // {LSH_PLANES}
-    ),
+    WITH {_duck_lsh_keys(table, id_col, vec_col, planes_per_band, bands)},
     probes AS (
       SELECT id, band,
              unnest(list_prepend(key,
-                 list_transform(generate_series(0, {LSH_PLANES - 1}),
+                 list_transform(generate_series(0, {planes_per_band - 1}),
                      b -> xor(key, CAST(1 << b AS BIGINT))))) AS key
       FROM keys WHERE {query_pred}
     ),
@@ -723,7 +672,6 @@ def _banded(
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
-    impl: str = "arrow",
     n_planes: int = LSH_PLANES,
     n_bands: int = LSH_BANDS,
 ) -> DataFrame:
@@ -740,105 +688,70 @@ def _banded(
     cos ≥ 0.9 at ~1/4000 of the pair space.  Rule of thumb:
     n_planes ≈ log2(corpus / target_bucket_occupancy).
 
-    ``impl="arrow"`` computes all 48 plane dots per vector as one numpy
-    int64 matmul inside ``mapInPandas`` (the dense-kernel pandas-UDF
-    case — the interpreted ``zip_with``/``aggregate`` chain in the SQL
-    form is the measured hot spot of the ANN tier); ``impl="sql"`` is
-    the pure built-in-expression fallback.  Both derive from the same
-    engine-exact integer scaling, so keys, norms, and scaled vectors
-    are bit-identical (pinned in tests).
+    All plane dots of a vector are one numpy int64 matmul inside
+    ``mapInPandas`` (the dense-kernel pandas-UDF case — an interpreted
+    ``zip_with``/``aggregate`` chain per plane was the measured hot
+    spot of the ANN tier).  Keys, norms and scaled vectors are
+    bit-identical to the DuckDB twin :func:`_duck_lsh_keys` (pinned in
+    tests).
 
-    Corpus contract (ENFORCED in both impls): every vector non-null
-    and exactly DIM wide.  Outside that contract the two impls would
-    diverge — Spark ``zip_with`` null-pads a short vector so the SQL
-    plane dot goes NULL (key 0), while the numpy matmul would compute
-    a real prefix dot; and ``np.stack`` can't batch ragged widths.
-    Rather than replicate the SQL null conventions in the kernel, the
-    contract is asserted so violations fail loudly in either impl.
+    Corpus contract (ENFORCED): every vector non-null and exactly DIM
+    wide.  A matmul over a short vector would compute a prefix dot
+    where the oracle's ``list_inner_product`` fails, and ``np.stack``
+    can't batch ragged widths, so a violation raises instead.
     """
-    if impl == "arrow":
-        planes = _plane_matrix(n_planes * n_bands)
-        scale = V.SCALE
-        rnd = V.np_rounder()
+    planes = _plane_matrix(n_planes * n_bands)
+    scale = V.SCALE
+    rnd = V.np_rounder()
 
-        # NOTE: self-contained closure — pickled to executor workers
-        # that may not have this package importable (the verification
-        # driver launches from an arbitrary cwd); captured arrays and
-        # scalars pickle by value, module references would not.
-        def _batches(it):
-            import numpy as np
-            import pandas as pd
+    # NOTE: self-contained closure — pickled to executor workers
+    # that may not have this package importable (the verification
+    # driver launches from an arbitrary cwd); captured arrays and
+    # scalars pickle by value, module references would not.
+    def _batches(it):
+        import numpy as np
+        import pandas as pd
 
-            for pdf in it:
-                if pdf[vec_col].isna().any():
-                    raise ValueError(
-                        "_banded corpus contract violated: null embedding "
-                        "(vectors must be non-null, width DIM)"
-                    )
-                if not len(pdf):
-                    continue
-                m = np.stack(pdf[vec_col].map(lambda a: np.asarray(a, dtype="float64")))
-                if m.shape[1] != planes.shape[0]:
-                    raise ValueError(
-                        f"_banded corpus contract violated: vector width "
-                        f"{m.shape[1]} != DIM {planes.shape[0]}"
-                    )
-                q = rnd(m * scale)  # engine-exact round(x·SCALE)
-                n = (q * q).sum(axis=1)
-                bits = (q @ planes) > 0
-                keys = np.zeros((len(q), n_bands), dtype="int64")
-                for b in range(n_bands):
-                    for pl in range(n_planes):
-                        keys[:, b] = keys[:, b] * 2 + bits[:, b * n_planes + pl]
-                n_rows = len(q) * n_bands
-                rep = np.repeat(np.arange(len(q)), n_bands)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf[id_col].to_numpy()[rep],
-                        "v": pd.Series(list(q)).to_numpy()[rep],
-                        "n": n[rep],
-                        "band": np.tile(np.arange(n_bands, dtype="int32"), len(q)),
-                        "key": keys.reshape(n_rows),
-                    }
+        for pdf in it:
+            if pdf[vec_col].isna().any():
+                raise ValueError(
+                    "_banded corpus contract violated: null embedding "
+                    "(vectors must be non-null, width DIM)"
                 )
-
-        return vectors.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-            _batches, "id long, v array<bigint>, n bigint, band int, key bigint"
-        )
-    if impl != "sql":
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
-    # Same corpus contract as the arrow kernel, enforced inside the
-    # expression that feeds every downstream use (a separate dropped
-    # assert column would be pruned by Catalyst and never evaluate).
-    checked = (
-        f"CASE WHEN {vec_col} IS NOT NULL AND size({vec_col}) = {DIM} "
-        f"THEN {vec_col} ELSE raise_error("
-        f"'_banded corpus contract violated: vectors must be non-null, "
-        f"width DIM={DIM}') END"
-    )
-    base = vectors.select(
-        F.col(id_col).alias("id"),
-        F.expr(V.spark_scaled(checked)).alias("v"),
-        F.expr(V.spark_dot(V.spark_scaled(checked), V.spark_scaled(checked))).alias(
-            "n"
-        ),
-    )
-    return base.select(
-        "id",
-        "v",
-        "n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _sign_key(b, n_planes).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
+            if not len(pdf):
+                continue
+            # checked before the stack: a ragged batch would otherwise
+            # fail inside np.stack with a shape error
+            bad = pdf[vec_col].map(len)
+            bad = bad[bad != planes.shape[0]]
+            if len(bad):
+                raise ValueError(
+                    f"_banded corpus contract violated: vector width "
+                    f"{bad.iloc[0]} != DIM {planes.shape[0]}"
+                )
+            m = np.stack(pdf[vec_col].map(lambda a: np.asarray(a, dtype="float64")))
+            q = rnd(m * scale)  # engine-exact round(x·SCALE)
+            n = (q * q).sum(axis=1)
+            bits = (q @ planes) > 0
+            keys = np.zeros((len(q), n_bands), dtype="int64")
+            for b in range(n_bands):
+                for pl in range(n_planes):
+                    keys[:, b] = keys[:, b] * 2 + bits[:, b * n_planes + pl]
+            n_rows = len(q) * n_bands
+            rep = np.repeat(np.arange(len(q)), n_bands)
+            yield pd.DataFrame(
+                {
+                    "id": pdf[id_col].to_numpy()[rep],
+                    "v": pd.Series(list(q)).to_numpy()[rep],
+                    "n": n[rep],
+                    "band": np.tile(np.arange(n_bands, dtype="int32"), len(q)),
+                    "key": keys.reshape(n_rows),
+                }
             )
-        ).alias("bk"),
-    ).select("id", "v", "n", "bk.band", "bk.key")
+
+    return vectors.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+        _batches, "id long, v array<bigint>, n bigint, band int, key bigint"
+    )
 
 
 def cosine_all_pairs(
@@ -846,51 +759,28 @@ def cosine_all_pairs(
     threshold: float = 0.45,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
     n_blocks: int = 8,
 ) -> DataFrame:
     """EXACT all-pairs cosine ≥ threshold — the brute-force dedup
     baseline (q_dedup_embedding_cosine), decomposed for scale.
 
-    ``impl="arrow"`` (default) is the block-pair matmul form: vectors
-    are assigned to ``n_blocks`` deterministic blocks (id mod B); each
-    of the B·(B+1)/2 unordered block pairs becomes one cogroup task
-    that scores its two blocks as a single int64 matmul and emits only
-    the pairs over threshold.  Every unordered vector pair lands in
-    exactly one task (diagonal tasks mask id1 < id2), each vector is
-    shuffled B+1 times (the standard O(√tasks) replication of blocked
-    all-pairs), and no interpreted per-pair expression ever runs —
-    measured ~13× faster than the join form at sf0.1.  Size ``n_blocks``
-    so a block pair (~2·(n/B)·(d+1) int64s) fits an executor; the
-    O(n²) scoring cost is the tier's documented contract (the LSH /
-    SemDeDup tiers are the candidate-pruned scale path).  Measured at
-    sf0.1: 37.9 s (join form) → 1.5 s warm.
+    The block-pair matmul form: vectors are assigned to ``n_blocks``
+    deterministic blocks (id mod B); each of the B·(B+1)/2 unordered
+    block pairs becomes one cogroup task that scores its two blocks as
+    a single int64 matmul and emits only the pairs over threshold.
+    Every unordered vector pair lands in exactly one task (diagonal
+    tasks mask id1 < id2), each vector is shuffled B+1 times (the
+    standard O(√tasks) replication of blocked all-pairs), and no
+    interpreted per-pair expression ever runs — measured ~13× faster
+    than a theta-join form at sf0.1 (37.9 s → 1.5 s warm).  Size
+    ``n_blocks`` so a block pair (~2·(n/B)·(d+1) int64s) fits an
+    executor; the O(n²) scoring cost is the tier's documented contract
+    (the LSH / SemDeDup tiers are the candidate-pruned scale path).
 
-    ``impl="sql"`` is the pure built-in theta-join form; bit-identical
-    (pinned in tests/test_round6b_ops.py) and the shape the DuckDB
-    oracle mirrors.
+    The DuckDB oracle is the theta join itself; rows are bit-identical
+    at any ``n_blocks`` (pinned in tests/test_round6b_ops.py).
     """
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
     base = _scaled(vectors, id_col, vec_col, "s")
-    if impl == "sql":
-        a = base.select(
-            F.col("s_id").alias("id1"),
-            F.col("s_v").alias("v1"),
-            F.col("s_n").alias("n1"),
-        )
-        b = base.select(
-            F.col("s_id").alias("id2"),
-            F.col("s_v").alias("v2"),
-            F.col("s_n").alias("n2"),
-        )
-        cos = F.expr(V.spark_cosine(V.spark_dot("v1", "v2"), "n1", "n2"))
-        return (
-            a.join(b, F.col("id1") < F.col("id2"))
-            .withColumn("cos_sim", cos)
-            .filter(F.col("cos_sim") >= threshold)
-            .select("id1", "id2", "cos_sim")
-        )
     B = n_blocks
     blocks = base.withColumn("blk", F.pmod(F.col("s_id"), F.lit(B)).cast("int"))
     side_a = blocks.withColumn(
@@ -948,7 +838,6 @@ def cosine_dup_pairs(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
     max_bucket: int | None = None,
     n_planes: int | None = None,
     n_bands: int = LSH_BANDS,
@@ -998,10 +887,7 @@ def cosine_dup_pairs(
     elif n_rows is not None:
         _warn_candidate_mass(n_rows, n_planes, n_bands)
     banded = track_persist(
-        _banded(
-            vectors, id_col, vec_col, impl=impl,
-            n_planes=n_planes, n_bands=n_bands,
-        )
+        _banded(vectors, id_col, vec_col, n_planes=n_planes, n_bands=n_bands)
     )
     # Candidate generation emits BARE (id1, id2) — the earlier shape
     # carried both d-dim vectors + norms (~1 KB/row) through the
@@ -1067,7 +953,6 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     multi_probe: bool = True,
-    impl: str = "arrow",
     n_planes: int | None = None,
     n_bands: int = LSH_BANDS,
 ) -> DataFrame:
@@ -1093,10 +978,7 @@ def lsh_topk(
     if n_planes is None:
         n_planes = derived_lsh_planes(corpus.count())
     c = track_persist(
-        _banded(
-            corpus, id_col, vec_col, impl=impl,
-            n_planes=n_planes, n_bands=n_bands,
-        )
+        _banded(corpus, id_col, vec_col, n_planes=n_planes, n_bands=n_bands)
     ).select(
         F.col("id").alias("c_id"),
         F.col("v").alias("c_v"),
@@ -1104,10 +986,7 @@ def lsh_topk(
         "band",
         "key",
     )
-    q = _banded(
-        queries, id_col, vec_col, impl=impl,
-        n_planes=n_planes, n_bands=n_bands,
-    )
+    q = _banded(queries, id_col, vec_col, n_planes=n_planes, n_bands=n_bands)
     if multi_probe:
         # key plus its one-bit-flip variants (XOR each plane's bit).
         variants = ", ".join(
@@ -1186,9 +1065,9 @@ def nearest_cells_sql(
 ) -> DataFrame:
     """Assign each vector to its ``n`` nearest centroids (broadcast
     centroid join + exact integer cosine, ``(cos desc, cell)``
-    tie-break) — the single-level SQL assigner of :func:`ivf_topk` and
-    the streaming vector-index store
-    (:mod:`..streaming.incremental_vectors`).  ``side``'s first
+    tie-break) — the SQL assigner of the streaming vector-index store
+    (:mod:`..streaming.incremental_vectors`) and of an empty IVF model
+    (:func:`_ivf`).  ``side``'s first
     column must be its id; the result is ``side``'s columns plus
     ``cell``."""
     cos = F.expr(V.spark_cosine(V.spark_dot(vcol, "cent_v"), ncol, "cent_n"))
@@ -1213,7 +1092,6 @@ def ivf_topk(
     kmeans_iters: int = 0,
     n_assign: int = 2,
     prescaled: bool = False,
-    impl: str = "arrow",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style ANN top-k: coarse quantize the corpus into cells, probe
@@ -1224,16 +1102,14 @@ def ivf_topk(
     norm-augmented MIPS path (:func:`mips_topk_ivf`), where the
     augmentation itself must happen in exact integer space.
 
-    ``impl="arrow"`` (default) runs the two dense hot loops — cell
-    assignment (|side|·n_cells cosines) and candidate scoring
-    (|cand| cosines) — as int64 numpy matmuls inside ``mapInPandas``,
-    the :func:`_banded` dual-impl pattern: the interpreted
-    ``zip_with``/``aggregate`` chain was the measured 85% of
-    q_knn_label_propagation_ann's 41 s at sf1.  The centroid table is
-    pulled to the driver for the kernel (k×(d+1) ints — the bounded
-    model-pull posture of kmeans/Bloom/z-order).  ``impl="sql"`` is
-    the pure built-in-expression form (arrow≡sql: see the module
-    docstring).
+    The two dense hot loops — cell assignment (|side|·n_cells
+    cosines) and candidate scoring (|cand| cosines) — run as int64
+    numpy matmuls inside ``mapInPandas``, as in :func:`_banded`: an
+    interpreted ``zip_with``/``aggregate`` chain was the measured 85%
+    of q_knn_label_propagation_ann's 41 s at sf1.  The centroid table
+    is pulled to the driver for the kernel (k×(d+1) ints — the bounded
+    model-pull posture of kmeans/Bloom/z-order).  Oracle:
+    :func:`duck_ivf_topk_sql`.
 
     Seed centroids are deterministic (the ``n_cells`` corpus vectors
     with the smallest ids), optionally refined with ``kmeans_iters``
@@ -1254,13 +1130,10 @@ def ivf_topk(
     the index; each query probes n_probe cells → query cost ≈
     |Q| · n_probe · n_assign · (|C| / n_cells) instead of |Q| · |C|.
 
-    Caching contract: the centroid table is ``persist()``-ed for the
-    life of the returned plan (both cell-assignment legs read it).
-    Long-lived sessions issuing many calls should call
-    :func:`..functions.caching.release_operator_caches` after
-    materializing results — at cluster scale the
-    centroids/index would instead be written per corpus snapshot, like
-    the dedup signature table (:mod:`.signatures`).
+    The centroid model is pulled once per call and captured by both
+    assignment legs; at cluster scale the centroids/index would
+    instead be written per corpus snapshot, like the dedup signature
+    table (:mod:`.signatures`).
     """
     scaled = _scaled(corpus, id_col, vec_col, "c", prescaled)
     if centroids is None:
@@ -1268,7 +1141,7 @@ def ivf_topk(
         if kmeans_iters:
             centroids = kmeans_refine(scaled, centroids, iters=kmeans_iters)
     q_scaled = _scaled(queries, id_col, vec_col, "q", prescaled)
-    return _ivf(q_scaled, scaled, centroids, k, n_probe, n_assign, impl)
+    return _ivf(q_scaled, scaled, centroids, k, n_probe, n_assign)
 
 
 def _ivf(
@@ -1278,18 +1151,18 @@ def _ivf(
     k: int,
     n_probe: int,
     n_assign: int,
-    impl: str,
     n_sprobe: int | None = None,
 ) -> DataFrame:
     """The IVF body :func:`ivf_topk` and :func:`ivf_topk_imi` share:
     assign the corpus to its ``n_assign`` and each query to its
     ``n_probe`` nearest cells — single-level, or two-level through
     ``n_sprobe`` super-centroids — then score the candidates sharing
-    a cell and rank.  Only the assigner differs between the two."""
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
-    model = _centroid_model(cents) if impl == "arrow" else None
-    if model is not None and len(model[0]):
+    a cell and rank.  Only the assigner differs between the two.  An
+    empty model (no centroids, so no cells) goes through the SQL
+    assigner and join at either level, which return 0 rows with the
+    pinned schema."""
+    model = _centroid_model(cents)
+    if len(model[0]):
 
         def assign(side: DataFrame, prefix: str, n: int) -> DataFrame:
             if n_sprobe is None:
@@ -1298,18 +1171,10 @@ def _ivf(
 
         corpus_cells = assign(scaled, "c", n_assign)
         pairs = _cell_topk_arrow(assign(q_scaled, "q", n_probe), corpus_cells, k)
-    else:  # impl="sql", or an empty model: no centroids, so no cells
-        cents = track_persist(cents)
-        split = None if n_sprobe is None else _imi_split_sql(cents)
-
-        def assign(side: DataFrame, prefix: str, n: int) -> DataFrame:
-            v, nn = f"{prefix}_v", f"{prefix}_n"
-            if split is None:
-                return nearest_cells_sql(side, cents, v, nn, n)
-            return _imi_cells_sql(side, *split, v, nn, n, n_sprobe)
-
-        corpus_cells = assign(scaled, "c", n_assign)
-        pairs = _candidate_pairs(assign(q_scaled, "q", n_probe), corpus_cells)
+    else:
+        corpus_cells = nearest_cells_sql(scaled, cents, "c_v", "c_n", n_assign)
+        query_cells = nearest_cells_sql(q_scaled, cents, "q_v", "q_n", n_probe)
+        pairs = _candidate_pairs(query_cells, corpus_cells)
     return _rank(pairs.dropDuplicates(["query_id", "neighbor_id"]), "cos_sim", k)
 
 
@@ -1320,9 +1185,10 @@ def _cells_arrow(
     of ``model`` (:func:`_centroid_model`), computed as one int64
     matmul per Arrow batch.
 
-    Ties replay the SQL form's ``row_number() OVER (ORDER BY cos DESC,
-    cell)``: the centroid matrix arrives cell-ascending and the argsort
-    on -cos is STABLE, so equal cosines resolve to the lower cell.
+    Ties replay :func:`nearest_cells_sql`'s (and the oracle's)
+    ``row_number() OVER (ORDER BY cos DESC, cell)``: the centroid
+    matrix arrives cell-ascending and the argsort on -cos is STABLE,
+    so equal cosines resolve to the lower cell.
     int64 matmul is exact (|component| ≤ ~1e8 ⇒ per-pair sums ≪ 2⁶³),
     and the cosine is the same single-divide IEEE expression as
     ``spark_cosine``.
@@ -1420,7 +1286,7 @@ def _imi_split(cent_m, cent_n):
     arrays): the first ⌊√n_cells⌋ centroids (cell-ascending) are the
     SUPER-centroids, and every centroid is owned by its nearest super
     (same IEEE cosine, (cos desc, sid) tie-break via stable argsort —
-    the SQL impl's row_number order).  Returns (n_super,
+    the oracle's row_number order).  Returns (n_super,
     cells_by_super) where cells_by_super[s] is the ascending index
     list of cells owned by super s."""
     import numpy as np
@@ -1449,13 +1315,13 @@ def _imi_cells_arrow(
     Lempitsky 2012) that keeps index builds sub-n^1.5 when n_cells
     itself is √n.
 
-    Tie-breaks replay the SQL form exactly: supers rank by
+    Tie-breaks replay :func:`duck_ivf2_topk_sql` exactly: supers rank by
     (cos desc, sid) — stable argsort over the sid-ascending super
     matrix — and member cells by (cos desc, cell) — candidates
     concatenated then sorted to cell-ascending before the stable
     argsort.  Rows whose probed supers own no cells (possible only
-    with duplicate centroid vectors) emit nothing, matching the SQL
-    join.
+    with duplicate centroid vectors) emit nothing, matching the
+    oracle's join.
     """
     id_c, v_c, n_c = f"{prefix}_id", f"{prefix}_v", f"{prefix}_n"
     cent_ids, cent_m, cent_n = model
@@ -1468,7 +1334,7 @@ def _imi_cells_arrow(
     # value (the _banded posture).
     #
     # Two wall-clock moves over the round-7 shape, both row-set
-    # preserving (the arrow≡sql parity pin is unchanged): (a) incoming
+    # preserving (the DuckDB parity pin is unchanged): (a) incoming
     # Arrow batches BUFFER to ~64k rows before processing — with
     # C(√cells, 2) probe signatures a 10k-row batch fragments into
     # hundreds of ~15-row matmuls and the Python loop dominates
@@ -1555,71 +1421,6 @@ def _imi_cells_arrow(
     )
 
 
-def _imi_split_sql(cents: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """SQL twin of :func:`_imi_split`: (supers, c2s) — the first
-    ⌊√n_cells⌋ centroids (cell-ascending) as super-centroids
-    (sid, s_v, s_n), and every centroid with the id of its nearest
-    super under (cos desc, sid)."""
-    import math
-
-    n_super = max(1, int(math.floor(math.sqrt(float(cents.count())))))
-    supers = (
-        cents.withColumn("sr", F.row_number().over(W.orderBy("cell")))
-        .filter(F.col("sr") <= n_super)
-        .select(
-            F.col("cell").alias("sid"),
-            F.col("cent_v").alias("s_v"),
-            F.col("cent_n").alias("s_n"),
-        )
-    )
-    cs_cos = F.expr(
-        V.spark_cosine(V.spark_dot("cent_v", "s_v"), "cent_n", "s_n")
-    )
-    wcs = W.partitionBy("cell").orderBy(F.desc("cs_cos"), "sid")
-    c2s = (
-        cents.join(F.broadcast(supers), F.lit(True))
-        .withColumn("cs_cos", cs_cos)
-        .withColumn("rk", F.row_number().over(wcs))
-        .filter(F.col("rk") == 1)
-        .select("cell", "cent_v", "cent_n", "sid")
-    )
-    return supers, c2s
-
-
-def _imi_cells_sql(
-    side: DataFrame,
-    supers: DataFrame,
-    c2s: DataFrame,
-    vcol: str,
-    ncol: str,
-    n: int,
-    n_sprobe: int,
-) -> DataFrame:
-    """SQL twin of :func:`_imi_cells_arrow`: broadcast super join →
-    per-vector top-``n_sprobe`` supers → broadcast member-cell join →
-    per-vector top-``n``.  ``side``'s first column is its id; the
-    result is ``side``'s columns plus ``cell``."""
-    id_col = side.columns[0]
-    s_cos = F.expr(V.spark_cosine(V.spark_dot(vcol, "s_v"), ncol, "s_n"))
-    ws = W.partitionBy(id_col).orderBy(F.desc("s_cos"), "sid")
-    v2s = (
-        side.join(F.broadcast(supers), F.lit(True))
-        .withColumn("s_cos", s_cos)
-        .withColumn("srk", F.row_number().over(ws))
-        .filter(F.col("srk") <= n_sprobe)
-        .select(*side.columns, "sid")
-    )
-    c_cos = F.expr(V.spark_cosine(V.spark_dot(vcol, "cent_v"), ncol, "cent_n"))
-    wc = W.partitionBy(id_col).orderBy(F.desc("cell_cos"), "cell")
-    return (
-        v2s.join(F.broadcast(c2s), "sid")
-        .withColumn("cell_cos", c_cos)
-        .withColumn("cell_rank", F.row_number().over(wc))
-        .filter(F.col("cell_rank") <= n)
-        .select(*side.columns, "cell")
-    )
-
-
 def ivf_topk_imi(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1630,7 +1431,6 @@ def ivf_topk_imi(
     n_sprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """IVF ANN top-k with a TWO-LEVEL coarse quantizer (IMI-style,
     Babenko & Lempitsky 2012): the build-side answer to the one cost
@@ -1658,7 +1458,7 @@ def ivf_topk_imi(
     scaled = _scaled(corpus, id_col, vec_col, "c")
     q_scaled = _scaled(queries, id_col, vec_col, "q")
     cents = _seed_centroids(scaled, n_cells)
-    return _ivf(q_scaled, scaled, cents, k, n_probe, n_assign, impl, n_sprobe)
+    return _ivf(q_scaled, scaled, cents, k, n_probe, n_assign, n_sprobe)
 
 
 def duck_ivf2_topk_sql(
@@ -1767,7 +1567,6 @@ def mips_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Exact maximum-inner-product top-k per query (self excluded).
 
@@ -1776,9 +1575,9 @@ def mips_topk(
     cosine ANN tier cannot serve them unmodified.  This is the exact
     MIPS baseline: one corpus pass, int64 dot products
     (engine-exact), window top-k with (ip desc, neighbor) tiebreak.
-    Cost |Q|·|C| dots, zero corpus shuffle.  ``impl``: 'arrow' batch
-    matmul + local top-k, 'sql' broadcast join, as in
-    :func:`brute_force_topk` (arrow≡sql: see the module docstring).
+    Cost |Q|·|C| dots, zero corpus shuffle: batch matmul + local
+    top-k, as in :func:`brute_force_topk` (its DuckDB twin: see the
+    module docstring).
 
     Scale path (Bachrach et al., RecSys 2014): append
     ``sqrt(M² − ‖x‖²)`` to each corpus vector and 0 to each query —
@@ -1789,14 +1588,9 @@ def mips_topk(
     dot/SCALE² — the true float inner product up to the deterministic
     quantization.
     """
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
     q = _scaled(queries, id_col, vec_col, "q")
     c = _scaled(corpus, id_col, vec_col, "c")
-    if impl == "arrow":
-        pairs = _bounded_q_topk_arrow(q, c, k, metric="ip")
-    else:
-        pairs = _candidate_pairs(q, c, on=None, metric="ip")
+    pairs = _bounded_q_topk_arrow(q, c, k, metric="ip")
     return _rank(pairs, "ip", k, cast_int=True)
 
 
@@ -1814,10 +1608,9 @@ def hard_negatives(
     easy negatives are random, hard negatives are the near-misses the
     model must learn to separate.
 
-    Same shape as :func:`brute_force_topk` (broadcast scaled queries,
-    one corpus pass, window top-k) with the label-mismatch predicate
-    evaluated INSIDE the join, so same-label rows never reach the
-    ranking.  Bounded |Q| is the contract; unbounded query sides go
+    Broadcast scaled queries, one corpus pass and a window top-k, with
+    the label-mismatch predicate evaluated INSIDE the join, so
+    same-label rows never reach the ranking.  Bounded |Q| is the contract; unbounded query sides go
     through the IVF candidate tier first and vote-filter after, like
     :func:`knn_classify`.
 

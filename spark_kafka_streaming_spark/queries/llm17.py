@@ -51,7 +51,7 @@ def _imi_oracle() -> str:
     "Deterministic; the oracle replays the super split (derived from "
     "the centroid COUNT in SQL), ownership, both assignment levels, "
     "and all tie-breaks in generated CTEs; recall vs brute force and "
-    "arrow≡sql impl parity are pinned in tests.",
+    "Spark≡DuckDB rows on edge corpora are pinned in tests.",
     tags=("llm", "similarity", "ivf", "imi"),
 )
 def q_similarity_ann_imi(spark: SparkSession, sf_dir: str) -> DataFrame:

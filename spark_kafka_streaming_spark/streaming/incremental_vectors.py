@@ -121,9 +121,10 @@ class IncrementalVectorIndexer:
         # — measured live at the fourth decade as the trigger wall
         # (20k vectors × 1,414 cells = 28M interpreted dots, minutes
         # per trigger on the micro-batch's 2 input partitions).  The
-        # kernel is bit-identical to nearest_cells_sql (the ivf_topk
-        # dual-impl pin), and the centroid pull is the bounded
-        # k×(d+1)-int model-pull posture ivf_topk already uses.
+        # kernel is bit-identical to nearest_cells_sql (pinned by the
+        # store ≡ batch ivf_topk test, which crosses the SQL serve
+        # blocks with the Arrow kernels), and the centroid pull is the
+        # bounded k×(d+1)-int model-pull posture ivf_topk already uses.
         if self._cent_model is None:
             cents = self.centroids(batch.sparkSession)
             self._cent_model = _centroid_model(cents)

@@ -1,10 +1,11 @@
 """The shared top-k pipeline of operators/similarity.py.
 
-* every operator with two impls returns the same rows from
-  ``impl="arrow"`` and ``impl="sql"``, on the test corpus and on the
-  edge corpora (duplicate seed vectors, k larger than the corpus, an
-  empty corpus);
-* the output schema of every public ANN operator is pinned;
+* every top-k operator returns the rows of its DuckDB oracle on the
+  same input, on the test corpus and on the edge corpora (a disjoint
+  query/corpus split, duplicate seed vectors, k larger than the
+  corpus, an empty corpus);
+* the output schema of every public ANN operator is pinned, and an
+  empty IVF model serves 0 rows under that schema;
 * the arrow kernels (these and the L2 chain's of operators/kmeans.py)
   run after a by-value pickle in a process that cannot import this
   package — the posture of executor workers started from an
@@ -18,9 +19,11 @@ import pickle
 import subprocess
 import sys
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from spark_kafka_streaming_spark.functions import vectors as V
 from spark_kafka_streaming_spark.operators import kmeans as K
 from spark_kafka_streaming_spark.operators import similarity as S
 from spark_kafka_streaming_spark.streaming.incremental_vectors import (
@@ -36,65 +39,137 @@ def emb(spark, sf_dir):
     df.unpersist()
 
 
-def _dup_head(spark, emb):
-    """The corpus with its six smallest-id vectors made identical: the
-    seed centroids (and IMI super-centroids) then tie, and every
-    super but the first owns no cells."""
+@pytest.fixture(scope="module")
+def tables(spark, emb, sf_dir, tmp_path_factory):
+    """Parquet path of each corpus table: the test corpus, and the
+    same corpus with its six smallest-id vectors made identical (the
+    seed centroids and IMI super-centroids then tie, and every super
+    but the first owns no cells)."""
     rows = emb.select("vec_id", "embedding").orderBy("vec_id").collect()
     head = rows[0]["embedding"]
     data = [
         (r["vec_id"], head if i < 6 else r["embedding"])
         for i, r in enumerate(rows)
     ]
-    return spark.createDataFrame(data, "vec_id bigint, embedding array<float>")
-
-
-def _case(spark, emb, name):
-    """(queries, corpus, k) for one corpus shape."""
-    if name == "sf":
-        return emb.filter(F.col("vec_id") < 10), emb, 5
-    if name == "sf_disjoint":
-        return (
-            emb.filter(F.col("vec_id") % 5 == 0),
-            emb.filter(F.col("vec_id") % 5 != 0),
-            5,
-        )
-    if name == "dup_head":
-        corpus = _dup_head(spark, emb)
-        return corpus.filter(F.col("vec_id") < 10), corpus, 5
-    if name == "k_over_corpus":
-        corpus = emb.filter(F.col("vec_id") < 12)
-        return corpus.filter(F.col("vec_id") < 5), corpus, 20
-    assert name == "empty"
-    return emb.filter(F.col("vec_id") < 10), emb.filter(F.lit(False)), 5
-
-
-OPS = {
-    "brute_force_topk": (S.brute_force_topk, {}),
-    "mips_topk": (S.mips_topk, {}),
-    "ivf_topk": (S.ivf_topk, {}),
-    "ivf_topk_refined": (S.ivf_topk, {"kmeans_iters": 1}),
-    "ivf_topk_imi": (S.ivf_topk_imi, {"n_cells": 25}),
-}
-CORPORA = ["sf", "sf_disjoint", "dup_head", "k_over_corpus", "empty"]
-
-
-@pytest.mark.parametrize("corpus", CORPORA)
-@pytest.mark.parametrize("op", sorted(OPS))
-def test_arrow_equals_sql(spark, emb, op, corpus):
-    fn, kwargs = OPS[op]
-    queries, corpus_df, k = _case(spark, emb, corpus)
-    got = {
-        impl: sorted(
-            map(tuple, fn(queries, corpus_df, k=k, impl=impl, **kwargs).collect())
-        )
-        for impl in ("arrow", "sql")
+    dup_head = str(tmp_path_factory.mktemp("dup_head"))
+    spark.createDataFrame(
+        data, "vec_id bigint, embedding array<float>"
+    ).write.mode("overwrite").parquet(dup_head)
+    return {
+        "emb": f"{sf_dir}/embeddings.parquet",
+        "dup_head": f"{dup_head}/*.parquet",
     }
-    assert got["arrow"] == got["sql"]
-    if corpus == "empty":
-        assert got["arrow"] == []
+
+
+#: corpus shape → (table, query predicate, corpus predicate, k); the
+#: predicates are SQL over the id, read by both engines
+CASES = {
+    "sf": ("emb", "id < 10", "TRUE", 5),
+    "sf_disjoint": ("emb", "id % 5 = 0", "id % 5 <> 0", 5),
+    "dup_head": ("dup_head", "id < 10", "TRUE", 5),
+    "k_over_corpus": ("emb", "id < 5", "id < 12", 20),
+    "empty": ("emb", "id < 10", "FALSE", 5),
+}
+
+
+def _duck_exact(k: int, query_pred: str, corpus_pred: str, metric: str) -> str:
+    """DuckDB twin of the exact tiers (:func:`S.brute_force_topk`,
+    :func:`S.mips_topk`): every query scored against every corpus
+    row, self excluded, ranked by (score desc, neighbor_id)."""
+    if metric == "cosine":
+        col, score = "cos_sim", V.duck_cosine(V.duck_dot("q.v", "c.v"), "q.n", "c.n")
     else:
-        assert got["arrow"]
+        col = "ip"
+        score = (
+            f"CAST({V.duck_dot('q.v', 'c.v')} AS DOUBLE)"
+            f" / ({float(V.SCALE)} * {float(V.SCALE)})"
+        )
+    return f"""
+    WITH s AS (SELECT vec_id AS id, {V.duck_scaled('embedding')} AS v FROM embeddings),
+    sn AS (SELECT id, v, {V.duck_dot('v', 'v')} AS n FROM s),
+    q AS (SELECT * FROM sn WHERE {query_pred}),
+    c AS (SELECT * FROM sn WHERE {corpus_pred}),
+    scored AS (
+      SELECT q.id AS query_id, c.id AS neighbor_id, {score} AS {col}
+      FROM q JOIN c ON c.id <> q.id
+    )
+    SELECT query_id, neighbor_id, {col}, rn FROM (
+      SELECT *, CAST(row_number() OVER (
+        PARTITION BY query_id ORDER BY {col} DESC, neighbor_id) AS INTEGER) AS rn
+      FROM scored
+    ) WHERE rn <= {k}
+    """
+
+
+#: top-k operator → (Spark call, DuckDB oracle over (k, query_pred,
+#: corpus_pred))
+OPS = {
+    "brute_force_topk": (
+        S.brute_force_topk,
+        lambda k, qp, cp: _duck_exact(k, qp, cp, "cosine"),
+    ),
+    "mips_topk": (S.mips_topk, lambda k, qp, cp: _duck_exact(k, qp, cp, "ip")),
+    "ivf_topk": (
+        S.ivf_topk,
+        lambda k, qp, cp: S.duck_ivf_topk_sql(k, qp, corpus_pred=cp),
+    ),
+    "ivf_topk_refined": (
+        lambda q, c, k: S.ivf_topk(q, c, k=k, kmeans_iters=1),
+        lambda k, qp, cp: S.duck_ivf_topk_sql(
+            k, qp, kmeans_iters=1, corpus_pred=cp
+        ),
+    ),
+    "ivf_topk_imi": (
+        lambda q, c, k: S.ivf_topk_imi(q, c, k=k, n_cells=25),
+        lambda k, qp, cp: S.duck_ivf2_topk_sql(k, qp, n_cells=25, corpus_pred=cp),
+    ),
+}
+
+
+def _duck(path: str):
+    """A DuckDB connection whose ``embeddings`` view reads ``path``."""
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')"
+    )
+    return con
+
+
+@pytest.mark.parametrize("corpus", sorted(CASES))
+@pytest.mark.parametrize("op", sorted(OPS))
+def test_matches_duckdb(spark, tables, op, corpus):
+    run, oracle = OPS[op]
+    table, query_pred, corpus_pred, k = CASES[corpus]
+    df = spark.read.parquet(tables[table]).withColumnRenamed("vec_id", "id")
+    queries = df.filter(query_pred).withColumnRenamed("id", "vec_id")
+    corpus_df = df.filter(corpus_pred).withColumnRenamed("id", "vec_id")
+    got = sorted(map(tuple, run(queries, corpus_df, k=k).collect()))
+    want = sorted(
+        _duck(tables[table]).execute(oracle(k, query_pred, corpus_pred)).fetchall()
+    )
+    assert got == want
+    if corpus == "empty":
+        assert got == []
+    else:
+        assert got
+
+
+def test_local_topk_ties_keep_the_lowest_ids():
+    """With more tied candidates than the kernel keeps, the local list
+    must hold the lowest neighbor ids — the (score desc, neighbor_id)
+    order every oracle ranks by — whatever order the batch arrives in
+    (the edge corpora above never tie past the cut)."""
+    import numpy as np
+    import pandas as pd
+
+    v = np.full((1, 4), 7, dtype=np.int64)
+    ids = np.arange(100, 300, dtype=np.int64)[::-1]  # id-descending batch
+    pdf = pd.DataFrame(
+        {"c_id": ids, "c_v": [v[0]] * len(ids), "c_n": (v * v).sum()}
+    )
+    for metric in ("cosine", "ip"):
+        got = S._local_topk(3, metric)(np.array([101]), v, (v * v).sum(axis=1), pdf)
+        assert got["neighbor_id"].tolist() == [100, 102, 103], metric
 
 
 #: output schemas of the public ANN operators: simpleString, then the
@@ -145,19 +220,37 @@ def test_output_schemas_pinned(emb, tmp_path):
     store = IncrementalVectorIndexer(str(tmp_path / "vstore"), n_cells=8)
     store(emb.select("vec_id", "embedding"), 0)
     frames = {
-        "hard_negatives": [S.hard_negatives(q, emb)],
-        "mips_topk_ivf": [S.mips_topk_ivf(q, emb)],
-        "lsh_topk": [S.lsh_topk(q, emb)],
-        "knn_classify": [S.knn_classify(q, emb)],
-        "IncrementalVectorIndexer.topk": [store.topk(q)],
+        "hard_negatives": S.hard_negatives(q, emb),
+        "mips_topk_ivf": S.mips_topk_ivf(q, emb),
+        "lsh_topk": S.lsh_topk(q, emb),
+        "knn_classify": S.knn_classify(q, emb),
+        "IncrementalVectorIndexer.topk": store.topk(q),
     }
     for op in ("brute_force_topk", "mips_topk", "ivf_topk", "ivf_topk_imi"):
-        frames[op] = [getattr(S, op)(q, emb, impl=impl) for impl in ("arrow", "sql")]
+        frames[op] = getattr(S, op)(q, emb)
     assert sorted(frames) == sorted(SCHEMAS)
-    for op, dfs in frames.items():
-        for df in dfs:
-            got = (df.schema.simpleString(), [f.nullable for f in df.schema.fields])
-            assert got == SCHEMAS[op], op
+    for op, df in frames.items():
+        assert _schema(df) == SCHEMAS[op], op
+
+
+def _schema(df):
+    return df.schema.simpleString(), [f.nullable for f in df.schema.fields]
+
+
+def test_empty_model_serves_no_rows(spark, emb):
+    """No centroids, so no cells: an empty pinned snapshot and an empty
+    corpus (whose seed model is empty) take the SQL assigner at either
+    level and return 0 rows under the pinned schema."""
+    q = emb.filter(F.col("vec_id") < 5)
+    cents = spark.createDataFrame(
+        [], "cell bigint, cent_v array<bigint>, cent_n bigint"
+    )
+    for name, df in (
+        ("ivf_topk", S.ivf_topk(q, emb, centroids=cents)),
+        ("ivf_topk_imi", S.ivf_topk_imi(q, emb.filter(F.lit(False)))),
+    ):
+        assert _schema(df) == SCHEMAS[name], name
+        assert df.collect() == [], name
 
 
 # ---------------------------------------------- pickle-by-value kernels
@@ -276,7 +369,7 @@ def _kernels():
             [corpus],
         ),
         "banded": (
-            _kernel(S._banded, "c_id", "c_v", "arrow", 2, 2),
+            _kernel(S._banded, "c_id", "c_v", 2, 2),
             True,
             [pd.DataFrame({"c_id": ids, "c_v": list(rng.normal(0, 0.1, (12, S.DIM)))})],
         ),

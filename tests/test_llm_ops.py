@@ -265,54 +265,84 @@ def test_connected_components_chain_clusters(spark):
     }
 
 
-def test_lsh_banding_arrow_equals_sql(spark, sf_dir):
-    """The numpy banding kernel and the built-in-expression form are
-    the same operator: identical (id, band, key, n) and scaled vectors
-    for every row — signs, rounding, and packing included."""
-    from spark_kafka_streaming_spark.operators.similarity import _banded
+@pytest.mark.parametrize("n_planes,n_bands", [(6, 8), (12, 16)], ids=["6x8", "12x16"])
+def test_lsh_banding_matches_duckdb(spark, sf_dir, n_planes, n_bands):
+    """The numpy banding kernel and the LSH oracles' DuckDB band keys
+    (``_PLANE_COEF_SQL`` spliced into ``_duck_lsh_keys``) are the same
+    derivation: identical (id, band, key, n, v) rows — signs, rounding
+    and packing included — at the default geometry and at 12×16, the
+    measured dense-corpus configuration (SCALE.md), where the
+    parameterization must drive the same plane indices, bit packing
+    and band fan-out in both engines."""
+    import duckdb
+
+    from spark_kafka_streaming_spark.operators.similarity import (
+        _banded,
+        _duck_lsh_keys,
+    )
     from spark_kafka_streaming_spark.sources.batch import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    a = {
-        (r.id, r.band): (r.key, r.n, tuple(r.v))
-        for r in _banded(emb, "vec_id", "embedding", impl="arrow").collect()
-    }
-    b = {
-        (r.id, r.band): (r.key, r.n, tuple(r.v))
-        for r in _banded(emb, "vec_id", "embedding", impl="sql").collect()
-    }
-    assert a == b and len(a) > 0
+    got = sorted(
+        (r.id, r.band, r.key, r.n, tuple(r.v))
+        for r in _banded(
+            emb, "vec_id", "embedding", n_planes=n_planes, n_bands=n_bands
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/embeddings.parquet')"
+    )
+    sql = f"""
+    WITH {_duck_lsh_keys("embeddings", "vec_id", "embedding", n_planes, n_bands)}
+    SELECT keys.id, keys.band, keys.key, scaled.n, scaled.v
+    FROM keys JOIN scaled USING (id)
+    """
+    want = sorted(
+        (i, b, k, int(n), tuple(v)) for i, b, k, n, v in con.execute(sql).fetchall()
+    )
+    assert got == want and len(got) == emb.count() * n_bands
 
 
-def test_lsh_banding_parity_at_deep_geometry(spark, sf_dir):
-    """The arrow/sql parity holds at a NON-default LSH geometry too —
-    the parameterization (n_planes, n_bands) must drive the same plane
-    indices, bit packing, and band fan-out in both impls (12×16 is the
-    measured dense-corpus configuration, SCALE.md)."""
-    from spark_kafka_streaming_spark.operators.similarity import _banded
-    from spark_kafka_streaming_spark.sources.batch import load_table
+@pytest.mark.parametrize("defect", ["null", "width63"])
+def test_banded_corpus_contract_enforced(spark, sf_dir, defect):
+    """A NULL embedding or a 63-wide vector in the corpus is outside
+    the banding kernel's contract (non-null, DIM wide): both LSH
+    operators fail loudly instead of banding a prefix dot."""
+    from spark_kafka_streaming_spark.operators.similarity import (
+        cosine_dup_pairs,
+    )
 
-    emb = load_table(spark, sf_dir, "embeddings").limit(60)
-    kw = dict(n_planes=12, n_bands=16)
-    a = {
-        (r.id, r.band): (r.key, r.n)
-        for r in _banded(emb, "vec_id", "embedding", impl="arrow", **kw).collect()
-    }
-    b = {
-        (r.id, r.band): (r.key, r.n)
-        for r in _banded(emb, "vec_id", "embedding", impl="sql", **kw).collect()
-    }
-    assert a == b and len(a) == 60 * 16
+    rows = [
+        (r.vec_id, list(r.embedding))
+        for r in load_table(spark, sf_dir, "embeddings")
+        .filter("vec_id < 20")
+        .collect()
+    ]
+    rows[3] = (rows[3][0], None if defect == "null" else rows[3][1][:63])
+    bad = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    for run in (
+        lambda: cosine_dup_pairs(bad, 0.9).collect(),
+        lambda: lsh_topk(bad.filter("vec_id < 5"), bad).collect(),
+    ):
+        with pytest.raises(Exception, match="_banded corpus contract violated"):
+            run()
 
 
-def test_signature_frame_arrow_equals_sql(spark, sf_dir):
-    """The Arrow signature kernel and the HOF-expression form are the
-    same derivation bit-for-bit: identical hs sequences (first-
-    occurrence order), MinHash signatures, SimHash values, and null
-    conventions — the property that lets the kernel feed every
-    oracle-checked dedup query."""
-    from spark_kafka_streaming_spark.operators.signatures import signature_frame
-    from spark_kafka_streaming_spark.sources.batch import load_table
+def test_signature_frame_matches_chain_steps(spark, sf_dir):
+    """The Arrow signature kernel and the chain's hash → MinHash +
+    SimHash steps are the same derivation bit-for-bit: identical hs
+    sequences (first-occurrence order), MinHash signatures, SimHash
+    values, and null conventions — the property that lets the kernel's
+    materialized table feed the same dedup queries the chain serves
+    inline."""
+    from spark_kafka_streaming_spark.operators.signatures import (
+        _shingle_hashes,
+        _with_sig,
+        _with_sim,
+        signature_frame,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     # add edge rows: null text, empty, single token, repeated shingles
@@ -323,12 +353,18 @@ def test_signature_frame_arrow_equals_sql(spark, sf_dir):
     allx = docs.select("doc_id", "text").unionByName(extra)
     a = {
         r.doc_id: (r.hs, r.sig, r.sim)
-        for r in signature_frame(allx, impl="arrow").collect()
+        for r in signature_frame(allx).collect()
     }
+    # unguarded chain: a doc without shingles gets a NULL sig
+    chain = _with_sim(_with_sig(_shingle_hashes(allx, "doc_id", "text")))
     b = {
         r.doc_id: (r.hs, r.sig, r.sim)
-        for r in signature_frame(allx, impl="sql").collect()
+        for r in chain.withColumn("sig", F.when(F.size("hs") > 0, F.col("sig")))
+        .collect()
     }
     assert len(a) == len(b) and a.keys() == b.keys()
     for k in a:
         assert a[k] == b[k], f"doc {k}: {a[k]} != {b[k]}"
+    assert a[90001] == (None, None, 0)
+    assert a[90002][:2] == a[90003][:2] == ([], None)
+    assert len(a[90004][0]) == 3

@@ -184,20 +184,34 @@ def test_random_projection_matches_numpy(spark, sf_dir):
 # ----------------------------------------- blocked all-pairs cosine
 
 
-def test_cosine_all_pairs_arrow_equals_sql(spark, sf_dir):
+@pytest.mark.parametrize("n_blocks", [1, 5, 8])
+def test_cosine_all_pairs_matches_duckdb(spark, sf_dir, n_blocks):
+    """The blocked matmul form returns the theta join's rows, cos_sim
+    doubles included, whatever the block count (1 = one diagonal task;
+    8 = the default)."""
+    import duckdb
+
+    from spark_kafka_streaming_spark.functions import vectors as V
     from spark_kafka_streaming_spark.operators.similarity import (
         cosine_all_pairs,
     )
     from spark_kafka_streaming_spark.sources.batch import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    want = sorted(
-        tuple(r) for r in cosine_all_pairs(emb, 0.45, impl="sql").collect()
-    )
     got = sorted(
         tuple(r)
-        for r in cosine_all_pairs(emb, 0.45, impl="arrow", n_blocks=5).collect()
+        for r in cosine_all_pairs(emb, 0.45, n_blocks=n_blocks).collect()
     )
+    cos = V.duck_cosine(V.duck_dot("a.v", "b.v"), "a.n", "b.n")
+    sql = f"""
+    WITH s AS (SELECT vec_id, {V.duck_scaled('embedding')} AS v
+               FROM read_parquet('{sf_dir}/embeddings.parquet')),
+    sn AS (SELECT vec_id, v, {V.duck_dot('v', 'v')} AS n FROM s)
+    SELECT a.vec_id, b.vec_id, {cos}
+    FROM sn a JOIN sn b ON a.vec_id < b.vec_id
+    WHERE {cos} >= 0.45
+    """
+    want = sorted(duckdb.sql(sql).fetchall())
     assert len(want) > 0
     assert got == want  # bit-identical incl. cos_sim doubles
 
