@@ -168,7 +168,7 @@ def minhash_lsh_pairs(
         cap=max_bucket,
     ).distinct()
     return (
-        _verify_join(cand, sigs, id_col, broadcast_verify)
+        _verify_join(cand, sigs, id_col, broadcast_verify, stored=precomputed)
         .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id1", "id2", "jaccard")
@@ -361,7 +361,9 @@ def ngram_jaccard_pairs(
         .distinct()
     )
     return (
-        _verify_join(cand, hs, id_col, broadcast_verify)
+        _verify_join(
+            cand, hs, id_col, broadcast_verify, stored=sigs is not None
+        )
         .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
@@ -475,7 +477,9 @@ def overlap_pairs(
         .distinct()
     )
     return (
-        _verify_join(cand, base, id_col, broadcast_verify)
+        _verify_join(
+            cand, base, id_col, broadcast_verify, stored=sigs is not None
+        )
         .select(
             "id1",
             "id2",

@@ -60,10 +60,10 @@ lookups/joins over it).
 :func:`signature_table` is the read-through cache form of that: keyed
 by the corpus file identity (path + mtime + size) and the hash-family
 parameters, it computes and writes the parquet table on first use and
-serves plain ``spark.read.parquet`` afterwards.  Values are produced by
-the engine-portable hash family (:mod:`..functions.texthash`), so a
-DuckDB oracle recomputing from raw text still hash-matches results
-derived from the cached table.
+serves a parquet scan (:func:`..sources.batch.read_parquet`)
+afterwards.  Values are produced by the engine-portable hash family
+(:mod:`..functions.texthash`), so a DuckDB oracle recomputing from raw
+text still hash-matches results derived from the cached table.
 
 Columns: ``doc_id``, ``hs`` (distinct shingle hashes, possibly empty),
 ``sig`` (MinHash signature, NULL when the doc has no shingles), ``sim``
@@ -80,6 +80,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import texthash as TH
+from ..sources.batch import footer_row_bound, load_table, read_parquet
 
 #: Override the cache root (default: <tmp>/spark_graft_sig_cache).
 SIG_CACHE_ENV = "SPARK_GRAFT_SIG_CACHE"
@@ -172,32 +173,50 @@ def _band_rows(
 BROADCAST_VERIFY_MAX_DOCS = 1_000_000
 
 
-def _resolve_broadcast_verify(flag: bool | None, sigs: DataFrame) -> bool:
+def _resolve_broadcast_verify(
+    flag: bool | None, sigs: DataFrame, stored: bool = False
+) -> bool:
     """``None`` = adaptive: broadcast the verify legs only while the
-    signature table is small enough to collect (one cheap column-pruned
-    count against a table the plan consumes anyway); above the cap the
+    signature table is small enough to collect; above the cap the
     verify joins run as ordinary shuffle joins — slower per candidate
     but unbounded in corpus size.  Explicit True/False pins the choice
     (the cluster form stores signatures bucketed by id so both legs
     co-locate without re-shuffling candidates).
 
+    ``stored``: the operator was given a precomputed ``sigs=`` table.
+    When that frame is a filtered projection of one parquet scan (the
+    :func:`signature_table` form), the size comes from the summed
+    parquet footer row counts of its files
+    (:func:`..sources.batch.footer_row_bound`) — no job.  The footer
+    count bounds the rows the verify leg keeps from above, so the
+    choice can only move from broadcast to shuffle, never change rows.
+
     NOTE the adaptive path is an EAGER action at plan-construction
-    time: ``sigs.count()`` runs (and with inline signatures,
-    materializes the signature computation) even if the returned plan
-    is never executed.  Library callers who need lazy construction
-    should pass an explicit ``broadcast_verify`` — the model-sizing
-    count is then skipped entirely."""
+    time for inline signatures (and for a given table the footers
+    cannot bound): ``sigs.count()`` runs, and with inline signatures
+    materializes the persisted signature computation the plan reuses,
+    even if the returned plan is never executed.  Library callers who
+    need lazy construction should pass an explicit ``broadcast_verify``
+    — the sizing count is then skipped entirely."""
     if flag is not None:
         return flag
-    return sigs.count() <= BROADCAST_VERIFY_MAX_DOCS
+    n = footer_row_bound(sigs) if stored else None
+    if n is None:
+        n = sigs.count()
+    return n <= BROADCAST_VERIFY_MAX_DOCS
 
 
 def _verify_join(
-    cand: DataFrame, hs: DataFrame, id_col: str, broadcast_verify: bool | None
+    cand: DataFrame,
+    hs: DataFrame,
+    id_col: str,
+    broadcast_verify: bool | None,
+    stored: bool = False,
 ) -> DataFrame:
     """Attach ``hs1``/``hs2`` to (id1, id2) candidate pairs by two slim
     joins against the per-doc ``(id, hs)`` table, broadcast while it
-    fits (:func:`_resolve_broadcast_verify`).
+    fits (:func:`_resolve_broadcast_verify`; ``stored`` marks ``hs`` as
+    derived from a given ``sigs=`` table).
 
     The candidate list outnumbers the table by orders of magnitude
     (measured sf1: 10.7M candidates vs 50k docs), so a shuffle join
@@ -208,7 +227,7 @@ def _verify_join(
     """
     s1 = hs.select(F.col(id_col).alias("id1"), F.col("hs").alias("hs1"))
     s2 = hs.select(F.col(id_col).alias("id2"), F.col("hs").alias("hs2"))
-    if _resolve_broadcast_verify(broadcast_verify, hs):
+    if _resolve_broadcast_verify(broadcast_verify, hs, stored):
         s1, s2 = F.broadcast(s1), F.broadcast(s2)
     return cand.join(s1, "id1").join(s2, "id2")
 
@@ -360,7 +379,10 @@ def signature_table(
     First call per (corpus identity, hash params) computes and writes
     the parquet table; later calls — across queries and sessions — are
     plain parquet scans.  This is what makes the dedup tier's cost
-    *one* signature pass per corpus instead of one per operator.
+    *one* signature pass per corpus instead of one per operator.  The
+    table directory is read through
+    :func:`..sources.batch.read_parquet`, so only the first read of it
+    in a process runs a schema-inference job.
     """
     root = os.environ.get(
         SIG_CACHE_ENV,
@@ -368,10 +390,8 @@ def signature_table(
     )
     dest = os.path.join(root, _corpus_key(sf_dir, table))
     if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        from ..sources.batch import load_table
-
         docs = load_table(spark, sf_dir, table)
         signature_frame(docs, id_col, text_col).write.mode(
             "overwrite"
         ).parquet(dest)
-    return spark.read.parquet(dest)
+    return read_parquet(spark, dest)

@@ -4,6 +4,7 @@
 Usage:
     python tools/bench_entry.py q_name1 q_name2 ...      # time entries
     python tools/bench_entry.py --explain DIR q_name ... # also dump plans
+    python tools/bench_entry.py --explain DIR --reps 0 q_name ...  # plans only
     python tools/bench_entry.py --reps 3 q_name          # timed passes
 
 Same methodology as bench.py (noop sink, warm pass, min of N timed
@@ -16,6 +17,10 @@ Each entry's line also carries perfbench's host probe
 just after its timed passes: ``calib=<before>/<after>ms``.  The probe
 moves only with the host, so a slow pass with a slow probe is weather,
 not the change under test.
+
+``build_jobs=<n>`` is the number of Spark jobs the entry's builder ran
+before its action in the last timed pass, i.e. after one warm build
+(counted under a job group per pass).
 """
 
 from __future__ import annotations
@@ -39,14 +44,19 @@ from perfbench.harness import calib_ms  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def run_once(spark, name: str) -> float:
+def run_once(spark, name: str, group: str) -> tuple[float, int]:
+    """(wall seconds, jobs the builder ran before the action)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, name)
     t0 = time.perf_counter()
     df = REGISTRY[name].builder(spark, SF_DIR)
+    build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     df.write.format("noop").mode("overwrite").save()
     elapsed = time.perf_counter() - t0
+    sc.setLocalProperty("spark.jobGroup.id", None)
     release_operator_caches()
     spark.catalog.clearCache()
-    return elapsed
+    return elapsed, build_jobs
 
 
 def main() -> None:
@@ -54,8 +64,13 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("--explain", metavar="DIR", default=None)
     ap.add_argument("--suffix", default="", help="plan filename suffix")
-    ap.add_argument("--reps", type=int, default=2)
+    ap.add_argument(
+        "--reps", type=int, default=2,
+        help="timed passes; 0 with --explain writes the plans only",
+    )
     args = ap.parse_args()
+    if args.reps < 0 or (args.reps == 0 and not args.explain):
+        ap.error("--reps must be >= 1, or 0 together with --explain")
 
     spark = get_spark(app_name="bench_entry")
     for name in args.names:
@@ -76,17 +91,22 @@ def main() -> None:
             release_operator_caches()
             spark.catalog.clearCache()
             print(f"PLAN {name} -> {out}", file=sys.stderr)
-        spark.sparkContext.setJobDescription(name)
-        warm = run_once(spark, name)
+            if args.reps == 0:
+                continue
+        warm, _ = run_once(spark, name, f"bench_entry-{name}-warm")
         calib_before = calib_ms()
-        times = [run_once(spark, name) for _ in range(args.reps)]
+        runs = [
+            run_once(spark, name, f"bench_entry-{name}-{i}")
+            for i in range(args.reps)
+        ]
         calib_after = calib_ms()
-        spark.sparkContext.setJobDescription(None)
+        times = [t for t, _ in runs]
         print(
             f"{name}: warm={warm:.3f} "
             + " ".join(f"{t:.3f}" for t in times)
             + f"  min={min(times):.4f}"
             + f"  calib={calib_before:.1f}/{calib_after:.1f}ms"
+            + f"  build_jobs={runs[-1][1]}"
         )
 
 
