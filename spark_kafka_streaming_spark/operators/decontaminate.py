@@ -41,7 +41,7 @@ def contamination_hits(
     shingle expression re-tokenizes the text per ``element_at`` (no CSE
     inside lambdas), which measured ~6× slower on this exact shape.
     Pipelines that maintain a shared signature table should explode its
-    ``hs`` column instead (see ``queries/llm3.py``).
+    ``hs`` column instead (see ``queries/dedup.py``).
     """
     eval_sh = _exploded_hashes(eval_df, id_col, text_col, w).select(
         "h"

@@ -369,7 +369,7 @@ def derived_lsh_planes(
     deterministic, so a DuckDB oracle replays it by pinning the same
     geometry explicitly (the adaptive catalog entries pin their
     oracles at the derived geometry of the driver's 500-vector oracle
-    corpus — see queries/llm.py::_ORACLE_LSH_PLANES).
+    corpus — see queries/similarity.py::oracle_lsh_planes).
     """
     import math
 
@@ -577,7 +577,7 @@ def duck_ivf_topk_sql(
     parameterized-oracle pattern for engine paths that derive the cell
     count from the corpus size (cells must GROW with the corpus or
     probing stops cutting the pair space; see
-    :func:`..queries.llm13.auto_cells`)."""
+    :func:`..queries.similarity.auto_cells`)."""
     cell_cos = V.duck_cosine(V.duck_dot("s.v", "c.cent_v"), "s.n", "c.cent_n")
     pair_cos = V.duck_cosine(V.duck_dot("s1.v", "s2.v"), "s1.n", "s2.n")
     refine = []
@@ -1436,7 +1436,7 @@ def ivf_topk_imi(
     Babenko & Lempitsky 2012): the build-side answer to the one cost
     in :func:`ivf_topk` that still grew super-linearly per vector.
 
-    With the √n cell policy (:func:`..queries.llm13.auto_cells`),
+    With the √n cell policy (:func:`..queries.similarity.auto_cells`),
     single-level assignment is |C|·√|C| dots (~n^1.5).  Here the
     ⌊√n_cells⌋ smallest-id centroids double as SUPER-centroids; every
     centroid is owned by its nearest super, and a vector scores only

@@ -12,7 +12,7 @@ per-file parquet min/max statistics (which Spark's scan uses for row-
 group skipping automatically).
 
 The quantified comparison against a linear layout is the catalog query
-``q_layout_zorder`` (queries/relational3.py); this module is the
+``q_layout_zorder`` (queries/relational.py); this module is the
 write-side operator plus the shared expression generator.  No analog
 in the reference (it has no file layout at all — Kafka in, DStream
 out).

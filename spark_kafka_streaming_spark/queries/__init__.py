@@ -2,156 +2,90 @@
 
 Importing this package registers all queries. ``REGISTRY`` maps
 name → :class:`Query` (Spark builder + optional DuckDB oracle SQL).
+Entries live in one module per subject:
+
+* :mod:`.tpch` — TPC-H Q1–Q22 over the driver star schema
+* :mod:`.relational` — joins, aggregates, windows, set ops, scalar
+  functions, table maintenance, graph iteration, file formats
+* :mod:`.events` — the stream-shaped ``events`` table
+* :mod:`.text` — tokens, quality, vocabulary, search, BPE
+* :mod:`.dedup` — exact / near-duplicate detection and decontamination
+* :mod:`.similarity` — top-k search, ANN indexes, k-NN propagation
+* :mod:`.vectors` — vector statistics, PCA, quantization, k-means
+* :mod:`.sketches` — mergeable sketches and moments
+* :mod:`.corpus` — sampling, sharding, packing, multimodal, the
+  composed corpus pipeline
 """
 
 from .registry import REGISTRY, Query, register  # noqa: F401
 
 # Import for side effect: each module registers its queries.
-#
-# ORDER MATTERS: the verification driver samples the FIRST 50 registry
-# entries for its per-round CORRECTNESS report.  The LLM-pipeline,
-# time-window, event, and advanced-relational operators are the
-# first-class novel surface of this engine, so they register first;
-# the TPC-H waves (all driver-green in round 1) fill the tail.
-from . import pipeline  # noqa: F401,E402
-from . import llm  # noqa: F401,E402
-from . import llm2  # noqa: F401,E402
-from . import windows  # noqa: F401,E402
-from . import events  # noqa: F401,E402
-from . import llm3  # noqa: F401,E402
-from . import llm4  # noqa: F401,E402
-from . import llm5  # noqa: F401,E402
-from . import events2  # noqa: F401,E402
-from . import formats  # noqa: F401,E402
-from . import llm6  # noqa: F401,E402
-from . import llm7  # noqa: F401,E402
-from . import llm8  # noqa: F401,E402
-from . import llm9  # noqa: F401,E402
-from . import llm10  # noqa: F401,E402
-from . import relational4  # noqa: F401,E402
-from . import llm11  # noqa: F401,E402
-from . import llm12  # noqa: F401,E402
-from . import llm13  # noqa: F401,E402
-from . import llm14  # noqa: F401,E402
-from . import llm15  # noqa: F401,E402
-from . import llm16  # noqa: F401,E402
-from . import llm17  # noqa: F401,E402
-from . import llm18  # noqa: F401,E402
-from . import llm19  # noqa: F401,E402
-from . import relational3  # noqa: F401,E402
-from . import relational2  # noqa: F401,E402
-from . import relational  # noqa: F401,E402
 from . import tpch  # noqa: F401,E402
-from . import tpch2  # noqa: F401,E402
-from . import tpch3  # noqa: F401,E402
+from . import relational  # noqa: F401,E402
+from . import events  # noqa: F401,E402
+from . import text  # noqa: F401,E402
+from . import dedup  # noqa: F401,E402
+from . import similarity  # noqa: F401,E402
+from . import vectors  # noqa: F401,E402
+from . import sketches  # noqa: F401,E402
+from . import corpus  # noqa: F401,E402
 
-
-# Round-3 sample window: the verification driver samples the FIRST 50
-# registry entries per round.  Rounds 1+2 drove 100 of the catalog to a
-# green driver row; this window front-loads (a) the round-3 additions,
-# (b) the one round-2 red row (gram — now BIGINT) and its PCA family,
-# (c) the 9 queries neither prior sample reached, and (d) every query
-# whose code path this round touched (LSH skew guard, slimmed verify
-# shuffle, signature consumers), so the driver re-proves them all.
-_ROUND4_WINDOW = [
-    # (a) the 14 catalog entries no driver sample has ever reached —
-    # with these green, cumulative driver coverage is 150/150.
-    "q_dedup_simhash_capped",
-    "q_events_resample_gapfill",
-    "q_events_scd2_user_state",
-    "q_events_dedup_within_interval",
-    "q_sketch_kmv_setops",
-    "q_corpus_drift_tv",
-    "q_text_collocations_lift",
-    "q_sketch_hll_grouped",
-    "q_text_phrase_search",
-    "q_audit_referential_integrity",
-    "q_events_rollup_time_grains",
-    "q_text_fuzzy_match",
-    "q_basket_brand_pairs",
-    "q_layout_zorder",
-    # (b) the round-3 red row, fixed (posting list serialized to a
-    # string — container outputs now rejected catalog-wide), and every
-    # query whose code path round 4 touched (SemDeDup skew guard,
-    # histogram clamp, shared index derivation, audit COALESCE).
-    "q_text_inverted_index",
-    "q_dedup_semantic",
-    "q_cluster_kmeans",
-    "q_sketch_quantile_hist",
-    # (c) the round-4 additions (queries/llm9.py).
-    "q_text_bm25_search",
-    "q_sketch_join_cardinality",
-    "q_subquery_not_in_null_aware",
-    "q_stats_moments_merge",
+# The verification driver samples the FIRST 50 registry entries for
+# its correctness report.  This window pins them, so the sample does
+# not depend on import order; the rest of the registry follows the
+# imports above.  To re-aim the sample, edit this list: every name
+# must be registered.
+CORRECTNESS_WINDOW = [
+    "q_similarity_mips_ivf",
+    "q_text_bpe_train",
+    "q_text_bpe_encode",
+    "q_setops_customer_segments",
+    "q_setops_intersect_active_both_years",
+    "q_similarity_filtered_ann",
+    "q_sort_limit_top_lineitems",
+    "q_subquery_correlated_above_avg",
+    "q_unpivot_part_metrics",
+    "q_window_market_share",
+    "q_window_rank_dense_rank",
+    "q_window_running_total",
+    "q_window_topk_orders_per_customer",
     "q_events_anomaly_mad",
-    "q_sketch_hll_sliding",
-    "q_graph_pagerank_brands",
-    "q_cdc_apply_changes",
-    "q_quality_expectations_events",
-    "q_dedup_containment_overlap",
     "q_events_anomaly_mad_hist",
-    "q_skew_report_orders",
-    "q_dedup_minhash_recall",
-    "q_dedup_survivor_by_quality",
-    "q_ann_recall_ivfpq",
-    "q_stats_correlation_merge",
-    "q_events_rate_limited",
-]
-
-_ROUND3_WINDOW = [
-    "q_pipeline_corpus_end_to_end",
-    "q_cluster_kmeans",
-    "q_dedup_semantic",
-    "q_sample_weighted_pps",
-    "q_split_train_val_test",
-    "q_similarity_ann_ivf_refined",
-    "q_ann_recall_lsh",
+    "q_sketch_hll_sliding",
     "q_vector_pq_encode",
     "q_similarity_pq_adc",
-    "q_profile_documents",
-    "q_text_quality_classifier",
-    "q_mix_temperature_lang",
-    "q_chunk_sliding_rag",
-    "q_decontaminate_by_split",
-    "q_dedup_tier_agreement",
-    "q_curriculum_select",
     "q_similarity_ivfpq",
-    # third wave: sketches + search indexing (operators/sketches.py)
-    "q_sketch_count_min",
-    "q_sketch_hll",
-    "q_sketch_quantile_hist",
-    "q_text_inverted_index",
-    "q_ngram_novelty",
-    "q_decontaminate_bloom",
-    "q_vector_pca_invariants",
-    "q_vector_gram_matrix",
-    "q_vector_pca_project",
-    # never sampled in r01/r02
-    "q_csv_line_roundtrip",
-    "q_json_line_roundtrip",
-    "q_dedup_cross_source_chunks",
-    "q_pack_length_buckets",
-    "q_window_distribution_ranks",
-    "q_window_first_last_frames",
-    "q_join_band_broadcast",
-    "q_array_hof_stats",
-    "q_subquery_in_uncorrelated",
-    # touched this round
-    "q_dedup_minhash_lsh",
-    "q_dedup_minhash_lsh_guarded",
-    "q_dedup_embedding_lsh",
-    "q_dedup_embedding_lsh_deep",
-    "q_dedup_clusters_embedding",
-    "q_dedup_embedding_cosine",
-    "q_similarity_ann_lsh",
-    "q_similarity_ann_ivf",
-    "q_similarity_topk_bruteforce",
-    "q_dedup_clusters_minhash",
+    "q_ann_recall_ivfpq",
+    "q_cluster_kmeans",
+    "q_dedup_semantic",
+    "q_similarity_ann_ivf_refined",
+    "q_text_bpe_train_batched",
+    "q_text_bpe_encode_batched",
+    "q_quantile_windowed_hourly",
+    "q_quantile_sketch_doclen_by_lang",
     "q_agg_salted_skew",
-    "q_shard_token_budget",
+    "q_ann_recall_imi",
+    "q_array_hof_stats",
+    "q_csv_line_roundtrip",
+    "q_decontaminate_bloom",
     "q_decontaminate_ngram",
-    "q_dedup_exact_documents",
-    "q_text_quality",
+    "q_dedup_cross_source_chunks",
+    "q_events_session_duration_quantiles",
+    "q_join_band_broadcast",
+    "q_json_line_roundtrip",
+    "q_knn_label_propagation_ann",
+    "q_knn_propagation_agreement",
+    "q_ngram_novelty",
+    "q_pack_length_buckets",
+    "q_pipeline_quality_filter",
+    "q_quantile_sketch_prices",
+    "q_sample_balanced_label",
+    "q_sample_stratified_hash",
+    "q_shard_token_budget",
+    "q_similarity_ann_imi",
+    "q_text_fingerprint",
+    "q_text_heavy_hitters",
+    "q_text_heavy_hitters_by_lang",
 ]
 
 
@@ -165,577 +99,7 @@ def _reorder(priority: list[str]) -> None:
     REGISTRY.update(ordered)
 
 
-# Round-5 sample window.  Cumulative driver coverage reached 167/167
-# in round 4, so the window's job is now re-proving TOUCHED paths:
-# (a) every query whose code round 5 changed — containment positional
-# bound + shared signature table, SemDeDup auto-k + join assignment,
-# BM25 scoring factored for the streaming serving loop, the
-# correlation DECIMAL-inside-SUM fix, the CM join-cardinality row
-# spine, the sampled minhash-recall truth leg, CDC sequence ordering,
-# and the multimodal codec un-stubbing — plus (b) neighbors sharing
-# those code paths (signature-table consumers, kmeans/IVF family),
-# padded to 50 with the OLDEST driver rows (the r1-era TPC-H wave,
-# untouched since round 1) for freshness.
-_ROUND5_WINDOW = [
-    # (a0) new registrations this round
-    "q_dedup_substring_spans",
-    "q_multimodal_audio_decode",
-    "q_knn_label_propagation",
-    "q_similarity_mips_topk",
-    # (a) touched this round
-    "q_dedup_containment_overlap",
-    "q_dedup_minhash_recall",
-    "q_dedup_semantic",
-    "q_cluster_kmeans",
-    "q_text_bm25_search",
-    "q_stats_correlation_merge",
-    "q_sketch_join_cardinality",
-    "q_cdc_apply_changes",
-    "q_multimodal_fingerprint",
-    "q_multimodal_features",
-    "q_multimodal_image_decode",
-    "q_text_inverted_index",
-    # (b) shared-code-path neighbors
-    "q_dedup_minhash_lsh",
-    "q_dedup_minhash_lsh_guarded",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_simhash_capped",
-    "q_dedup_tier_agreement",
-    "q_dedup_clusters_minhash",
-    "q_dedup_survivor_by_quality",
-    "q_dedup_exact_documents",
-    "q_similarity_ann_ivf",
-    "q_similarity_ann_ivf_refined",
-    "q_similarity_ivfpq",
-    "q_ann_recall_ivfpq",
-    "q_stats_moments_merge",
-    "q_sketch_count_min",
-    "q_text_phrase_search",
-    "q_text_collocations_lift",
-    "q_quality_expectations_events",
-]
-
-# (c) freshness padding: the oldest green driver rows (r1-era TPC-H).
-_ROUND5_FILL = [
-    "q01_pricing_summary",
-    "q02_min_cost_supplier",
-    "q03_shipping_priority",
-    "q04_late_shipment_priority",
-    "q05_local_supplier_volume",
-    "q06_forecast_revenue",
-    "q07_nation_trade_flow",
-    "q08_nation_market_share",
-    "q09_product_type_profit",
-    "q10_returned_items",
-    "q11_important_part_values",
-    "q12_priority_ship_delay",
-    "q13_customer_order_distribution",
-    "q14_promo_revenue_share",
-    "q15_top_supplier",
-    "q16_supplier_part_variety",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_disjunctive_revenue",
-    "q20_part_share_suppliers",
-    "q21_waiting_suppliers",
-]
-
-# Round-6 sample window.  Cumulative driver coverage is 172/172
-# (every oracle-bearing entry green on its latest row), so the
-# window's job is freshness: (a) the three round-6 registrations
-# (ANN label propagation, the agreement harness, indexed MIPS),
-# (b) every query whose code path round 6 touched — the
-# duck_ivf_topk_sql restructure (all IVF-family oracles regenerate),
-# knn_classify's pluggable neighbor stage, the span-tier factoring,
-# the parameterized recall-modulus / SemDeDup-auto-k oracles, and the
-# multimodal DLQ hardening — then (c) backfill with the entries whose
-# latest green row is OLDEST (the r1-era scalar/window/join/agg wave,
-# unsampled since round 1; the two rows-only-by-design entries are
-# left out so the window stays 50/50 green-able).
-_ROUND6_WINDOW = [
-    # (a) new registrations this round
-    "q_multimodal_video_frames",
-    "q_multimodal_video_scene_cuts",
-    "q_similarity_filtered_ann",
-    "q_search_hybrid_rrf",
-    "q_multimodal_audio_windows",
-    "q_orc_file_roundtrip",
-    "q_text_heavy_hitters",
-    "q_graph_triangles",
-    "q_vector_random_projection",
-    "q_knn_label_propagation_ann",
-    "q_knn_propagation_agreement",
-    "q_similarity_mips_ivf",
-    "q_text_bpe_train",
-    "q_text_bpe_encode",
-    "q_similarity_hard_negatives",
-    # (b) touched this round
-    "q_knn_label_propagation",
-    "q_similarity_mips_topk",
-    "q_dedup_substring_spans",
-    "q_dedup_minhash_recall",
-    "q_dedup_semantic",
-    "q_cluster_kmeans",
-    "q_similarity_ann_ivf",
-    "q_similarity_ann_ivf_refined",
-    "q_similarity_ann_lsh",
-    "q_similarity_topk_bruteforce",
-    "q_ann_recall_ivfpq",
-    "q_ann_recall_lsh",
-    "q_dedup_minhash_lsh",
-    "q_dedup_containment_overlap",
-    "q_dedup_embedding_lsh",
-    "q_dedup_embedding_cosine",
-    "q_multimodal_image_decode",
-    "q_multimodal_features",
-    "q_multimodal_fingerprint",
-    "q_multimodal_audio_decode",
-    # (c) freshness backfill: oldest green rows (r1-era, unsampled
-    # since round 1)
-    "q18_large_volume_customers",
-    "q19_disjunctive_revenue",
-    "q20_part_share_suppliers",
-    "q21_waiting_suppliers",
-    "q22_dormant_accounts",
-    "q_agg_count_distinct",
-    "q_agg_cube_orders",
-    "q_agg_exact_percentiles",
-    "q_agg_grouping_sets",
-    "q_agg_pivot_status_by_priority",
-    "q_agg_rollup_pricing",
-    "q_join_anti_customers_without_orders",
-    "q_join_full_outer_nation_activity",
-    "q_join_left_order_counts",
-    "q_join_semi_parts_ordered",
-    "q_map_json_explode",
-    "q_null_handling",
-    "q_scalar_case_when_buckets",
-    "q_scalar_date_functions",
-    "q_scalar_math_functions",
-    "q_scalar_string_builders",
-    "q_scalar_string_functions",
-    "q_setops_customer_segments",
-    "q_setops_intersect_active_both_years",
-    "q_sort_limit_top_lineitems",
-]
-# Round-7 sample window.  Coverage is total (187/187 through round 6),
-# so freshness rules: (a) the three round-7 registrations (two-level
-# IMI ANN, batched BPE train/encode), (b) every query whose code path
-# round 7 touched — the √n auto_cells policy (all three auto-scaled
-# IVF consumers + the shared duck_ivf_topk_sql users), the
-# heavy-hitter null fix, the session-scoped ORC round-trip path, the
-# bpe.py module restructure, and the decode_image dispatch branch —
-# then (c) backfill with the entries whose latest green row is OLDEST
-# (computed from CORRECTNESS_r01-r06: the 16 oracle-bearing r1-era
-# rows, then the oldest r2-era wave; q_agg_approx and
-# q_vector_pca_project stay out as the rows-only-by-design entries).
-_ROUND7_WINDOW = [
-    # (a) new registrations this round
-    "q_similarity_ann_imi",
-    "q_text_bpe_train_batched",
-    "q_text_bpe_encode_batched",
-    "q_quantile_sketch_prices",
-    "q_quantile_sketch_doclen_by_lang",
-    "q_events_session_duration_quantiles",
-    "q_text_heavy_hitters_by_lang",
-    "q_ann_recall_imi",
-    "q_quantile_windowed_hourly",
-    # (b) touched this round
-    "q_knn_label_propagation_ann",
-    "q_knn_propagation_agreement",
-    "q_similarity_filtered_ann",
-    "q_similarity_mips_ivf",
-    "q_text_heavy_hitters",
-    "q_orc_file_roundtrip",
-    "q_text_bpe_train",
-    "q_text_bpe_encode",
-    "q_multimodal_image_decode",
-    # (c) freshness backfill: last sampled in round 1
-    "q_map_json_explode",
-    "q_null_handling",
-    "q_scalar_case_when_buckets",
-    "q_scalar_date_functions",
-    "q_scalar_math_functions",
-    "q_scalar_string_builders",
-    "q_scalar_string_functions",
-    "q_setops_customer_segments",
-    "q_setops_intersect_active_both_years",
-    "q_sort_limit_top_lineitems",
-    "q_subquery_correlated_above_avg",
-    "q_unpivot_part_metrics",
-    "q_window_market_share",
-    "q_window_rank_dense_rank",
-    "q_window_running_total",
-    "q_window_topk_orders_per_customer",
-    # (c) freshness backfill: last sampled in round 2
-    "q_avro_container_roundtrip",
-    "q_corpus_snapshot_diff",
-    "q_dedup_chunk_exact",
-    "q_dedup_simhash",
-    "q_events_asof_last_click_before_purchase",
-    "q_events_distinct_users_by_type",
-    "q_events_funnel",
-    "q_events_interval_join_click_purchase",
-    "q_events_json_extract",
-    "q_events_lag_lead_per_user",
-    "q_events_retention",
-    "q_events_sessionize_batch",
-    "q_filter_median_tokens",
-    "q_mix_weighted_lang",
-    "q_ngram_bigram_counts",
-    "q_pack_sequences",
-    "q_pipeline_quality_filter",
-    "q_sample_balanced_label",
-    "q_sample_stratified_hash",
-    "q_text_fingerprint",
-    "q_text_langid",
-    "q_text_lm_familiarity",
-]
-# Round-8 sample window.  Coverage is total (196/196 through round 7),
-# so freshness rules: (a) the round-8 registration (two-level
-# propagation serving), (b) every query whose code path round 8
-# touched — the kmeans family (two-level assignment + partial-sum
-# updates + the zero-norm cosine convention + kmeans_refine's
-# partial-sum update), the cosine_dup_pairs/banded-verify consumers
-# (broadcast_verify pin), the grouped quantile cut and store
-# (NULL-group + string-cast + exactly-once re-cut), the heavy-hitter
-# family (null-safe group joins), the IMI/propagation family (#4), and
-# the batched-BPE pair (#5's depth proof shares their code) — then
-# (c) backfill with the stalest rows (latest green row r2, then r3 —
-# computed from CORRECTNESS_r01-r07; q_agg_approx and
-# q_vector_pca_project stay out as the rows-only-by-design entries).
-_ROUND8_WINDOW = [
-    # (a) new registrations this round
-    "q_knn_label_propagation_imi",
-    "q_dedup_embedding_lsh_scaled",
-    # (b) touched this round
-    "q_dedup_semantic",
-    "q_cluster_kmeans",
-    "q_similarity_ann_ivf_refined",
-    "q_dedup_embedding_lsh",
-    "q_dedup_embedding_lsh_deep",
-    "q_dedup_embedding_cosine",
-    "q_dedup_clusters_embedding",
-    "q_quantile_sketch_prices",
-    "q_quantile_sketch_doclen_by_lang",
-    "q_quantile_windowed_hourly",
-    "q_events_session_duration_quantiles",
-    "q_text_heavy_hitters",
-    "q_text_heavy_hitters_by_lang",
-    "q_text_bpe_train_batched",
-    "q_text_bpe_encode_batched",
-    "q_knn_label_propagation_ann",
-    "q_knn_propagation_agreement",
-    "q_similarity_ann_imi",
-    "q_ann_recall_imi",
-    # (c) freshness backfill: last sampled in round 2
-    "q_pipeline_quality_filter",
-    "q_sample_balanced_label",
-    "q_sample_stratified_hash",
-    "q_text_fingerprint",
-    "q_text_langid",
-    "q_text_lm_familiarity",
-    "q_text_pii_redact",
-    "q_text_repetition_gopher",
-    "q_text_stats",
-    "q_text_token_counts",
-    "q_text_top_distinctive_terms",
-    "q_text_vocab_topk",
-    "q_vector_centroids",
-    "q_vector_quantize_int8",
-    "q_window_session_30m",
-    "q_window_sliding_10m_5m",
-    "q_window_trailing_1h",
-    "q_window_tumbling_hourly",
-    # (c) freshness backfill: last sampled in round 3
-    "q_agg_salted_skew",
-    "q_array_hof_stats",
-    "q_csv_line_roundtrip",
-    "q_decontaminate_bloom",
-    "q_decontaminate_ngram",
-    "q_dedup_cross_source_chunks",
-    "q_join_band_broadcast",
-    "q_json_line_roundtrip",
-    "q_ngram_novelty",
-    "q_pack_length_buckets",
-    "q_shard_token_budget",
-]
-# Round-9 sample window.  Freshness rules unchanged: (a) the round-9
-# registration (the planted-pair twin of the corpus-scaled LSH
-# geometry — closes the round-8 "trivially green at sf0.01" gap with a
-# non-empty driver hash); (b) every query whose code path round 9
-# touched — the kmeans/SemDeDup family (two_level pass-through +
-# default-flip warning), the scaled-LSH sibling, the batched-BPE pair
-# (encode split into bpe_encode_with_merges), and the IMI serving
-# entry (re-measured at n_cells=1e4); then (c) backfill with the
-# stalest rows — after r8's rotation the oldest green rows are r3-era
-# (7 queries), then r4-era (30), then the r5-era TPC-H head (computed
-# from CORRECTNESS_r01-r08 latest-green rounds; q_agg_approx and
-# q_vector_pca_project stay out as rows-only-by-design).
-_ROUND9_WINDOW = [
-    # (a) new registrations this round
-    "q_dedup_embedding_lsh_scaled_planted",
-    "q_dedup_clusters_embedding_scaled",
-    # (b) touched this round
-    "q_dedup_semantic",
-    "q_cluster_kmeans",
-    "q_dedup_embedding_lsh_scaled",
-    "q_text_bpe_encode_batched",
-    "q_text_bpe_train_batched",
-    "q_knn_label_propagation_imi",
-    # (c) freshness backfill: last sampled in round 3
-    "q_sketch_hll",
-    "q_subquery_in_uncorrelated",
-    "q_text_quality",
-    "q_vector_gram_matrix",
-    "q_vector_pca_invariants",
-    "q_window_distribution_ranks",
-    "q_window_first_last_frames",
-    # (c) freshness backfill: last sampled in round 4
-    "q_audit_referential_integrity",
-    "q_basket_brand_pairs",
-    "q_chunk_sliding_rag",
-    "q_corpus_drift_tv",
-    "q_curriculum_select",
-    "q_decontaminate_by_split",
-    "q_events_anomaly_mad",
-    "q_events_anomaly_mad_hist",
-    "q_events_dedup_within_interval",
-    "q_events_rate_limited",
-    "q_events_resample_gapfill",
-    "q_events_rollup_time_grains",
-    "q_events_scd2_user_state",
-    "q_graph_pagerank_brands",
-    "q_layout_zorder",
-    "q_mix_temperature_lang",
-    "q_pipeline_corpus_end_to_end",
-    "q_profile_documents",
-    "q_sample_weighted_pps",
-    "q_similarity_pq_adc",
-    "q_sketch_hll_grouped",
-    "q_sketch_hll_sliding",
-    "q_sketch_kmv_setops",
-    "q_sketch_quantile_hist",
-    "q_skew_report_orders",
-    "q_split_train_val_test",
-    "q_subquery_not_in_null_aware",
-    "q_text_fuzzy_match",
-    "q_text_quality_classifier",
-    "q_vector_pq_encode",
-    # (c) freshness backfill: last sampled in round 5 (TPC-H head)
-    "q01_pricing_summary",
-    "q02_min_cost_supplier",
-    "q03_shipping_priority",
-    "q04_late_shipment_priority",
-    "q05_local_supplier_volume",
-    "q06_forecast_revenue",
-]
-# Round-10 sample window.  Freshness rules unchanged: (a) no new
-# registrations this round (the catalog holds at 200); (b) every query
-# whose code path round 10 touched — the ENTIRE embedding-LSH family
-# re-keys through the adaptive corpus-derived geometry
-# (derived_lsh_planes: the four adaptive-default entries get new
-# 9-plane oracles; the pinned-geometry siblings share the reworked
-# cosine_dup_pairs/lsh_topk/duck_lsh_topk_sql code paths) plus the two
-# planted entries that gained the in-plan PLANT_OFFSET guard; then
-# (c) backfill with the stalest rows — after r9's rotation the oldest
-# green rows are r5-era (30 queries: the TPC-H q06-q17 wave + the
-# r4/r5 dedup/sketch/text band), then the r6-era TPC-H tail and agg
-# wave (computed from CORRECTNESS_r01-r09 latest-green rounds;
-# q_agg_approx and q_vector_pca_project stay out as
-# rows-only-by-design).
-_ROUND10_WINDOW = [
-    # (b) touched this round: the adaptive-geometry LSH family
-    "q_dedup_embedding_lsh",
-    "q_dedup_clusters_embedding",
-    "q_similarity_ann_lsh",
-    "q_ann_recall_lsh",
-    "q_dedup_embedding_lsh_deep",
-    "q_dedup_embedding_lsh_scaled",
-    "q_dedup_embedding_lsh_scaled_planted",
-    "q_dedup_clusters_embedding_scaled",
-    "q_dedup_embedding_cosine",
-    # (c) freshness backfill: last sampled in round 5
-    "q06_forecast_revenue",
-    "q07_nation_trade_flow",
-    "q08_nation_market_share",
-    "q09_product_type_profit",
-    "q10_returned_items",
-    "q11_important_part_values",
-    "q12_priority_ship_delay",
-    "q13_customer_order_distribution",
-    "q14_promo_revenue_share",
-    "q15_top_supplier",
-    "q16_supplier_part_variety",
-    "q17_small_quantity_revenue",
-    "q_cdc_apply_changes",
-    "q_dedup_clusters_minhash",
-    "q_dedup_exact_documents",
-    "q_dedup_minhash_lsh_guarded",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_simhash_capped",
-    "q_dedup_survivor_by_quality",
-    "q_dedup_tier_agreement",
-    "q_quality_expectations_events",
-    "q_similarity_ivfpq",
-    "q_sketch_count_min",
-    "q_sketch_join_cardinality",
-    "q_stats_correlation_merge",
-    "q_stats_moments_merge",
-    "q_text_bm25_search",
-    "q_text_collocations_lift",
-    "q_text_inverted_index",
-    "q_text_phrase_search",
-    # (c) freshness backfill: last sampled in round 6
-    "q18_large_volume_customers",
-    "q19_disjunctive_revenue",
-    "q20_part_share_suppliers",
-    "q21_waiting_suppliers",
-    "q22_dormant_accounts",
-    "q_agg_count_distinct",
-    "q_agg_cube_orders",
-    "q_agg_exact_percentiles",
-    "q_agg_grouping_sets",
-    "q_agg_pivot_status_by_priority",
-    "q_agg_rollup_pricing",
-]
-# Round-11 sample window.  Freshness rules unchanged: (a) no new
-# registrations (catalog holds at 200); (b) round 11's code changes are
-# to the streaming dedup STORE (a bench drain, not a catalog query), so
-# no touched-entry wave; (c) the window is pure staleness backfill,
-# computed from CORRECTNESS_r01-r10 latest-green rounds: the two
-# rows-only-by-design entries last sampled r1/r3 (they still get the
-# driver's rows-only check and would otherwise fall 10 rounds stale),
-# then ALL 23 r6-era rows (join family, multimodal decode family,
-# q_dedup_minhash_lsh, q_similarity_topk_bruteforce,
-# q_dedup_substring_spans, ...), then 25 of the 38 r7-era rows
-# (events family, scalar family, the ORC/Avro roundtrips first).  The
-# 13 r7-era rows left over are 4 rounds stale after this round and
-# lead the r12 window.
-_ROUND11_WINDOW = [
-    # (c) rows-only-by-design, last sampled r1 / r3
-    "q_agg_approx",
-    "q_vector_pca_project",
-    # (c) last sampled round 6 — all 23
-    "q_ann_recall_ivfpq",
-    "q_dedup_containment_overlap",
-    "q_dedup_minhash_lsh",
-    "q_dedup_minhash_recall",
-    "q_dedup_substring_spans",
-    "q_graph_triangles",
-    "q_join_anti_customers_without_orders",
-    "q_join_full_outer_nation_activity",
-    "q_join_left_order_counts",
-    "q_join_semi_parts_ordered",
-    "q_knn_label_propagation",
-    "q_multimodal_audio_decode",
-    "q_multimodal_audio_windows",
-    "q_multimodal_features",
-    "q_multimodal_fingerprint",
-    "q_multimodal_video_frames",
-    "q_multimodal_video_scene_cuts",
-    "q_search_hybrid_rrf",
-    "q_similarity_ann_ivf",
-    "q_similarity_hard_negatives",
-    "q_similarity_mips_topk",
-    "q_similarity_topk_bruteforce",
-    "q_vector_random_projection",
-    # (c) last sampled round 7 — 25 of 38
-    "q_events_asof_last_click_before_purchase",
-    "q_events_distinct_users_by_type",
-    "q_events_funnel",
-    "q_events_interval_join_click_purchase",
-    "q_events_json_extract",
-    "q_events_lag_lead_per_user",
-    "q_events_retention",
-    "q_events_sessionize_batch",
-    "q_scalar_case_when_buckets",
-    "q_scalar_date_functions",
-    "q_scalar_math_functions",
-    "q_scalar_string_builders",
-    "q_scalar_string_functions",
-    "q_orc_file_roundtrip",
-    "q_avro_container_roundtrip",
-    "q_corpus_snapshot_diff",
-    "q_dedup_chunk_exact",
-    "q_dedup_simhash",
-    "q_filter_median_tokens",
-    "q_map_json_explode",
-    "q_mix_weighted_lang",
-    "q_multimodal_image_decode",
-    "q_ngram_bigram_counts",
-    "q_null_handling",
-    "q_pack_sequences",
-]
-_reorder(_ROUND11_WINDOW[:50])
-# Round-12 sample window.  Freshness rules unchanged: (a) no new
-# registrations (catalog holds at 200); (b) every oracle-bearing query
-# whose code path round 12 touched — the MAD pair (histogram
-# rank-select rewrite), the sliding HLL (explode + semi-join fan), the
-# PQ/IVF family (driver-side codebook training + min_by coarse
-# assignment), the kmeans_refine consumers (min_by assignment), and
-# the BPE four (bounded-probe local-path decision); then (c) staleness
-# backfill from CORRECTNESS_r01-r11 latest-green rounds: ALL 13
-# leftover r7-era rows lead (three of them — mips_ivf and the two
-# unbatched BPE entries — are also touched), then the oldest r8-era
-# rows.  The two rows-only-by-design entries were re-sampled in r11.
-_ROUND12_WINDOW = [
-    # (b) touched this round + (c) last sampled round 7 (overlap first)
-    "q_similarity_mips_ivf",
-    "q_text_bpe_train",
-    "q_text_bpe_encode",
-    # (c) last sampled round 7 — the other 10
-    "q_setops_customer_segments",
-    "q_setops_intersect_active_both_years",
-    "q_similarity_filtered_ann",
-    "q_sort_limit_top_lineitems",
-    "q_subquery_correlated_above_avg",
-    "q_unpivot_part_metrics",
-    "q_window_market_share",
-    "q_window_rank_dense_rank",
-    "q_window_running_total",
-    "q_window_topk_orders_per_customer",
-    # (b) touched this round
-    "q_events_anomaly_mad",
-    "q_events_anomaly_mad_hist",
-    "q_sketch_hll_sliding",
-    "q_vector_pq_encode",
-    "q_similarity_pq_adc",
-    "q_similarity_ivfpq",
-    "q_ann_recall_ivfpq",
-    "q_cluster_kmeans",
-    "q_dedup_semantic",
-    "q_similarity_ann_ivf_refined",
-    "q_text_bpe_train_batched",
-    "q_text_bpe_encode_batched",
-    "q_quantile_windowed_hourly",
-    "q_quantile_sketch_doclen_by_lang",
-    # (c) freshness backfill: last sampled round 8
-    "q_agg_salted_skew",
-    "q_ann_recall_imi",
-    "q_array_hof_stats",
-    "q_csv_line_roundtrip",
-    "q_decontaminate_bloom",
-    "q_decontaminate_ngram",
-    "q_dedup_cross_source_chunks",
-    "q_events_session_duration_quantiles",
-    "q_join_band_broadcast",
-    "q_json_line_roundtrip",
-    "q_knn_label_propagation_ann",
-    "q_knn_propagation_agreement",
-    "q_ngram_novelty",
-    "q_pack_length_buckets",
-    "q_pipeline_quality_filter",
-    "q_quantile_sketch_prices",
-    "q_sample_balanced_label",
-    "q_sample_stratified_hash",
-    "q_shard_token_budget",
-    "q_similarity_ann_imi",
-    "q_text_fingerprint",
-    "q_text_heavy_hitters",
-    "q_text_heavy_hitters_by_lang",
-]
-_reorder(_ROUND12_WINDOW[:50])
+_reorder(CORRECTNESS_WINDOW)
 
 
 def queries():

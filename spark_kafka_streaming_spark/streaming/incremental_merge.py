@@ -1,6 +1,6 @@
 """Incremental (streaming) CDC upsert into a keyed parquet snapshot.
 
-The batch operator (``queries/relational4.py::q_cdc_apply_changes``)
+The batch operator (``queries/relational.py::q_cdc_apply_changes``)
 applies a change set with one full-outer join; a pipeline receiving
 continuous CDC feeds must maintain the snapshot per micro-batch
 without rewriting the world.  This is the foreachBatch MERGE loop —

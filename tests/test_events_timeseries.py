@@ -1,4 +1,4 @@
-"""Semantics tests for the time-series wave (queries/events2.py):
+"""Semantics tests for the time-series wave (queries/events.py):
 gap-fill resampling and SCD2 state-interval derivation."""
 
 from __future__ import annotations

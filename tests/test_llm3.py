@@ -197,7 +197,7 @@ def test_funnel_orders_stages(spark):
     spark.createDataFrame(
         rows, "user_id long, ts timestamp, event_type string"
     ).createOrReplaceTempView("_funnel_events")
-    from spark_kafka_streaming_spark.queries.events2 import q_events_funnel
+    from spark_kafka_streaming_spark.queries.events import q_events_funnel
     import tempfile
 
     with tempfile.TemporaryDirectory() as d:

@@ -1,5 +1,6 @@
 """Unit tests for the round-3 wave: k-means, SemDeDup, PPS sampling,
-train/val/test split (queries/llm7.py, operators/kmeans.py)."""
+train/val/test split (queries/vectors.py, dedup.py, corpus.py,
+operators/kmeans.py)."""
 
 from __future__ import annotations
 

@@ -1,7 +1,7 @@
-"""Unit tests for the sketch + search-index wave (queries/llm8.py,
-operators/sketches.py): Count-Min, HyperLogLog, Bloom, inverted index,
-n-gram novelty — semantic properties beyond the DuckDB mirror, plus
-the streaming mergeability story."""
+"""Unit tests for the sketch + search-index wave (queries/sketches.py,
+text.py, dedup.py, operators/sketches.py): Count-Min, HyperLogLog,
+Bloom, inverted index, n-gram novelty — semantic properties beyond
+the DuckDB mirror, plus the streaming mergeability story."""
 
 from __future__ import annotations
 

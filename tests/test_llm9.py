@@ -1,8 +1,9 @@
-"""Semantics tests for the round-4 wave (queries/llm9.py): BM25
-ranking, CMS join-size estimation, null-aware NOT IN, mergeable
-moments, MAD outliers.  The oracle diff pins cross-engine equality;
-these pin the CLAIMED properties (one-sided estimates, mergeability,
-planted-outlier recovery) that equality alone can't.
+"""Semantics tests for the round-4 wave (queries/text.py, events.py,
+sketches.py): BM25 ranking, CMS join-size estimation, null-aware NOT
+IN, mergeable moments, MAD outliers.  The oracle diff pins
+cross-engine equality; these pin the CLAIMED properties (one-sided
+estimates, mergeability, planted-outlier recovery) that equality alone
+can't.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ def test_bm25_scores_positive_iff_terms_present(spark, sf_dir):
 
 def test_bm25_idf_quantization_monotone():
     """idfq must be non-increasing in df (rarer term ⇒ ≥ weight)."""
-    from spark_kafka_streaming_spark.queries.llm9 import _IDF_SCALE
+    from spark_kafka_streaming_spark.queries.text import _IDF_SCALE
 
     def idfq(n_docs, df):
         q = ((n_docs - df) * _IDF_SCALE) // (df + 1)
@@ -162,7 +163,7 @@ def test_mad_flags_planted_outliers(spark):
     )
     df.createOrReplaceTempView("_mad_probe")
 
-    from spark_kafka_streaming_spark.queries.llm9 import (
+    from spark_kafka_streaming_spark.queries.events import (
         q_events_anomaly_mad,
     )
     import tempfile
@@ -403,7 +404,7 @@ def test_minhash_recall_sampled_truth_matches_full(spark, sf_dir):
     from spark_kafka_streaming_spark.operators.signatures import (
         signature_table,
     )
-    from spark_kafka_streaming_spark.queries.llm11 import (
+    from spark_kafka_streaming_spark.queries.dedup import (
         _RECALL_MOD,
         _RECALL_T,
         minhash_recall_report,

@@ -18,7 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from spark_kafka_streaming_spark.operators.kmeans import auto_k
-from spark_kafka_streaming_spark.queries.llm11 import _recall_auto_mod
+from spark_kafka_streaming_spark.queries.dedup import _recall_auto_mod
 
 
 def test_auto_formulas_match_sql_over_decades():

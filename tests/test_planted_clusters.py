@@ -47,7 +47,7 @@ def test_ann_recall_on_clustered_corpus(clustered):
         ivf_topk,
         ivf_topk_imi,
     )
-    from spark_kafka_streaming_spark.queries.llm13 import auto_cells
+    from spark_kafka_streaming_spark.queries.similarity import auto_cells
 
     emb, _ = clustered
     corpus, sample = _corpus_sample(emb)
@@ -76,7 +76,7 @@ def test_propagation_agreement_on_clustered_corpus(clustered):
         ivf_topk_imi,
         knn_classify,
     )
-    from spark_kafka_streaming_spark.queries.llm13 import auto_cells
+    from spark_kafka_streaming_spark.queries.similarity import auto_cells
 
     emb, truth_label = clustered
     corpus, sample = _corpus_sample(emb)

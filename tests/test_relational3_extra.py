@@ -1,6 +1,6 @@
 """Semantics tests for the data-quality + association wave
-(queries/relational3.py): planted-orphan FK audit, fuzzy-match and
-basket-pair recomputation."""
+(queries/relational.py, text.py, events.py): planted-orphan FK audit,
+fuzzy-match and basket-pair recomputation."""
 
 from __future__ import annotations
 

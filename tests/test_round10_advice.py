@@ -14,7 +14,7 @@ pinned by the failure it closes:
   ids — a corpus with vec_id >= PLANT_OFFSET would silently collide
   planted ids with real ones (and the oracle, replaying the same
   construction, would stay green), so the bound is now asserted
-  in-plan on every corpus row (queries/llm19.py).
+  in-plan on every corpus row (queries/dedup.py).
 """
 
 from __future__ import annotations
@@ -120,26 +120,26 @@ def test_checks_report_empty_store_instead_of_raising(spark, tmp_path):
 # ------------------------------------------- PLANT_OFFSET collision bar
 def test_planted_corpus_guard_fires_on_id_collision(spark, tmp_path):
     from pyspark.errors.exceptions.captured import SparkRuntimeException
-    from spark_kafka_streaming_spark.queries import llm19
+    from spark_kafka_streaming_spark.queries import dedup
     from spark_kafka_streaming_spark.operators.similarity import DIM
 
     sf = str(tmp_path / "sf")
     os.makedirs(sf)
     vec = [0.1] * DIM
     spark.createDataFrame(
-        [(llm19.PLANT_OFFSET + 3, vec), (1, vec)],
+        [(dedup.PLANT_OFFSET + 3, vec), (1, vec)],
         "vec_id long, embedding array<float>",
     ).write.parquet(os.path.join(sf, "embeddings.parquet"))
     with pytest.raises(SparkRuntimeException, match="PLANT_OFFSET"):
-        llm19.q_dedup_embedding_lsh_scaled_planted(spark, sf).collect()
+        dedup.q_dedup_embedding_lsh_scaled_planted(spark, sf).collect()
 
 
 def test_planted_corpus_guard_passes_in_bound_ids(spark, sf_dir):
-    from spark_kafka_streaming_spark.queries import llm19
+    from spark_kafka_streaming_spark.queries import dedup
 
     # the real test corpora sit far below the bound: the entry still
     # produces its planted pairs (non-empty at every sf by design)
-    rows = llm19.q_dedup_embedding_lsh_scaled_planted(spark, sf_dir).collect()
+    rows = dedup.q_dedup_embedding_lsh_scaled_planted(spark, sf_dir).collect()
     assert len(rows) > 0
 
 

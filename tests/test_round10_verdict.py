@@ -48,7 +48,7 @@ def test_oracle_corpus_size_pin():
     # instead of as a silent oracle hash mismatch.
     import duckdb
 
-    from spark_kafka_streaming_spark.queries.llm import ORACLE_EMB_N
+    from spark_kafka_streaming_spark.queries.similarity import ORACLE_EMB_N
 
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         n = duckdb.sql(
@@ -57,7 +57,7 @@ def test_oracle_corpus_size_pin():
         assert n == ORACLE_EMB_N, (
             f"{sf}: embeddings count {n} != ORACLE_EMB_N {ORACLE_EMB_N}; "
             "regenerate the adaptive-entry oracles "
-            "(queries/llm.py::_oracle_lsh_planes)"
+            "(queries/similarity.py::oracle_lsh_planes)"
         )
 
 

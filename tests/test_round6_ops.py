@@ -16,7 +16,7 @@ from spark_kafka_streaming_spark.operators.similarity import (
     mips_topk,
     mips_topk_ivf,
 )
-from spark_kafka_streaming_spark.queries.llm13 import _q_mod
+from spark_kafka_streaming_spark.queries.similarity import _q_mod
 
 
 @pytest.fixture(scope="module")
@@ -110,7 +110,7 @@ def test_q_mod_formula_matches_sql():
     """Engine (Python) and oracle (SQL) derive the agreement-sample
     modulus from the same formula — checked over two decades of n so
     a future divergence (ADVICE r5 #5) fails here, not in the driver."""
-    from spark_kafka_streaming_spark.queries.llm13 import auto_cells
+    from spark_kafka_streaming_spark.queries.similarity import auto_cells
 
     con = duckdb.connect()
     for n in (1, 100, 499, 500, 501, 2000, 20000, 199999, 200000,

@@ -133,7 +133,7 @@ def test_heavy_hitters_frac_sums_below_one(spark):
 
 
 def test_triangle_join_enumerates_each_once(spark, sf_dir):
-    from spark_kafka_streaming_spark.queries.llm15 import q_graph_triangles
+    from spark_kafka_streaming_spark.queries.similarity import q_graph_triangles
 
     out = q_graph_triangles(spark, sf_dir).toPandas()
     # oriented enumeration: strictly increasing brand triples, no dups
@@ -148,7 +148,7 @@ def test_triangle_join_enumerates_each_once(spark, sf_dir):
 
 def test_random_projection_matches_numpy(spark, sf_dir):
     from spark_kafka_streaming_spark.functions.vectors import np_scaled
-    from spark_kafka_streaming_spark.queries.llm15 import (
+    from spark_kafka_streaming_spark.queries.vectors import (
         _RP_D,
         q_vector_random_projection,
     )
@@ -253,7 +253,7 @@ def test_scene_cut_detects_planted_jump(spark):
 
 
 def test_filtered_ann_neighbors_respect_predicate(spark, sf_dir):
-    from spark_kafka_streaming_spark.queries.llm16 import (
+    from spark_kafka_streaming_spark.queries.similarity import (
         q_similarity_filtered_ann,
     )
     from spark_kafka_streaming_spark.sources.batch import load_table
@@ -271,7 +271,7 @@ def test_filtered_ann_neighbors_respect_predicate(spark, sf_dir):
 
 
 def test_hybrid_rrf_fuses_both_legs(spark, sf_dir):
-    from spark_kafka_streaming_spark.queries.llm16 import (
+    from spark_kafka_streaming_spark.queries.similarity import (
         _RRF_K,
         q_search_hybrid_rrf,
     )

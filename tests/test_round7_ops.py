@@ -45,7 +45,7 @@ def test_heavy_hitters_frac_over_nonnull_total(spark):
 
 
 def test_roundtrip_temp_path_is_session_scoped(spark, sf_dir):
-    from spark_kafka_streaming_spark.queries.formats import (
+    from spark_kafka_streaming_spark.queries.relational import (
         _session_temp_path,
         q_orc_roundtrip,
     )

@@ -21,12 +21,23 @@ not the change under test.
 ``build_jobs=<n>`` is the number of Spark jobs the entry's builder ran
 before its action in the last timed pass, i.e. after one warm build
 (counted under a job group per pass).
+
+``--explain`` writes each entry's ``explain("formatted")`` text with
+the ids that depend on what the JVM built before, not on the query,
+masked (:func:`mask_plan_ids`), so two dumps of the same names from
+two trees diff cleanly.  Dump the same sorted name list on both sides.
+``q_agg_count_distinct`` must still be dumped in a fresh process of its
+own: the Expand projection order of its distinct aggregates depends on
+the entries built before it in the same process.  (For
+``q_events_anomaly_mad_hist`` only its codegen and query-stage ids
+varied; the masks cover them.)
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 import time
 
@@ -42,6 +53,27 @@ from spark_kafka_streaming_spark.queries import REGISTRY  # noqa: E402
 from perfbench.harness import calib_ms  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: (pattern, replacement): expression ids (``l_orderkey#12L``), exchange
+#: plan ids, adaptive query-stage ids (numbered in materialization
+#: order, which concurrent stages race for), RDD ids, whole-stage
+#: codegen stage ids, and the application id in session-scoped temp
+#: paths.
+_PLAN_ID_MASKS = (
+    (re.compile(r"#\d+"), "#_"),
+    (re.compile(r"plan_id=\d+"), "plan_id=_"),
+    (re.compile(r"(QueryStage\n[^\n]*\nArguments: )\d+"), r"\g<1>_"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : _]"),
+    (re.compile(r"\blocal-\d+\b"), "local-_"),
+)
+
+
+def mask_plan_ids(plan: str) -> str:
+    """``plan`` with its process-history ids replaced by ``_``."""
+    for pattern, repl in _PLAN_ID_MASKS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def run_once(spark, name: str, group: str) -> tuple[float, int]:
@@ -87,7 +119,7 @@ def main() -> None:
                 args.explain, f"{name}{args.suffix}.txt"
             )
             with open(out, "w") as f:
-                f.write(plan)
+                f.write(mask_plan_ids(plan))
             release_operator_caches()
             spark.catalog.clearCache()
             print(f"PLAN {name} -> {out}", file=sys.stderr)

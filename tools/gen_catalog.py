@@ -1,18 +1,25 @@
 #!/usr/bin/env python
 """Regenerate QUERIES.md from the query registry (run after adding
-queries): name, oracle status, tags, description."""
+queries): name, oracle status, tags, description.
+
+``render()`` returns the file's text (``tests/test_catalog_layout.py``
+compares it with the committed QUERIES.md); ``main()`` writes it and
+syncs README's catalog count."""
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from spark_kafka_streaming_spark.queries import REGISTRY
+from spark_kafka_streaming_spark.queries import REGISTRY  # noqa: E402
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md as text: header, then one row per entry sorted by name."""
     lines = [
         "# QUERIES — the engine's named query catalog",
         "",
@@ -35,17 +42,18 @@ def main() -> None:
             f"| `{name}` | {'✔' if q.oracle else 'rows-only'} | "
             f"{', '.join(q.tags)} | {doc} |"
         )
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = os.path.join(root, "QUERIES.md")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    out = os.path.join(ROOT, "QUERIES.md")
     with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
+        f.write(render())
     print(f"wrote {out}: {len(REGISTRY)} queries")
 
     # keep README's catalog count in sync — the count is derived, so it
     # can never drift from the registry again (a recurring stale-doc nit)
-    import re
-
-    readme = os.path.join(root, "README.md")
+    readme = os.path.join(ROOT, "README.md")
     with open(readme) as f:
         txt = f.read()
     new = re.sub(
