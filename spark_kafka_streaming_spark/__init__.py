@@ -12,7 +12,7 @@ receiver + streaming word-count example), re-expressed Spark-first:
   declarative decode layer in :mod:`.streaming.decode`;
 * the windowed word-count query (Q1-Q7,
   ``examples/.../KafkaWordCount.scala:53-73``) becomes watermarked
-  event-time windows in :mod:`.operators.windows`;
+  event-time windows in :func:`.streaming.decode.token_counts_windowed`;
 * HBase offset bookkeeping + JMX metrics (S6-S9, M1-M3) become
   Structured Streaming checkpoints + :mod:`.streaming.monitor`.
 

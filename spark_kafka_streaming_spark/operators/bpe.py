@@ -51,10 +51,11 @@ N_MERGES = 12
 #: sequential Spark jobs — each a full scheduler round-trip over a
 #: tiny cached table — are replaced by ONE collect plus an exact
 #: local replay of the same schedule (same pair counting, same
-#: (cnt desc, a, b) argmax, same leftmost non-overlapping replace, so
+#: (cnt desc, a, b) ranking, same leftmost non-overlapping replace, so
 #: the merge list is bit-identical; pinned in
-#: tests/test_opt_round11.py::test_bpe_local_replay_matches_distributed
-#: and tests/test_round8_bpe.py's deep-schedule oracle diff).
+#: tests/test_text.py::test_bpe_local_replay_matches_distributed and
+#: its batched twin, and by test_bpe_batched_deep_matches_oracle's
+#: deep-schedule oracle diff).
 #: Above the bound the distributed loop runs unchanged — the 100 TB
 #: posture (a 10M-word crawl vocab stays distributed).  Sizing note:
 #: the rows cross the non-Arrow collect path as Python objects
@@ -107,80 +108,14 @@ def bpe_train(
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from the corpus (see module doc).
 
-    The per-step best pair is collected to the driver (1 row/step,
-    bounded by n_merges) so each iteration's plan stays flat; symbol
-    tables are re-persisted per step and released with the session's
-    operator caches.
+    This is :func:`bpe_train_batched` with a one-pair window: each
+    round's window is the top-1 pair by (cnt desc, a, b), which
+    :func:`_select_batch` always keeps, and a one-element fold is the
+    single ``' a b ' → ' ab '`` replace-all pass — so every round is one
+    merge step of the sequential schedule, with the same local replay
+    below :data:`BPE_LOCAL_VOCAB_MAX` and distributed loop above it.
     """
-    from ..functions.caching import track_persist
-
-    spark = docs.sparkSession
-    syms = track_persist(
-        word_freq(docs, text_col).select(
-            "freq", F.expr(_CHARS_SPARK).alias("s")
-        )
-    )
-    merges: list[tuple[int, str, str, str, int]] = []
-    schema = (
-        "rank INT, left_sym STRING, right_sym STRING, merged STRING, "
-        "cnt BIGINT"
-    )
-    vocab = _local_vocab(syms)
-    if vocab is not None:
-        # local replay of the exact schedule (see BPE_LOCAL_VOCAB_MAX):
-        # one bounded collect instead of n_merges scheduler round-trips.
-        for rank in range(n_merges):
-            cnt = _pair_counts_local(vocab)
-            if not cnt:
-                break
-            # (cnt desc, a, b): Python tuple order on unicode strings
-            # equals Spark/DuckDB binary UTF-8 order (UTF-8 preserves
-            # code-point order), so the argmax tiebreak is identical.
-            (a, b), c = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
-            merges.append((rank, a, b, a + b, c))
-            pat, rep = f" {a} {b} ", f" {a}{b} "
-            vocab = [
-                (f, (" " + s + " ").replace(pat, rep).strip(" "))
-                for f, s in vocab
-            ]
-        return spark.createDataFrame(merges, schema)
-    for rank in range(n_merges):
-        # size >= 2 guard: Spark's sequence(1, 0) counts BACKWARDS
-        # (unlike DuckDB's empty list), so single-symbol words must
-        # never reach the pair transform.
-        pairs = (
-            syms.filter(F.expr("size(split(s, ' ')) >= 2")).select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(split(s, ' ')) - 1), "
-                        "j -> struct(element_at(split(s, ' '), j) AS a, "
-                        "element_at(split(s, ' '), j + 1) AS b))"
-                    )
-                ).alias("p"),
-            )
-            .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), "freq")
-            .groupBy("a", "b")
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        top = pairs.orderBy(F.desc("cnt"), "a", "b").limit(1).collect()
-        if not top:
-            break
-        a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
-        merges.append((rank, a, b, a + b, cnt))
-        syms = track_persist(
-            syms.select(
-                "freq",
-                F.trim(
-                    F.replace(
-                        F.concat(F.lit(" "), F.col("s"), F.lit(" ")),
-                        F.lit(f" {a} {b} "),
-                        F.lit(f" {a}{b} "),
-                    )
-                ).alias("s"),
-            )
-        )
-    return spark.createDataFrame(merges, schema)
+    return bpe_train_batched(docs, n_merges, 1, text_col).drop("round")
 
 
 def _duck_merge_chain(n_merges: int) -> list[str]:
@@ -292,11 +227,10 @@ def bpe_encode(
 
 # --------------------------------------------------- batched training
 #
-# The sequential trainer above is the textbook schedule: ONE merge per
-# driver pull, ONE Catalyst replace per merge — right for small merge
+# The sequential schedule (``bpe_train``, a one-pair window) is the
+# textbook one: ONE merge per driver pull — right for small merge
 # counts, but a real tokenizer's 30k merges would mean 30k sequential
-# Spark jobs and a 30k-deep expression chain.  The batched variant
-# learns a WINDOW of merges per round:
+# Spark jobs.  A wider window learns several merges per round:
 #
 # 1. pair counts (one vocab-sized shuffle, as before);
 # 2. the top ``window_k`` pairs by (cnt desc, a, b) come to the driver
@@ -405,6 +339,9 @@ def bpe_train_batched(
         # replace are the same operations the distributed loop runs.
         for rnd in range(n_rounds):
             cnt = _pair_counts_local(vocab)
+            # (cnt desc, a, b): Python tuple order on unicode strings
+            # equals Spark/DuckDB binary UTF-8 order (UTF-8 preserves
+            # code-point order), so the window's tiebreak is identical.
             window = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[
                 :window_k
             ]
@@ -426,6 +363,9 @@ def bpe_train_batched(
             vocab = folded_vocab
         return spark.createDataFrame(merges, schema)
     for rnd in range(n_rounds):
+        # size >= 2 guard: Spark's sequence(1, 0) counts BACKWARDS
+        # (unlike DuckDB's empty list), so single-symbol words must
+        # never reach the pair transform.
         pairs = (
             syms.filter(F.expr("size(split(s, ' ')) >= 2")).select(
                 "freq",

@@ -20,3 +20,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def emb(spark, sf_dir):
+    """The ``embeddings`` table, cached for the session."""
+    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df.persist().count()
+    yield df
+    df.unpersist()
+
+
+@pytest.fixture(scope="session")
+def docs(spark, sf_dir):
+    """The ``documents`` table."""
+    from spark_kafka_streaming_spark.sources.batch import load_table
+
+    return load_table(spark, sf_dir, "documents")
+
+
+@pytest.fixture(scope="session")
+def events(spark, sf_dir):
+    """The ``events`` table."""
+    from spark_kafka_streaming_spark.sources.batch import load_table
+
+    return load_table(spark, sf_dir, "events")

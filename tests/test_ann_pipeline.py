@@ -32,14 +32,6 @@ from spark_kafka_streaming_spark.streaming.incremental_vectors import (
 
 
 @pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    df.persist().count()
-    yield df
-    df.unpersist()
-
-
-@pytest.fixture(scope="module")
 def tables(spark, emb, sf_dir, tmp_path_factory):
     """Parquet path of each corpus table: the test corpus, and the
     same corpus with its six smallest-id vectors made identical (the

@@ -10,6 +10,8 @@ and content pinned by hash.
 * No query module is named for the round that added it, and no query
   module imports a private (underscore) name from a sibling: a helper
   two subjects share is public in one of them.
+* No test module is named for a round, a wave or "extra": tests live
+  in the file of the subject they exercise.
 * QUERIES.md is exactly what ``tools/gen_catalog.py`` renders.
 """
 
@@ -30,9 +32,10 @@ from spark_kafka_streaming_spark.queries import (
 
 ROOT = Path(__file__).resolve().parent.parent
 QDIR = ROOT / "spark_kafka_streaming_spark" / "queries"
+TDIR = ROOT / "tests"
 
 WINDOW_SHA = "f8ebc78b5d063376fb25b605a00f9a7f8f1845a3dc3b877cdd11a970f813200f"
-ENTRIES_SHA = "3ce5ee9aa4cc7bf73994aac1eb29e06506858fee4a6860f0ac73afa9502a147a"
+ENTRIES_SHA = "872d8018da8b5e8dbe80ec055c468da6ca23d96bedbbc8b233baf9292b232642"
 ORACLES_SHA = "7686439616e223b36ef642f5ef5694d69f18a1578d6140a1b5dd7ee0917cffcb"
 
 
@@ -70,6 +73,12 @@ def test_modules_by_subject_without_private_cross_imports():
                     if a.name.startswith("_")
                 ]
     assert not bad, f"private names imported across query modules: {bad}"
+
+
+def test_test_modules_by_subject():
+    wave_name = r"test_(llm\d*|llm_ops|round\d+\w*|opt_round\d+|\w*\d*_extra)\.py"
+    wave = sorted(p.name for p in TDIR.glob("*.py") if re.fullmatch(wave_name, p.name))
+    assert not wave, f"round- or wave-named test modules: {wave}"
 
 
 def test_queries_md_is_rendered_from_registry():

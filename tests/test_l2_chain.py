@@ -27,14 +27,6 @@ from spark_kafka_streaming_spark.operators import kmeans as K
 from spark_kafka_streaming_spark.operators import pq as PQ
 
 
-@pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    df.persist().count()
-    yield df
-    df.unpersist()
-
-
 def _corpus(spark, emb, name):
     """(corpus, k) for one corpus shape."""
     if name == "sf":

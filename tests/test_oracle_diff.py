@@ -1,6 +1,9 @@
 """Differential gate: every oracle-checked query must match DuckDB
 exactly (row count, column names, and values) — a local mirror of the
-driver's order-insensitive value-hash comparison at sf 0.01.
+driver's order-insensitive value-hash comparison at sf 0.01.  Each
+entry is built once; its output dtypes are checked against the
+registry's design rules (no container, no raw decimal column) before
+its rows are collected.
 """
 
 from __future__ import annotations
@@ -86,47 +89,27 @@ def _key(row):
     )
 
 
-def test_no_container_outputs(spark, sf_dir):
-    """Registry design rule, enforced: no oracle-checked query returns a
-    container-typed (array/map/struct) column — the driver canonicalizes
-    results via pandas (sort + per-column factorize), which raises
-    ``TypeError: unhashable type`` on list/dict cells before any value
-    comparison happens.  That made q_text_inverted_index the round-3 red
-    row while this mirror (which tuple-ized lists) stayed green.
-    Serialize containers to a scalar (concat_ws / string_agg) or explode
-    to rows instead."""
-    bad = {}
-    for name in ORACLE_QUERIES:
-        sdf = REGISTRY[name].builder(spark, sf_dir)
-        cont = [
-            c
-            for c, t in sdf.dtypes
-            if t.startswith(("array", "map", "struct"))
-        ]
-        if cont:
-            bad[name] = cont
-    assert not bad, f"queries returning container-typed columns: {bad}"
-
-
-def test_no_raw_decimal_outputs(spark, sf_dir):
-    """Registry design rule, enforced: no oracle-checked query returns a
-    raw DECIMAL column — decimal accumulations must cast to
-    DOUBLE/BIGINT before returning, because the driver hashes the
-    engine serialization of wide decimals, which differs between Spark
-    and DuckDB even when every value matches."""
-    bad = {}
-    for name in ORACLE_QUERIES:
-        sdf = REGISTRY[name].builder(spark, sf_dir)
-        decs = [c for c, t in sdf.dtypes if t.startswith("decimal")]
-        if decs:
-            bad[name] = decs
-    assert not bad, f"queries returning raw decimal columns: {bad}"
-
-
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_matches_duckdb(name, spark, sf_dir, duck):
     q = REGISTRY[name]
     sdf = q.builder(spark, sf_dir)
+
+    # Registry design rules, checked on the built frame before it runs:
+    # * no container-typed (array/map/struct) column — the driver
+    #   canonicalizes results via pandas (sort + per-column factorize),
+    #   which raises ``TypeError: unhashable type`` on list/dict cells
+    #   before any value comparison happens (the round-3 red row
+    #   q_text_inverted_index).  Serialize containers to a scalar
+    #   (concat_ws / string_agg) or explode to rows instead;
+    # * no raw DECIMAL column — decimal accumulations cast to
+    #   DOUBLE/BIGINT before returning, because the driver hashes the
+    #   engine serialization of wide decimals, which differs between
+    #   Spark and DuckDB even when every value matches.
+    cont = [c for c, t in sdf.dtypes if t.startswith(("array", "map", "struct"))]
+    assert not cont, f"{name}: container-typed columns {cont}"
+    decs = [c for c, t in sdf.dtypes if t.startswith("decimal")]
+    assert not decs, f"{name}: raw decimal columns {decs}"
+
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
 
