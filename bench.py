@@ -334,7 +334,7 @@ def bench_sketch_drain(spark, sf_dir: str) -> float:
     """Mergeable-sketch streaming path: drain events through
     foreachBatch, folding per-batch Count-Min cells and HLL registers
     into running sketches — the O(sketch)-state monitoring pattern
-    (operators/sketches.py; correctness pinned in tests/test_sketches.py)."""
+    (operators/sketches.py; correctness pinned in tests/test_llm8.py)."""
     import shutil
     import tempfile
 
@@ -359,7 +359,7 @@ def bench_sketch_drain(spark, sf_dir: str) -> float:
             # (operators/sketches.py::sketch_cells) instead of separate
             # cms_build + hll_registers collects; the absorbed running
             # sketches are identical (equivalence pinned in
-            # tests/test_sketches.py) — an absorb-loop optimization,
+            # tests/test_opt_round12.py) — an absorb-loop optimization,
             # not a timing-methodology change (same stream, same timed
             # region, same folded state).
             if epoch_id in seen:
@@ -393,7 +393,7 @@ def bench_quantile_store_drain(spark, sf_dir: str) -> float:
     foreachBatch into the incremental bottom-k priority-sample store
     (streaming/incremental_quantiles.py), then serve one per-group
     quantile snapshot — state stays O(groups·k) rows however long the
-    stream runs (stream≡batch pinned in tests/test_tiered_stores.py)."""
+    stream runs (stream≡batch pinned in tests/test_round7b_ops.py)."""
     import shutil
     import tempfile
 
@@ -437,7 +437,7 @@ def bench_index_store_drain(spark, sf_dir: str) -> float:
     foreachBatch into the incremental (term, doc_id, tf) partial store
     (streaming/incremental_index.py) with one mid-stream compaction,
     then serve the rank-capped index snapshot — stream-built index ≡
-    batch rebuild pinned in tests/test_tiered_stores.py; decade-scale
+    batch rebuild pinned in tests/test_streaming_extra.py; decade-scale
     replay evidence in SCALE.md round 9 (tools/stream_backlog.py)."""
     import shutil
     import tempfile

@@ -759,7 +759,7 @@ def _semantic_drops_arrow(a: DataFrame, tau: float) -> DataFrame:
     single-giant-cluster corpora keep the SQL stage with its
     ``max_bucket`` cell decomposition (the k < ARROW_ASSIGN_MIN_K
     route).  Equality with the SQL stage is pinned in
-    tests/test_dedup.py.
+    tests/test_round7b_ops.py.
     """
     import numpy as np
 

@@ -258,7 +258,7 @@ def signature_frame(
     16.9 s → ~4 s).  Its rows are bit-identical to the chain's
     hash → MinHash + SimHash steps (:func:`_shingle_hashes`,
     :func:`_with_sig`, :func:`_with_sim`; pinned in
-    tests/test_dedup.py — same tokenization, same md5-prefix hash,
+    tests/test_llm_ops.py — same tokenization, same md5-prefix hash,
     same first-occurrence dedup order, same null conventions).  The
     kernel serves the materialized table; the streaming deduper and
     the inline batch operators run the chain, each picked by its

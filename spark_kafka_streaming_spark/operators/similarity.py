@@ -778,7 +778,7 @@ def cosine_all_pairs(
     (the LSH / SemDeDup tiers are the candidate-pruned scale path).
 
     The DuckDB oracle is the theta join itself; rows are bit-identical
-    at any ``n_blocks`` (pinned in tests/test_similarity.py).
+    at any ``n_blocks`` (pinned in tests/test_round6b_ops.py).
     """
     base = _scaled(vectors, id_col, vec_col, "s")
     B = n_blocks
@@ -1036,7 +1036,7 @@ def kmeans_refine(
         # exact; -0.0 and 0.0 compare equal in both forms) — a hash
         # aggregation whose map-side partial collapses the k× centroid
         # fan-out in the join stage, no per-id sort (equivalence
-        # pinned in tests/test_vectors.py).
+        # pinned in tests/test_opt_round12.py).
         assigned = (
             scaled.join(F.broadcast(cents), F.lit(True))
             .withColumn("cell_cos", cos)

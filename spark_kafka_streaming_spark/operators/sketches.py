@@ -6,7 +6,7 @@ unbounded keyed stream into a **fixed-size, mergeable** summary —
 per-partition partial sketches combine by element-wise `+` / `max` /
 `|`, so Spark's map-side partial aggregation reduces the shuffle to
 O(sketch size) regardless of input rows, and the same merge runs
-across micro-batches in a stream (see ``tests/test_sketches.py``).  The
+across micro-batches in a stream (see ``tests/test_llm8.py``).  The
 reference has no sketch surface at all (its only aggregate is the
 windowed word count, ``KafkaWordCount.scala:70-73``).
 
@@ -189,7 +189,7 @@ def sketch_cells(keyed: DataFrame, key_col: str) -> DataFrame:
     Untouched HLL buckets are simply absent (the absorber's running
     registers start at 0, and ``max(0, ·)`` of an absent bucket is a
     no-op) — equivalence with the two-job form is pinned in
-    tests/test_sketches.py.
+    tests/test_opt_round12.py.
     """
     base = keyed.select(
         F.expr(

@@ -43,7 +43,7 @@ def gram_matrix(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     :mod:`..functions.vectors` and summed in DECIMAL(38,0) — exact and
     associative at any corpus size, so the rows equal the DuckDB twin
     :func:`duck_gram_matrix_sql` at any partitioning (pinned in
-    tests/test_vectors.py).
+    tests/test_llm5.py).
 
     The plan neither joins nor re-scans: an explode+self-join would
     shuffle the exploded corpus twice, which is the plan that dies at

@@ -425,7 +425,7 @@ _SIMHASH_CAP = 50
     "uncapped query — every affected pair is re-found via a "
     "non-saturated band, exactly the pigeonhole redundancy the guard "
     "relies on; the driver row pins that equivalence cross-engine, "
-    "and the planted 120-clone test (tests/test_dedup.py) pins the "
+    "and the planted 120-clone test (tests/test_llm8.py) pins the "
     "drop itself. "
     "operators/dedup.py::simhash_pairs(max_bucket=...).".format(
         cap=_SIMHASH_CAP
@@ -1320,7 +1320,7 @@ def minhash_recall_report(
     "the whole story; misses are pairs whose signatures agree in no "
     "band (probability (1-j^4)^8 at Jaccard j). Full-corpus "
     "truth ≡ sampled-truth agreement is pinned at test scale "
-    "(tests/test_dedup.py).".format(t=_RECALL_T, m=_RECALL_MOD),
+    "(tests/test_llm9.py).".format(t=_RECALL_T, m=_RECALL_MOD),
     tags=("dedup", "evaluation", "llm"),
 )
 def q_dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

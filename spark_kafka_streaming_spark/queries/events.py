@@ -801,7 +801,7 @@ _MAD2_K = 3
     "full map-side parallelism at any group count, and every number "
     "is exact integer arithmetic at cent resolution — same results "
     "as the exact form whenever the data is cent-quantized (pinned "
-    "in tests/test_events.py).".format(k=_MAD2_K),
+    "in tests/test_llm9.py).".format(k=_MAD2_K),
     tags=("events", "stats", "quality", "sketch"),
 )
 def q_events_anomaly_mad_hist(spark: SparkSession, sf_dir: str) -> DataFrame:

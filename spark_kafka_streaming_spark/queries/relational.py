@@ -635,7 +635,7 @@ def q_agg_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # HLL/t-digest internals are engine-specific by design
     doc="Approximate tier: approx_count_distinct (HLL) + percentile_approx "
     "(t-digest) — the one-pass forms for extreme cardinality; accuracy "
-    "bounds asserted in tests/test_relational.py.",
+    "bounds asserted in tests/test_relational_extra.py.",
     tags=("relational", "agg", "approx", "rows-only"),
 )
 def q_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -88,7 +88,7 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: operators/similarity.py::derived_lsh_planes) pin their static
 #: DuckDB oracles at the geometry the operator derives THERE:
 #: derived_lsh_planes(500) = 9 planes at target occupancy 1.  The
-#: corpus size is asserted in tests/test_similarity.py so
+#: corpus size is asserted in tests/test_round10_verdict.py so
 #: testdata drift fails loudly instead of as a silent oracle diff.
 ORACLE_EMB_N = 500
 
@@ -108,7 +108,7 @@ def oracle_lsh_planes() -> int:
     # Approximate (recall < 1) by design, yet fully deterministic —
     # the oracle reproduces hyperplanes, band keys, multi-probe
     # expansion, cosines, and the rank tiebreak bit-for-bit; recall
-    # vs brute force is additionally asserted in tests/test_similarity.py.
+    # vs brute force is additionally asserted in tests/test_llm_ops.py.
     doc="ANN top-k via random-hyperplane LSH buckets (8 bands × "
     "corpus-DERIVED planes — max(6, ceil(log2(n))), multi-probe): "
     "candidates only from shared buckets — the 100 TB scale path that "
@@ -132,7 +132,7 @@ def q_similarity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kmeans_iters=0: the oracle reproduces seed centroids, cell
     # assignment/replication, probe sets, cosines, and the rank
     # tiebreak bit-for-bit; recall vs brute force is additionally
-    # asserted in tests/test_similarity.py.
+    # asserted in tests/test_llm_ops.py.
     doc="IVF-style ANN top-k: corpus coarse-quantized into cells, each "
     "query probes its 4 nearest of 16 cells — cost |Q|*n_probe*(|C|/cells) "
     "instead of |Q|*|C|; the second scale path next to hyperplane LSH. "

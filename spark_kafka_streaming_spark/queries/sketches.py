@@ -642,7 +642,7 @@ _MOM_FINAL = (
     "per event type the moments (n, Σcents, Σcents²) accumulate in "
     "integer/DECIMAL(38) arithmetic — partials from ANY split of the "
     "data (partitions, micro-batches) sum to the same triple, pinned "
-    "by tests/test_sketches.py — and mean/variance derive by shared-order "
+    "by tests/test_llm9.py — and mean/variance derive by shared-order "
     "IEEE division at the end. This is the parallel-moments pattern "
     "every profiler needs at 100 TB: the shuffle carries 3 numbers "
     "per group (map-side combined), never rows, and the same merge "
@@ -727,7 +727,7 @@ _CORR_FINAL = (
     "(sqrt is IEEE-correctly-rounded, so identical operands give "
     "bit-identical results, unlike ln/exp). The bivariate member of "
     "the moments family (q_stats_moments_merge); corr(x, x·a+b) "
-    "degenerates correctly (pinned in tests/test_sketches.py).",
+    "degenerates correctly (pinned in tests/test_llm9.py).",
     tags=("agg", "stats", "llm"),
 )
 def q_stats_correlation_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -174,7 +174,7 @@ _PCA_K = 4
 @register(
     "q_vector_pca_project",
     oracle=None,  # driver-side eigh is not SQL-expressible; semantics
-    # pinned against numpy in tests/test_vectors.py (projection exactness,
+    # pinned against numpy in tests/test_llm5.py (projection exactness,
     # orthonormality, variance ordering, partitioning invariance).
     doc="End-to-end distributed PCA: exact integer-scaled Gram matrix "
     "+ component sums reduce corpus-sized work to O(d²) driver rows, "

@@ -6,7 +6,7 @@ per micro-batch without re-reading history.  The mergeable state is
 the (term, doc_id, tf) term-frequency table — tf partials from any
 split of the corpus sum to the batch table — so the maintenance loop
 is the same shape as the streaming Count-Min sketch
-(tests/test_sketches.py::test_cms_streaming_incremental_equals_batch):
+(tests/test_llm8.py::test_cms_streaming_incremental_equals_batch):
 per-batch partials appended via ``foreachBatch``, merged by sum, the
 rank-capped index derived from the merged table on demand.
 
@@ -23,7 +23,7 @@ sorted by term.
   (term, doc_id) sum — map-side combinable, one shuffle) and applies
   the SAME :func:`..operators.index.inverted_index` derivation as the
   batch query, so stream-built and batch-built indexes are identical
-  by construction (pinned in tests/test_tiered_stores.py).
+  by construction (pinned in tests/test_streaming_extra.py).
 """
 
 from __future__ import annotations
@@ -101,7 +101,7 @@ class IncrementalIndexer:
         :func:`..operators.index.bm25_score_per_doc` expressions as
         the batch query (q_text_bm25_search), so stream-served ranks
         and scores are bit-identical to a batch rebuild over
-        everything ingested (pinned in tests/test_tiered_stores.py).
+        everything ingested (pinned in tests/test_streaming_extra.py).
         """
         tf = self._merged_tf(spark)
         if tf is None:
@@ -131,7 +131,7 @@ class IncrementalIndexer:
         (``cnt >= ceil(phi * n_total)``, frac rounded the same way)
         matches the batch operator so stream-served heavy hitters are
         bit-identical to a batch rebuild over everything ingested
-        (pinned in tests/test_tiered_stores.py).  At scale this is
+        (pinned in tests/test_streaming_extra.py).  At scale this is
         the monitoring read a curation pipeline wants continuously:
         vocabulary drift and boilerplate-token surges show up here
         batches after they enter, with no corpus re-scan.

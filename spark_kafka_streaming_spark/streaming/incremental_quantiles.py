@@ -22,7 +22,7 @@ index, MERGE, spans, vectors):
 * :meth:`IncrementalQuantileStore.quantiles` runs the SAME
   :func:`..operators.quantiles.quantile_estimates` derivation as the
   batch query, so a snapshot over everything ingested is bit-identical
-  to a batch rebuild (pinned in tests/test_tiered_stores.py);
+  to a batch rebuild (pinned in tests/test_round7b_ops.py);
 * :meth:`IncrementalQuantileStore.compact` folds the leaves into one
   ``batch=-1`` base, bounding file counts.  The swap is crash-safe
   (:mod:`.swap` — shared by all compacting stores): the old store is

@@ -23,7 +23,7 @@ with the layout; leaves are sorted by h.
   deriving per-doc stats through the SAME
   :func:`..operators.dedup.span_stats_from` expressions as the batch
   query, so a snapshot over everything ingested is bit-identical to a
-  batch rebuild (pinned in tests/test_tiered_stores.py).
+  batch rebuild (pinned in tests/test_streaming_extra.py).
 """
 
 from __future__ import annotations

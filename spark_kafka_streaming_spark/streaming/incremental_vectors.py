@@ -35,7 +35,7 @@ Design (the 100 TB shape):
   drops every other directory), exact integer cosine over the
   candidates, window top-k.  Served rows are bit-identical to
   ``ivf_topk(queries, everything_ingested, centroids=snapshot)`` —
-  pinned in tests/test_tiered_stores.py;
+  pinned in tests/test_streaming_extra.py;
 * :meth:`IncrementalVectorIndexer.compact` folds trigger leaves into
   runs per cell, bounding file counts — a plain rewrite, since cell
   membership is pinned by the centroid snapshot.

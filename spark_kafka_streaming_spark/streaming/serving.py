@@ -9,7 +9,7 @@ and :meth:`..streaming.incremental_vectors.IncrementalVectorIndexer.topk`),
 and the fusion expression is shared with the batch query
 (:func:`..operators.index.rrf_fuse`, q_search_hybrid_rrf) — so the
 stream-served hybrid ranking is bit-identical to a batch rebuild over
-everything ingested (pinned in tests/test_serving_under_ingestion.py).
+everything ingested (pinned in tests/test_streaming_extra.py).
 
 Scale shape: each leg reads only its store's bounded slice (BM25 stats
 reduce from tf partials; ANN scans only probed ``cell=…``

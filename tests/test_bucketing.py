@@ -9,7 +9,6 @@ join would actually take.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 import pytest
@@ -118,32 +117,3 @@ def test_bucketed_join_matches_plain_join(spark, sf_dir, bucketed_tables):
     assert bucketed.count() == plain.count()
     assert bucketed.exceptAll(plain).isEmpty()
     assert plain.exceptAll(bucketed).isEmpty()
-
-
-def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
-    """Bucketing: a join between two tables bucketed on the key plans
-    without a shuffle exchange on either side — the co-located-join
-    strategy for repeated 100 TB joins."""
-    import shutil
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("orders_b", "lineitem_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    orders.write.bucketBy(4, "o_orderkey").sortBy("o_orderkey").mode(
-        "overwrite"
-    ).saveAsTable("orders_b")
-    li.withColumnRenamed("l_orderkey", "o_orderkey").write.bucketBy(
-        4, "o_orderkey"
-    ).sortBy("o_orderkey").mode("overwrite").saveAsTable("lineitem_b")
-    joined = spark.table("lineitem_b").join(
-        spark.table("orders_b").hint("merge"), "o_orderkey"
-    )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan
-    assert "Exchange hashpartitioning" not in plan, (
-        "bucketed join should not shuffle"
-    )
-    assert joined.count() > 0

@@ -5,7 +5,6 @@ operators/kmeans.py)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from spark_kafka_streaming_spark.operators.kmeans import (
     kmeans_assignments,
@@ -13,11 +12,6 @@ from spark_kafka_streaming_spark.operators.kmeans import (
 )
 from spark_kafka_streaming_spark.queries import REGISTRY
 from spark_kafka_streaming_spark.sources.batch import load_table
-
-
-@pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    return load_table(spark, sf_dir, "embeddings")
 
 
 def test_kmeans_partition_invariant(spark, emb):

@@ -8,16 +8,10 @@ from __future__ import annotations
 import json as _json
 
 import pyspark.sql.functions as F
-import pytest
 
 from spark_kafka_streaming_spark.operators import sketches as SK
 from spark_kafka_streaming_spark.queries import REGISTRY
 from spark_kafka_streaming_spark.sources.batch import load_table
-
-
-@pytest.fixture(scope="module")
-def events(spark, sf_dir):
-    return load_table(spark, sf_dir, "events")
 
 
 # ------------------------------------------------------------ Count-Min

@@ -14,18 +14,11 @@ DuckDB end-to-end).
 
 from __future__ import annotations
 
-import pytest
-
 from spark_kafka_streaming_spark.functions.caching import (
     release_operator_caches,
 )
 from spark_kafka_streaming_spark.operators import bpe as BPE
 from spark_kafka_streaming_spark.sources.batch import load_table
-
-
-@pytest.fixture()
-def docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
 
 
 def _rows(df, cols):

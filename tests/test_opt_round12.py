@@ -12,17 +12,10 @@ The streaming dedup signature pins live in ``test_text_dedup_chain.py``.
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from spark_kafka_streaming_spark.operators import sketches as SK
 from spark_kafka_streaming_spark.sources.batch import load_table
-
-
-@pytest.fixture()
-def events(spark, sf_dir):
-    return load_table(spark, sf_dir, "events")
 
 
 def test_kmeans_refine_argmax_matches_window(spark, sf_dir):

@@ -1,113 +1,16 @@
-"""Relational operators and table layout beyond the TPC-H shapes:
-the approximate-aggregate tier, null-aware NOT IN, PageRank, the
-referential-integrity audit, basket pairs, z-order layout and writes,
-the file-format round trips and partitioned writes
-(``queries/relational.py``, ``operators/zorder.py``,
-``sources/batch.py``).
-"""
+"""Semantics tests for the data-quality + association wave
+(queries/relational.py, text.py, events.py): planted-orphan FK audit,
+fuzzy-match and basket-pair recomputation."""
 
 from __future__ import annotations
 
 import os
 import shutil
 
-from pyspark.sql import functions as F
+import pyspark.sql.functions as F
 
 from spark_kafka_streaming_spark.queries import REGISTRY
 from spark_kafka_streaming_spark.sources.batch import TABLES, load_table
-
-from conftest import SF_DIR as TEST_SF_DIR
-
-#: q_agg_approx's tolerance bounds are checked on the sf0.01 corpus that
-#: sits next to the default test corpus.
-SF_DIR = os.environ.get(
-    "SPARK_GRAFT_TEST_SF_DIR", os.path.join(os.path.dirname(TEST_SF_DIR), "sf0.01")
-)
-
-
-def test_approx_tier_within_tolerance(spark):
-    """q_agg_approx has no oracle by design — bound it against the
-    exact answers instead: HLL at default rsd 5% (allow 3σ), t-digest
-    median within the 1e-4 accuracy band scaled to the value range."""
-    approx = {
-        r.l_returnflag: r for r in REGISTRY["q_agg_approx"].builder(
-            spark, SF_DIR
-        ).collect()
-    }
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    exact = {
-        r.l_returnflag: r
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.countDistinct("l_partkey").alias("parts"),
-            F.expr("percentile(l_extendedprice, 0.5)").alias("median"),
-            F.min("l_extendedprice").alias("lo"),
-            F.max("l_extendedprice").alias("hi"),
-        )
-        .collect()
-    }
-    assert set(approx) == set(exact)
-    for flag, a in approx.items():
-        e = exact[flag]
-        assert abs(a.approx_parts - e.parts) <= 0.15 * e.parts, flag
-        band = 0.02 * (e.hi - e.lo)
-        assert abs(a.approx_median - e.median) <= band, flag
-
-
-def _rows(spark, sf_dir, name):
-    return REGISTRY[name].builder(spark, sf_dir).collect()
-
-
-# --------------------------------------------------- NOT IN nulls
-
-
-def test_not_in_with_nulls_is_empty(spark, sf_dir):
-    rows = {r["variant"]: r["n"] for r in _rows(
-        spark, sf_dir, "q_subquery_not_in_null_aware"
-    )}
-    # the subquery projects NULL for every non-negative balance, so the
-    # three-valued NOT IN can never be TRUE
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    assert cust.where("c_acctbal >= 0").count() > 0  # NULLs present
-    assert rows["not_in_with_nulls"] == 0
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    neg = cust.where("c_acctbal < 0").select("c_custkey")
-    want = orders.join(
-        neg, orders.o_custkey == neg.c_custkey, "left_anti"
-    ).count()
-    assert rows["not_in_null_filtered"] == want
-
-
-# --------------------------------------------------------- PageRank
-
-
-def test_pagerank_ranks_positive_and_complete(spark, sf_dir):
-    out = REGISTRY["q_graph_pagerank_brands"].builder(spark, sf_dir).collect()
-    brands = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
-        .select("p_brand")
-        .distinct()
-        .count()
-    )
-    # co-occurrence graph covers every brand at this SF
-    assert len(out) == brands
-    base = 150_000_000
-    for r in out:
-        assert r["rank_scaled"] >= base  # teleport floor
-    # ranks are a genuine ordering, not a constant
-    vals = [r["rank_scaled"] for r in out]
-    assert vals == sorted(vals, reverse=True)
-    assert len(set(vals)) > 1
-
-
-def test_pagerank_mass_approximately_conserved(spark, sf_dir):
-    """With symmetric edges and no dangling nodes, total rank stays
-    ~N·SCALE (teleport replaces exactly what damping removes; integer
-    DIV truncation only leaks ulps per edge)."""
-    out = REGISTRY["q_graph_pagerank_brands"].builder(spark, sf_dir).collect()
-    n = len(out)
-    total = sum(r["rank_scaled"] for r in out)
-    assert abs(total - n * 1_000_000_000) < n * 2_000_000  # <0.2% drift
 
 
 def test_audit_flags_planted_orphans(spark, sf_dir, tmp_path):
@@ -145,6 +48,33 @@ def test_audit_flags_planted_orphans(spark, sf_dir, tmp_path):
         for k, v in rows.items()
         if k not in ("lineitem->orders", "lineitem->part")
     )
+
+
+def test_fuzzy_match_distances_correct(spark, sf_dir):
+    """Every returned pair really is within edit distance 2, every
+    probe matches its own original at distance exactly 1 (one char
+    deleted), and distances agree with a Python Levenshtein."""
+
+    def lev(a: str, b: str) -> int:
+        prev = list(range(len(b) + 1))
+        for i, ca in enumerate(a, 1):
+            cur = [i]
+            for j, cb in enumerate(b, 1):
+                cur.append(
+                    min(prev[j] + 1, cur[j - 1] + 1,
+                        prev[j - 1] + (ca != cb))
+                )
+            prev = cur
+        return prev[-1]
+
+    rows = REGISTRY["q_text_fuzzy_match"].builder(spark, sf_dir).collect()
+    assert rows
+    probes = {r["probe"] for r in rows}
+    for r in rows:
+        assert r["dist"] == lev(r["probe"], r["p_name"]) <= 2
+    # each probe is its original minus the 3rd char -> distance 1 hit
+    for p in probes:
+        assert any(r["probe"] == p and r["dist"] == 1 for r in rows)
 
 
 def test_basket_pairs_against_python(spark, sf_dir):
@@ -331,108 +261,3 @@ def test_write_zordered_3d_bounds_all_spans(spark, sf_dir, tmp_path):
     # and both non-sort dims prune far better than the linear layout
     assert zs["d"] < 0.8 * ls["d"]
     assert zs["p"] < 0.8 * ls["p"]
-
-
-def test_approx_agg_within_bounds(spark, sf_dir):
-    """approx_count_distinct within its documented ~2.3% default error
-    (allow 5%); percentile_approx within the value range."""
-    rows = {
-        r.l_returnflag: (r.approx_parts, r.approx_median)
-        for r in REGISTRY["q_agg_approx"].builder(spark, sf_dir).collect()
-    }
-    li = load_table(spark, sf_dir, "lineitem")
-    exact = {
-        r.l_returnflag: (r.n, r.m)
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.countDistinct("l_partkey").alias("n"),
-            F.expr("percentile(l_extendedprice, 0.5)").alias("m"),
-        )
-        .collect()
-    }
-    for flag, (n_exact, med_exact) in exact.items():
-        n_approx, med_approx = rows[flag]
-        assert abs(n_approx - n_exact) / n_exact < 0.05
-        assert abs(med_approx - med_exact) / med_exact < 0.10
-
-
-def test_csv_json_source_roundtrip(spark, sf_dir, tmp_path):
-    """CSV and JSON batch sources produce the same query result as the
-    parquet original (schema-explicit reads, no inference in prod)."""
-    nation = load_table(spark, sf_dir, "nation")
-    csv_path, json_path = str(tmp_path / "nation_csv"), str(tmp_path / "nation_json")
-    nation.write.option("header", True).csv(csv_path)
-    nation.write.json(json_path)
-    schema = "n_nationkey int, n_name string, n_regionkey int"
-    from_csv = spark.read.schema(schema).option("header", True).csv(csv_path)
-    from_json = spark.read.schema(schema).json(json_path)
-    expected = sorted(tuple(r) for r in nation.collect())
-    assert sorted(tuple(r) for r in from_csv.collect()) == expected
-    assert sorted(tuple(r) for r in from_json.collect()) == expected
-
-
-def test_union_by_name_missing_columns(spark, sf_dir):
-    """unionByName with allowMissingColumns (schema-evolution union)."""
-    a = spark.createDataFrame([(1, "x")], "id int, name string")
-    b = spark.createDataFrame([(2, 5.0)], "id int, score double")
-    u = a.unionByName(b, allowMissingColumns=True)
-    rows = sorted((r.id, r.name, r.score) for r in u.collect())
-    assert rows == [(1, "x", None), (2, None, 5.0)]
-
-
-def test_partitioned_write_prunes_on_read(spark, sf_dir, tmp_path):
-    """Hive-style partitioned parquet output + partition pruning on read
-    — the layout strategy that makes date/type-ranged scans at 100 TB
-    touch only relevant directories."""
-    ev = load_table(spark, sf_dir, "events")
-    out = str(tmp_path / "events_by_type")
-    ev.write.partitionBy("event_type").parquet(out)
-    back = spark.read.parquet(out).filter(F.col("event_type") == "purchase")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(event_type" in plan, (
-        "partition pruning not applied"
-    )
-    expected = ev.filter(F.col("event_type") == "purchase").count()
-    assert back.count() == expected
-
-
-def test_fact_partitioned_by_month_layout(spark, sf_dir, tmp_path):
-    """write_fact_partitioned_by_month: same query results, partition
-    filters in the plan."""
-    from spark_kafka_streaming_spark.sources.batch import (
-        write_fact_partitioned_by_month,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    out = str(tmp_path / "li_by_month")
-    write_fact_partitioned_by_month(li, "l_shipdate", out)
-    part = spark.read.parquet(out).filter(
-        (F.col("l_shipdate_month") >= "1996-01")
-        & (F.col("l_shipdate_month") <= "1996-12")
-    )
-    plan = part._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "l_shipdate_month" in plan
-    expected = li.filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-    ).count()
-    assert part.count() == expected
-
-
-# ------------------------------------------- session-scoped temp path
-
-
-def test_roundtrip_temp_path_is_session_scoped(spark, sf_dir):
-    from spark_kafka_streaming_spark.queries.relational import (
-        _session_temp_path,
-        q_orc_roundtrip,
-    )
-
-    path = _session_temp_path(spark, "spark_graft_orc_roundtrip")
-    app_id = spark.sparkContext.applicationId
-    assert path.endswith(f"spark_graft_orc_roundtrip-{app_id}")
-    out = q_orc_roundtrip(spark, sf_dir)
-    assert out.count() > 0
-    import os
-
-    assert os.path.exists(path)

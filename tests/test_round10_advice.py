@@ -1,14 +1,30 @@
-"""The helper scripts under ``tools/``: the stream backlog's merge
-staging guards and store checks (``tools/stream_backlog.py``) and the
-stall watchdog (``tools/watchdog.py``).
+"""Round-10 ADVICE fixes (all three round-9 advisor findings), each
+pinned by the failure it closes:
+
+* the merge backlog feed's lexicographic ``seq`` string is built with
+  ``lpad(..., 20/12, '0')`` — Spark lpad TRUNCATES over-width strings
+  and a '-' sign breaks zero-pad ordering, so out-of-range inputs
+  (event_id >= 10^12, pre-1970 ts) must fail loudly before staging
+  instead of silently corrupting the last-change-wins equivalence
+  argument (tools/stream_backlog.py);
+* check_merge/check_spans/check_vectors must report a clean
+  ``{"match": False, "empty_store": True}`` verdict for a degenerate
+  (empty/missing) store instead of raising AttributeError on None;
+* the planted-pair entries reuse ``PLANT_OFFSET=10^7`` for planted
+  ids — a corpus with vec_id >= PLANT_OFFSET would silently collide
+  planted ids with real ones (and the oracle, replaying the same
+  construction, would stay green), so the bound is now asserted
+  in-plan on every corpus row (queries/dedup.py).
 """
 
 from __future__ import annotations
 
 import importlib.util
 import os
+import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 
 def _load_backlog():
@@ -99,6 +115,32 @@ def test_checks_report_empty_store_instead_of_raising(spark, tmp_path):
     ):
         out = check(spark, _EmptyStore(), stage_dir)
         assert out == {"match": False, "empty_store": True}, check.__name__
+
+
+# ------------------------------------------- PLANT_OFFSET collision bar
+def test_planted_corpus_guard_fires_on_id_collision(spark, tmp_path):
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+    from spark_kafka_streaming_spark.queries import dedup
+    from spark_kafka_streaming_spark.operators.similarity import DIM
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    vec = [0.1] * DIM
+    spark.createDataFrame(
+        [(dedup.PLANT_OFFSET + 3, vec), (1, vec)],
+        "vec_id long, embedding array<float>",
+    ).write.parquet(os.path.join(sf, "embeddings.parquet"))
+    with pytest.raises(SparkRuntimeException, match="PLANT_OFFSET"):
+        dedup.q_dedup_embedding_lsh_scaled_planted(spark, sf).collect()
+
+
+def test_planted_corpus_guard_passes_in_bound_ids(spark, sf_dir):
+    from spark_kafka_streaming_spark.queries import dedup
+
+    # the real test corpora sit far below the bound: the entry still
+    # produces its planted pairs (non-empty at every sf by design)
+    rows = dedup.q_dedup_embedding_lsh_scaled_planted(spark, sf_dir).collect()
+    assert len(rows) > 0
 
 
 # ------------------------------------------------------ stall watchdog

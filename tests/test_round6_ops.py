@@ -19,14 +19,6 @@ from spark_kafka_streaming_spark.operators.similarity import (
 from spark_kafka_streaming_spark.queries.similarity import _q_mod
 
 
-@pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    df.persist().count()
-    yield df
-    df.unpersist()
-
-
 def test_mips_ivf_recall_vs_exact(emb):
     """The indexed MIPS tier must recover ≥0.9 of exact MIPS top-5
     neighbors at test scale (measured 0.98 at sf0.01) — the truth-leg
@@ -190,11 +182,6 @@ def test_hard_negatives_labels_differ(emb):
     for r in rows:
         assert r["query_label"] != r["neighbor_label"]
         assert r["query_id"] != r["neighbor_id"]
-
-
-@pytest.fixture(scope="module")
-def docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def test_bpe_encode_invariants(docs):

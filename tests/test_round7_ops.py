@@ -4,7 +4,6 @@ two-level (IMI) coarse quantization, batched BPE."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from spark_kafka_streaming_spark.operators.sketches import (
@@ -61,11 +60,6 @@ def test_roundtrip_temp_path_is_session_scoped(spark, sf_dir):
 
 
 # ------------------------------------------- two-level (IMI) quantizer
-
-
-@pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def test_imi_split_partitions_all_cells():

@@ -203,121 +203,3 @@ def test_stale_pin_collect_after_gc_raises_not_partial(
     assert sorted(int(r.v) for r in fresh.collect()) == [0, 1, 2]
     with pytest.raises(Exception, match="(?i)not exist|notfound|no such"):
         stale.collect()
-
-
-def test_hybrid_rrf_served_from_stores_equals_batch(spark, sf_dir, tmp_path):
-    """The hybrid-retrieval serving loop: RRF fusion of the maintained
-    lexical store (bm25_snapshot) and vector store (topk) must equal
-    rrf_fuse over the batch legs — same shared expressions end-to-end,
-    so the stream-served hybrid ranking is bit-identical to a batch
-    rebuild over everything ingested."""
-    import glob
-    import json as _json
-    import shutil as _sh
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from spark_kafka_streaming_spark.functions import texthash as TH
-    from spark_kafka_streaming_spark.operators import index as IX
-    from spark_kafka_streaming_spark.operators.similarity import ivf_topk
-    from spark_kafka_streaming_spark.streaming.incremental_index import (
-        IncrementalIndexer,
-    )
-    from spark_kafka_streaming_spark.streaming.incremental_vectors import (
-        IncrementalVectorIndexer,
-    )
-    from spark_kafka_streaming_spark.streaming.serving import (
-        hybrid_rrf_from_stores,
-    )
-
-    # lexical store: 60 docs over 2 micro-batches
-    docs = [
-        {"doc_id": r["doc_id"], "text": r["text"]}
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-        .limit(60)
-        .collect()
-    ]
-    dsrc = tmp_path / "docs"
-    dsrc.mkdir()
-    (dsrc / "b0.json").write_text("\n".join(_json.dumps(r) for r in docs[:30]))
-    (dsrc / "b1.json").write_text("\n".join(_json.dumps(r) for r in docs[30:]))
-    indexer = IncrementalIndexer(str(tmp_path / "ix"))
-    q1 = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(dsrc))
-        .writeStream.foreachBatch(indexer)
-        .option("checkpointLocation", str(tmp_path / "ck1"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q1.awaitTermination(120)
-
-    # vector store: 120 vectors over 2 micro-batches
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(120)
-    )
-    emb.persist().count()
-    vsrc = tmp_path / "vecs"
-    vsrc.mkdir()
-    for i, half in enumerate(
-        (emb.filter("vec_id < 60"), emb.filter("vec_id >= 60"))
-    ):
-        pdir = tmp_path / f"vh{i}"
-        half.coalesce(1).write.parquet(str(pdir))
-        (part,) = glob.glob(str(pdir / "part-*.parquet"))
-        _sh.copy(part, str(vsrc / f"b{i}.parquet"))
-    vindexer = IncrementalVectorIndexer(
-        str(tmp_path / "vstore"), n_cells=8, n_assign=2
-    )
-    q2 = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(vsrc))
-        .writeStream.foreachBatch(vindexer)
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-
-    queries = emb.filter("vec_id = 0")
-    got = hybrid_rrf_from_stores(
-        indexer, vindexer, queries, spark, leg_k=20, topk=10, n_probe=3
-    ).collect()
-
-    # batch twin: same shared expressions, batch-derived legs
-    bdf = spark.createDataFrame(docs, "doc_id BIGINT, text STRING")
-    tok = bdf.select(
-        "doc_id", F.explode(F.expr(TH.spark_tokens("text"))).alias("term")
-    )
-    per_doc = tok.groupBy("doc_id").agg(
-        F.count("*").alias("dl"),
-        *[
-            F.expr(IX.bm25_tf_case(t)).cast("bigint").alias(f"tf_{t}")
-            for t in IX.BM25_TERMS
-        ],
-    )
-    w = Window.orderBy(F.desc("score"), "doc_id")
-    bm = (
-        IX.bm25_score_per_doc(per_doc, topk=20)
-        .withColumn("bm25_rank", F.row_number().over(w).cast("int"))
-        .select("doc_id", "bm25_rank")
-    )
-    cv = ivf_topk(
-        queries, emb, k=20, n_probe=3, n_assign=2,
-        centroids=vindexer.centroids(spark),
-    ).select(
-        F.col("neighbor_id").alias("id"),
-        F.col("rn").cast("int").alias("cos_rank"),
-    )
-    want = IX.rrf_fuse(bm, cv, topk=10).collect()
-    assert len(got) == 10
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    emb.unpersist()

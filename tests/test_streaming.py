@@ -402,365 +402,3 @@ def test_late_data_accounting_in_monitor(spark, tmp_path):
         assert ld["stateRowsTotal"] >= 1  # live window state is visible
     finally:
         spark.streams.removeListener(rec)
-
-
-def _emit(src, name, rows):
-    os.makedirs(src, exist_ok=True)
-    with open(os.path.join(src, name), "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-
-
-def _row(eid, ts, uid=1, etype="click", value=1.0):
-    return {"event_id": eid, "ts": ts, "user_id": uid,
-            "event_type": etype, "value": value, "props": "{}"}
-
-
-def test_stream_stream_join_with_watermark(spark, tmp_path):
-    """Watermarked stream-stream inner join (SURVEY §2b joins row):
-    clicks ⋈ purchases per user within a 30-minute event-time range."""
-    csrc, psrc = str(tmp_path / "clicks"), str(tmp_path / "purch")
-    _emit(csrc, "b1.json", [
-        _row(1, "2024-01-01T10:00:00.000000Z", uid=1, etype="click"),
-        _row(2, "2024-01-01T11:00:00.000000Z", uid=2, etype="click"),
-    ])
-    _emit(psrc, "b1.json", [
-        _row(10, "2024-01-01T10:10:00.000000Z", uid=1, etype="purchase"),
-        _row(11, "2024-01-01T13:00:00.000000Z", uid=2, etype="purchase"),
-    ])
-    clicks = (
-        file_stream(spark, csrc)
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        file_stream(spark, psrc)
-        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "c_user = p_user AND purchase_ts BETWEEN click_ts "
-            "AND click_ts + INTERVAL 30 MINUTES"
-        ),
-    )
-    q = start_sink(joined, "memory", query_name="ssj",
-                   checkpoint=str(tmp_path / "ck_ssj"))
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-    rows = spark.sql("SELECT c_user FROM ssj").collect()
-    # user 1's purchase is 10 min after the click (in range); user 2's is
-    # 2 h after (out of range)
-    assert [r.c_user for r in rows] == [1]
-
-
-def test_streaming_session_window(spark, tmp_path):
-    """session_window() under readStream (the streaming twin of
-    q_window_session_30m)."""
-    src = str(tmp_path / "sess")
-    _emit(src, "b1.json", [
-        _row(1, "2024-01-01T10:00:00.000000Z", uid=7, value=1.0),
-        _row(2, "2024-01-01T10:10:00.000000Z", uid=7, value=2.0),
-        _row(3, "2024-01-01T12:00:00.000000Z", uid=7, value=4.0),
-        # watermark pusher so earlier sessions close
-        _row(4, "2024-01-01T15:00:00.000000Z", uid=99, value=0.0),
-    ])
-    stream = file_stream(spark, src)
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("v"))
-        .select("user_id", F.col("w.start").alias("ws"), "n", "v")
-    )
-    q = start_sink(agg, "memory", query_name="sess", output_mode="append",
-                   checkpoint=str(tmp_path / "ck_sess"))
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-    rows = {
-        (r.user_id, r.ws.isoformat()): (r.n, r.v)
-        for r in spark.sql("SELECT * FROM sess").collect()
-    }
-    assert rows[(7, "2024-01-01T10:00:00")] == (2, 3.0)  # merged session
-    assert rows[(7, "2024-01-01T12:00:00")] == (1, 4.0)  # new session
-
-
-def test_stream_static_broadcast_enrichment(spark, tmp_path):
-    """Stream-static join: a streaming fact enriched against a static
-    dimension. The static side is broadcast — each micro-batch is a
-    map-side hash join, no shuffle of the stream; the plan every
-    dimension-enrichment at 100 TB/day should have."""
-    src = str(tmp_path / "enrich")
-    _emit(src, "b1.json", [
-        _row(1, "2024-01-01T10:00:00.000000Z", etype="click", value=2.0),
-        _row(2, "2024-01-01T10:01:00.000000Z", etype="purchase", value=3.0),
-        _row(3, "2024-01-01T10:02:00.000000Z", etype="error", value=5.0),
-    ])
-    dim = spark.createDataFrame(
-        [("click", 1.0), ("purchase", 10.0)],
-        "event_type string, weight double",
-    )
-    enriched = (
-        file_stream(spark, src)
-        .join(F.broadcast(dim), "event_type")  # inner: drops 'error'
-        .withColumn("weighted", F.col("value") * F.col("weight"))
-        .select("event_id", "event_type", "weighted")
-    )
-    q = start_sink(enriched, "memory", query_name="enrich",
-                   checkpoint=str(tmp_path / "ck_enrich"))
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-    rows = {r.event_id: (r.event_type, r.weighted)
-            for r in spark.sql("SELECT * FROM enrich").collect()}
-    assert rows == {1: ("click", 2.0), 2: ("purchase", 30.0)}
-
-
-def test_foreachbatch_idempotent_upsert(spark, tmp_path):
-    """Exactly-once into a non-transactional store: foreachBatch keyed by
-    batch_id — replaying a batch overwrites rather than duplicates (the
-    engine's HBase-persistOffset analog, reference
-    ...InputDStream.scala:384-415)."""
-    src = str(tmp_path / "fb_src")
-    out = str(tmp_path / "fb_out")
-    _emit(src, "b1.json", [_row(i, "2024-01-01T10:00:00.000000Z", uid=i)
-                           for i in range(10)])
-
-    seen_batches = []
-
-    def upsert(df, batch_id):
-        seen_batches.append(batch_id)
-        # idempotent: partition dir keyed by batch_id, overwritten on replay
-        df.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
-
-    stream = file_stream(spark, src)
-    q = start_sink(stream, foreach_batch=upsert,
-                   checkpoint=str(tmp_path / "ck_fb"))
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-    # simulate sink-side replay of the same epoch: write again with the
-    # same batch_id → still exactly one copy
-    first = spark.read.json(os.path.join(src, "b1.json"))
-    first.write.mode("overwrite").parquet(f"{out}/batch={seen_batches[0]}")
-    got = spark.read.parquet(out)
-    assert got.count() == 10
-    assert got.select("event_id").distinct().count() == 10
-
-
-def test_available_now_trigger_drains_and_stops(spark, tmp_path):
-    """trigger(availableNow=True): process the backlog as bounded
-    micro-batches, then stop on its own — the batch-drain mode used for
-    catch-up runs of a streaming pipeline."""
-    src = str(tmp_path / "an_src")
-    _emit(src, "b1.json", [_row(i, "2024-01-01T10:00:00.000000Z", uid=i)
-                           for i in range(25)])
-    stream = file_stream(spark, src, max_files_per_trigger=1)
-    q = start_sink(stream, "parquet", checkpoint=str(tmp_path / "ck_an"),
-                   path=str(tmp_path / "an_out"), available_now=True)
-    q.awaitTermination(60)
-    assert not q.isActive, "availableNow query should self-terminate"
-    got = spark.read.parquet(str(tmp_path / "an_out"))
-    assert got.count() == 25
-
-
-def test_partitioned_parquet_sink_layout(spark, tmp_path):
-    """partition_by lays the file sink out hive-style so downstream batch
-    readers get partition pruning (the 100 TB landing-zone layout)."""
-    import glob
-
-    src = str(tmp_path / "part_src")
-    out = str(tmp_path / "part_out")
-    _emit(src, "b1.json",
-          [_row(i, "2024-01-01T10:00:00.000000Z", uid=i) for i in range(4)]
-          + [_row(i, "2024-01-02T10:00:00.000000Z", uid=i) for i in range(4, 10)])
-    from pyspark.sql import functions as F
-
-    stream = file_stream(spark, src).withColumn("day", F.to_date("ts"))
-    q = start_sink(stream, "parquet", checkpoint=str(tmp_path / "ck_part"),
-                   path=out, available_now=True, partition_by=["day"])
-    q.awaitTermination(60)
-    dirs = sorted(os.path.basename(p) for p in glob.glob(f"{out}/day=*"))
-    assert dirs == ["day=2024-01-01", "day=2024-01-02"]
-    pruned = spark.read.parquet(out).filter(F.col("day") == "2024-01-01")
-    assert pruned.count() == 4
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(day" in plan
-
-
-def test_interval_join_stream_equals_batch_twin(spark, sf_dir, tmp_path):
-    """streaming/joins.py interval_join over the replayed events table
-    produces exactly the rows of its batch twin
-    (q_events_interval_join_click_purchase) — stream and batch are the
-    same declarative plan, which is the whole point of the design."""
-    from spark_kafka_streaming_spark.queries import REGISTRY
-    from spark_kafka_streaming_spark.sources.batch import load_table
-    from spark_kafka_streaming_spark.streaming.joins import interval_join
-
-    src = str(tmp_path / "src")
-    (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").alias("ts"),
-            "user_id", "event_type", "value", "props",
-        )
-        .coalesce(1)
-        .write.json(src)
-    )
-
-    def legs(df):
-        p = df.filter(F.col("event_type") == "purchase").select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        c = df.filter(F.col("event_type") == "click").select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        return p, c
-
-    p, c = legs(file_stream(spark, src))
-    joined = interval_join(
-        p, c, on="user_id", left_ts="purchase_ts", right_ts="click_ts",
-        lower_sec=0, upper_sec=1800, watermark="1 hour",
-    )
-    q = start_sink(joined, "memory", query_name="ivj", output_mode="append",
-                   checkpoint=str(tmp_path / "ck"))
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-
-    got = {
-        (r.user_id, r.purchase_id, r.click_id)
-        for r in spark.sql("SELECT * FROM ivj").collect()
-    }
-    want = {
-        (r.user_id, r.purchase_id, r.click_id)
-        for r in REGISTRY["q_events_interval_join_click_purchase"]
-        .builder(spark, sf_dir)
-        .collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_streaming_quality_filter_equals_batch(spark, tmp_path):
-    """The LLM quality-scoring surface is map-only, so it must run
-    unchanged under readStream and agree with the batch result row-for-
-    row — the stream≡batch parity that lets one pipeline definition
-    serve both backfill (batch over parquet) and ingest (stream off
-    Kafka)."""
-    import json as _json
-
-    from spark_kafka_streaming_spark.operators.text import (
-        language_id,
-        quality_score,
-    )
-
-    rows = [
-        {"doc_id": 1, "text": "the quick brown fox jumps over the lazy dog"},
-        {"doc_id": 2, "text": "aaaa aaaa aaaa aaaa aaaa aaaa"},
-        {"doc_id": 3, "text": "le chat et le chien sont dans le jardin"},
-        {"doc_id": 4, "text": "x"},
-    ]
-    src = tmp_path / "docs_stream"
-    src.mkdir()
-    (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in rows))
-
-    schema = "doc_id BIGINT, text STRING"
-
-    def pipeline(df):
-        return language_id(quality_score(df)).select(
-            "doc_id", "quality", "lang_pred"
-        )
-
-    batch = {
-        r.doc_id: (r.quality, r.lang_pred)
-        for r in pipeline(spark.read.schema(schema).json(str(src))).collect()
-    }
-
-    stream = spark.readStream.schema(schema).json(str(src))
-    q = (
-        pipeline(stream)
-        .writeStream.format("memory")
-        .queryName("qf_parity")
-        .option("checkpointLocation", str(tmp_path / "ck_qf"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-    streamed = {
-        r.doc_id: (r.quality, r.lang_pred)
-        for r in spark.sql("SELECT * FROM qf_parity").collect()
-    }
-    assert streamed == batch and len(streamed) == 4
-
-
-def test_incremental_moments_equals_batch(spark, sf_dir, tmp_path):
-    """Streaming twin of q_stats_moments_merge: per-micro-batch exact
-    partials (n, Σc, Σc²) folded in foreachBatch reproduce the one-shot
-    batch moments exactly — the same merge the shuffle's map-side
-    combine performs, applied across time."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    rows = [
-        {"event_type": r["event_type"], "c": r["c"]}
-        for r in spark.read.parquet(f"{sf_dir}/events.parquet")
-        .where("value IS NOT NULL")
-        .selectExpr(
-            "event_type", "CAST(floor(value * 100 + 0.5) AS BIGINT) AS c"
-        )
-        .limit(400)
-        .collect()
-    ]
-    src = tmp_path / "mom"
-    src.mkdir()
-    half = len(rows) // 2
-    (src / "b0.json").write_text("\n".join(_json.dumps(r) for r in rows[:half]))
-    (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in rows[half:]))
-
-    acc: dict = {}
-
-    def absorb(df, epoch_id):
-        for r in (
-            df.groupBy("event_type")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("c").alias("s1"),
-                F.sum(F.expr("c * c")).alias("s2"),
-            )
-            .collect()
-        ):
-            n, s1, s2 = acc.get(r["event_type"], (0, 0, 0))
-            acc[r["event_type"]] = (n + r["n"], s1 + r["s1"], s2 + r["s2"])
-
-    q = (
-        spark.readStream.schema("event_type STRING, c BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-        .writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", str(tmp_path / "ck_mom"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    batch = {
-        r["event_type"]: (r["n"], r["s1"], r["s2"])
-        for r in spark.createDataFrame(rows, "event_type STRING, c BIGINT")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("c").alias("s1"),
-            F.sum(F.expr("c * c")).alias("s2"),
-        )
-        .collect()
-    }
-    assert acc == batch

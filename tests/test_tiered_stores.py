@@ -19,17 +19,10 @@ each group in one file, spread over more than one task.
 from __future__ import annotations
 
 import glob
-import json
 import os
-import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
-from spark_kafka_streaming_spark.operators.quantiles import (
-    bottomk_sample_grouped,
-    quantile_estimates,
-)
 from spark_kafka_streaming_spark.streaming import incremental_dedup
 from spark_kafka_streaming_spark.streaming.fold import folded_bounds
 from spark_kafka_streaming_spark.streaming.incremental_dedup import (
@@ -47,7 +40,6 @@ from spark_kafka_streaming_spark.streaming.incremental_quantiles import (
 from spark_kafka_streaming_spark.streaming.incremental_vectors import (
     IncrementalVectorIndexer,
 )
-from spark_kafka_streaming_spark.streaming.swap import recover_swap
 
 DOCS = "doc_id bigint, text string"
 N_BATCHES = 3
@@ -240,915 +232,3 @@ def test_quantile_compact_writes_one_file_per_group(spark, tmp_path):
     groups = [set(pq.read_table(f, columns=["g"])["g"].to_pylist()) for f in files]
     assert 1 < len(files) <= spark.sparkContext.defaultParallelism
     assert sum(map(len, groups)) == len(set().union(*groups)) == n_groups
-
-
-def test_incremental_quantile_store_equals_batch(spark, docs, tmp_path):
-    """Stream ≡ batch for the 6th maintenance loop: the per-batch
-    bottom-k leaves, re-cut and run through the SAME
-    quantile_estimates derivation, reproduce the one-shot batch
-    answer — including after compaction."""
-    from spark_kafka_streaming_spark.streaming.incremental_quantiles import (
-        IncrementalQuantileStore,
-    )
-
-    docs = [
-        {"doc_id": r["doc_id"], "lang": r["lang"], "n_chars": r["n_chars"]}
-        for r in docs
-        .select("doc_id", "lang", "n_chars")
-        .orderBy("doc_id")
-        .collect()
-    ]
-    src = tmp_path / "docs"
-    src.mkdir()
-    third = max(1, len(docs) // 3)
-    for i in range(3):
-        chunk = docs[i * third :] if i == 2 else docs[i * third : (i + 1) * third]
-        (src / f"b{i}.json").write_text("\n".join(json.dumps(r) for r in chunk))
-
-    store = IncrementalQuantileStore(
-        str(tmp_path / "q_store"), "lang", "n_chars", "doc_id", k=32
-    )
-    stream = (
-        spark.readStream.schema("doc_id BIGINT, lang STRING, n_chars BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(store)
-        .option("checkpointLocation", str(tmp_path / "ck_q"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    batch_df = spark.createDataFrame(
-        docs, "doc_id BIGINT, lang STRING, n_chars BIGINT"
-    )
-    want = sorted(
-        tuple(r)
-        for r in quantile_estimates(
-            bottomk_sample_grouped(batch_df, "lang", "n_chars", "doc_id", 32),
-            grouped=True,
-        ).collect()
-    )
-    got = sorted(tuple(r) for r in store.quantiles(spark).collect())
-    assert got == want and len(want) > 0
-
-    store.compact(spark)
-    after = sorted(tuple(r) for r in store.quantiles(spark).collect())
-    assert after == want
-
-
-def test_quantile_store_empty(spark, tmp_path):
-    from spark_kafka_streaming_spark.streaming.incremental_quantiles import (
-        IncrementalQuantileStore,
-    )
-
-    store = IncrementalQuantileStore(
-        str(tmp_path / "nope"), "lang", "n_chars", "doc_id"
-    )
-    assert store.quantiles(spark) is None
-    assert store.sample(spark) is None
-
-
-def test_windowed_quantile_store_equals_batch_query(spark, sf_dir, tmp_path):
-    """The q_quantile_windowed_hourly doc claims the same bottom-k
-    state serves the streaming form with the window key as group_col —
-    prove it: an IncrementalQuantileStore keyed on the (epoch-hour |
-    type) composite, fed the events in three micro-batches, serves
-    estimates identical to the batch windowed query's estimate leg."""
-    import json as _json
-
-    from spark_kafka_streaming_spark.streaming.incremental_quantiles import (
-        IncrementalQuantileStore,
-    )
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr(
-            "event_id",
-            "concat(CAST(CAST(floor(unix_micros(CAST(ts AS TIMESTAMP)) / "
-            "3600000000) AS BIGINT) AS STRING), '|', event_type) AS wg",
-            "value",
-        )
-        .orderBy("event_id")
-    )
-    rows = [r.asDict() for r in ev.collect()]
-    src = tmp_path / "ev"
-    src.mkdir()
-    third = max(1, len(rows) // 3)
-    for i in range(3):
-        chunk = rows[i * third :] if i == 2 else rows[i * third : (i + 1) * third]
-        (src / f"b{i}.json").write_text(
-            "\n".join(_json.dumps(r) for r in chunk)
-        )
-
-    store = IncrementalQuantileStore(
-        str(tmp_path / "wq_store"), "wg", "value", "event_id", k=64
-    )
-    q = (
-        spark.readStream.schema("event_id BIGINT, wg STRING, value DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-        .writeStream.foreachBatch(store)
-        .option("checkpointLocation", str(tmp_path / "ck_wq"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    batch_df = spark.createDataFrame(
-        rows, "event_id BIGINT, wg STRING, value DOUBLE"
-    )
-    want = sorted(
-        tuple(r)
-        for r in quantile_estimates(
-            bottomk_sample_grouped(batch_df, "wg", "value", "event_id", 64),
-            grouped=True,
-        ).collect()
-    )
-    got = sorted(tuple(r) for r in store.quantiles(spark).collect())
-    assert got == want and len(want) > 0
-
-
-def _mk_docs(spark, n=90):
-    rows = [(i, ["en", "de", "fr"][i % 3], 10 + (i * 37) % 200) for i in range(n)]
-    return spark.createDataFrame(rows, "doc_id bigint, lang string, n_chars bigint")
-
-
-def _batch_quantiles(df, k):
-    return sorted(
-        tuple(r)
-        for r in quantile_estimates(
-            bottomk_sample_grouped(df, "lang", "n_chars", "doc_id", k),
-            grouped=True,
-        ).collect()
-    )
-
-
-def test_quantile_store_exactly_once_across_compaction(spark, tmp_path):
-    """Crash-replay the worst case: compact() folds batch 1's leaf into
-    batch=-1, then the trigger replays batch 1 (checkpoint never
-    committed) — its rows now exist in the base AND a fresh leaf.  The
-    (g, ky) dedup in the re-cut must count them once, so the snapshot
-    still equals the batch rebuild."""
-    df = _mk_docs(spark)
-    b0 = df.filter(F.col("doc_id") < 45)
-    b1 = df.filter(F.col("doc_id") >= 45)
-    store = IncrementalQuantileStore(
-        str(tmp_path / "qs"), "lang", "n_chars", "doc_id", k=16
-    )
-    store(b0, 0)
-    store(b1, 1)
-    store.compact(spark)
-    store(b1, 1)  # replay after compaction — the double-count scenario
-    got = sorted(tuple(r) for r in store.quantiles(spark).collect())
-    assert got == _batch_quantiles(df, 16)
-
-
-def test_quantile_store_compact_crash_recovery(spark, tmp_path):
-    """Simulated crash windows of the compact() swap: wherever the
-    crash lands, _recover() restores a complete store at store_path
-    and the snapshot is unchanged."""
-    df = _mk_docs(spark)
-    store = IncrementalQuantileStore(
-        str(tmp_path / "qs"), "lang", "n_chars", "doc_id", k=16
-    )
-    store(df, 0)
-    store.compact(spark)
-    want = sorted(tuple(r) for r in store.quantiles(spark).collect())
-    sp = store.store_path
-
-    # crash between `store -> store.old` and `tmp -> store`:
-    # store missing, complete new base still at tmp, old aside.
-    shutil.copytree(sp, sp + ".old")
-    os.rename(sp, sp + ".compact.tmp")
-    got = sorted(tuple(r) for r in store.quantiles(spark).collect())
-    assert got == want
-    assert os.path.exists(sp) and not os.path.exists(sp + ".compact.tmp")
-    assert not os.path.exists(sp + ".old")
-
-    # crash before `tmp -> store` ever ran but after the aside rename
-    # failed to complete (only .old remains).
-    os.rename(sp, sp + ".old")
-    got = sorted(tuple(r) for r in store.quantiles(spark).collect())
-    assert got == want and os.path.exists(sp)
-
-    # a new batch written immediately after recovery appends to FULL
-    # history (regression: recovery must restore, not just read).
-    store(_mk_docs(spark, 6).withColumn("doc_id", F.col("doc_id") + 1000), 1)
-    assert store.sample(spark).count() > 0
-
-
-def test_quantile_store_retention_evicts_expired_windows(spark, tmp_path):
-    """Windowed group keys + retention: groups older than
-    max(event_time) − retention disappear at compact(); surviving
-    groups' snapshot still equals a batch rebuild over the live rows
-    only — state is O(live_windows · k)."""
-    rows = [
-        (i, f"2024-01-01 {h:02d}:00:00", float(10 + i % 50))
-        for i, h in enumerate([0, 0, 1, 1, 5, 5, 6, 6, 7, 7] * 6)
-    ]
-    df = spark.createDataFrame(rows, "rid bigint, win string, v double")
-    store = IncrementalQuantileStore(
-        str(tmp_path / "qw"),
-        "win",
-        "v",
-        "rid",
-        k=8,
-        event_time_sql="CAST(g AS TIMESTAMP)",
-        retention="2 HOURS",
-    )
-    store(df, 0)
-    store.compact(spark)
-    got_groups = {
-        r["g"] for r in store.sample(spark).select("g").distinct().collect()
-    }
-    # horizon = 07:00 − 2h = 05:00 → hours 0 and 1 evicted
-    assert got_groups == {
-        "2024-01-01 05:00:00",
-        "2024-01-01 06:00:00",
-        "2024-01-01 07:00:00",
-    }
-    live = df.filter(F.col("win") >= "2024-01-01 05:00:00")
-    want = sorted(
-        tuple(r)
-        for r in quantile_estimates(
-            bottomk_sample_grouped(live, "win", "v", "rid", 8), grouped=True
-        ).collect()
-    )
-    got = sorted(tuple(r) for r in store.quantiles(spark).collect())
-    assert got == want
-
-
-def test_merge_store_bucket_swap_crash_recovery(spark, tmp_path):
-    """Interrupted per-bucket swap in IncrementalMerger: a bucket
-    renamed aside with no replacement renamed in (the crash window
-    that used to DELETE the bucket's untouched keys) is restored by
-    swap.recover_bucket_swap on the next read — the snapshot equals the
-    pre-crash state."""
-    from spark_kafka_streaming_spark.streaming.incremental_merge import (
-        IncrementalMerger,
-    )
-
-    store = str(tmp_path / "merge_store")
-    seed = spark.createDataFrame(
-        [(i, f"n{i}", float(i)) for i in range(40)],
-        "k bigint, name string, amount double",
-    )
-    merger = IncrementalMerger(store, key_col="k", n_key_buckets=4)
-    merger(seed.selectExpr("k", "'U' AS op", "name", "amount"), 0)
-    want = sorted(map(tuple, merger.snapshot(spark).collect()))
-
-    # simulate the crash window: one bucket aside, nothing renamed in
-    buckets = [d for d in os.listdir(store) if d.startswith("kb=")]
-    aside_root = store + ".aside"
-    os.makedirs(aside_root, exist_ok=True)
-    os.rename(
-        os.path.join(store, buckets[0]), os.path.join(aside_root, buckets[0])
-    )
-    got = sorted(map(tuple, merger.snapshot(spark).collect()))
-    assert got == want
-    assert not os.path.exists(aside_root)
-
-
-def test_index_store_swap_crash_recovery(spark, tmp_path):
-    """Interrupted compact swap in IncrementalIndexer (shared
-    swap.recover_swap): store missing, complete base at tmp → restored
-    on read, snapshot unchanged."""
-    from spark_kafka_streaming_spark.streaming.incremental_index import (
-        IncrementalIndexer,
-    )
-
-    store = str(tmp_path / "ix_store")
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta w{i} gamma") for i in range(30)],
-        "doc_id bigint, text string",
-    )
-    ix = IncrementalIndexer(store)
-    ix(docs, 0)
-    ix.compact(spark)
-    want = sorted(map(tuple, ix.snapshot(spark).collect()))
-    os.rename(store, store + ".compact.tmp")
-    got = sorted(map(tuple, ix.snapshot(spark).collect()))
-    assert got == want and os.path.exists(store)
-
-
-def test_recover_swap_reclaims_stale_copies(tmp_path):
-    sp = str(tmp_path / "store")
-    os.makedirs(sp)
-    with open(os.path.join(sp, "part-0.parquet"), "w") as f:
-        f.write("x")
-    # crash landed after `tmp -> store` but before rmtree(old), plus a
-    # stale tmp from an even earlier aborted compact
-    shutil.copytree(sp, sp + ".old")
-    shutil.copytree(sp, sp + ".compact.tmp")
-    recover_swap(sp)
-    assert os.path.exists(sp)
-    assert not os.path.exists(sp + ".old")
-    assert not os.path.exists(sp + ".compact.tmp")
-
-
-def test_quantile_retention_keeps_null_event_times(spark, tmp_path):
-    """Groups whose event_time_sql yields NULL survive compact();
-    datable groups still evict past the horizon."""
-    rows = (
-        [(i, "2024-01-01 00:00:00", float(i)) for i in range(5)]
-        + [(100 + i, "2024-01-01 07:00:00", float(i)) for i in range(5)]
-        + [(200 + i, "not-a-timestamp", float(i)) for i in range(5)]
-    )
-    df = spark.createDataFrame(rows, "rid bigint, win string, v double")
-    store = IncrementalQuantileStore(
-        str(tmp_path / "qn"),
-        "win",
-        "v",
-        "rid",
-        k=8,
-        event_time_sql="TRY_CAST(g AS TIMESTAMP)",
-        retention="2 HOURS",
-    )
-    store(df, 0)
-    store.compact(spark)
-    groups = {
-        r["g"] for r in store.sample(spark).select("g").distinct().collect()
-    }
-    # hour 0 evicted (horizon 05:00), hour 7 live, un-datable group KEPT
-    assert groups == {"2024-01-01 07:00:00", "not-a-timestamp"}
-
-
-def test_quantile_retention_all_null_keeps_everything(spark, tmp_path):
-    """All event times NULL → NULL horizon → nothing evicted (the old
-    behavior emptied the whole store)."""
-    df = spark.createDataFrame(
-        [(i, f"g{i % 3}", float(i)) for i in range(30)],
-        "rid bigint, win string, v double",
-    )
-    store = IncrementalQuantileStore(
-        str(tmp_path / "qa"),
-        "win",
-        "v",
-        "rid",
-        k=8,
-        event_time_sql="TRY_CAST(g AS TIMESTAMP)",
-        retention="2 HOURS",
-    )
-    store(df, 0)
-    store.compact(spark)
-    groups = {
-        r["g"] for r in store.sample(spark).select("g").distinct().collect()
-    }
-    assert groups == {"g0", "g1", "g2"}
-
-
-def test_merge_full_bucket_delete_survives_crash_without_replay(
-    spark, tmp_path
-):
-    """Delete every key of one bucket, then plant the crash remnant (old
-    bucket content sitting aside, final cleanup never ran): recovery
-    must NOT resurrect the deleted keys — the empty tombstone leaf
-    holds the bucket's slot."""
-    from spark_kafka_streaming_spark.streaming.incremental_merge import (
-        IncrementalMerger,
-    )
-
-    store = str(tmp_path / "ms")
-    merger = IncrementalMerger(store, key_col="k", n_key_buckets=2)
-    seed = spark.createDataFrame(
-        [(i, f"n{i}") for i in range(20)], "k bigint, name string"
-    )
-    merger(seed.selectExpr("k", "'U' AS op", "name"), 0)
-    snap = merger.snapshot(spark)
-    kb = F.pmod(F.xxhash64(F.col("k").cast("string")), F.lit(2)).cast("int")
-    bucket0_keys = [
-        r["k"] for r in snap.withColumn("kb", kb).where("kb = 0").collect()
-    ]
-    assert bucket0_keys  # the seed populates both buckets
-    deletes = spark.createDataFrame(
-        [(k,) for k in bucket0_keys], "k bigint"
-    ).selectExpr("k", "'D' AS op", "CAST(NULL AS STRING) AS name")
-    merger(deletes, 1)
-    # tombstone leaf holds the slot
-    assert os.path.isdir(os.path.join(store, "kb=0"))
-
-    # plant the crash remnant: pre-delete bucket content aside, as if
-    # the final rmtree(aside_root) never ran
-    aside = store + ".aside"
-    os.makedirs(aside, exist_ok=True)
-    os.makedirs(os.path.join(aside, "kb=0"))
-    with open(os.path.join(aside, "kb=0", "stale.parquet"), "w") as f:
-        f.write("stale")
-    got = {r["k"] for r in merger.snapshot(spark).collect()}
-    assert got.isdisjoint(set(bucket0_keys))
-    assert not os.path.exists(aside)
-
-
-def test_merge_all_keys_deleted_snapshot_is_none(spark, tmp_path):
-    from spark_kafka_streaming_spark.streaming.incremental_merge import (
-        IncrementalMerger,
-    )
-
-    store = str(tmp_path / "ms2")
-    merger = IncrementalMerger(store, key_col="k", n_key_buckets=2)
-    seed = spark.createDataFrame(
-        [(i, f"n{i}") for i in range(8)], "k bigint, name string"
-    )
-    merger(seed.selectExpr("k", "'U' AS op", "name"), 0)
-    merger(seed.selectExpr("k", "'D' AS op", "CAST(NULL AS STRING) name"), 1)
-    assert merger.snapshot(spark) is None
-
-
-def test_incremental_inverted_index_equals_batch(spark, sf_dir, tmp_path):
-    """Streaming twin of the search tier (VERDICT r3 #7): the
-    foreachBatch-maintained (term, doc_id, tf) partial store, merged
-    and run through the SAME rank-capped derivation, must reproduce
-    the one-shot batch inverted index exactly — including after
-    compaction folds the per-batch partials into a single base."""
-    import json as _json
-
-    from spark_kafka_streaming_spark.operators import index as IX
-    from spark_kafka_streaming_spark.streaming.incremental_index import (
-        IncrementalIndexer,
-    )
-
-    docs = [
-        {"doc_id": r["doc_id"], "text": r["text"]}
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-        .limit(60)
-        .collect()
-    ]
-    src = tmp_path / "docs"
-    src.mkdir()
-    half = len(docs) // 2
-    (src / "b0.json").write_text(
-        "\n".join(_json.dumps(r) for r in docs[:half])
-    )
-    (src / "b1.json").write_text(
-        "\n".join(_json.dumps(r) for r in docs[half:])
-    )
-
-    indexer = IncrementalIndexer(str(tmp_path / "ix_store"))
-    stream = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(indexer)
-        .option("checkpointLocation", str(tmp_path / "ck_ix"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    batch_df = spark.createDataFrame(docs, "doc_id BIGINT, text STRING")
-    want = [tuple(r) for r in IX.inverted_index(IX.term_doc_tf(batch_df)).collect()]
-    assert len(want) > 0
-    got = [tuple(r) for r in indexer.snapshot(spark).collect()]
-    assert got == want  # both ordered by term
-
-    # the store really is incremental (one leaf per micro-batch)…
-    import glob
-
-    batches = {
-        p.rsplit("batch=", 1)[1]
-        for p in glob.glob(str(tmp_path / "ix_store" / "tb=*" / "batch=*"))
-    }
-    assert batches == {"0", "1"}
-    # …and compaction preserves the index bit-for-bit
-    indexer.compact(spark)
-    assert [tuple(r) for r in indexer.snapshot(spark).collect()] == want
-
-    # BM25 serving loop: ranks AND scores served from the maintained
-    # store are bit-identical to the batch scorer over the same docs
-    # (same shared expressions, different per_doc derivation).
-    from pyspark.sql import functions as F
-
-    from spark_kafka_streaming_spark.functions import texthash as TH
-
-    tok = spark.createDataFrame(docs, "doc_id BIGINT, text STRING").select(
-        "doc_id", F.explode(F.expr(TH.spark_tokens("text"))).alias("term")
-    )
-    per_doc = tok.groupBy("doc_id").agg(
-        F.count("*").alias("dl"),
-        *[
-            F.expr(IX.bm25_tf_case(t)).cast("bigint").alias(f"tf_{t}")
-            for t in IX.BM25_TERMS
-        ],
-    )
-    want_bm25 = [tuple(r) for r in IX.bm25_score_per_doc(per_doc).collect()]
-    got_bm25 = [tuple(r) for r in indexer.bm25_snapshot(spark).collect()]
-    assert len(want_bm25) > 0
-    assert got_bm25 == want_bm25
-
-    # heavy-hitter serving loop: exact phi-heavy hitters from the
-    # maintained store are bit-identical to the batch 2-pass operator
-    # (q_text_heavy_hitters) over the same docs — counts, fracs, set.
-    from spark_kafka_streaming_spark.operators.sketches import (
-        heavy_hitters_exact,
-    )
-
-    phi = 0.01
-    want_hh = sorted(
-        tuple(r)
-        for r in heavy_hitters_exact(
-            tok.select(F.col("term").alias("token")), "token", phi=phi
-        ).collect()
-    )
-    got_hh = sorted(
-        tuple(r)
-        for r in indexer.heavy_hitters_snapshot(spark, phi=phi).collect()
-    )
-    assert len(want_hh) > 0
-    assert got_hh == want_hh
-
-
-def test_incremental_cdc_merge_equals_batch(spark, tmp_path):
-    """Streaming CDC upsert (VERDICT family: foreachBatch maintenance
-    loops): applying change batches through IncrementalMerger must
-    leave the snapshot equal to a one-shot merge of all changes, only
-    touched key-buckets are rewritten per trigger, and replaying a
-    batch (crash recovery) is a no-op because the feed is absolute."""
-    import json as _json
-
-    from spark_kafka_streaming_spark.streaming.incremental_merge import (
-        IncrementalMerger,
-    )
-
-    # seed snapshot: keys 0..19
-    seed = spark.createDataFrame(
-        [(i, f"v{i}", float(i)) for i in range(20)],
-        "k long, name string, amount double",
-    )
-    store = str(tmp_path / "snap")
-    merger = IncrementalMerger(store, key_col="k", n_key_buckets=8)
-    merger(
-        seed.selectExpr("k", "'U' AS op", "name", "amount"), 0
-    )
-    assert sorted(map(tuple, merger.snapshot(spark).collect())) == sorted(
-        map(tuple, seed.collect())
-    )
-
-    # change feed: delete 3, update 5, insert 100 — then a second batch
-    b1 = [
-        {"k": 3, "op": "D", "name": None, "amount": None},
-        {"k": 5, "op": "U", "name": "v5x", "amount": 55.0},
-        {"k": 100, "op": "U", "name": "new", "amount": 1.0},
-    ]
-    b2 = [
-        {"k": 5, "op": "D", "name": None, "amount": None},
-        {"k": 101, "op": "U", "name": "new2", "amount": 2.0},
-    ]
-    src = tmp_path / "cdc"
-    src.mkdir()
-    (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in b1))
-    (src / "b2.json").write_text("\n".join(_json.dumps(r) for r in b2))
-
-    stream = (
-        spark.readStream.schema(
-            "k LONG, op STRING, name STRING, amount DOUBLE"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: merger(df, bid + 1)
-        )
-        .option("checkpointLocation", str(tmp_path / "ck_cdc"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {r["k"]: (r["name"], r["amount"]) for r in merger.snapshot(
-        spark
-    ).collect()}
-    want = {i: (f"v{i}", float(i)) for i in range(20)}
-    del want[3]
-    del want[5]  # updated in b1, deleted in b2
-    want[100] = ("new", 1.0)
-    want[101] = ("new2", 2.0)
-    assert got == want
-
-    # replay idempotence: re-apply b2 directly — snapshot unchanged
-    merger(
-        spark.createDataFrame(
-            b2, "k LONG, op STRING, name STRING, amount DOUBLE"
-        ),
-        99,
-    )
-    got2 = {r["k"]: (r["name"], r["amount"]) for r in merger.snapshot(
-        spark
-    ).collect()}
-    assert got2 == want
-
-    # bucket pruning: a 1-key change must leave every untouched kb
-    # directory's mtime alone (only its own bucket is swapped)
-    import os as _os
-
-    def mtimes():
-        return {
-            d: _os.path.getmtime(_os.path.join(store, d))
-            for d in _os.listdir(store)
-            if d.startswith("kb=")
-        }
-
-    before = mtimes()
-    merger(
-        spark.createDataFrame(
-            [{"k": 101, "op": "U", "name": "new2b", "amount": 3.0}],
-            "k LONG, op STRING, name STRING, amount DOUBLE",
-        ),
-        100,
-    )
-    after = mtimes()
-    changed = {d for d in before if after.get(d) != before[d]}
-    assert len(changed) == 1  # exactly key 101's bucket
-
-
-def test_incremental_cdc_merge_seq_col_order(spark, tmp_path):
-    """Same-key changes within ONE micro-batch resolve by the feed's
-    sequence column when declared: an ordered update-then-delete keeps
-    the delete (and delete-then-update keeps the update) — the
-    snapshot equals replaying the feed in order.  Without seq_col the
-    documented op-desc determinism tiebreak applies ('U' wins)."""
-    from spark_kafka_streaming_spark.streaming.incremental_merge import (
-        IncrementalMerger,
-    )
-
-    schema = "k LONG, op STRING, seq LONG, name STRING"
-    batch = spark.createDataFrame(
-        [
-            (1, "U", 10, "first"),
-            (1, "D", 11, None),     # later delete must win for k=1
-            (2, "D", 20, None),
-            (2, "U", 21, "back"),   # later update must win for k=2
-            (3, "U", 30, "only"),
-        ],
-        schema,
-    )
-
-    store = str(tmp_path / "snap_seq")
-    merger = IncrementalMerger(
-        store, key_col="k", n_key_buckets=4, seq_col="seq"
-    )
-    merger(batch, 0)
-    got = {r["k"]: r["name"] for r in merger.snapshot(spark).collect()}
-    assert got == {2: "back", 3: "only"}
-    # seq is metadata, not snapshot state
-    assert set(merger.snapshot(spark).columns) == {"k", "name"}
-
-    # without seq_col: op-desc tiebreak — 'U' beats 'D' per key
-    store2 = str(tmp_path / "snap_noseq")
-    merger2 = IncrementalMerger(store2, key_col="k", n_key_buckets=4)
-    merger2(batch.drop("seq"), 0)
-    got2 = {r["k"]: r["name"] for r in merger2.snapshot(spark).collect()}
-    assert got2 == {1: "first", 2: "back", 3: "only"}
-
-
-def test_incremental_span_dedup_equals_batch(spark, sf_dir, tmp_path):
-    """Streaming twin of the span tier (VERDICT r5 #7): the
-    foreachBatch-maintained (h, cnt, canon) window-hash partial store,
-    merged by (sum, min) and run through the SAME span_stats_from
-    derivation, must reproduce the one-shot batch
-    substring_span_stats exactly — including after compaction."""
-    import glob
-    import json as _json
-
-    from spark_kafka_streaming_spark.operators.dedup import (
-        substring_span_stats,
-    )
-    from spark_kafka_streaming_spark.streaming.incremental_spans import (
-        IncrementalSpanDeduper,
-    )
-
-    docs = [
-        {"doc_id": r["doc_id"], "text": r["text"]}
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-        .limit(80)
-        .collect()
-    ]
-    src = tmp_path / "docs"
-    src.mkdir()
-    half = len(docs) // 2
-    (src / "b0.json").write_text("\n".join(_json.dumps(r) for r in docs[:half]))
-    (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in docs[half:]))
-
-    deduper = IncrementalSpanDeduper(str(tmp_path / "span_store"), w=5)
-    stream = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(deduper)
-        .option("checkpointLocation", str(tmp_path / "ck_span"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    batch_df = spark.createDataFrame(docs, "doc_id BIGINT, text STRING")
-    want = sorted(
-        tuple(r) for r in substring_span_stats(batch_df, w=5).collect()
-    )
-    assert len(want) == len(docs)
-    assert any(r[3] > 0 for r in want), "corpus should contain dup windows"
-    got = sorted(
-        tuple(r) for r in deduper.span_stats(batch_df).collect()
-    )
-    assert got == want
-
-    # the store really is incremental (one leaf per micro-batch)…
-    batches = {
-        p.rsplit("batch=", 1)[1]
-        for p in glob.glob(str(tmp_path / "span_store" / "hb=*" / "batch=*"))
-    }
-    assert batches == {"0", "1"}
-    # …and compaction preserves the stats bit-for-bit
-    deduper.compact(spark)
-    assert sorted(
-        tuple(r) for r in deduper.span_stats(batch_df).collect()
-    ) == want
-
-    # serving question: stats for JUST the second half against the
-    # full ingested corpus — same rows as the full-corpus snapshot
-    # restricted to those docs (state is corpus-global).
-    second = spark.createDataFrame(docs[half:], "doc_id BIGINT, text STRING")
-    got2 = sorted(tuple(r) for r in deduper.span_stats(second).collect())
-    want2 = [r for r in want if r[0] >= docs[half]["doc_id"]]
-    assert got2 == sorted(want2)
-
-
-def test_incremental_vector_index_equals_batch(spark, sf_dir, tmp_path):
-    """Streaming twin of the similarity tier (the maintenance family's
-    fifth member): the foreachBatch-maintained cell-assigned vector
-    store, served via probe-and-score, must reproduce the batch
-    ivf_topk over everything ingested bit-for-bit — same pinned
-    centroid snapshot, both impls, and again after compaction."""
-    import glob
-    import shutil as _sh
-
-    from pyspark.sql import functions as F
-
-    from spark_kafka_streaming_spark.operators.similarity import ivf_topk
-    from spark_kafka_streaming_spark.streaming.incremental_vectors import (
-        IncrementalVectorIndexer,
-    )
-
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(120)
-    )
-    emb.persist().count()
-    ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
-    mid = ids[len(ids) // 2]
-
-    src = tmp_path / "vecs"
-    src.mkdir()
-    for i, half in enumerate(
-        (emb.filter(F.col("vec_id") < mid), emb.filter(F.col("vec_id") >= mid))
-    ):
-        part_dir = tmp_path / f"half{i}"
-        half.coalesce(1).write.parquet(str(part_dir))
-        (part,) = glob.glob(str(part_dir / "part-*.parquet"))
-        _sh.copy(part, str(src / f"b{i}.parquet"))
-
-    indexer = IncrementalVectorIndexer(
-        str(tmp_path / "vstore"), n_cells=8, n_assign=2
-    )
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(indexer)
-        .option("checkpointLocation", str(tmp_path / "ck_vec"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    queries = emb.filter(F.col("vec_id").isin(ids[:10]))
-    got = sorted(map(tuple, indexer.topk(queries, k=5, n_probe=3).collect()))
-    assert len(got) == 50
-
-    # the store serves through the SQL assigner and cell join; batch
-    # ivf_topk scores the same snapshot with the Arrow kernels
-    cents = indexer.centroids(spark)
-    want = sorted(
-        map(
-            tuple,
-            ivf_topk(
-                queries, emb, k=5, n_probe=3, n_assign=2, centroids=cents
-            ).collect(),
-        )
-    )
-    assert got == want, "store-served != batch ivf_topk"
-
-    # the store really is incremental (per-micro-batch leaves under
-    # each cell)…
-    batches = {
-        p.rsplit("batch=", 1)[1]
-        for p in glob.glob(str(tmp_path / "vstore" / "cells" / "cell=*" / "batch=*"))
-    }
-    assert batches == {"0", "1"}
-    # …with each (cell, batch) leaf holding exactly ONE data file: the
-    # ingest write co-locates a cell's rows in one task (repartition by
-    # cell) so leaves never multiply with the batch's task count —
-    # without it the write is O(tasks × cells) files per trigger
-    # (measured live at the fourth decade: 16,734 files / 731 s per
-    # 20k-vector trigger at 1,414 cells).
-    for leaf in glob.glob(
-        str(tmp_path / "vstore" / "cells" / "cell=*" / "batch=*")
-    ):
-        n_files = len(glob.glob(os.path.join(leaf, "part-*")))
-        assert n_files == 1, f"{leaf}: {n_files} files (want 1)"
-    # …and compaction preserves served results bit-for-bit
-    indexer.compact(spark)
-    assert (
-        sorted(map(tuple, indexer.topk(queries, k=5, n_probe=3).collect()))
-        == got
-    )
-    emb.unpersist()
-
-
-def test_incremental_vector_index_empty_first_batch(spark, sf_dir, tmp_path):
-    """An empty micro-batch 0 must not become the centroid snapshot:
-    the store trains from the first non-empty batch, keeps ingesting
-    after a restart with a fresh indexer on the same root, and serves
-    the batch ivf_topk over everything ingested."""
-    import glob
-    import shutil as _sh
-
-    from spark_kafka_streaming_spark.operators.similarity import ivf_topk
-    from spark_kafka_streaming_spark.streaming.incremental_vectors import (
-        IncrementalVectorIndexer,
-    )
-
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(90)
-    )
-    emb.persist().count()
-    src = tmp_path / "vecs"
-    src.mkdir()
-
-    def stage(i, df):
-        part_dir = tmp_path / f"part{i}"
-        df.coalesce(1).write.parquet(str(part_dir))
-        (part,) = glob.glob(str(part_dir / "part-*.parquet"))
-        dst = str(src / f"b{i}.parquet")
-        _sh.copy(part, dst)
-        # the file source orders by mtime: keep the staging order
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    def drain(indexer):
-        q = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-            .writeStream.foreachBatch(indexer)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert q.exception() is None
-
-    root = str(tmp_path / "vstore")
-    stage(0, emb.filter(F.lit(False)))
-    stage(1, emb.filter(F.col("vec_id") < 60))
-    drain(IncrementalVectorIndexer(root, n_cells=8, n_assign=2))
-    restarted = IncrementalVectorIndexer(root, n_cells=8, n_assign=2)
-    assert restarted.centroids(spark).count() == 8
-    stage(2, emb.filter(F.col("vec_id") >= 60))
-    drain(restarted)
-
-    queries = emb.filter(F.col("vec_id") < 10)
-    got = sorted(map(tuple, restarted.topk(queries, k=5, n_probe=3).collect()))
-    want = sorted(
-        map(
-            tuple,
-            ivf_topk(
-                queries,
-                emb,
-                k=5,
-                n_probe=3,
-                n_assign=2,
-                centroids=restarted.centroids(spark),
-            ).collect(),
-        )
-    )
-    assert len(got) == 50
-    assert got == want
-    emb.unpersist()

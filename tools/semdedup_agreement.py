@@ -3,7 +3,7 @@
 assignment vs exact full-search Lloyd.
 
 The two-level route's quality contract is pinned at k=300 on a planted
-corpus (tests/test_vectors.py: assignment agreement >= 0.95);
+corpus (tests/test_round8_kmeans.py: assignment agreement >= 0.95);
 this probe measures what the SemDeDup CONSUMER actually feels at the
 production operating point — the per-vector kept/dropped decision on
 the real scaled corpus at auto_k (k = n/400) — plus both routes'
