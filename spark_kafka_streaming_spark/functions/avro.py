@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import avro_py

@@ -118,6 +118,36 @@ def bpe_train(
     return bpe_train_batched(docs, n_merges, 1, text_col).drop("round")
 
 
+def _duck_chain_head() -> list[str]:
+    """The first two CTEs of both training-schedule replays: corpus
+    word frequencies ``wf`` and each word as space-separated chars
+    ``s0``."""
+    chars = (
+        "array_to_string(list_transform(generate_series(1, length(word)), "
+        "i -> substr(word, i, 1)), ' ')"
+    )
+    return [
+        f"""wf AS MATERIALIZED (
+      SELECT word, count(*) AS freq FROM (
+        SELECT unnest({TH.duck_tokens('text')}) AS word FROM documents
+      ) GROUP BY word
+    )""",
+        f"s0 AS MATERIALIZED (SELECT word, freq, {chars} AS s FROM wf)",
+    ]
+
+
+def _duck_pair_counts(i: int) -> str:
+    """CTE ``p{i}``: frequency-weighted adjacent symbol-pair counts of
+    the symbol table ``s{i}``."""
+    return f"""p{i} AS MATERIALIZED (
+      SELECT arr[j] AS a, arr[j + 1] AS b, SUM(freq) AS cnt FROM (
+        SELECT freq, string_split(s, ' ') AS arr,
+               unnest(generate_series(1, len(string_split(s, ' ')) - 1)) AS j
+        FROM s{i}
+      ) GROUP BY 1, 2
+    )"""
+
+
 def _duck_merge_chain(n_merges: int) -> list[str]:
     """Shared CTE chain replaying the training schedule (used by both
     the train and encode oracles; carries ``word`` through every step
@@ -129,28 +159,9 @@ def _duck_merge_chain(n_merges: int) -> list[str]:
     inlining would re-evaluate the prefix chain 2^n_merges times —
     materialization makes the oracle linear in n_merges like the
     engine loop."""
-    chars = (
-        "array_to_string(list_transform(generate_series(1, length(word)), "
-        "i -> substr(word, i, 1)), ' ')"
-    )
-    parts = [
-        f"""wf AS MATERIALIZED (
-      SELECT word, count(*) AS freq FROM (
-        SELECT unnest({TH.duck_tokens('text')}) AS word FROM documents
-      ) GROUP BY word
-    )""",
-        f"s0 AS MATERIALIZED (SELECT word, freq, {chars} AS s FROM wf)",
-    ]
+    parts = _duck_chain_head()
     for i in range(n_merges):
-        parts.append(
-            f"""p{i} AS MATERIALIZED (
-      SELECT arr[j] AS a, arr[j + 1] AS b, SUM(freq) AS cnt FROM (
-        SELECT freq, string_split(s, ' ') AS arr,
-               unnest(generate_series(1, len(string_split(s, ' ')) - 1)) AS j
-        FROM s{i}
-      ) GROUP BY 1, 2
-    )""",
-        )
+        parts.append(_duck_pair_counts(i))
         parts.append(
             f"b{i} AS MATERIALIZED (SELECT a, b, cnt FROM p{i} ORDER BY cnt DESC, a, b LIMIT 1)"
         )
@@ -409,28 +420,9 @@ def _duck_batched_chain(n_rounds: int, window_k: int) -> list[str]:
     train and encode oracles): per round a pair-count CTE, the ranked
     window, the NOT EXISTS survivor filter, the ordered fold list, and
     the folded next symbol table."""
-    chars = (
-        "array_to_string(list_transform(generate_series(1, length(word)), "
-        "i -> substr(word, i, 1)), ' ')"
-    )
-    parts = [
-        f"""wf AS MATERIALIZED (
-      SELECT word, count(*) AS freq FROM (
-        SELECT unnest({TH.duck_tokens('text')}) AS word FROM documents
-      ) GROUP BY word
-    )""",
-        f"s0 AS MATERIALIZED (SELECT word, freq, {chars} AS s FROM wf)",
-    ]
+    parts = _duck_chain_head()
     for i in range(n_rounds):
-        parts.append(
-            f"""p{i} AS MATERIALIZED (
-      SELECT arr[j] AS a, arr[j + 1] AS b, SUM(freq) AS cnt FROM (
-        SELECT freq, string_split(s, ' ') AS arr,
-               unnest(generate_series(1, len(string_split(s, ' ')) - 1)) AS j
-        FROM s{i}
-      ) GROUP BY 1, 2
-    )"""
-        )
+        parts.append(_duck_pair_counts(i))
         parts.append(
             f"""w{i} AS MATERIALIZED (
       SELECT a, b, cnt, r FROM (
@@ -565,16 +557,15 @@ def bpe_encode_with_merges(
     )
 
 
-def duck_bpe_encode_batched_sql(
-    n_rounds: int = N_ROUNDS, window_k: int = WINDOW_K
-) -> str:
-    """DuckDB oracle twin of :func:`bpe_encode_batched`."""
-    parts = _duck_batched_chain(n_rounds, window_k)
+def _duck_encode_sql(parts: list[str], n_steps: int) -> str:
+    """Encode-oracle tail over a schedule replay's CTEs ``parts``: the
+    final symbol table ``s{n_steps}`` joined back to the exploded
+    corpus tokens, summed per document."""
     body = ",\n    ".join(parts)
     return f"""
     WITH {body},
     enc AS (
-      SELECT word, len(string_split(s, ' ')) AS n_sym FROM s{n_rounds}
+      SELECT word, len(string_split(s, ' ')) AS n_sym FROM s{n_steps}
     ),
     tok AS (
       SELECT doc_id, unnest({TH.duck_tokens('text')}) AS word FROM documents
@@ -594,34 +585,17 @@ def duck_bpe_encode_batched_sql(
     FROM documents d LEFT JOIN pd USING (doc_id)
     ORDER BY d.doc_id
     """
+
+
+def duck_bpe_encode_batched_sql(
+    n_rounds: int = N_ROUNDS, window_k: int = WINDOW_K
+) -> str:
+    """DuckDB oracle twin of :func:`bpe_encode_batched`."""
+    return _duck_encode_sql(_duck_batched_chain(n_rounds, window_k), n_rounds)
 
 
 def duck_bpe_encode_sql(n_merges: int = N_MERGES) -> str:
     """DuckDB oracle twin of :func:`bpe_encode`: the shared merge
     chain (:func:`_duck_merge_chain`), the final symbol table joined
     back to the exploded corpus tokens."""
-    parts = _duck_merge_chain(n_merges)
-    body = ",\n    ".join(parts)
-    return f"""
-    WITH {body},
-    enc AS (
-      SELECT word, len(string_split(s, ' ')) AS n_sym FROM s{n_merges}
-    ),
-    tok AS (
-      SELECT doc_id, unnest({TH.duck_tokens('text')}) AS word FROM documents
-    ),
-    pd AS (
-      SELECT doc_id, count(*) AS n_words,
-             SUM(length(word)) AS n_chars, SUM(n_sym) AS n_bpe
-      FROM tok JOIN enc USING (word) GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(COALESCE(pd.n_words, 0) AS INT) AS n_words,
-           CAST(COALESCE(pd.n_chars, 0) AS INT) AS n_chars,
-           CAST(COALESCE(pd.n_bpe, 0) AS INT) AS n_bpe_tokens,
-           round(CASE WHEN COALESCE(pd.n_bpe, 0) = 0 THEN 0.0
-                 ELSE CAST(COALESCE(pd.n_chars, 0) AS DOUBLE)
-                      / COALESCE(pd.n_bpe, 1) END, 6) AS compression
-    FROM documents d LEFT JOIN pd USING (doc_id)
-    ORDER BY d.doc_id
-    """
+    return _duck_encode_sql(_duck_merge_chain(n_merges), n_merges)

@@ -73,6 +73,22 @@ def covariance_matrix(df: DataFrame, vec_col: str = "embedding") -> tuple[np.nda
     return cov, n
 
 
+def _top_components(
+    cov: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The top-k eigenvectors ``(d, k)`` of ``cov``, each sign-fixed so
+    its largest-magnitude entry is positive; all eigenvalues
+    (ascending); and the top-k indices into them, largest first."""
+    evals, evecs = np.linalg.eigh(cov)  # ascending
+    order = np.argsort(evals)[::-1][:k]
+    comps = evecs[:, order]
+    for c in range(comps.shape[1]):
+        j = int(np.argmax(np.abs(comps[:, c])))
+        if comps[j, c] < 0:
+            comps[:, c] = -comps[:, c]
+    return comps, evals, order
+
+
 def pca_fit(
     df: DataFrame, k: int, vec_col: str = "embedding"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
@@ -81,13 +97,7 @@ def pca_fit(
     population-covariance (the per-component projection variances),
     the corpus mean vector ``(d,)``, and the row count."""
     cov, mean, n = covariance_stats(df, vec_col)
-    evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(evals)[::-1][:k]
-    comps = evecs[:, order]
-    for c in range(comps.shape[1]):
-        j = int(np.argmax(np.abs(comps[:, c])))
-        if comps[j, c] < 0:
-            comps[:, c] = -comps[:, c]
+    comps, evals, order = _top_components(cov, k)
     return comps, evals[order], mean, n
 
 
@@ -97,13 +107,7 @@ def pca_components(
     """Top-k principal components ``(d, k)`` and explained-variance
     ratios ``(k,)``, sign-fixed for reproducibility."""
     cov, _, _ = covariance_stats(df, vec_col)
-    evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(evals)[::-1][:k]
-    comps = evecs[:, order]
-    for c in range(comps.shape[1]):
-        j = int(np.argmax(np.abs(comps[:, c])))
-        if comps[j, c] < 0:
-            comps[:, c] = -comps[:, c]
+    comps, evals, order = _top_components(cov, k)
     total = float(evals.sum()) if evals.sum() > 0 else 1.0
     return comps, evals[order] / total
 

@@ -538,6 +538,38 @@ def duck_lsh_topk_sql(
     """
 
 
+def _duck_seed_cents(n_cells: int, n_cells_sql: str | None) -> str:
+    """CTE ``cents``: the seed centroids, the first ``n_cells`` scaled
+    corpus vectors by id (or as many as the SQL ``n_cells_sql``
+    counts)."""
+    return f"""cents AS (
+      SELECT cell, cent_v, cent_n FROM (
+        SELECT id AS cell, v AS cent_v, n AS cent_n,
+               row_number() OVER (ORDER BY id) AS cr0
+        FROM scaled
+      ) WHERE cr0 <= ({n_cells_sql if n_cells_sql is not None else n_cells})
+    )"""
+
+
+def _duck_ranked_topk(pair_cos: str, k: int) -> str:
+    """CTE ``ranked`` scoring the ``cand`` pairs by ``pair_cos`` over
+    ``qscaled`` × ``scaled``, then its top-``k`` per query, ranked
+    (cos desc, neighbor_id)."""
+    return f"""ranked AS (
+      SELECT cand.query_id, cand.neighbor_id,
+             {pair_cos} AS cos_sim,
+             CAST(row_number() OVER (PARTITION BY cand.query_id
+                 ORDER BY {pair_cos} DESC, cand.neighbor_id) AS INTEGER) AS rn
+      FROM cand
+      JOIN qscaled s1 ON s1.id = cand.query_id
+      JOIN scaled s2 ON s2.id = cand.neighbor_id
+    )
+    SELECT query_id, neighbor_id, cos_sim, rn
+    FROM ranked WHERE rn <= {k}
+    ORDER BY query_id, rn
+    """
+
+
 def duck_ivf_topk_sql(
     k: int,
     query_pred: str,
@@ -625,13 +657,7 @@ def duck_ivf_topk_sql(
     ),
     scaled AS (SELECT * FROM allscaled WHERE {corpus_pred}),
     qscaled AS (SELECT * FROM {qsrc} WHERE {query_pred}),
-    cents AS (
-      SELECT cell, cent_v, cent_n FROM (
-        SELECT id AS cell, v AS cent_v, n AS cent_n,
-               row_number() OVER (ORDER BY id) AS cr0
-        FROM scaled
-      ) WHERE cr0 <= ({n_cells_sql if n_cells_sql is not None else n_cells})
-    ){refine_sql},
+    {_duck_seed_cents(n_cells, n_cells_sql)}{refine_sql},
     corpus_cells AS (
       SELECT id, cell FROM (
         SELECT s.id, c.cell,
@@ -653,19 +679,7 @@ def duck_ivf_topk_sql(
       FROM query_cells q JOIN corpus_cells cc ON q.cell = cc.cell
       WHERE q.id <> cc.id
     ),
-    ranked AS (
-      SELECT cand.query_id, cand.neighbor_id,
-             {pair_cos} AS cos_sim,
-             CAST(row_number() OVER (PARTITION BY cand.query_id
-                 ORDER BY {pair_cos} DESC, cand.neighbor_id) AS INTEGER) AS rn
-      FROM cand
-      JOIN qscaled s1 ON s1.id = cand.query_id
-      JOIN scaled s2 ON s2.id = cand.neighbor_id
-    )
-    SELECT query_id, neighbor_id, cos_sim, rn
-    FROM ranked WHERE rn <= {k}
-    ORDER BY query_id, rn
-    """
+    {_duck_ranked_topk(pair_cos, k)}"""
 
 
 def _banded(
@@ -1513,13 +1527,7 @@ def duck_ivf2_topk_sql(
     ),
     scaled AS (SELECT * FROM allscaled WHERE {corpus_pred}),
     qscaled AS (SELECT * FROM allscaled WHERE {query_pred}),
-    cents AS (
-      SELECT cell, cent_v, cent_n FROM (
-        SELECT id AS cell, v AS cent_v, n AS cent_n,
-               row_number() OVER (ORDER BY id) AS cr0
-        FROM scaled
-      ) WHERE cr0 <= ({n_cells_sql if n_cells_sql is not None else n_cells})
-    ),
+    {_duck_seed_cents(n_cells, n_cells_sql)},
     nsup AS (
       SELECT greatest(1, CAST(floor(sqrt(CAST(count(*) AS DOUBLE)))
         AS BIGINT)) AS ns FROM cents
@@ -1546,19 +1554,7 @@ def duck_ivf2_topk_sql(
       FROM query_cells q JOIN corpus_cells cc2 ON q.cell = cc2.cell
       WHERE q.id <> cc2.id
     ),
-    ranked AS (
-      SELECT cand.query_id, cand.neighbor_id,
-             {pair_cos} AS cos_sim,
-             CAST(row_number() OVER (PARTITION BY cand.query_id
-                 ORDER BY {pair_cos} DESC, cand.neighbor_id) AS INTEGER) AS rn
-      FROM cand
-      JOIN qscaled s1 ON s1.id = cand.query_id
-      JOIN scaled s2 ON s2.id = cand.neighbor_id
-    )
-    SELECT query_id, neighbor_id, cos_sim, rn
-    FROM ranked WHERE rn <= {k}
-    ORDER BY query_id, rn
-    """
+    {_duck_ranked_topk(pair_cos, k)}"""
 
 
 def mips_topk(

@@ -37,7 +37,7 @@ from ..operators.sharding import (
 from ..operators.signatures import signature_table
 from ..operators.text import quality_score
 from ..sources.batch import load_table
-from .dedup import EVAL_MOD
+from .dedup import DUCK_MINHASH_CAND_CTE, EVAL_MOD
 from .registry import register
 from .text import STOPWORDS_SQL
 from .vectors import KMEANS_K, SEM_CTE, SEM_FINAL
@@ -612,12 +612,11 @@ def q_sample_weighted_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------ curriculum selection per cluster
 
 
-@register(
-    "q_curriculum_select",
-    oracle=f"""
-    WITH {SEM_CTE},
-    feat AS (
-      SELECT doc_id,
+def _duck_quality_score(features: str) -> str:
+    """The body of a feature CTE (the linear quality classifier's
+    inputs per document), then CTE ``z`` scoring the rows of
+    ``features``: the feature CTE's name or a subquery over it."""
+    return f"""SELECT doc_id,
              CAST(len(list_filter(string_split(text, ' '), t -> t <> ''))
                   AS DOUBLE) AS n_tok,
              CAST(n_chars AS DOUBLE) AS n_chr,
@@ -630,7 +629,15 @@ def q_sample_weighted_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id,
              0.004 * n_tok + 0.0005 * n_chr + 0.8 * (n_stop / n_tok) - 0.6
                AS score
-      FROM feat WHERE n_tok > 0
+      FROM {features}"""
+
+
+@register(
+    "q_curriculum_select",
+    oracle=f"""
+    WITH {SEM_CTE},
+    feat AS (
+      {_duck_quality_score("feat")} WHERE n_tok > 0
     ),
     j AS (
       SELECT a.cid, a.vec_id AS doc_id, z.score
@@ -772,22 +779,9 @@ def q_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_quality_classifier",
-    oracle="""
+    oracle=f"""
     WITH f AS (
-      SELECT doc_id,
-             CAST(len(list_filter(string_split(text, ' '), t -> t <> ''))
-                  AS DOUBLE) AS n_tok,
-             CAST(n_chars AS DOUBLE) AS n_chr,
-             CAST(len(list_filter(string_split(text, ' '),
-                  t -> t IN ('the','a','of','to','and','in','is','it')))
-                  AS DOUBLE) AS n_stop
-      FROM documents
-    ),
-    z AS (
-      SELECT doc_id,
-             0.004 * n_tok + 0.0005 * n_chr + 0.8 * (n_stop / n_tok) - 0.6
-               AS score
-      FROM (SELECT * FROM f) t WHERE n_tok > 0
+      {_duck_quality_score("(SELECT * FROM f) t")} WHERE n_tok > 0
     )
     SELECT doc_id, score, score > 0.0 AS keep
     FROM z ORDER BY doc_id
@@ -950,6 +944,34 @@ _AUDIO_N = 32  # synthetic samples per payload
 _AUDIO_RATE = 8000
 
 
+def _wav_payloads(docs: DataFrame, n: int, rate: int) -> DataFrame:
+    """(doc_id, payload): per doc a RIFF WAV of ``n`` 16-bit samples
+    at ``rate`` Hz, sample i = (doc_id*31 + i*17) mod 2^16 − 2^15."""
+    from collections.abc import Iterator
+
+    import pandas as pd
+
+    from ..operators.multimodal import encode_wav
+
+    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import numpy as np
+
+        i = np.arange(n, dtype=np.int64)
+        for pdf in batches:
+            payloads = [
+                bytearray(
+                    encode_wav(
+                        ((int(did) * 31 + i * 17) % 65536 - 32768).astype("<i2"),
+                        rate,
+                    )
+                )
+                for did in pdf["doc_id"]
+            ]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    return docs.mapInPandas(synth, "doc_id bigint, payload binary")
+
+
 @register(
     "q_multimodal_audio_decode",
     oracle=f"""
@@ -987,32 +1009,10 @@ _AUDIO_RATE = 8000
     tags=("llm", "multimodal", "audio"),
 )
 def q_multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..operators.multimodal import audio_features, encode_wav
+    from ..operators.multimodal import audio_features
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n, rate = _AUDIO_N, _AUDIO_RATE
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        i = np.arange(n, dtype=np.int64)
-        for pdf in batches:
-            payloads = [
-                bytearray(
-                    encode_wav(
-                        ((int(did) * 31 + i * 17) % 65536 - 32768).astype("<i2"),
-                        rate,
-                    )
-                )
-                for did in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payload_df = docs.mapInPandas(synth, "doc_id bigint, payload binary")
+    payload_df = _wav_payloads(docs, _AUDIO_N, _AUDIO_RATE)
     return audio_features(payload_df).orderBy("doc_id")
 
 
@@ -1022,11 +1022,9 @@ _VID_W, _VID_H = 8, 6  # per-frame raster (production: real resolutions)
 _VID_EVERY = 2  # sample every 2nd frame
 _VID_NPX = _VID_W * _VID_H * 3
 
-
-@register(
-    "q_multimodal_video_frames",
-    oracle=f"""
-    WITH d AS (
+#: Per sampled frame of each doc's synthetic clip, every pixel value
+#: ``v``: the arithmetic replay of the encoded rasters.
+_DUCK_VID_PX_CTE = f"""WITH d AS (
       SELECT doc_id, 4 + doc_id % 5 AS n_frames FROM documents
     ),
     f AS (
@@ -1043,7 +1041,13 @@ _VID_NPX = _VID_W * _VID_H * 3
            generate_series(0, {_VID_H - 1}) y(y),
            generate_series(0, {_VID_W - 1}) x(x),
            generate_series(0, 2) c(c)
-    )
+    )"""
+
+
+@register(
+    "q_multimodal_video_frames",
+    oracle=f"""
+    {_DUCK_VID_PX_CTE}
     SELECT doc_id,
            CAST(frame_no AS INT) AS frame_no,
            CAST({_VID_W} AS INT) AS width,
@@ -1114,24 +1118,7 @@ _CUT_DELTA = 20.0  # mean-pixel jump that counts as a scene cut
 @register(
     "q_multimodal_video_scene_cuts",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, 4 + doc_id % 5 AS n_frames FROM documents
-    ),
-    f AS (
-      SELECT doc_id,
-             unnest(generate_series(0, CAST(n_frames - 1 AS BIGINT),
-                                    {_VID_EVERY})) AS frame_no
-      FROM d
-    ),
-    px AS (
-      SELECT f.doc_id, f.frame_no,
-             (f.doc_id * 7 + f.frame_no * 31 + y.y * 13 + x.x * 5
-              + c.c * 3) % 256 AS v
-      FROM f,
-           generate_series(0, {_VID_H - 1}) y(y),
-           generate_series(0, {_VID_W - 1}) x(x),
-           generate_series(0, 2) c(c)
-    ),
+    {_DUCK_VID_PX_CTE},
     frames AS (
       SELECT doc_id, frame_no,
              CAST(SUM(v) AS DOUBLE) / {_VID_NPX} AS mean_px
@@ -1241,33 +1228,11 @@ _AW_WIN = 8
     tags=("llm", "multimodal", "audio"),
 )
 def q_multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..operators.multimodal import audio_window_features, encode_wav
+    from ..operators.multimodal import audio_window_features
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n, rate, win = _AW_N, _AW_RATE, _AW_WIN
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        i = np.arange(n, dtype=np.int64)
-        for pdf in batches:
-            payloads = [
-                bytearray(
-                    encode_wav(
-                        ((int(did) * 31 + i * 17) % 65536 - 32768).astype("<i2"),
-                        rate,
-                    )
-                )
-                for did in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payload_df = docs.mapInPandas(synth, "doc_id bigint, payload binary")
-    return audio_window_features(payload_df, win=win).orderBy(
+    payload_df = _wav_payloads(docs, _AW_N, _AW_RATE)
+    return audio_window_features(payload_df, win=_AW_WIN).orderBy(
         "doc_id", "win_no"
     )
 
@@ -1299,12 +1264,7 @@ _ORACLE = f"""
       SELECT doc_id, hs, {TH.duck_minhash_sig('hs')} AS sig
       FROM hs0 WHERE len(hs) > 0
     ),
-    bands AS ({TH.duck_band_rows()}),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-      FROM bands l JOIN bands r
-        ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-    ),
+    {DUCK_MINHASH_CAND_CTE},
     dropped AS (
       SELECT DISTINCT id2 AS doc_id FROM (
         SELECT id1, id2,

@@ -60,6 +60,48 @@ _DUCK_SHINGLE_CTE = f"""
     )
 """
 
+#: LSH band rows of the ``sig`` CTE and the candidate pairs that share
+#: a band key; the composed corpus pipeline's oracle uses it too.
+DUCK_MINHASH_CAND_CTE = f"""bands AS ({TH.duck_band_rows()}),
+    cand AS (
+      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
+      FROM bands l JOIN bands r
+        ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
+    )"""
+
+
+def _components_cte(id_col: str) -> str:
+    """edges → reach → comp over a ``pairs`` CTE of (id1, id2): the
+    recursive transitive closure, each node labelled with the min id
+    of its component (``comp``: ``id_col``, cluster_id) — the oracle
+    twin of :func:`..operators.clusters.dedup_survivors`."""
+    return f"""edges AS (
+      SELECT id1 AS src, id2 AS dst FROM pairs
+      UNION
+      SELECT id2, id1 FROM pairs
+    ),
+    reach(src, dst) AS (
+      SELECT src, dst FROM edges
+      UNION
+      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+    ),
+    comp AS (
+      SELECT src AS {id_col}, LEAST(src, MIN(dst)) AS cluster_id
+      FROM reach GROUP BY src
+    )"""
+
+
+def _survivor_rows(source: str, alias: str, id_col: str) -> str:
+    """Every ``id_col`` of ``source`` with its ``comp`` cluster (itself
+    when unpaired) and whether it is the cluster's min-id survivor."""
+    a = f"{alias}.{id_col}"
+    return f"""SELECT {a},
+           COALESCE(c.cluster_id, {a}) AS cluster_id,
+           COALESCE(c.cluster_id, {a}) = {a} AS is_survivor
+    FROM {source} {alias} LEFT JOIN comp c ON c.{id_col} = {a}
+    ORDER BY {a}
+    """
+
 
 # ----------------------------------------------------------- exact dedup
 
@@ -95,12 +137,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MINHASH_PAIRS_ORACLE = f"""
     WITH {_DUCK_SHINGLE_CTE},
-    bands AS ({TH.duck_band_rows()}),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-      FROM bands l JOIN bands r
-        ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-    ),
+    {DUCK_MINHASH_CAND_CTE},
     verified AS (
       SELECT id1, id2,
              CAST(len(list_filter(s1.hs, x -> list_contains(s2.hs, x))) AS DOUBLE)
@@ -172,10 +209,9 @@ def _duck_simhash_bands(max_hamming: int = 1) -> str:
     )
 
 
-@register(
-    "q_dedup_simhash",
-    oracle=f"""
-    WITH sims AS (
+#: SimHash signatures, their band rows and the candidate pairs that
+#: share a band key, with both signatures.
+_DUCK_SIMHASH_CAND = f"""WITH sims AS (
       SELECT doc_id, {TH.duck_simhash('text')} AS sim FROM documents
     ),
     bands AS ({_duck_simhash_bands()}),
@@ -184,13 +220,23 @@ def _duck_simhash_bands(max_hamming: int = 1) -> str:
              l.sim AS sim1, r.sim AS sim2
       FROM bands l JOIN bands r
         ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-    )
-    SELECT id1, id2, CAST(bit_count(xor(sim1, sim2)) AS INT) AS hamming,
+    )"""
+
+
+#: The ``cand`` pairs within hamming distance 1, with their distance.
+_DUCK_HAMMING_PAIRS = """SELECT id1, id2, CAST(bit_count(xor(sim1, sim2)) AS INT) AS hamming,
            sim1, sim2
     FROM cand
     WHERE bit_count(xor(sim1, sim2)) <= 1
     ORDER BY id1, id2
-    """,
+    """
+
+
+@register(
+    "q_dedup_simhash",
+    oracle=f"""
+    {_DUCK_SIMHASH_CAND}
+    {_DUCK_HAMMING_PAIRS}""",
     doc="SimHash(32-bit) near-dup pairs, banded 4×8 bits, exact hamming "
     "≤ 3 via xor+bit_count on candidates.",
     tags=("llm", "dedup", "simhash"),
@@ -332,26 +378,8 @@ def _duck_emb_cluster_oracle() -> str:
     WITH RECURSIVE pairs AS (
       {duck_cosine_dup_pairs_sql(0.45, planes_per_band=oracle_lsh_planes())}
     ),
-    edges AS (
-      SELECT id1 AS src, id2 AS dst FROM pairs
-      UNION
-      SELECT id2, id1 FROM pairs
-    ),
-    reach(src, dst) AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
-    comp AS (
-      SELECT src AS vec_id, LEAST(src, MIN(dst)) AS cluster_id
-      FROM reach GROUP BY src
-    )
-    SELECT e.vec_id,
-           COALESCE(c.cluster_id, e.vec_id) AS cluster_id,
-           COALESCE(c.cluster_id, e.vec_id) = e.vec_id AS is_survivor
-    FROM embeddings e LEFT JOIN comp c ON c.vec_id = e.vec_id
-    ORDER BY e.vec_id
-    """
+    {_components_cte("vec_id")}
+    {_survivor_rows("embeddings", "e", "vec_id")}"""
 
 
 @register(
@@ -406,12 +434,7 @@ _SIMHASH_CAP = 50
       FROM kept l JOIN kept r
         ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
     )
-    SELECT id1, id2, CAST(bit_count(xor(sim1, sim2)) AS INT) AS hamming,
-           sim1, sim2
-    FROM cand
-    WHERE bit_count(xor(sim1, sim2)) <= 1
-    ORDER BY id1, id2
-    """,
+    {_DUCK_HAMMING_PAIRS}""",
     doc="SimHash near-dup pairs with the saturation guard: (band, key) "
     "buckets holding more than {cap} signatures are dropped before "
     "the self-join. Mega-buckets are the quadratic failure mode of "
@@ -444,23 +467,8 @@ def q_dedup_simhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The minhash pair CTEs, shared with q_dedup_minhash_lsh's oracle.
-_PAIR_CTES = f"""
-    hs0 AS (
-      SELECT doc_id,
-             list_distinct(list_transform({TH.duck_shingles('text')},
-               s -> {TH.duck_str_hash('s')})) AS hs
-      FROM documents
-    ),
-    sig AS (
-      SELECT doc_id, hs, {TH.duck_minhash_sig('hs')} AS sig
-      FROM hs0 WHERE len(hs) > 0
-    ),
-    bands AS ({TH.duck_band_rows()}),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-      FROM bands l JOIN bands r
-        ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-    ),
+_PAIR_CTES = f"""{_DUCK_SHINGLE_CTE.rstrip()},
+    {DUCK_MINHASH_CAND_CTE},
     pairs AS (
       SELECT id1, id2
       FROM cand
@@ -478,26 +486,8 @@ _PAIR_CTES = f"""
     "q_dedup_clusters_minhash",
     oracle=f"""
     WITH RECURSIVE {_PAIR_CTES},
-    edges AS (
-      SELECT id1 AS src, id2 AS dst FROM pairs
-      UNION
-      SELECT id2, id1 FROM pairs
-    ),
-    reach(src, dst) AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
-    comp AS (
-      SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
-      FROM reach GROUP BY src
-    )
-    SELECT d.doc_id,
-           COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
-           COALESCE(c.cluster_id, d.doc_id) = d.doc_id AS is_survivor
-    FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-    ORDER BY d.doc_id
-    """,
+    {_components_cte("doc_id")}
+    {_survivor_rows("documents", "d", "doc_id")}""",
     doc="Full dedup resolution: MinHash-LSH pairs → connected "
     "components (min-label propagation, O(diameter) shuffle-bounded "
     "rounds) → canonical survivor per cluster. The oracle recomputes "
@@ -517,18 +507,22 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: deterministic held-out "benchmark" slice of the corpus
 EVAL_MOD = 97
 
-
-@register(
-    "q_decontaminate_ngram",
-    oracle=f"""
-    WITH sh AS (
+#: Each document's distinct shingle hashes ``sh`` and the set ``ev``
+#: of those in the eval slice.
+_DUCK_EVAL_SHINGLES = f"""WITH sh AS (
       SELECT doc_id, {TH.duck_shingle_hashes('text')} AS hs FROM documents
     ),
     ev AS (
       SELECT DISTINCT h FROM (
         SELECT unnest(hs) AS h FROM sh WHERE doc_id % {EVAL_MOD} = 0
       )
-    ),
+    )"""
+
+
+@register(
+    "q_decontaminate_ngram",
+    oracle=f"""
+    {_DUCK_EVAL_SHINGLES},
     tr AS (
       SELECT doc_id, unnest(hs) AS h FROM sh WHERE doc_id % {EVAL_MOD} <> 0
     )
@@ -726,16 +720,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _duck_tier_agreement_oracle() -> str:
     simhash = f"""
-    WITH sims AS (
-      SELECT doc_id, {TH.duck_simhash('text')} AS sim FROM documents
-    ),
-    bands AS ({_duck_simhash_bands()}),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2,
-             l.sim AS sim1, r.sim AS sim2
-      FROM bands l JOIN bands r
-        ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-    )
+    {_DUCK_SIMHASH_CAND}
     SELECT id1, id2 FROM cand WHERE bit_count(xor(sim1, sim2)) <= 1
     """
     return f"""
@@ -801,14 +786,7 @@ def q_dedup_tier_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_decontaminate_by_split",
     oracle=f"""
-    WITH sh AS (
-      SELECT doc_id, {TH.duck_shingle_hashes('text')} AS hs FROM documents
-    ),
-    ev AS (
-      SELECT DISTINCT h FROM (
-        SELECT unnest(hs) AS h FROM sh WHERE doc_id % 97 = 0
-      )
-    ),
+    {_DUCK_EVAL_SHINGLES},
     tr AS (
       SELECT doc_id, unnest(hs) AS h FROM sh WHERE doc_id % 97 <> 0
     ),
@@ -973,14 +951,7 @@ _BLOOM_VALUES = "(VALUES " + ", ".join(f"({j})" for j in range(SK.BLOOM_K)) + ")
 @register(
     "q_decontaminate_bloom",
     oracle=f"""
-    WITH sh AS (
-      SELECT doc_id, {TH.duck_shingle_hashes('text')} AS hs FROM documents
-    ),
-    ev AS (
-      SELECT DISTINCT h FROM (
-        SELECT unnest(hs) AS h FROM sh WHERE doc_id % {EVAL_MOD} = 0
-      )
-    ),
+    {_DUCK_EVAL_SHINGLES},
     evbits AS (
       SELECT {SK.duck_bloom_bit_sql('h')} AS bit
       FROM ev CROSS JOIN {_BLOOM_VALUES}
@@ -1347,12 +1318,7 @@ _QS_STOP = "('the','a','of','to','and','in','is','it')"
       SELECT doc_id, hs, {TH.duck_minhash_sig('hs')} AS sig
       FROM hs0 WHERE len(hs) > 0
     ),
-    bands AS ({TH.duck_band_rows()}),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-      FROM bands l JOIN bands r
-        ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-    ),
+    {DUCK_MINHASH_CAND_CTE},
     pairs AS (
       SELECT id1, id2 FROM cand
       JOIN sig s1 ON s1.doc_id = id1
@@ -1608,8 +1574,8 @@ _VEC_ID_GUARD = (
 )
 
 
-def _duck_emb_lsh_planted_oracle() -> str:
-    planted_table = f"""(
+#: DuckDB twin of :func:`_planted_corpus`.
+_DUCK_PLANTED_TABLE = f"""(
       SELECT vec_id,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding
       FROM embeddings
@@ -1620,14 +1586,36 @@ def _duck_emb_lsh_planted_oracle() -> str:
                    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
             FROM embeddings WHERE vec_id % {PLANT_MOD} = 0)
     )"""
-    return duck_cosine_dup_pairs_sql(
-        0.9, table=planted_table, planes_per_band=24, bands=8
+
+
+def _planted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``embeddings`` as doubles plus the planted near-copies: each
+    1-in-PLANT_MOD vector again at ``vec_id + PLANT_OFFSET`` with
+    +2^-5 on coordinate 1."""
+    from ..operators.similarity import DIM
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = emb.selectExpr(
+        _VEC_ID_GUARD,
+        "transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding",
     )
+    planted = base.filter(F.col("vec_id") % PLANT_MOD == 0).selectExpr(
+        f"vec_id + {PLANT_OFFSET} AS vec_id",
+        "concat(array(element_at(embedding, 1) + 0.03125D), "
+        f"slice(embedding, 2, {DIM - 1})) AS embedding",
+    )
+    return base.unionByName(planted)
+
+
+#: The planted corpus' near-dup pairs at the scaled 24x8 geometry.
+_DUCK_PLANTED_PAIRS = duck_cosine_dup_pairs_sql(
+    0.9, table=_DUCK_PLANTED_TABLE, planes_per_band=24, bands=8
+)
 
 
 @register(
     "q_dedup_embedding_lsh_scaled_planted",
-    oracle=_duck_emb_lsh_planted_oracle(),
+    oracle=_DUCK_PLANTED_PAIRS,
     doc="The corpus-scaled LSH geometry (24x8) exercised on a NON-EMPTY "
     "pair set at every sf: the corpus is unioned with a deterministic "
     "exactly-representable perturbation (+2^-5 on coordinate 1, ids "
@@ -1645,68 +1633,26 @@ def _duck_emb_lsh_planted_oracle() -> str:
 def q_dedup_embedding_lsh_scaled_planted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.similarity import DIM, cosine_dup_pairs
+    from ..operators.similarity import cosine_dup_pairs
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.selectExpr(
-        _VEC_ID_GUARD,
-        "transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding",
-    )
-    planted = base.filter(F.col("vec_id") % PLANT_MOD == 0).selectExpr(
-        f"vec_id + {PLANT_OFFSET} AS vec_id",
-        "concat(array(element_at(embedding, 1) + 0.03125D), "
-        f"slice(embedding, 2, {DIM - 1})) AS embedding",
-    )
     return cosine_dup_pairs(
-        base.unionByName(planted), threshold=0.9, n_planes=24, n_bands=8
+        _planted_corpus(spark, sf_dir), threshold=0.9, n_planes=24, n_bands=8
     ).orderBy("id1", "id2")
 
 
 def _duck_emb_clusters_scaled_oracle() -> str:
-    planted_table = f"""(
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding
-      FROM embeddings
-      UNION ALL
-      SELECT vec_id + {PLANT_OFFSET} AS vec_id,
-             list_prepend(e[1] + 0.03125, e[2:]) AS embedding
-      FROM (SELECT vec_id,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings WHERE vec_id % {PLANT_MOD} = 0)
-    )"""
-    pairs_sql = duck_cosine_dup_pairs_sql(
-        0.9, table=planted_table, planes_per_band=24, bands=8
-    )
     return f"""
     WITH RECURSIVE pairs AS (
-      {pairs_sql}
+      {_DUCK_PLANTED_PAIRS}
     ),
-    edges AS (
-      SELECT id1 AS src, id2 AS dst FROM pairs
-      UNION
-      SELECT id2, id1 FROM pairs
-    ),
-    reach(src, dst) AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
-    comp AS (
-      SELECT src AS vec_id, LEAST(src, MIN(dst)) AS cluster_id
-      FROM reach GROUP BY src
-    ),
+    {_components_cte("vec_id")},
     universe AS (
       SELECT vec_id FROM embeddings
       UNION ALL
       SELECT vec_id + {PLANT_OFFSET} AS vec_id
       FROM embeddings WHERE vec_id % {PLANT_MOD} = 0
     )
-    SELECT u.vec_id,
-           COALESCE(c.cluster_id, u.vec_id) AS cluster_id,
-           COALESCE(c.cluster_id, u.vec_id) = u.vec_id AS is_survivor
-    FROM universe u LEFT JOIN comp c ON c.vec_id = u.vec_id
-    ORDER BY u.vec_id
-    """
+    {_survivor_rows("universe", "u", "vec_id")}"""
 
 
 @register(
@@ -1732,19 +1678,9 @@ def q_dedup_clusters_embedding_scaled(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from ..operators.clusters import dedup_survivors
-    from ..operators.similarity import DIM, cosine_dup_pairs
+    from ..operators.similarity import cosine_dup_pairs
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.selectExpr(
-        _VEC_ID_GUARD,
-        "transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding",
-    )
-    planted = base.filter(F.col("vec_id") % PLANT_MOD == 0).selectExpr(
-        f"vec_id + {PLANT_OFFSET} AS vec_id",
-        "concat(array(element_at(embedding, 1) + 0.03125D), "
-        f"slice(embedding, 2, {DIM - 1})) AS embedding",
-    )
-    corpus = base.unionByName(planted)
+    corpus = _planted_corpus(spark, sf_dir)
     pairs = cosine_dup_pairs(corpus, threshold=0.9, n_planes=24, n_bands=8)
     return dedup_survivors(
         pairs, corpus.select("vec_id"), id_col="vec_id"

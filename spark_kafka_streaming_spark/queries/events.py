@@ -224,6 +224,25 @@ def q_events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _numbered_sessions(ev: DataFrame) -> DataFrame:
+    """``ev`` with ``session_no``: per user, the running count of
+    events that open a session (first event, or a gap of 30 min or
+    more after the previous one by (ts, event_id))."""
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    # Exact integer-microsecond gap: timestamp→double quantizes at
+    # ~0.4 µs near epoch magnitude, so a gap of exactly 1800 s could
+    # round across the >= boundary in one engine only.  Same convention
+    # as q_events_lag_lead above.
+    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
+    is_new = F.when(
+        gap.isNull() | (gap >= 30 * 60 * 1_000_000), F.lit(1)
+    ).otherwise(F.lit(0))
+    wrun = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    return ev.withColumn("is_new", is_new).withColumn(
+        "session_no", F.sum("is_new").over(wrun)
+    )
+
+
 @register(
     "q_events_sessionize_batch",
     oracle="""
@@ -253,20 +272,8 @@ def q_events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "session", "window"),
 )
 def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    # Exact integer-microsecond gap: timestamp→double quantizes at
-    # ~0.4 µs near epoch magnitude, so a gap of exactly 1800 s could
-    # round across the >= boundary in one engine only.  Same convention
-    # as q_events_lag_lead above.
-    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    is_new = F.when(
-        gap.isNull() | (gap >= 30 * 60 * 1_000_000), F.lit(1)
-    ).otherwise(F.lit(0))
-    wrun = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     return (
-        ev.withColumn("is_new", is_new)
-        .withColumn("session_no", F.sum("is_new").over(wrun))
+        _numbered_sessions(load_table(spark, sf_dir, "events"))
         .groupBy("user_id", "session_no")
         .agg(
             F.min("ts").alias("session_start"),
@@ -583,6 +590,69 @@ def q_events_dedup_within_interval(spark: SparkSession, sf_dir: str) -> DataFram
 
 # ------------------------------------------- MAD anomaly detection
 
+
+def _lower_median(hist: DataFrame, n: DataFrame, key: str, out: str) -> DataFrame:
+    """Per event_type, the smallest ``key`` of the (event_type, key,
+    cnt) histogram whose cumulative count reaches (n+1) DIV 2 — the
+    rank-selected lower median, as column ``out``."""
+    w = Window.partitionBy("event_type").orderBy(key)
+    return (
+        hist.withColumn("cm", F.sum("cnt").over(w))
+        .join(F.broadcast(n), "event_type")
+        .where(F.expr("cm >= (n + 1) DIV 2"))
+        .groupBy("event_type")
+        .agg(F.min(key).alias(out))
+    )
+
+
+def _mad_screen(
+    h: DataFrame, key: str, dev: str, med: str, mad: str, k: str | int
+) -> DataFrame:
+    """Median/MAD outlier screen over a value histogram ``h``
+    (event_type, ``key``, cnt): (event_type, n, ``med``, ``mad``,
+    n_outliers), where the deviation histogram regroups ``h`` by
+    ``dev`` = |key − med| and an outlier is ``dev`` > k·mad.
+
+    Both histograms are cached coalesced: the aggregations keep full
+    map-side parallelism, but the results are histogram-sized by
+    construction, and every downstream pass otherwise pays one task
+    per shuffle partition of pure overhead (measured 0.3–0.4 s per
+    32-task stage over a 10k-row cache).  4 partitions bounds that
+    while leaving room for multi-GB histograms at the top decades.
+    Each is materialized once: its consumers otherwise race to fill
+    the lazy cache from concurrent AQE broadcast-build stages, each
+    re-running the events scan."""
+    from ..functions.caching import track_persist
+
+    h = track_persist(h.coalesce(4))
+    h.count()
+    n = h.groupBy("event_type").agg(F.sum("cnt").cast("bigint").alias("n"))
+    medians = _lower_median(h, n, key, med)
+    devh = (
+        h.join(F.broadcast(medians), "event_type")
+        .groupBy("event_type", F.expr(f"abs({key} - {med})").alias(dev))
+        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+    )
+    devh = track_persist(devh.coalesce(4))
+    devh.count()
+    mads = _lower_median(devh, n, dev, mad)
+    outl = (
+        devh.join(F.broadcast(mads), "event_type")
+        .groupBy("event_type")
+        .agg(
+            F.expr(
+                f"CAST(SUM(CASE WHEN {dev} > {k} * {mad} THEN cnt "
+                f"ELSE 0 END) AS BIGINT)"
+            ).alias("n_outliers")
+        )
+    )
+    return (
+        n.join(F.broadcast(medians), "event_type")
+        .join(F.broadcast(mads), "event_type")
+        .join(F.broadcast(outl), "event_type")
+    )
+
+
 #: Outlier threshold: |v − median| > 3·MAD (unscaled MAD — the
 #: 1.4826 normal-consistency factor would add nothing cross-engine).
 _MAD_K = "3.0"
@@ -661,65 +731,14 @@ def q_events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full per-type sort that serialized one event_type per task —
     # the q_events_anomaly_mad_hist plan shape (guide §2.4/§2.2),
     # here exact for ARBITRARY doubles because nothing quantizes.
-    from ..functions.caching import track_persist
-
     v = (
         load_table(spark, sf_dir, "events")
         .where("value IS NOT NULL")
         .select("event_type", "value")
     )
     h = v.groupBy("event_type", "value").agg(F.count("*").alias("cnt"))
-    # The cached copy is coalesced: the aggregation itself keeps full
-    # map-side parallelism, but the RESULT is histogram-sized by
-    # construction, and every downstream pass otherwise pays one task
-    # per shuffle partition of pure overhead (measured 0.3–0.4 s per
-    # 32-task stage over a 10k-row cache).  4 partitions bounds that
-    # while leaving room for multi-GB histograms at the top decades.
-    h = track_persist(h.coalesce(4))
-    # materialize the histogram once: its consumers (n, med, devh)
-    # otherwise race to fill the lazy cache from concurrent AQE
-    # broadcast-build stages, each re-running the events scan
-    h.count()
-    n = h.groupBy("event_type").agg(F.sum("cnt").cast("bigint").alias("n"))
-    wc = Window.partitionBy("event_type").orderBy("value")
-    cum = h.withColumn("cm", F.sum("cnt").over(wc))
-    med = (
-        cum.join(F.broadcast(n), "event_type")
-        .where(F.expr("cm >= (n + 1) DIV 2"))
-        .groupBy("event_type")
-        .agg(F.min("value").alias("med"))
-    )
-    # deviation histogram: a regroup of the value histogram (dev is a
-    # function of (value, med) — the same double the row form computes)
-    devh = (
-        h.join(F.broadcast(med), "event_type")
-        .groupBy("event_type", F.expr("abs(value - med)").alias("dev"))
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    devh = track_persist(devh.coalesce(4))
-    devh.count()
-    wd = Window.partitionBy("event_type").orderBy("dev")
-    dcum = devh.withColumn("cm", F.sum("cnt").over(wd))
-    mad = (
-        dcum.join(F.broadcast(n), "event_type")
-        .where(F.expr("cm >= (n + 1) DIV 2"))
-        .groupBy("event_type")
-        .agg(F.min("dev").alias("mad"))
-    )
-    outl = (
-        devh.join(F.broadcast(mad), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.expr(
-                f"CAST(SUM(CASE WHEN dev > {_MAD_K} * mad THEN cnt "
-                f"ELSE 0 END) AS BIGINT)"
-            ).alias("n_outliers")
-        )
-    )
     return (
-        n.join(F.broadcast(med), "event_type")
-        .join(F.broadcast(mad), "event_type")
-        .join(F.broadcast(outl), "event_type")
+        _mad_screen(h, "value", "dev", "med", "mad", _MAD_K)
         .select("event_type", "n", "med", "mad", "n_outliers")
         .orderBy("event_type")
     )
@@ -811,53 +830,8 @@ def q_events_anomaly_mad_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "c")
         .agg(F.count("*").alias("cnt"))
     )
-    from ..functions.caching import track_persist
-
-    # coalesce the histogram-sized cache (downstream passes otherwise
-    # pay one task per shuffle partition of pure overhead) and
-    # materialize it once — the n/med/devh consumers otherwise race to
-    # fill the lazy cache from concurrent AQE broadcast-build stages,
-    # each re-running the events scan (same fixes as the exact form)
-    h = track_persist(h.coalesce(4))
-    h.count()
-    n = h.groupBy("event_type").agg(F.sum("cnt").cast("bigint").alias("n"))
-    wc = Window.partitionBy("event_type").orderBy("c")
-    cum = h.withColumn("cm", F.sum("cnt").over(wc))
-    med = (
-        cum.join(F.broadcast(n), "event_type")
-        .where(F.expr("cm >= (n + 1) DIV 2"))
-        .groupBy("event_type")
-        .agg(F.min("c").alias("med_c"))
-    )
-    devh = (
-        h.join(F.broadcast(med), "event_type")
-        .groupBy("event_type", F.expr("abs(c - med_c)").alias("d"))
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
-    devh = track_persist(devh.coalesce(4))
-    devh.count()
-    wd = Window.partitionBy("event_type").orderBy("d")
-    dcum = devh.withColumn("cm", F.sum("cnt").over(wd))
-    mad = (
-        dcum.join(F.broadcast(n), "event_type")
-        .where(F.expr("cm >= (n + 1) DIV 2"))
-        .groupBy("event_type")
-        .agg(F.min("d").alias("mad_c"))
-    )
-    outl = (
-        devh.join(F.broadcast(mad), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.expr(
-                f"CAST(SUM(CASE WHEN d > {_MAD2_K} * mad_c THEN cnt "
-                f"ELSE 0 END) AS BIGINT)"
-            ).alias("n_outliers")
-        )
-    )
     return (
-        n.join(F.broadcast(med), "event_type")
-        .join(F.broadcast(mad), "event_type")
-        .join(F.broadcast(outl), "event_type")
+        _mad_screen(h, "c", "d", "med_c", "mad_c", _MAD2_K)
         .select(
             "event_type",
             "n",
@@ -1055,16 +1029,8 @@ _SESSIONS_SQL = """(
 def q_events_session_duration_quantiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    is_new = F.when(
-        gap.isNull() | (gap >= 30 * 60 * 1_000_000), F.lit(1)
-    ).otherwise(F.lit(0))
-    wrun = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     sessions = (
-        ev.withColumn("is_new", is_new)
-        .withColumn("session_no", F.sum("is_new").over(wrun))
+        _numbered_sessions(load_table(spark, sf_dir, "events"))
         .groupBy("user_id", "session_no")
         .agg(
             (

@@ -51,18 +51,24 @@ DUCK_SCALED_VEC_CTE = f"""
 """
 
 
-@register(
-    "q_similarity_topk_bruteforce",
-    oracle=f"""
-    WITH {DUCK_SCALED_VEC_CTE},
-    q AS (SELECT * FROM sn WHERE vec_id < 10),
+#: Exact cosine of each of the 10 query vectors (``vec_id < 10``)
+#: against every other vector, over the ``sn`` CTE: the brute-force
+#: truth that the top-k and recall oracles rank.
+_DUCK_SCORED_CTE = f"""q AS (SELECT * FROM sn WHERE vec_id < 10),
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              CAST({V.duck_dot('q.v', 'c.v')} AS DOUBLE)
                / (sqrt(CAST(q.n AS DOUBLE)) * sqrt(CAST(c.n AS DOUBLE)))
                AS cos_sim
       FROM q JOIN sn c ON c.vec_id <> q.vec_id
-    )
+    )"""
+
+
+@register(
+    "q_similarity_topk_bruteforce",
+    oracle=f"""
+    WITH {DUCK_SCALED_VEC_CTE},
+    {_DUCK_SCORED_CTE}
     SELECT query_id, neighbor_id, cos_sim, rn FROM (
       SELECT *, CAST(ROW_NUMBER() OVER (
         PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
@@ -220,34 +226,26 @@ def q_similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------- ANN recall harness
 
 
-def _duck_ann_recall_oracle() -> str:
+def _duck_recall_oracle(approx: str) -> str:
+    """recall@5 per query of the ``approx`` leg (a SELECT of
+    ``query_id, neighbor_id``) against the exact brute-force top-5 of
+    the 10 query vectors."""
     brute = f"""
     WITH sv AS (
       SELECT vec_id, {V.duck_scaled('embedding')} AS v FROM embeddings
     ),
     sn AS (SELECT vec_id, v, {V.duck_dot('v', 'v')} AS n FROM sv),
-    q AS (SELECT * FROM sn WHERE vec_id < 10),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST({V.duck_dot('q.v', 'c.v')} AS DOUBLE)
-               / (sqrt(CAST(q.n AS DOUBLE)) * sqrt(CAST(c.n AS DOUBLE)))
-               AS cos_sim
-      FROM q JOIN sn c ON c.vec_id <> q.vec_id
-    )
+    {_DUCK_SCORED_CTE}
     SELECT query_id, neighbor_id FROM (
       SELECT *, ROW_NUMBER() OVER (
         PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
       ) AS rn FROM scored
     ) t WHERE rn <= 5
     """
-
-    approx_sql = duck_lsh_topk_sql(
-        5, "id < 10", planes_per_band=oracle_lsh_planes()
-    )
     return f"""
     WITH brute AS (SELECT query_id, neighbor_id FROM ({brute}) b),
     approx AS (
-      SELECT query_id, neighbor_id FROM ({approx_sql}) a
+      {approx}
     )
     SELECT b.query_id,
            CAST(COUNT(a.neighbor_id) AS BIGINT) AS n_hits,
@@ -260,9 +258,35 @@ def _duck_ann_recall_oracle() -> str:
     """
 
 
+def _recall_at_5(spark: SparkSession, sf_dir: str, approx) -> DataFrame:
+    """recall@5 per query of ``approx(queries, corpus)`` against the
+    exact brute-force top-5 of the 10 query vectors."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 10)
+    brute = brute_force_topk(q, emb, k=5).select("query_id", "neighbor_id")
+    hits = (
+        approx(q, emb)
+        .select("query_id", "neighbor_id")
+        .withColumn("_hit", F.lit(1))
+    )
+    return (
+        brute.join(hits, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.sum(F.coalesce("_hit", F.lit(0))).alias("n_hits"),
+            (F.sum(F.coalesce("_hit", F.lit(0))) / 5.0).alias("recall_at_5"),
+        )
+        .orderBy("query_id")
+    )
+
+
 @register(
     "q_ann_recall_lsh",
-    oracle=_duck_ann_recall_oracle(),
+    oracle=_duck_recall_oracle(
+        "SELECT query_id, neighbor_id FROM ("
+        + duck_lsh_topk_sql(5, "id < 10", planes_per_band=oracle_lsh_planes())
+        + ") a"
+    ),
     doc="ANN self-evaluation: recall@5 of the hyperplane-LSH top-k "
     "against the exact brute-force top-k, per query — the "
     "measure-don't-guess harness a production ANN deployment runs on "
@@ -274,70 +298,22 @@ def _duck_ann_recall_oracle() -> str:
     tags=("llm", "similarity", "evaluation"),
 )
 def q_ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import brute_force_topk, lsh_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    brute = brute_force_topk(q, emb, k=5).select("query_id", "neighbor_id")
-    approx = (
-        lsh_topk(q, emb, k=5)
-        .select("query_id", "neighbor_id")
-        .withColumn("_hit", F.lit(1))
-    )
-    return (
-        brute.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("_hit", F.lit(0))).alias("n_hits"),
-            (F.sum(F.coalesce("_hit", F.lit(0))) / 5.0).alias("recall_at_5"),
-        )
-        .orderBy("query_id")
+    return _recall_at_5(
+        spark, sf_dir, lambda q, emb: lsh_topk(q, emb, k=5)
     )
 
 
 # ------------------------------------------- IVFPQ recall harness
 
 
-def _duck_ivfpq_recall_oracle() -> str:
-    brute = f"""
-    WITH sv AS (
-      SELECT vec_id, {V.duck_scaled('embedding')} AS v FROM embeddings
-    ),
-    sn AS (SELECT vec_id, v, {V.duck_dot('v', 'v')} AS n FROM sv),
-    q AS (SELECT * FROM sn WHERE vec_id < 10),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST({V.duck_dot('q.v', 'c.v')} AS DOUBLE)
-               / (sqrt(CAST(q.n AS DOUBLE)) * sqrt(CAST(c.n AS DOUBLE)))
-               AS cos_sim
-      FROM q JOIN sn c ON c.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id FROM (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-      ) AS rn FROM scored
-    ) t WHERE rn <= 5
-    """
-    return f"""
-    WITH brute AS (SELECT query_id, neighbor_id FROM ({brute}) b),
-    approx AS (
-      SELECT query_id, neighbor_id
-      FROM ({duck_ivfpq_sql(5, "id < 10", iters=1)}) a
-    )
-    SELECT b.query_id,
-           CAST(COUNT(a.neighbor_id) AS BIGINT) AS n_hits,
-           CAST(COUNT(a.neighbor_id) AS DOUBLE) / 5 AS recall_at_5
-    FROM brute b
-    LEFT JOIN approx a
-      ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id
-    GROUP BY b.query_id
-    ORDER BY b.query_id
-    """
-
-
 @register(
     "q_ann_recall_ivfpq",
-    oracle=_duck_ivfpq_recall_oracle(),
+    # this leg's SELECT wraps before FROM in the pinned oracle text
+    oracle=_duck_recall_oracle(
+        "SELECT query_id, neighbor_id\n      FROM ("
+        + duck_ivfpq_sql(5, "id < 10", iters=1)
+        + ") a"
+    ),
     doc="ANN self-evaluation for the THIRD scale path: recall@5 of "
     "IVFPQ (coarse cells + residual product quantization — the "
     "billion-vector memory tier) against exact brute-force top-k, per "
@@ -352,34 +328,30 @@ def _duck_ivfpq_recall_oracle() -> str:
     tags=("llm", "similarity", "evaluation"),
 )
 def q_ann_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from ..operators.pq import ivfpq_topk
-    from ..operators.similarity import brute_force_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    brute = brute_force_topk(q, emb, k=5).select("query_id", "neighbor_id")
-    approx = (
-        ivfpq_topk(q, emb, k=5, iters=1)
-        .select("query_id", "neighbor_id")
-        .withColumn("_hit", F.lit(1))
-    )
-    return (
-        brute.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("_hit", F.lit(0))).alias("n_hits"),
-            (F.sum(F.coalesce("_hit", F.lit(0))) / 5.0).alias(
-                "recall_at_5"
-            ),
-        )
-        .orderBy("query_id")
+    return _recall_at_5(
+        spark, sf_dir, lambda q, emb: ivfpq_topk(q, emb, k=5, iters=1)
     )
 
 
 # -------------------------------------- MIPS and k-NN label propagation
 
+
+#: The (votes desc, label asc) winner per query over a ``votes`` CTE
+#: of (query_id, nbr_label, n_votes, top_cos): the argmax step of
+#: :func:`..operators.similarity.knn_classify`.
+_DUCK_VOTE_ARGMAX = """SELECT query_id AS vec_id,
+           nbr_label AS predicted_label,
+           CAST(n_votes AS INT) AS n_votes,
+           top_cos
+    FROM (
+      SELECT *, ROW_NUMBER() OVER (
+        PARTITION BY query_id ORDER BY n_votes DESC, nbr_label
+      ) AS rk FROM votes
+    ) t WHERE rk = 1
+    ORDER BY vec_id
+    """
 
 _DUCK_SN_CTE = f"""
     sv AS (
@@ -418,17 +390,7 @@ _DUCK_SN_CTE = f"""
       FROM nn JOIN c ON c.vec_id = nn.neighbor_id
       GROUP BY nn.query_id, c.label
     )
-    SELECT query_id AS vec_id,
-           nbr_label AS predicted_label,
-           CAST(n_votes AS INT) AS n_votes,
-           top_cos
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY n_votes DESC, nbr_label
-      ) AS rk FROM votes
-    ) t WHERE rk = 1
-    ORDER BY vec_id
-    """,
+    {_DUCK_VOTE_ARGMAX}""",
     doc="k-NN label propagation, exact BOUNDED form: labels exist for "
     "80% of vectors (vec_id mod 5 <> 0 plays the labeled slice); each "
     "query takes the majority label of its 5 nearest labeled neighbors "
@@ -543,17 +505,7 @@ def _votes_sql(nn_sql: str) -> str:
       FROM nn JOIN labels l ON l.vec_id = nn.neighbor_id
       GROUP BY nn.query_id, l.label
     )
-    SELECT query_id AS vec_id,
-           nbr_label AS predicted_label,
-           CAST(n_votes AS INT) AS n_votes,
-           top_cos
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY n_votes DESC, nbr_label
-      ) AS rk FROM votes
-    ) t WHERE rk = 1
-    ORDER BY vec_id
-    """
+    {_DUCK_VOTE_ARGMAX}"""
 
 
 @register(
@@ -611,6 +563,24 @@ _QM_CTE = (
 )
 
 
+def _duck_predicted(nn: str, prefix: str) -> str:
+    """CTEs ``{prefix}votes`` (per query and labeled-neighbor label
+    ``c.label``, the votes of neighbor CTE ``nn``) and
+    ``{prefix}pred`` (the (votes desc, label asc) winner)."""
+    return f"""{prefix}votes AS (
+      SELECT {nn}.query_id, c.label AS nbr_label, count(*) AS n_votes
+      FROM {nn} JOIN c ON c.vec_id = {nn}.neighbor_id
+      GROUP BY {nn}.query_id, c.label
+    ),
+    {prefix}pred AS (
+      SELECT query_id AS vec_id, nbr_label AS predicted_label FROM (
+        SELECT *, ROW_NUMBER() OVER (
+          PARTITION BY query_id ORDER BY n_votes DESC, nbr_label
+        ) AS rk FROM {prefix}votes
+      ) t WHERE rk = 1
+    )"""
+
+
 def _agreement_oracle() -> str:
     dot = V.duck_dot("q.v", "c.v")
     cos = f"""CAST({dot} AS DOUBLE)
@@ -640,31 +610,9 @@ def _agreement_oracle() -> str:
         FROM q JOIN c ON c.vec_id <> q.vec_id
       ) t WHERE rn <= 5
     ),
-    evotes AS (
-      SELECT enn.query_id, c.label AS nbr_label, count(*) AS n_votes
-      FROM enn JOIN c ON c.vec_id = enn.neighbor_id
-      GROUP BY enn.query_id, c.label
-    ),
-    epred AS (
-      SELECT query_id AS vec_id, nbr_label AS predicted_label FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY query_id ORDER BY n_votes DESC, nbr_label
-        ) AS rk FROM evotes
-      ) t WHERE rk = 1
-    ),
+    {_duck_predicted("enn", "e")},
     ann AS ({ann}),
-    avotes AS (
-      SELECT ann.query_id, c.label AS nbr_label, count(*) AS n_votes
-      FROM ann JOIN c ON c.vec_id = ann.neighbor_id
-      GROUP BY ann.query_id, c.label
-    ),
-    apred AS (
-      SELECT query_id AS vec_id, nbr_label AS predicted_label FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY query_id ORDER BY n_votes DESC, nbr_label
-        ) AS rk FROM avotes
-      ) t WHERE rk = 1
-    )
+    {_duck_predicted("ann", "a")}
     SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
            CAST(SUM(CASE WHEN a.predicted_label = e.predicted_label
                     THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
@@ -1087,46 +1035,13 @@ def q_similarity_ann_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------- IMI recall harness
 
 
-def _duck_imi_recall_oracle() -> str:
-    brute = f"""
-    WITH sv AS (
-      SELECT vec_id, {V.duck_scaled('embedding')} AS v FROM embeddings
-    ),
-    sn AS (SELECT vec_id, v, {V.duck_dot('v', 'v')} AS n FROM sv),
-    q AS (SELECT * FROM sn WHERE vec_id < 10),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST({V.duck_dot('q.v', 'c.v')} AS DOUBLE)
-               / (sqrt(CAST(q.n AS DOUBLE)) * sqrt(CAST(c.n AS DOUBLE)))
-               AS cos_sim
-      FROM q JOIN sn c ON c.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id FROM (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-      ) AS rn FROM scored
-    ) t WHERE rn <= 5
-    """
-    imi = duck_ivf2_topk_sql(5, "id < 10", n_cells_sql=_FULL_NCELLS_SQL)
-    return f"""
-    WITH brute AS (SELECT query_id, neighbor_id FROM ({brute}) b),
-    approx AS (
-      SELECT query_id, neighbor_id FROM ({imi}) a
-    )
-    SELECT b.query_id,
-           CAST(COUNT(a.neighbor_id) AS BIGINT) AS n_hits,
-           CAST(COUNT(a.neighbor_id) AS DOUBLE) / 5 AS recall_at_5
-    FROM brute b
-    LEFT JOIN approx a
-      ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id
-    GROUP BY b.query_id
-    ORDER BY b.query_id
-    """
-
-
 @register(
     "q_ann_recall_imi",
-    oracle=_duck_imi_recall_oracle(),
+    oracle=_duck_recall_oracle(
+        "SELECT query_id, neighbor_id FROM ("
+        + duck_ivf2_topk_sql(5, "id < 10", n_cells_sql=_FULL_NCELLS_SQL)
+        + ") a"
+    ),
     doc="ANN self-evaluation for the near-linear build path: recall@5 "
     "of the two-level (IMI-style) coarse quantizer against exact "
     "brute-force top-k, per query — the fourth leg of the ANN quality "
@@ -1140,28 +1055,14 @@ def _duck_imi_recall_oracle() -> str:
     tags=("llm", "similarity", "imi", "evaluation"),
 )
 def q_ann_recall_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import brute_force_topk, ivf_topk_imi
+    from ..operators.similarity import ivf_topk_imi
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    brute = brute_force_topk(q, emb, k=5).select("query_id", "neighbor_id")
-    approx = (
-        # footer-metadata count: raw table, same integer, no scan job
-        ivf_topk_imi(
-            q, emb, k=5,
-            n_cells=auto_cells(table_row_count(sf_dir, "embeddings")),
-        )
-        .select("query_id", "neighbor_id")
-        .withColumn("_hit", F.lit(1))
-    )
-    return (
-        brute.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("_hit", F.lit(0))).alias("n_hits"),
-            (F.sum(F.coalesce("_hit", F.lit(0))) / 5.0).alias("recall_at_5"),
-        )
-        .orderBy("query_id")
+    # footer-metadata count: raw table, same integer, no scan job
+    n_cells = auto_cells(table_row_count(sf_dir, "embeddings"))
+    return _recall_at_5(
+        spark,
+        sf_dir,
+        lambda q, emb: ivf_topk_imi(q, emb, k=5, n_cells=n_cells),
     )
 
 

@@ -68,12 +68,11 @@ class IncrementalSpanDeduper:
             compact_every,
         )
 
-    def merged(
-        self, spark: SparkSession, live: bool = False
-    ) -> DataFrame | None:
-        """The corpus-wide (h, cnt, canon) table: partials merged by
-        (sum, min) — exact because both aggregates are mergeable."""
-        store = self.store.read(spark, live=live)
+    def merged(self, spark: SparkSession) -> DataFrame | None:
+        """The corpus-wide (h, cnt, canon) table, read through the
+        snapshot-isolated serving pin: partials merged by (sum, min) —
+        exact because both aggregates are mergeable."""
+        store = self.store.read(spark)
         if store is None:
             return None
         return store.groupBy("h").agg(

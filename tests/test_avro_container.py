@@ -5,7 +5,6 @@ running ungated — no spark-avro jar required."""
 from __future__ import annotations
 
 import json
-import math
 
 import pytest
 from pyspark.sql import functions as F

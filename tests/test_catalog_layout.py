@@ -14,6 +14,8 @@ and content pinned by hash.
   Those keep their names because a test's id is its file and name, and
   a move renames every id in the file.
 * QUERIES.md is exactly what ``tools/gen_catalog.py`` renders.
+* Each folded catalog block is spelled out in one place under
+  ``queries/`` and ``operators/`` (:data:`FOLDED_BLOCKS`).
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ from spark_kafka_streaming_spark.queries import (
 
 ROOT = Path(__file__).resolve().parent.parent
 QDIR = ROOT / "spark_kafka_streaming_spark" / "queries"
+ODIR = ROOT / "spark_kafka_streaming_spark" / "operators"
 TDIR = ROOT / "tests"
 
 WINDOW_SHA = "f8ebc78b5d063376fb25b605a00f9a7f8f1845a3dc3b877cdd11a970f813200f"
@@ -103,3 +106,105 @@ def test_queries_md_is_rendered_from_registry():
     gen = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(gen)
     assert (ROOT / "QUERIES.md").read_text() == gen.render()
+
+
+#: block → (a literal only that block spells out, the one set of
+#: (module, site) allowed to contain it).  A site is a module-level
+#: function, method or constant; a registered entry's decorator counts
+#: under the entry's name.  The components CTE has one kept variant:
+#: q_dedup_survivor_by_quality writes its edges CTE on other lines,
+#: so its oracle text differs and stays its own.
+FOLDED_BLOCKS = {
+    "recall harness": (
+        "recall_at_5",
+        {
+            ("similarity.py", "_duck_recall_oracle"),
+            ("similarity.py", "_recall_at_5"),
+        },
+    ),
+    "brute-force cosine CTE": (
+        "FROM q JOIN sn c ON c.vec_id <> q.vec_id",
+        {("similarity.py", "_DUCK_SCORED_CTE")},
+    ),
+    "connected-components CTE": (
+        "FROM reach r JOIN edges e ON r.dst = e.src",
+        {
+            ("dedup.py", "_components_cte"),
+            ("dedup.py", "q_dedup_survivor_by_quality"),
+        },
+    ),
+    "MAD cumulative-median step": (
+        "cm >= (n + 1) DIV 2",
+        {("events.py", "_lower_median")},
+    ),
+    "planted corpus": (
+        "+ 0.03125",
+        {
+            ("dedup.py", "_DUCK_PLANTED_TABLE"),
+            ("dedup.py", "_planted_corpus"),
+        },
+    ),
+}
+
+
+def _site_name(node) -> str | None:
+    if isinstance(node, ast.FunctionDef):
+        for d in node.decorator_list:
+            if (
+                isinstance(d, ast.Call)
+                and getattr(d.func, "id", None) == "register"
+                and d.args
+                and isinstance(d.args[0], ast.Constant)
+            ):
+                return d.args[0].value
+        return node.name
+    if isinstance(node, ast.ClassDef):
+        return node.name
+    if isinstance(node, (ast.Assign, ast.AnnAssign)):
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        return ",".join(t.id for t in targets if isinstance(t, ast.Name))
+    return None
+
+
+def _literals(node):
+    """String literals under ``node``, docstrings excluded."""
+    docs = set()
+    for n in ast.walk(node):
+        body = getattr(n, "body", None)
+        if (
+            isinstance(n, (ast.FunctionDef, ast.ClassDef))
+            and body
+            and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+        ):
+            docs.add(id(body[0].value))
+    for n in ast.walk(node):
+        if (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and id(n) not in docs
+        ):
+            yield n.value
+
+
+def _block_sites() -> dict[str, set[tuple[str, str]]]:
+    sites = {block: set() for block in FOLDED_BLOCKS}
+    for path in sorted([*QDIR.glob("*.py"), *ODIR.glob("*.py")]):
+        for node in ast.parse(path.read_text()).body:
+            name = _site_name(node)
+            if name is None:
+                continue
+            text = list(_literals(node))
+            for block, (marker, _) in FOLDED_BLOCKS.items():
+                if any(marker in t for t in text):
+                    sites[block].add((path.name, name))
+    return sites
+
+
+def test_each_folded_block_is_written_once():
+    sites = _block_sites()
+    for block, (_, want) in FOLDED_BLOCKS.items():
+        assert sites[block] == want, (
+            f"the {block} is spelled out in {sorted(sites[block])}; "
+            f"route every copy through {sorted(want)}"
+        )

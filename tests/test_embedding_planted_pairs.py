@@ -7,36 +7,34 @@ the tier measurable at factor 1000.
 
 The fixture runs the real generator (tools/make_scale_data.py,
 embeddings section only) at factor 6 into a tmp dir, reading the
-shipped sf0.001 base — the same code path the sf1/sf10/sf100 corpora
+test base corpus (``sf_dir``: sf0.001 unless SPARK_GRAFT_TEST_SF_DIR
+names another) — the same code path the sf1/sf10/sf100 corpora
 are built with.
 """
 
 from __future__ import annotations
 
-import importlib.util
 import subprocess
 import sys
 from pathlib import Path
 
 import pytest
-from pyspark.sql import functions as F
 
 _TOOLS = Path(__file__).resolve().parents[1] / "tools" / "make_scale_data.py"
 FACTOR = 6
 
 
 @pytest.fixture(scope="module")
-def gen_dir(tmp_path_factory):
+def gen_dir(tmp_path_factory, sf_dir):
     out = tmp_path_factory.mktemp("emb_scale")
-    env_src = "/root/testdata/sf0.001"
-    # run the generator with SRC overridden to the tiny base corpus
+    # run the generator with SRC overridden to the test base corpus
     code = (
         "import importlib.util, sys\n"
         f"spec = importlib.util.spec_from_file_location('msd', {str(_TOOLS)!r})\n"
         "m = importlib.util.module_from_spec(spec)\n"
         f"sys.argv = ['msd', {str(out)!r}, '{FACTOR}', 'zipf', 'embeddings']\n"
         "spec.loader.exec_module(m)\n"
-        f"m.SRC = {env_src!r}\n"
+        f"m.SRC = {sf_dir!r}\n"
         "m.main()\n"
     )
     subprocess.run([sys.executable, "-c", code], check=True, timeout=300)

@@ -7,7 +7,6 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_kafka_streaming_spark.streaming.incremental_dedup import IncrementalDeduper

@@ -7,7 +7,6 @@ DuckDB differential gate (test_oracle_diff.py covers oracle parity).
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from spark_kafka_streaming_spark.operators.chunks import chunk_dup_stats
 from spark_kafka_streaming_spark.operators.decontaminate import (
@@ -150,7 +149,7 @@ def test_exact_median_histogram(spark):
     assert exact_median_int(skewed, "x").collect()[0].med == 1
 
 
-def test_write_training_shards_one_file_per_shard(spark, tmp_path):
+def test_write_training_shards_one_file_per_shard(spark, sf_dir, tmp_path):
     import os
 
     from spark_kafka_streaming_spark.operators.sharding import (
@@ -158,7 +157,7 @@ def test_write_training_shards_one_file_per_shard(spark, tmp_path):
         write_training_shards,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sharded = shard_by_token_budget(docs, 500)
     out = str(tmp_path / "shards")
     write_training_shards(sharded, out)

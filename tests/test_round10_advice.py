@@ -21,10 +21,8 @@ from __future__ import annotations
 
 import importlib.util
 import os
-import sys
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _load_backlog():

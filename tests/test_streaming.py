@@ -23,7 +23,6 @@ from spark_kafka_streaming_spark.streaming.decode import (
 )
 from spark_kafka_streaming_spark.streaming.monitor import ProgressRecorder
 from spark_kafka_streaming_spark.streaming.pipeline import (
-    EVENTS_SCHEMA,
     file_stream,
     rate_stream,
     start_sink,

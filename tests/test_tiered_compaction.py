@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
